@@ -99,6 +99,9 @@ class LookupIndex:
     reused: bool = False             # set by build_index_artifacts when an
                                      # existing artifact was loaded instead
                                      # of rebuilt (metrics/bench attribution)
+    source_fp: str | None = None     # the _meta row's dictionary-snapshot
+                                     # fingerprint (None: in-memory index, or
+                                     # built without source validation)
     payload: DataFrame | None = None  # (entity, description, kind, NERtype,
                                       # types) — ONE row per entity, bucketed
                                       # by entity: the response-build columns
@@ -326,6 +329,7 @@ class LookupIndex:
             bucketed=True, n_buckets=meta["n_buckets"],
             n_names=meta.get("n_names"),
             n_entities=meta.get("n_entities"),
+            source_fp=meta.get("source_fp"),
             # pre-round-5 artifacts lack the payload table — degrade to
             # None (consumers fall back to an items-based payload join)
             payload=(spark.table(f"{prefix}_payload")

@@ -25,10 +25,14 @@ from pyspark.sql import functions as F
 
 from lamapi_spark.functions.hashing import h48 as _h48
 
+# PageRank damping in percent: the fixed-point operators' default, and
+# the value pipeline/salience.conv_textrank replays in-row
+DAMPING_PCT = 85
+
 
 def pagerank_fixed_point(
     edges: DataFrame, n_iter: int = 3, scale: int = 10**9,
-    damping_pct: int = 85, checkpoint_every: int | None = 1,
+    damping_pct: int = DAMPING_PCT, checkpoint_every: int | None = 1,
 ) -> DataFrame:
     """Fixed-iteration PageRank over (src, dst) edges in BIGINT FIXED
     POINT (units of 1/scale; sum-to-N convention): per-edge
@@ -671,7 +675,7 @@ def bgp_match(triples: DataFrame,
 
 def ppr_fixed_point(
     edges: DataFrame, seeds: DataFrame, n_iter: int = 3,
-    scale: int = 10**9, damping_pct: int = 85,
+    scale: int = 10**9, damping_pct: int = DAMPING_PCT,
     checkpoint_every: int | None = 1,
 ) -> DataFrame:
     """Personalized PageRank (random walk with restart from a seed

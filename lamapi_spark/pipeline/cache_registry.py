@@ -78,3 +78,19 @@ def scoped_cache(df: DataFrame) -> DataFrame:
     if stack:
         stack[-1].register(df)
     return df
+
+
+def in_caller_scopes(fn):
+    """``fn`` wrapped to run under the scopes active on the calling
+    thread, so frames it caches on a pool thread are released with the
+    caller's scope."""
+    scopes = list(_stack())
+
+    def run(*args, **kwargs):
+        prev = _stack()
+        _local.stack = list(scopes)
+        try:
+            return fn(*args, **kwargs)
+        finally:
+            _local.stack = prev
+    return run

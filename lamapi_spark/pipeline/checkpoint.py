@@ -1,12 +1,16 @@
 """Stage checkpointing with per-stage lineage + metrics, enabling
-resume-from-failure (north-rule requirement).
+resume-from-failure.
 
 Each stage writes its output as parquet under ``<root>/<stage>/data``
 plus a ``metrics.json`` sidecar recording rows, partitions, duration,
-input lineage, and a fingerprint of the stage parameters. On rerun, a
-stage whose data + metrics exist (and whose fingerprint matches) is
-**read back instead of recomputed** — killing the job after stage k and
-rerunning produces byte-identical output without redoing stages 1..k.
+input lineage and the stage's fingerprint. On rerun, a stage whose data
+and sidecar exist is **read back instead of recomputed** when, and only
+when, the recorded fingerprint equals the caller's. Nothing else is
+compared, so the fingerprint must cover everything the stage's output
+depends on: pipeline/run.py chains it from the parameters each stage
+reads and the content fingerprints of its sources. The sidecar is
+removed before a stage's data is overwritten and replaced atomically
+after, so a crash leaves a stage that either matches or recomputes.
 
 This is the batch analogue of the reference's Mongo result cache
 (lookup_retriever.py:78-102,184-211): keyed memoization of expensive
@@ -21,10 +25,12 @@ import json
 import os
 import time
 from dataclasses import dataclass, field
+from functools import reduce
 from typing import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import MapType
 
 # per-partition lineage detail is capped: at cluster scale a stage can
 # write tens of thousands of files and the sidecar must stay a small
@@ -66,6 +72,23 @@ def _partition_lineage(data_path: str, parts: list[str]) -> dict:
     }
 
 
+def content_fingerprints(frames: dict[str, DataFrame]) -> dict[str, str]:
+    """``"<rows>:<bit_xor of xxhash64 over all columns>"`` per frame, an
+    order-independent content hash, for all frames in ONE Spark action.
+    MAP columns (which Spark cannot hash) enter as their sorted entries."""
+    def hashed(name: str, df: DataFrame) -> DataFrame:
+        cols = [F.col(f"`{f.name}`") for f in df.schema.fields]
+        cols = [F.array_sort(F.map_entries(c)) if isinstance(f.dataType, MapType)
+                else c for c, f in zip(cols, df.schema.fields)]
+        return df.select(F.lit(name).alias("src"), F.xxhash64(*cols).alias("h"))
+
+    rows = (reduce(DataFrame.unionByName, [hashed(*kv) for kv in frames.items()])
+            .groupBy("src").agg(F.count("*").alias("n"), F.expr("bit_xor(h)").alias("h"))
+            .collect())
+    got = {r["src"]: f"{r['n']}:{r['h']}" for r in rows}
+    return {n: got.get(n, "0:0") for n in frames}
+
+
 @dataclass
 class StageRunner:
     spark: SparkSession
@@ -88,12 +111,17 @@ class StageRunner:
             return build()
         data_path, meta_path = self._paths(stage)
         if os.path.exists(meta_path) and os.path.exists(os.path.join(data_path, "_SUCCESS")):
-            with open(meta_path) as fh:
-                meta = json.load(fh)
+            try:
+                with open(meta_path) as fh:
+                    meta = json.load(fh)
+            except ValueError:  # an unreadable sidecar commits nothing
+                meta = {}
             if meta.get("fingerprint") == fingerprint:
                 meta["resumed"] = True
                 self.metrics.append(meta)
                 return self.spark.read.parquet(data_path)
+        if os.path.exists(meta_path):  # it must not certify the data replacing it
+            os.remove(meta_path)
         t0 = time.time()
         df = build()
         # rows_out is harvested from the write job itself via observe()
@@ -127,7 +155,9 @@ class StageRunner:
             "inputs": list(inputs),
             "resumed": False,
         }
-        with open(meta_path, "w") as fh:
+        tmp = f"{meta_path}.tmp"
+        with open(tmp, "w") as fh:
             json.dump(meta, fh)
+        os.replace(tmp, meta_path)
         self.metrics.append(meta)
         return out

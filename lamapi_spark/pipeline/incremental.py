@@ -66,9 +66,10 @@ def run_pipeline_incremental(
 
     Returns {"new_convs": int, "new_triples": int, "skipped_convs": int,
     "triples": DataFrame over the full output}. ``pipeline_kwargs`` pass
-    through to :func:`run_pipeline` (fuzzy, thresholds, index, ...) —
-    they must match across increments (same fingerprint discipline as
-    the checkpoint sidecar: changed parameters mean a new output_dir).
+    through to :func:`run_pipeline` (fuzzy, thresholds, index, ...) and
+    must match across increments: changed parameters mean a new
+    output_dir. A ``checkpoint_dir`` may be shared across increments,
+    since stage fingerprints cover the content of each delta.
     """
     triples_path = os.path.join(output_dir, "triples")
     convs_path = os.path.join(output_dir, "_convs")
@@ -92,19 +93,6 @@ def run_pipeline_incremental(
                 "triples": spark.read.parquet(triples_path)}
 
     delta = transcripts.join(F.broadcast(delta_convs), "conv_id")
-    if pipeline_kwargs.get("checkpoint_dir"):
-        # StageRunner fingerprints PARAMETERS, not input identity — one
-        # checkpoint dir shared across increments would resume a stage
-        # computed over a DIFFERENT delta. Scope it by an
-        # order-independent fingerprint of this delta's conv set, so a
-        # retried increment still resumes but a new delta never reuses.
-        fp = delta_convs.agg(
-            F.count("*").alias("n"),
-            F.expr("bit_xor(xxhash64(conv_id))").alias("h")).head()
-        pipeline_kwargs = dict(
-            pipeline_kwargs,
-            checkpoint_dir=os.path.join(pipeline_kwargs["checkpoint_dir"],
-                                        f"delta_{fp['n']}_{fp['h']}"))
     out = run_pipeline(spark, delta, kg_items, kg_edges,
                        kg_sameas=kg_sameas, **pipeline_kwargs)
     new_triples = out["triples"].select(*_TRIPLE_COLS).withColumn(

@@ -6,23 +6,34 @@ transcripts ──detect──> mention spans (exact + fuzzy + OOV)
             ──pairs/probe──> provenance triples
             ──canonicalize──> final triples + canonical map
 
-Every stage checkpoints through StageRunner (resume-from-failure). The
-dictionary is built once from kg_items; at production scale the
-dictionary, token index, and fuzzy indexes are offline artifacts, which
-the checkpointing mirrors.
+The pipeline is one table (``_stages``): stage -> (deps, the parameters
+it reads, build). One loop runs it, handing every stage whose deps are
+done to a small thread pool, so independent stages overlap. The table
+also keys the resume check: a stage's fingerprint hashes the params it
+reads and its deps' fingerprints, down to the sources (the content of
+the input frames, and the lookup index's ``_meta`` row). A stage
+resumes only when its recorded fingerprint equals the new one, so a
+changed input or parameter recomputes exactly the stages below it.
 """
 
 from __future__ import annotations
 
+import hashlib
+import json
+import time
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
+from functools import partial
+from typing import Callable, NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-import time
-
+import lamapi_spark.operators.lookup as lookup_ops
 from lamapi_spark.operators.indexes import LookupIndex
 from lamapi_spark.operators.label_dict import build_label_dict
+from lamapi_spark.pipeline.cache_registry import in_caller_scopes, scoped_cache
 from lamapi_spark.pipeline.canonicalize import canonical_map, canonicalize_triples
-from lamapi_spark.pipeline.checkpoint import StageRunner
+from lamapi_spark.pipeline.checkpoint import StageRunner, content_fingerprints
 from lamapi_spark.pipeline.linking import candidates_for_surfaces, link_mentions
 from lamapi_spark.pipeline.mentions import detect_mentions, detect_oov_mentions
 from lamapi_spark.pipeline.triples import extract_triples
@@ -45,25 +56,17 @@ def build_index_artifacts(
     artifacts with no dictionary-side shuffle/broadcast. ``reuse=True``
     loads existing tables instead of rebuilding; the returned index's
     ``reused`` flag records which happened."""
-    # Reuse only an artifact that is COMPATIBLE on two axes, both
-    # validated against the persisted _meta sidecar:
+    # Reuse only an artifact whose _meta sidecar matches on two axes:
     # - build PARAMETERS (silently probing an artifact pruned with a
     #   different K would drop the exact-name/1-edit recall guards);
-    # - the dictionary SNAPSHOT: a cheap order-independent fingerprint
-    #   of kg_items (count + bit_xor(xxhash64(entity, popularity)) — one
-    #   scalar aggregation, trivially parallel). Without this, a caller
-    #   handing a DIFFERENT kg_items frame under the default prefix
-    #   would silently link against the stale dictionary. Snapshot-
-    #   managed deployments (fresh prefix per dictionary version) can
-    #   skip the validation scan with ``validate_source=False``; label
-    #   edits that keep (entity, popularity) identical elude the fast
-    #   fingerprint — version the prefix for those.
+    # - the dictionary SNAPSHOT: the content fingerprint of kg_items, so
+    #   a DIFFERENT kg_items frame under the same prefix rebuilds instead
+    #   of linking against the stale dictionary. Snapshot-managed
+    #   deployments (a fresh prefix per dictionary version) can skip the
+    #   validation scan with ``validate_source=False``.
     source_fp = None
     if validate_source:
-        r = kg_items.agg(
-            F.count("*").alias("n"),
-            F.expr("bit_xor(xxhash64(entity, popularity))").alias("h")).head()
-        source_fp = f"{r['n']}:{r['h']}"
+        source_fp = content_fingerprints({"kg_items": kg_items})["kg_items"]
     if reuse and LookupIndex.exists(spark, prefix, fuzzy=fuzzy,
                                     limit_per_token=limit_per_token,
                                     fuzzy_edits=fuzzy_edits,
@@ -78,6 +81,120 @@ def build_index_artifacts(
         label_dict, prefix=prefix, n_buckets=n_buckets, fuzzy=fuzzy,
         limit_per_token=limit_per_token, fuzzy_edits=fuzzy_edits,
         source_fp=source_fp)
+
+
+_SPAN = ("conv_id", "turn_idx", "start", "ntoken_span", "surface")
+
+
+class Stage(NamedTuple):
+    deps: tuple[str, ...]     # stages and sources the build reads
+    params: tuple[str, ...]   # run_pipeline parameters the build reads
+    build: Callable[[dict, dict], object]  # (deps, params) -> output
+    checkpoint: bool = True   # False: rebuilt every run, never stored
+    cache: bool = False       # several stages read the output
+
+
+def _stages(index: LookupIndex | None, broadcast_dict: bool,
+            broadcast_edges: bool, count_match: bool) -> dict[str, Stage]:
+    """The pipeline table, in dependency order; a build sees only its
+    declared deps and params. label_dict is a dep only where it is read:
+    an index replaces it in mentions and the slim match, a bucketed one
+    in oov_mentions and linked, one with a payload table in candidates."""
+    ix = () if index is None else ("index",)
+    bucketed = index is not None and index.bucketed
+    ld = {True: ("label_dict",), False: ()}  # ld[the build reads label_dict]
+
+    def slim(d, p):
+        # ONE narrow match pass feeds the candidates and the linking
+        match = lookup_ops.token_match(
+            d["prepared"], d.get("label_dict"), broadcast_dict, fuzzy=p["fuzzy"],
+            cache_narrow=True, limit_per_token=p["limit_per_token"],
+            fuzzy_edits=1, index=d.get("index"), slim=True)
+        if count_match:  # materialized once, not raced for by its two readers
+            match.count()
+        return match
+
+    return {
+        "canonical_map": Stage(("kg_sameas",), (), lambda d, p: canonical_map(d["kg_sameas"])),
+        "label_dict": Stage(("kg_items",), (),
+                            lambda d, p: build_label_dict(d["kg_items"]), cache=True),
+        "mentions": Stage(
+            ("transcripts", *ix, *ld[index is None]), ("max_ntoken", "fuzzy"),
+            lambda d, p: detect_mentions(
+                d["transcripts"], d.get("label_dict"), p["max_ntoken"],
+                p["fuzzy"], broadcast_dict, index=d.get("index"))),
+        "oov_mentions": Stage(
+            ("transcripts", *ix, *ld[not bucketed]), (),
+            lambda d, p: detect_oov_mentions(
+                d["transcripts"], d.get("label_dict"),
+                broadcast_dict=broadcast_dict, index=d.get("index"))),
+        "all_spans": Stage(
+            ("mentions", "oov_mentions"), (), checkpoint=False, build=lambda d, p:
+            d["mentions"].select(*_SPAN).unionByName(d["oov_mentions"].select(*_SPAN))),
+        "surfaces": Stage(("all_spans",), (), checkpoint=False, cache=True, build=lambda d, p:
+                          d["all_spans"].select("surface").distinct()),
+        "prepared": Stage(("surfaces",), (), checkpoint=False, build=lambda d, p:
+                          lookup_ops._prepare_mentions(d["surfaces"].select(
+                              F.col("surface").alias("mention")), "mention")),
+        "slim": Stage(("prepared", *ix, *ld[index is None]), ("fuzzy", "limit_per_token"),
+                      slim, checkpoint=False),
+        "candidates": Stage(
+            ("surfaces", "prepared", "slim", "kg_items", *ix,
+             *ld[index is None or index.payload is None]),
+            ("fuzzy", "candidate_limit", "limit_per_token"),
+            lambda d, p: candidates_for_surfaces(
+                d["surfaces"], d.get("label_dict"), d["kg_items"],
+                fuzzy=p["fuzzy"], broadcast_dict=broadcast_dict,
+                limit=p["candidate_limit"], limit_per_token=p["limit_per_token"],
+                index=d.get("index"), prepared=d["prepared"], match=d["slim"])),
+        "linked": Stage(
+            ("all_spans", "prepared", "slim", *ix, *ld[not bucketed]),
+            ("nil_threshold",),
+            lambda d, p: link_mentions(
+                d["all_spans"], nil_threshold=p["nil_threshold"],
+                best=lookup_ops.best_links(d["slim"], d["prepared"], d.get("label_dict"),
+                                           broadcast_dict, index=d.get("index")))),
+        "triples_raw": Stage(("linked", "kg_edges"), (), lambda d, p: extract_triples(
+            d["linked"], d["kg_edges"], broadcast_edges)),
+        "triples": Stage(("triples_raw", "canonical_map"), (), lambda d, p:
+                         canonicalize_triples(d["triples_raw"], d["canonical_map"])),
+    }
+
+
+def _digest(*parts) -> str:
+    return hashlib.sha256(json.dumps(parts, default=str).encode()).hexdigest()[:16]
+
+
+def _fingerprints(stages: dict[str, Stage], params: dict, sources: dict,
+                  known: dict[str, str]) -> dict[str, str]:
+    """The sources' fingerprints (``known`` ones are not scanned), then
+    each stage's from the params it reads and its deps' fingerprints."""
+    frames = {k: v for k, v in sources.items() if isinstance(v, DataFrame) and k not in known}
+    index = sources["index"]
+    if index is not None and index.source_fp is None:
+        frames["index"] = index.names  # an in-memory index: hash its rows
+    fps = {**content_fingerprints(frames), **known}
+    if index is not None:  # as in its _meta row: the snapshot, then build parameters
+        fps["index"] = _digest(index.source_fp or fps["index"], index.fuzzy is not None,
+                               index.limit_per_token, index.fuzzy_edits)
+    for name, st in stages.items():  # table order: deps come first
+        fps[name] = _digest({k: params[k] for k in st.params},
+                            [fps[d] for d in st.deps])
+    return fps
+
+
+def _schedule(stages: dict[str, Stage], done: dict, run, pool) -> None:
+    """Run each stage as soon as all its deps are in ``done``."""
+    pending, running = dict(stages), {}
+    while pending or running:
+        for name in [n for n, st in pending.items() if all(d in done for d in st.deps)]:
+            st = pending.pop(name)
+            running[pool.submit(run, name, st, {d: done[d] for d in st.deps})] = name
+        if not running:
+            raise ValueError(f"stages with unmet deps: {sorted(pending)}")
+        finished, _ = wait(running, return_when=FIRST_COMPLETED)
+        for f in finished:
+            done[running.pop(f)] = f.result()
 
 
 def run_pipeline(
@@ -106,180 +223,43 @@ def run_pipeline(
     BOTH the build parameters and a fingerprint of the kg_items snapshot
     against the ``_meta`` sidecar (build_index_artifacts), so a changed
     dictionary under the same prefix rebuilds instead of silently
-    linking against the stale index."""
+    linking against the stale index. The broadcast flags pick join
+    plans, not results, so no stage fingerprint includes them."""
     runner = StageRunner(spark, checkpoint_dir or "", enabled=checkpoint_dir is not None)
-    fp = (f"fuzzy={fuzzy};nil={nil_threshold};k={max_ntoken};"
-          f"lpt={limit_per_token};cl={candidate_limit}")
-
+    known = {}  # source fingerprints known without a scan
     if index is None and use_index_artifacts:
         t0 = time.time()
         index = build_index_artifacts(
             spark, kg_items, fuzzy=fuzzy, limit_per_token=limit_per_token,
             prefix=index_prefix)
+        known["kg_items"] = index.source_fp  # validated against kg_items just now
         runner.metrics.append({
             "stage": "index_artifacts", "rows_out": None, "partitions": None,
-            "duration_s": round(time.time() - t0, 3), "fingerprint": fp,
+            "duration_s": round(time.time() - t0, 3), "fingerprint": index.source_fp,
             "inputs": ["kg_items"], "resumed": index.reused})
+    stages = _stages(index, broadcast_dict, broadcast_edges, runner.enabled)
+    if kg_sameas is None:
+        del stages["canonical_map"], stages["triples"]
+    params = {"fuzzy": fuzzy, "nil_threshold": nil_threshold, "max_ntoken": max_ntoken,
+              "limit_per_token": limit_per_token, "candidate_limit": candidate_limit}
+    done = {"transcripts": transcripts, "kg_items": kg_items, "kg_edges": kg_edges,
+            "kg_sameas": kg_sameas, "index": index}
+    fps = _fingerprints(stages, params, done, known) if runner.enabled else {}
 
-    # Independent stages overlap from a small thread pool (guide §2.6):
-    # Spark happily runs several jobs at once inside one application —
-    # the serial stage chain was leaving the executor pool idle through
-    # every stage's task tail. canonical_map depends only on kg_sameas;
-    # mentions/oov_mentions share no dependency with each other; and on
-    # the BUCKETED-index path they never touch label_dict at all (the
-    # span/vocab joins probe the saved artifact tables), so label_dict
-    # itself joins the overlapped block there. Job descriptions are
-    # thread-local so per-stage attribution in the event log is
-    # unchanged, and each stage still checkpoints to its own directory
-    # (resume semantics untouched).
-    from concurrent.futures import ThreadPoolExecutor
+    def run_stage(name: str, st: Stage, deps: dict):
+        build = partial(st.build, deps, {k: params[k] for k in st.params})
+        out = runner.run(name, build, fps.get(name, ""), st.deps) if st.checkpoint else build()
+        return scoped_cache(out) if st.cache else out
 
-    pool = ThreadPoolExecutor(max_workers=4)
-    try:
-        return _run_pipeline_stages(
-            spark, runner, pool, fp, transcripts, kg_items, kg_edges,
-            kg_sameas, index, fuzzy, nil_threshold, max_ntoken,
-            broadcast_dict, broadcast_edges, limit_per_token,
-            candidate_limit)
-    finally:
-        pool.shutdown(wait=True)
-
-
-def _run_pipeline_stages(spark, runner, pool, fp, transcripts, kg_items,
-                         kg_edges, kg_sameas, index, fuzzy,
-                         nil_threshold, max_ntoken, broadcast_dict,
-                         broadcast_edges, limit_per_token, candidate_limit):
-    from lamapi_spark.pipeline.cache_registry import scoped_cache
-
-    f_cmap = None
-    if kg_sameas is not None:
-        f_cmap = pool.submit(
-            runner.run, "canonical_map",
-            lambda: canonical_map(kg_sameas), fp, ("kg_sameas",))
-
-    # cache: the dictionary feeds the token/variant indexes (non-artifact
-    # path), the candidate payload join and the ids-backfill arm — one
-    # materialization, many consumers (on a cluster the indexes are the
-    # offline artifacts above; the payload stays a plain table)
-    def _label_dict_stage():
-        return runner.run(
-            "label_dict", lambda: build_label_dict(kg_items), fp,
-            ("kg_items",))
-
-    bucketed = index is not None and index.bucketed
-    if bucketed:
-        # mentions/oov probe the artifact tables — label_dict overlaps
-        # with them instead of heading the serial chain. detect_mentions
-        # ignores its label_dict argument whenever an index is present;
-        # detect_oov_mentions does so for a BUCKETED index.
-        f_ld = pool.submit(_label_dict_stage)
-        f_mentions = pool.submit(
-            runner.run, "mentions",
-            lambda: detect_mentions(transcripts, None, max_ntoken, fuzzy,
-                                    broadcast_dict, index=index),
-            fp, ("transcripts", "label_dict"))
-        f_oov = pool.submit(
-            runner.run, "oov_mentions",
-            lambda: detect_oov_mentions(transcripts, None,
-                                        broadcast_dict=broadcast_dict,
-                                        index=index),
-            fp, ("transcripts", "label_dict"))
-        label_dict = scoped_cache(f_ld.result())
-    else:
-        label_dict = scoped_cache(_label_dict_stage())
-        f_mentions = pool.submit(
-            runner.run, "mentions",
-            lambda: detect_mentions(transcripts, label_dict, max_ntoken,
-                                    fuzzy, broadcast_dict, index=index),
-            fp, ("transcripts", "label_dict"))
-        f_oov = pool.submit(
-            runner.run, "oov_mentions",
-            lambda: detect_oov_mentions(transcripts, label_dict,
-                                        broadcast_dict=broadcast_dict,
-                                        index=index),
-            fp, ("transcripts", "label_dict"))
-    mentions = f_mentions.result()
-    oov = f_oov.result()
-
-    all_spans = mentions.select(
-        "conv_id", "turn_idx", "start", "ntoken_span", "surface",
-    ).unionByName(oov.select(
-        "conv_id", "turn_idx", "start", "ntoken_span", "surface"))
-
-    # the distinct-surface frame is read several times inside lookup
-    # (exact arm, fuzzy arm, two feature joins) — cache it
-    surfaces = scoped_cache(all_spans.select("surface").distinct())
-
-    # ONE narrow match pass (cached) feeds both consumers:
-    # - the response-parity candidates artifact (19 fields, truncated at
-    #   candidate_limit — lookup() itself defaults to the reference's
-    #   limit=1000; the pipeline artifact defaults to 100 because LINKING
-    #   NO LONGER DEPENDS ON IT: best_links takes the argmax over the
-    #   FULL un-truncated match, so shrinking the artifact costs nothing
-    #   in link quality and cuts the heaviest stage's build+write ~3x);
-    # - best_links, the exact per-surface linking decision.
-    from lamapi_spark.operators.lookup import _prepare_mentions, best_links, token_match
-    prepared = _prepare_mentions(
-        surfaces.select(F.col("surface").alias("mention")), "mention")
-    slim = token_match(prepared, label_dict, broadcast_dict, fuzzy=fuzzy,
-                       cache_narrow=True, limit_per_token=limit_per_token,
-                       fuzzy_edits=1, index=index, slim=True)
-
-    # materialize the shared slim-match cache ONCE before the two
-    # consumers fan out, so the concurrent candidates/linked stages read
-    # the cached frame instead of racing to compute it (only when
-    # checkpointing: the checkpoint-less path stays fully lazy)
-    if runner.enabled:
-        slim.count()
-    f_candidates = pool.submit(
-        runner.run, "candidates",
-        lambda: candidates_for_surfaces(
-            surfaces,
-            label_dict, kg_items, fuzzy=fuzzy, broadcast_dict=broadcast_dict,
-            limit=candidate_limit,
-            limit_per_token=limit_per_token, index=index,
-            prepared=prepared, match=slim),
-        fp, ("mentions", "oov_mentions", "label_dict", "kg_items"))
-
-    # with a bucketed index the dictionary is presumed non-broadcastable:
-    # best_links then derives its name-set frame from the bucketed names
-    # artifact (shuffle-free dictionary side) and never ships it — or the
-    # per-mention max frame — through the driver; same policy as the
-    # mention joins above
-    linked = runner.run(
-        "linked",
-        lambda: link_mentions(
-            all_spans, nil_threshold=nil_threshold,
-            best=best_links(slim, prepared, label_dict, broadcast_dict,
-                            index=index)),
-        fp, ("mentions", "candidates"))
-    candidates = f_candidates.result()
-
-    triples_raw = runner.run(
-        "triples_raw",
-        lambda: extract_triples(linked, kg_edges, broadcast_edges),
-        fp, ("linked", "kg_edges"))
-
-    if kg_sameas is not None:
-        cmap = f_cmap.result()
-        triples = runner.run(
-            "triples",
-            lambda: canonicalize_triples(triples_raw, cmap), fp,
-            ("triples_raw", "canonical_map"))
-    else:
-        cmap = spark.createDataFrame([], "raw_entity string, canonical_entity string")
-        triples = triples_raw
-
-    return {
-        "label_dict": label_dict,
-        "mentions": mentions,
-        "oov_mentions": oov,
-        "candidates": candidates,
-        "linked": linked,
-        "triples": triples.select("subj", "pred", "obj", "conv_id", "turn_idx"),
-        "canonical_map": cmap,
-        "metrics": runner.metrics,
-    }
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        _schedule(stages, done, in_caller_scopes(run_stage), pool)
+    if kg_sameas is None:
+        done.update(triples=done["triples_raw"], canonical_map=spark.createDataFrame(
+            [], "raw_entity string, canonical_entity string"))
+    return {**{k: done[k] for k in ("label_dict", "mentions", "oov_mentions",
+                                    "candidates", "linked", "canonical_map")},
+            "triples": done["triples"].select("subj", "pred", "obj", "conv_id", "turn_idx"),
+            "metrics": runner.metrics}
 
 
 def triple_prf(triples: DataFrame, truth: DataFrame) -> dict[str, float]:

@@ -41,6 +41,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from lamapi_spark.ops.graph import DAMPING_PCT
+
 
 def entity_salience(occurrences: DataFrame, top_k: int = 3,
                     cache_tf: bool = True) -> DataFrame:
@@ -98,6 +100,45 @@ def entity_salience(occurrences: DataFrame, top_k: int = 3,
         F.col("it.df").alias("df"),
         F.col("it.salience").alias("salience"),
     )
+
+
+def similar_turn_pairs(transcripts: DataFrame, min_jaccard_bp: int) -> DataFrame:
+    """Turn pairs ``ta < tb`` of one conversation whose distinct
+    lowercase word tokens reach ``min_jaccard_bp`` basis points of
+    Jaccard, in exact integers: common * 10000 >= bp * (na + nb - common).
+    Repartitioned by conv_id, so per-conversation work downstream needs
+    no further exchange.
+
+    -> (conv_id, ta, tb, _c, _na, _nb): common tokens and both sizes."""
+    toks_arr = transcripts.select(
+        "conv_id", "turn_idx",
+        F.filter(
+            F.array_distinct(F.split(
+                F.trim(F.lower(F.col("text"))), r"[^a-z0-9]+")),
+            lambda t: t != "").alias("_ts"))
+    toks_arr = toks_arr.repartition(F.col("conv_id"))
+    toks = toks_arr.select(
+        "conv_id", "turn_idx", F.size("_ts").alias("_n"),
+        F.explode("_ts").alias("tok"))
+    # turn_idx is unique per (conv_id, tok) group (tokens are distinct
+    # within a turn), so the sorted struct array gives deterministic
+    # ta < tb pair generation
+    grouped = toks.groupBy("conv_id", "tok").agg(
+        F.sort_array(F.collect_list(F.struct("turn_idx", "_n"))).alias("_tl"))
+    pair_structs = F.expr("""
+      flatten(transform(_tl, (a, i) ->
+        transform(slice(_tl, i + 2, size(_tl) - i - 1), b ->
+          named_struct('ta', a.turn_idx, 'na', a._n,
+                       'tb', b.turn_idx, 'nb', b._n))))
+    """)
+    common = (grouped.select("conv_id", F.explode(pair_structs).alias("p"))
+              .groupBy("conv_id", F.col("p.ta").alias("ta"),
+                       F.col("p.tb").alias("tb"))
+              .agg(F.count("*").alias("_c"),
+                   F.min("p.na").alias("_na"), F.min("p.nb").alias("_nb")))
+    return common.filter(F.col("_c") * 10000
+                         >= F.lit(int(min_jaccard_bp))
+                         * (F.col("_na") + F.col("_nb") - F.col("_c")))
 
 
 def conv_textrank(transcripts: DataFrame, top_k: int = 2,
@@ -167,35 +208,7 @@ def conv_textrank(transcripts: DataFrame, top_k: int = 2,
     # key) makes every aggregation and the final window partition-local:
     # ONE data exchange end to end (was: five subtree executions, six
     # exchanges, plus 5+ checkpoint jobs in the loop).
-    toks_arr = transcripts.select(
-        "conv_id", "turn_idx",
-        F.filter(
-            F.array_distinct(F.split(
-                F.trim(F.lower(F.col("text"))), r"[^a-z0-9]+")),
-            lambda t: t != "").alias("_ts"))
-    toks_arr = toks_arr.repartition(F.col("conv_id"))
-    toks = toks_arr.select(
-        "conv_id", "turn_idx", F.size("_ts").alias("_n"),
-        F.explode("_ts").alias("tok"))
-    # turn_idx is unique per (conv_id, tok) group (tokens are distinct
-    # within a turn), so the sorted struct array gives deterministic
-    # ta < tb pair generation
-    grouped = toks.groupBy("conv_id", "tok").agg(
-        F.sort_array(F.collect_list(F.struct("turn_idx", "_n"))).alias("_tl"))
-    pair_structs = F.expr("""
-      flatten(transform(_tl, (a, i) ->
-        transform(slice(_tl, i + 2, size(_tl) - i - 1), b ->
-          named_struct('ta', a.turn_idx, 'na', a._n,
-                       'tb', b.turn_idx, 'nb', b._n))))
-    """)
-    common = (grouped.select("conv_id", F.explode(pair_structs).alias("p"))
-              .groupBy("conv_id", F.col("p.ta").alias("ta"),
-                       F.col("p.tb").alias("tb"))
-              .agg(F.count("*").alias("_c"),
-                   F.min("p.na").alias("_na"), F.min("p.nb").alias("_nb")))
-    pairs = common.filter(F.col("_c") * 10000
-                          >= F.lit(int(min_jaccard_bp))
-                          * (F.col("_na") + F.col("_nb") - F.col("_c")))
+    pairs = similar_turn_pairs(transcripts, min_jaccard_bp)
     # per-conversation in-row PageRank, replaying pagerank_fixed_point's
     # integer recurrence exactly (BIGINT units; rank div degree
     # contributions; teleport + (85 * sum) div 100 update; no-in-edge
@@ -207,7 +220,7 @@ def conv_textrank(transcripts: DataFrame, top_k: int = 2,
     # O(V*E + n_iter*E) on arrays bounded by the conversation's own
     # turn count — the same transcript-length bound the pair generation
     # already relies on.
-    damping_pct = 85  # pagerank_fixed_point's default, replayed exactly
+    damping_pct = DAMPING_PCT  # pagerank_fixed_point's, replayed exactly
     teleport = (100 - damping_pct) * int(scale) // 100
     conv = pairs.groupBy("conv_id").agg(
         F.collect_list(F.struct(F.col("ta"), F.col("tb"))).alias("_ps"))

@@ -4,6 +4,8 @@ pandas-UDF detector equivalence, and resume-from-checkpoint idempotence."""
 
 from __future__ import annotations
 
+import json
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -74,7 +76,8 @@ def test_pandas_detector_equivalence(spark, fix):
 
 def test_resume_from_checkpoint(spark, fix, tmp_path):
     """Stage-level resume: a second run over an existing checkpoint dir
-    reuses every stage (resumed=True) and yields identical triples."""
+    reuses every stage (resumed=True) and yields identical triples; a
+    changed parameter recomputes only the stages downstream of it."""
     kg, dfs = fix
     ckpt = str(tmp_path / "ckpt3")
     args = (spark, dfs["transcripts"], dfs["kg_items"], dfs["kg_edges"],
@@ -97,9 +100,79 @@ def test_resume_from_checkpoint(spark, fix, tmp_path):
         if not pl["detail_truncated"]:
             assert sum(f["rows"] for f in pl["files"]) == m["rows_out"]
 
-    # changed parameters must invalidate the checkpoint, not reuse it
+    # a changed parameter invalidates exactly the stages that read it
+    # and their descendants; the rest resume
     out3 = run_pipeline(*args, checkpoint_dir=ckpt, nil_threshold=0.5)
-    assert not all(m["resumed"] for m in out3["metrics"])
+    assert _recomputed(out3) == {"linked", "triples_raw", "triples"}, out3["metrics"]
+    fresh = run_pipeline(*args, nil_threshold=0.5)
+    assert _triples(out3) == _triples(fresh)
+
+
+def _recomputed(out) -> set[str]:
+    return {m["stage"] for m in out["metrics"] if not m["resumed"]}
+
+
+def _triples(out) -> list[tuple]:
+    return sorted(tuple(r) for r in out["triples"].collect())
+
+
+@pytest.mark.parametrize("in_memory_index", [False, True])
+def test_resume_after_input_change(spark, fix, tmp_path, in_memory_index):
+    """A rerun on half the transcripts into the same checkpoint dir
+    returns the half's triples: every stage that reads transcripts
+    recomputes, the dictionary-side stages resume. Covers the default
+    index artifacts and a caller's in-memory index (no _meta row)."""
+    from lamapi_spark.operators.indexes import LookupIndex
+
+    kg, dfs = fix
+    ckpt = str(tmp_path / "ckpt_half")
+    kg_args = (dfs["kg_items"], dfs["kg_edges"], dfs["kg_sameas"])
+    kw = {"index": LookupIndex.build(build_label_dict(dfs["kg_items"]),
+                                     limit_per_token=100)} if in_memory_index else {}
+    convs = sorted(r.conv_id for r in
+                   dfs["transcripts"].select("conv_id").distinct().collect())
+    half = dfs["transcripts"].filter(F.col("conv_id").isin(convs[:len(convs) // 2]))
+    run_pipeline(spark, dfs["transcripts"], *kg_args, checkpoint_dir=ckpt, **kw)
+    out = run_pipeline(spark, half, *kg_args, checkpoint_dir=ckpt, **kw)
+    fresh = run_pipeline(spark, half, *kg_args, **kw)
+    assert _triples(out) == _triples(fresh) and _triples(fresh)
+    assert _recomputed(out) == {"mentions", "oov_mentions", "candidates",
+                                "linked", "triples_raw", "triples"}, out["metrics"]
+    assert {"label_dict", "canonical_map"} <= {m["stage"] for m in out["metrics"]}
+
+
+def test_truncated_sidecar_recomputes(spark, fix, tmp_path):
+    """A stage whose metrics.json is unreadable (a kill during the
+    sidecar write) recomputes instead of failing every rerun."""
+    kg, dfs = fix
+    ckpt = tmp_path / "ckpt_trunc"
+    args = (spark, dfs["transcripts"], dfs["kg_items"], dfs["kg_edges"],
+            dfs["kg_sameas"])
+    want = _triples(run_pipeline(*args, checkpoint_dir=str(ckpt)))
+    sidecar = ckpt / "linked" / "metrics.json"
+    sidecar.write_text(sidecar.read_text()[:20])
+    out = run_pipeline(*args, checkpoint_dir=str(ckpt))
+    assert _recomputed(out) == {"linked"}, out["metrics"]
+    assert _triples(out) == want
+    assert json.loads(sidecar.read_text())["stage"] == "linked"
+
+
+def test_filtered_read_changes_fingerprint(spark, fix, tmp_path):
+    """Source fingerprints hash content: a filtered read of a parquet
+    file lists the same input files as the full read but fingerprints
+    differently, and a read-back fingerprints like the frame written
+    (map columns included)."""
+    from lamapi_spark.pipeline.checkpoint import content_fingerprints
+
+    kg, dfs = fix
+    path = str(tmp_path / "items")
+    dfs["kg_items"].write.parquet(path)
+    full = spark.read.parquet(path)
+    part = full.filter(F.col("popularity") > 10)
+    assert sorted(part.inputFiles()) == sorted(full.inputFiles())
+    fps = content_fingerprints({"full": full, "part": part, "mem": dfs["kg_items"]})
+    assert fps["full"] != fps["part"]
+    assert fps["full"] == fps["mem"]
 
 
 def test_incremental_equals_full(spark, fix, tmp_path):
@@ -117,8 +190,8 @@ def test_incremental_equals_full(spark, fix, tmp_path):
     args = (dfs["kg_items"], dfs["kg_edges"])
     kw = dict(kg_sameas=dfs["kg_sameas"], use_index_artifacts=False,
               n_output_buckets=4,
-              # exercises the per-delta checkpoint scoping: a shared dir
-              # across increments must never resume another delta's stage
+              # a shared dir across increments must never resume another
+              # delta's stage: stage fingerprints cover the delta's content
               checkpoint_dir=str(tmp_path / "inc_ckpt"))
 
     r1 = run_pipeline_incremental(

@@ -7,46 +7,23 @@ The equivalence claim being tested: the recurrence
 ``rank' = teleport + (85 * sum(rank div degree over in-edges)) div 100``
 has no cross-component term (teleport is a per-node constant and the
 symmetric edge set needs no dangling mass), so computing it per
-conversation cannot change any value.
+conversation cannot change any value. Both sides rank the same turn
+pairs (salience.similar_turn_pairs); only the PageRank differs.
 """
 
 from pyspark.sql import functions as F
 
-from lamapi_spark.pipeline.salience import conv_textrank
+from lamapi_spark.pipeline.salience import conv_textrank, similar_turn_pairs
 
 
 def _reference_textrank(spark, tr, top_k, min_jaccard_bp, n_iter, scale):
-    """The pre-round-6 formulation, replayed verbatim: global
-    pagerank_fixed_point over conv#turn composite nodes."""
+    """The pre-round-6 formulation: the production turn pairs, ranked
+    by a global pagerank_fixed_point over conv#turn composite nodes."""
     from pyspark.sql import Window
 
     from lamapi_spark.ops.graph import pagerank_fixed_point
 
-    toks_arr = tr.select(
-        "conv_id", "turn_idx",
-        F.filter(
-            F.array_distinct(F.split(
-                F.trim(F.lower(F.col("text"))), r"[^a-z0-9]+")),
-            lambda t: t != "").alias("_ts"))
-    toks = toks_arr.select(
-        "conv_id", "turn_idx", F.size("_ts").alias("_n"),
-        F.explode("_ts").alias("tok"))
-    grouped = toks.groupBy("conv_id", "tok").agg(
-        F.sort_array(F.collect_list(F.struct("turn_idx", "_n"))).alias("_tl"))
-    pair_structs = F.expr("""
-      flatten(transform(_tl, (a, i) ->
-        transform(slice(_tl, i + 2, size(_tl) - i - 1), b ->
-          named_struct('ta', a.turn_idx, 'na', a._n,
-                       'tb', b.turn_idx, 'nb', b._n))))
-    """)
-    common = (grouped.select("conv_id", F.explode(pair_structs).alias("p"))
-              .groupBy("conv_id", F.col("p.ta").alias("ta"),
-                       F.col("p.tb").alias("tb"))
-              .agg(F.count("*").alias("_c"),
-                   F.min("p.na").alias("_na"), F.min("p.nb").alias("_nb")))
-    pairs = common.filter(F.col("_c") * 10000
-                          >= F.lit(int(min_jaccard_bp))
-                          * (F.col("_na") + F.col("_nb") - F.col("_c")))
+    pairs = similar_turn_pairs(tr, min_jaccard_bp)
     node = lambda t: F.concat("conv_id", F.lit("#"), F.col(t))  # noqa: E731
     edges = pairs.select(F.explode(F.array(
         F.struct(node("ta").alias("src"), node("tb").alias("dst")),
