@@ -204,8 +204,8 @@ def bigram_lm_score(
     excluding document-final positions), so probabilities per context
     sum to 1 over the observed successor set plus smoothing mass; V is
     the full unigram vocabulary. Documents with fewer than two tokens
-    have no bigram positions and are omitted (the composing filter
-    treats absent as unscorable, like the multimodal null degrade).
+    have no bigram positions and are omitted: they get no row, and the
+    composing filter treats a document with no score as unscorable.
 
     Engine parity: identical discipline to unigram_lm_score — one ln()
     per distinct (bigram count, context count) pair rounded to 6

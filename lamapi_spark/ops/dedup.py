@@ -276,8 +276,7 @@ def hamming_pairs(
     max_hamming: int = 3, n_bands: int = 4, max_bucket: int = 1000,
 ) -> DataFrame:
     """Near-dup pairs (id_a < id_b) by Hamming distance <= ``max_hamming``
-    over any fixed-width bit signature — the shared pairing stage for
-    text SimHash (60 bits) and perceptual image aHash (64 bits).
+    over any fixed-width bit signature, such as the 60-bit text SimHash.
 
     ``sig``: (id, sim:bigint). Banded-prefix blocking: the signature
     splits into ``n_bands`` contiguous bit bands; by pigeonhole, two
@@ -344,7 +343,7 @@ def dedup_clusters(
     surface).
 
     ``pairs`` is (id_a, id_b) from any of the pairing stages (SimHash /
-    MinHash-LSH / n-gram Jaccard / image aHash / embedding cosine) —
+    MinHash-LSH / n-gram Jaccard / embedding cosine) —
     transitive closure matters because near-dup is not transitive: A~B
     and B~C must collapse into ONE cluster or the survivor set still
     contains a near-dup pair. Components come from the same iterative

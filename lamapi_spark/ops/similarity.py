@@ -424,12 +424,13 @@ def embed_texts(
     the sentence-transformer this container doesn't ship — swap
     `_encode_batch` for a real model.encode(); everything around it
     (schema, batching, partition-level model lifecycle) is the real
-    shape, per the multimodal decode contract. The stand-in is also
+    shape. The stand-in is also
     value-hash-checkable: the oracle rebuilds every component in SQL,
     so the plumbing (not just the stub) is under the gate.
 
-    -> (doc_id, embedding array<float> of ``dims``); null text
-    degrades to a null embedding (the multimodal null contract)."""
+    -> (doc_id, embedding array<float> of ``dims``); a row with null
+    text keeps its doc_id and gets a null embedding, never an error or
+    a dropped row."""
     import pandas as pd
 
     def _encode_batch(texts):

@@ -1,5 +1,5 @@
 """Driver-contract queries for the training-data ops (dedup, similarity,
-text analysis, multimodal plumbing) over the testdata tables. Registered
+text analysis, column analysis) over the testdata tables. Registered
 into the same registry as lamapi_spark.queries.
 
 Engine-parity notes: all hashing is md5-on-strings; dot products are
@@ -16,9 +16,7 @@ from pyspark.sql import functions as F
 from lamapi_spark.ops.dedup import (
     dedup_clusters, exact_dedup, minhash_lsh_pairs, ngram_jaccard_pairs,
     simhash60, simhash_pairs, substring_dup_spans, substring_dup_stats,
-    word_shingles,
 )
-from lamapi_spark.ops.multimodal import attach_binary, decode_image_meta
 from lamapi_spark.ops.similarity import brute_force_topk, lsh_ann_topk
 from lamapi_spark.ops.textstats import (
     LANG_MARKERS, PII_PATTERNS, fingerprint, lang_id, lang_scores, pii_counts,
@@ -543,8 +541,7 @@ def text_fingerprint(spark, sf):
 
 
 # Planted-PII corpus: the synthetic documents carry no PII, so the
-# contract query augments them DETERMINISTICALLY from doc_id (the same
-# synthesized-corpus pattern the multimodal queries use); the identical
+# contract query augments them DETERMINISTICALLY from doc_id; the identical
 # CASE runs in both engines, so matches are known-by-construction
 # without being circular (the oracle still re-runs detection itself).
 _PII_AUG_SQL = (
@@ -969,683 +966,6 @@ def objects_nest(spark, sf):
     )
 
 
-# ------------------------------------------------------------- multimodal
-
-@register("multimodal_decode", """
-WITH imgs AS (
-  SELECT p_partkey AS id,
-         list_transform(range(1, 17), i -> (p_partkey * i * 7) % 256) AS px
-  FROM part WHERE p_partkey % 40 = 1
-)
-SELECT id, 'P2' AS format, 4 AS width, 4 AS height, 1 AS channels,
-       round_even(list_sum(px) / 16.0, 3) AS mean_luma
-FROM imgs ORDER BY id
-""")
-def multimodal_decode(spark, sf):
-    """REAL image decoding through the Arrow stage: deterministic 4x4
-    NetPBM P2 images are synthesized from part keys (ASCII pixels, so
-    both engines can state the expected values), decoded by the numpy
-    header+pixel parser in ops/multimodal.decode_image, and the oracle
-    checks format/dimensions/channels/mean luminance. The perceptual
-    aHash has no SQL twin (8x8 block means) — it is covered by pytest
-    (tests/test_multimodal_decode.py) including Hamming locality."""
-    part = load(spark, sf, "part").filter(F.col("p_partkey") % 40 == 1)
-    px = F.transform(
-        F.sequence(F.lit(1), F.lit(16)),
-        lambda i: (F.col("p_partkey") * i * 7) % 256)
-    payload = part.select(
-        F.col("p_partkey").alias("id"),
-        F.encode(
-            F.concat(F.lit("P2\n4 4\n255\n"),
-                     F.concat_ws(" ", px)), "utf-8").alias("payload"),
-        F.lit("image").alias("modality"),
-    )
-    from lamapi_spark.ops.multimodal import decode_image
-    return (
-        decode_image(payload)
-        .select("id", "format", "width", "height", "channels", "mean_luma")
-        .orderBy("id")
-    )
-
-
-# Near-dup image corpus, engine-portable by construction: 8x8 NetPBM P2
-# images where pixel i of group g is 220/30 by a pure-integer pattern
-# and each member flips exactly one pixel (position key*13 % 64). On an
-# 8x8 image every aHash cell is one pixel, and since every pixel is 30
-# or 220 the threshold (the exact mean, n/64 arithmetic) never sits on
-# a pixel value — so aHash bits are exactly (pixel == 220) in BOTH
-# engines, no float edge cases. Same-group pairs differ in <= 2 pixels
-# (Hamming <= 2); cross-group patterns differ in ~80% of positions.
-_IMG_PAIRS_SQL = """
-WITH imgs AS (
-  SELECT p_partkey AS id, p_partkey % 3 AS g, (p_partkey * 13) % 64 AS fp
-  FROM part WHERE p_partkey % 11 = 1
-), px AS (
-  SELECT id, list_transform(range(64), i ->
-    CASE WHEN i = fp
-         THEN (CASE WHEN ((g * 7 + i * 3) % 5) < 2 THEN 30 ELSE 220 END)
-         ELSE (CASE WHEN ((g * 7 + i * 3) % 5) < 2 THEN 220 ELSE 30 END) END) AS px
-  FROM imgs
-), bits AS (
-  SELECT id, list_transform(px, v -> v >= list_aggregate(px, 'avg')) AS bt
-  FROM px
-), ham AS (
-  SELECT x.id AS id_a, y.id AS id_b,
-         len(list_filter(range(1, 65), i -> x.bt[i] <> y.bt[i]))::INT AS hamming
-  FROM bits x JOIN bits y ON x.id < y.id
-)
-SELECT id_a, id_b, hamming FROM ham WHERE hamming <= 3 ORDER BY id_a, id_b
-"""
-
-
-@register("image_neardup_pairs", _IMG_PAIRS_SQL)
-def image_neardup_pairs_q(spark, sf):
-    """Image near-dup END TO END: synthesize deterministic 8x8 P2
-    near-duplicate images, decode them with the REAL numpy NetPBM parser
-    (Arrow mapInPandas), compute the 64-bit perceptual aHash, and pair
-    via the banded Hamming join (ops/multimodal.image_neardup_pairs,
-    shared with text SimHash). Oracle: brute-force all-pairs Hamming
-    over first-principles aHash bits — equality proves decoder, hash,
-    and banding (lossless for d <= 3 with 4 bands) in one shot."""
-    from lamapi_spark.ops.multimodal import decode_image, image_neardup_pairs
-
-    part = load(spark, sf, "part").filter(F.col("p_partkey") % 11 == 1)
-    g = F.col("p_partkey") % 3
-    fp = (F.col("p_partkey") * 13) % 64
-
-    def pattern(i):
-        return ((g * 7 + i * 3) % 5) < 2
-
-    px = F.transform(
-        F.sequence(F.lit(0), F.lit(63)),
-        lambda i: F.when(
-            i == fp,
-            F.when(pattern(i), F.lit(30)).otherwise(F.lit(220))
-        ).otherwise(
-            F.when(pattern(i), F.lit(220)).otherwise(F.lit(30))))
-    payload = part.select(
-        F.col("p_partkey").alias("id"),
-        F.encode(F.concat(F.lit("P2\n8 8\n255\n"), F.concat_ws(" ", px)),
-                 "utf-8").alias("payload"),
-        F.lit("image").alias("modality"),
-    )
-    decoded = decode_image(payload)
-    return (
-        # max_bucket sized ABOVE any sf's per-group population (sf=1 has
-        # ~18k ids in the p%11 slice, ~6k per group, and same-group
-        # images share most bands): the default 1000 would start dropping
-        # pairs the brute-force oracle keeps once a band bucket exceeds
-        # it, silently breaking Spark<->oracle equivalence at larger sf.
-        image_neardup_pairs(decoded, max_hamming=3, n_bands=4,
-                            max_bucket=1_000_000)
-        .withColumn("hamming", F.col("hamming").cast("int"))
-        .orderBy("id_a", "id_b")
-    )
-
-
-# WAV corpus, engine-portable: 16-bit PCM mono, 8000 Hz, 128 samples per
-# clip, sample i of clip `id` = ((id*7 + i*13) % 4001) - 2000 — pure
-# integer arithmetic, and mean_abs divides an exact int sum by 128 (a
-# power of two), so every emitted stat is bit-identical across engines.
-_AUDIO_SQL = """
-WITH ids AS (SELECT p_partkey AS id FROM part WHERE p_partkey % 33 = 1),
-s AS (
-  SELECT id,
-         list_transform(range(128), i -> abs((id * 7 + i * 13) % 4001 - 2000)) AS a
-  FROM ids
-)
-SELECT id, 'WAV' AS format, 1 AS channels, 8000 AS sample_rate,
-       128 AS n_samples, 128 / 8000.0 AS duration_s,
-       list_max(a)::INT AS peak_abs,
-       list_sum(a) / 128.0 AS mean_abs
-FROM s ORDER BY id
-"""
-
-
-@register("multimodal_audio", _AUDIO_SQL)
-def multimodal_audio(spark, sf):
-    """REAL audio decoding through the Arrow stage: deterministic
-    RIFF/WAVE PCM16 clips are synthesized from part keys (struct-packed
-    bytes), parsed by the numpy WAV decoder in ops/multimodal.
-    decode_audio, and the oracle checks format/channels/rate/frames/
-    duration plus integer-exact amplitude stats computed from the same
-    sample formula."""
-    from lamapi_spark.ops.multimodal import decode_audio
-
-    ids = load(spark, sf, "part").filter(F.col("p_partkey") % 33 == 1).select(
-        F.col("p_partkey").alias("id"))
-
-    def synth(it):
-        import struct
-
-        import pandas as pd
-        for pdf in it:
-            payloads = []
-            for pid in pdf["id"]:
-                samples = [((int(pid) * 7 + i * 13) % 4001) - 2000
-                           for i in range(128)]
-                data = b"".join(struct.pack("<h", s) for s in samples)
-                hdr = (b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
-                       + b"fmt " + struct.pack("<IHHIIHH", 16, 1, 1, 8000,
-                                               16000, 2, 16)
-                       + b"data" + struct.pack("<I", len(data)))
-                payloads.append(hdr + data)
-            yield pd.DataFrame({"id": pdf["id"], "payload": payloads,
-                                "modality": ["audio"] * len(payloads)})
-
-    payload = ids.mapInPandas(
-        synth, schema="id bigint, payload binary, modality string")
-    return decode_audio(payload).orderBy("id")
-
-
-# FLAC corpus, engine-portable: sample j of clip `id` =
-# ((id*7919 + j*104729) % 65521) - 32760 (fits 16-bit PCM); clip length
-# and the codec profile vary by id so one contract query exercises
-# fixed/LPC subframes, mid-side + left-side stereo, Rice partitioning
-# with the raw-bits escape, and a short last frame. The oracle NEVER
-# parses FLAC — it recomputes the stats from the same closed-form PCM
-# formula, and losslessness is what makes that non-circular: the
-# decoder must reproduce the exact integers the formula defines.
-_FLAC_SQL = """
-WITH ids AS (SELECT p_partkey AS id FROM part WHERE p_partkey % 29 = 1),
-p AS (SELECT id, 300 + (id % 5) * 40 AS n,
-             CASE WHEN id % 4 IN (1, 2) THEN 2 ELSE 1 END AS ch
-      FROM ids),
-s AS (SELECT id, n, ch,
-             list_transform(range(n * ch),
-                 j -> abs((id * 7919 + j * 104729) % 65521 - 32760)) AS a
-      FROM p)
-SELECT id, 'FLAC' AS format, ch::INT AS channels, 8000 AS sample_rate,
-       n::INT AS n_samples, n / 8000.0 AS duration_s,
-       list_max(a)::INT AS peak_abs,
-       list_sum(a)::DOUBLE / (n * ch) AS mean_abs
-FROM s ORDER BY id
-"""
-
-
-@register("multimodal_flac", _FLAC_SQL)
-def multimodal_flac(spark, sf):
-    """REAL FLAC decoding through the Arrow stage: clips are
-    encoded executor-side by ops/multimodal.encode_flac (profile
-    varies by id: mono fixed-predictor, mid-side fixed1, left-side
-    LPC, and Rice-partitioned with a forced escape partition), decoded
-    by _parse_flac, and the oracle recomputes the amplitude stats from
-    the closed-form PCM formula."""
-    from lamapi_spark.ops.multimodal import decode_audio
-
-    ids = load(spark, sf, "part").filter(F.col("p_partkey") % 29 == 1).select(
-        F.col("p_partkey").alias("id"))
-
-    def synth(it):
-        import pandas as pd
-
-        from lamapi_spark.ops.multimodal import encode_flac
-
-        profiles = {
-            0: ("indep", "fixed2", 0, None),
-            1: ("mid-side", "fixed1", 0, None),
-            2: ("left-side", "lpc", 0, None),
-            3: ("indep", "fixed3", 2, 1),
-        }
-        for pdf in it:
-            payloads = []
-            for pid in pdf["id"]:
-                pid = int(pid)
-                n = 300 + (pid % 5) * 40
-                ch = 2 if pid % 4 in (1, 2) else 1
-                vals = [((pid * 7919 + j * 104729) % 65521) - 32760
-                        for j in range(n * ch)]
-                arr = [vals[j * ch:(j + 1) * ch] for j in range(n)]
-                mode, kind, po, esc = profiles[pid % 4]
-                payloads.append(encode_flac(
-                    arr, rate=8000, bps=16, block=256, mode=mode,
-                    subframe=kind, porder=po, escape_part=esc))
-            yield pd.DataFrame({"id": pdf["id"], "payload": payloads,
-                                "modality": ["audio"] * len(payloads)})
-
-    payload = ids.mapInPandas(
-        synth, schema="id bigint, payload binary, modality string")
-    return decode_audio(payload).orderBy("id")
-
-
-# Acoustic-fingerprint corpus, engine-portable by construction: mono
-# clips of 130 samples (65 energy windows of exactly 2 samples),
-# sample i of clip `id` = ((g*31 + i*17) % 1601) - 800 boosted by
-# +1200 in the clip's own window w0 = id % 64 (g = id % 3). Window
-# energies are integer |sample| sums, bit b = (E[b] > E[b+1]) — pure
-# integer comparisons, no float anywhere, so the oracle recomputes the
-# fingerprint closed-form from the formula. Cross-codec: even ids ship
-# as WAV PCM16, odd ids as FLAC of the SAME PCM — losslessness means
-# the fingerprint cannot tell them apart, which the format column
-# proves the decoder still can. Same-group clips differ only around
-# their boost windows (Hamming <= 4); cross-group bases differ in most
-# windows.
-_AUDIO_FP_CORPUS = """
-WITH ids AS (SELECT p_partkey AS id, p_partkey % 3 AS g, p_partkey % 64 AS w0
-             FROM part WHERE p_partkey % 53 = 1),
-a AS (
-  SELECT id, list_transform(range(130), i ->
-    abs((g*31 + i*17) % 1601 - 800
-        + (CASE WHEN i // 2 = w0 THEN 1200 ELSE 0 END))) AS a
-  FROM ids
-), e AS (
-  SELECT id, list_transform(range(65), w -> a[2*w + 1] + a[2*w + 2]) AS e FROM a
-)"""
-
-_AUDIO_FP_SQL = _AUDIO_FP_CORPUS + """, fp AS (
-  SELECT id, list_sum(list_transform(range(64), b ->
-      (CASE WHEN e[b+1] > e[b+2] THEN 1 ELSE 0 END)::HUGEINT
-      * (1::HUGEINT << (63 - b)))) AS s
-  FROM e
-)
-SELECT id, CASE WHEN id % 2 = 0 THEN 'WAV' ELSE 'FLAC' END AS format,
-       130 AS n_samples,
-       (CASE WHEN s >= 9223372036854775808::HUGEINT
-             THEN s - 18446744073709551616::HUGEINT ELSE s END)::BIGINT AS afp
-FROM fp ORDER BY id
-"""
-
-_AUDIO_PAIRS_SQL = _AUDIO_FP_CORPUS + """, bits AS (
-  SELECT id, list_transform(range(64), b -> e[b+1] > e[b+2]) AS bt FROM e
-), ham AS (
-  SELECT x.id AS id_a, y.id AS id_b,
-         len(list_filter(range(1, 65), i -> x.bt[i] <> y.bt[i]))::INT AS hamming
-  FROM bits x JOIN bits y ON x.id < y.id
-)
-SELECT id_a, id_b, hamming FROM ham WHERE hamming <= 3 ORDER BY id_a, id_b
-"""
-
-
-def _audio_fp_synth(it):
-    """Shared corpus builder for the fingerprint queries: deterministic
-    PCM from the closed-form formula, WAV-packed for even ids and
-    FLAC-encoded for odd ids (same integers either way)."""
-    import struct
-
-    import pandas as pd
-
-    from lamapi_spark.ops.multimodal import encode_flac
-
-    for pdf in it:
-        payloads = []
-        for pid in pdf["id"]:
-            pid = int(pid)
-            g, w0 = pid % 3, pid % 64
-            samples = [((g * 31 + i * 17) % 1601) - 800
-                       + (1200 if i // 2 == w0 else 0) for i in range(130)]
-            if pid % 2 == 0:
-                data = b"".join(struct.pack("<h", s) for s in samples)
-                payloads.append(
-                    b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
-                    + b"fmt " + struct.pack("<IHHIIHH", 16, 1, 1, 8000,
-                                            16000, 2, 16)
-                    + b"data" + struct.pack("<I", len(data)) + data)
-            else:
-                payloads.append(encode_flac(
-                    [[s] for s in samples], rate=8000, bps=16, block=256,
-                    mode="indep", subframe="fixed2"))
-        yield pd.DataFrame({"id": pdf["id"], "payload": payloads,
-                            "modality": ["audio"] * len(payloads)})
-
-
-def _audio_fp_frames(spark, sf):
-    from lamapi_spark.ops.multimodal import audio_fingerprint
-
-    ids = load(spark, sf, "part").filter(F.col("p_partkey") % 53 == 1).select(
-        F.col("p_partkey").alias("id"))
-    payload = ids.mapInPandas(
-        _audio_fp_synth, schema="id bigint, payload binary, modality string")
-    return audio_fingerprint(payload, n_windows=65)
-
-
-@register("multimodal_audio_fp", _AUDIO_FP_SQL)
-def multimodal_audio_fp(spark, sf):
-    """Acoustic fingerprinting END TO END and CROSS-CODEC: deterministic
-    PCM clips ship as WAV (even ids) or FLAC (odd ids), decode through
-    the real parsers, and the 64-bit energy-difference fingerprint must
-    equal the oracle's closed-form recomputation from the sample
-    formula — identical for both codecs because FLAC is lossless, while
-    the format column proves the decoder still distinguishes them."""
-    return _audio_fp_frames(spark, sf).orderBy("id")
-
-
-@register("audio_neardup_pairs", _AUDIO_PAIRS_SQL)
-def audio_neardup_pairs_q(spark, sf):
-    """Audio near-dup END TO END: synthesize near-duplicate clips
-    (shared per-group base signal, per-clip boost window), fingerprint
-    via the real decoders + energy-difference hash, and pair through
-    the shared banded Hamming join (ops/multimodal.audio_neardup_pairs).
-    Oracle: brute-force all-pairs Hamming over first-principles
-    fingerprint bits. max_bucket lifted above any sf's group population
-    — the oracle has no hot-bucket drop, so the guard must stay a no-op
-    for oracle equivalence (same reasoning as image_neardup_pairs)."""
-    from lamapi_spark.ops.multimodal import audio_neardup_pairs
-
-    return (
-        audio_neardup_pairs(_audio_fp_frames(spark, sf), max_hamming=3,
-                            n_bands=4, max_bucket=1_000_000)
-        .withColumn("hamming", F.col("hamming").cast("int"))
-        .orderBy("id_a", "id_b")
-    )
-
-
-# Y4M corpus, engine-portable: 8x8 C420 clips, 25 fps, 6 frames; luma
-# pixel i of frame f of clip `id` = (id*7 + f*31 + i*13) % 256 — pure
-# integer arithmetic, and mean_y divides an exact int sum by 64 (a
-# power of two), so every emitted stat is bit-identical across engines.
-# Sampling every 2nd frame keeps frames 0/2/4 of 6.
-_VIDEO_SQL = """
-WITH ids AS (SELECT p_partkey AS id FROM part WHERE p_partkey % 27 = 1),
-f AS (SELECT id, unnest([0, 2, 4]) AS frame_idx FROM ids),
-s AS (
-  SELECT id, frame_idx,
-         list_sum(list_transform(range(64),
-                  i -> (id * 7 + frame_idx * 31 + i * 13) % 256)) AS ysum
-  FROM f
-)
-SELECT id, 'Y4M' AS format, 8 AS width, 8 AS height, 25.0 AS fps,
-       6 AS n_frames, frame_idx::INT AS frame_idx, ysum / 64.0 AS mean_y
-FROM s ORDER BY id, frame_idx
-"""
-
-
-@register("multimodal_video", _VIDEO_SQL)
-def multimodal_video(spark, sf):
-    """REAL video decoding + frame sampling through the Arrow stage:
-    deterministic YUV4MPEG2 clips (8x8 C420, 6 frames, 25 fps) are
-    synthesized from part keys, parsed by the numpy Y4M decoder in
-    ops/multimodal.decode_video with every_n=2, and the oracle checks
-    dimensions/fps/frame-count/sampled-frame indices plus the
-    integer-exact per-frame mean luma from the same pixel formula. The
-    per-frame aHash has no SQL twin (8x8 block means) — covered by
-    pytest (tests/test_multimodal_decode.py), and it feeds
-    image_neardup_pairs exactly like still-image hashes."""
-    from lamapi_spark.ops.multimodal import decode_video
-
-    ids = load(spark, sf, "part").filter(F.col("p_partkey") % 27 == 1).select(
-        F.col("p_partkey").alias("id"))
-
-    def synth(it):
-        import pandas as pd
-        for pdf in it:
-            payloads = []
-            for pid in pdf["id"]:
-                frames = []
-                for f in range(6):
-                    y = bytes((int(pid) * 7 + f * 31 + i * 13) % 256
-                              for i in range(64))
-                    frames.append(b"FRAME\n" + y + bytes([128]) * 32)
-                payloads.append(b"YUV4MPEG2 W8 H8 F25:1 Ip A1:1 C420jpeg\n"
-                                + b"".join(frames))
-            yield pd.DataFrame({"id": pdf["id"], "payload": payloads,
-                                "modality": ["video"] * len(payloads)})
-
-    payload = ids.mapInPandas(
-        synth, schema="id bigint, payload binary, modality string")
-    return (decode_video(payload, every_n=2)
-            .drop("ahash").orderBy("id", "frame_idx"))
-
-
-@register("multimodal_meta", """
-SELECT doc_id AS id,
-       octet_length(encode(text))::INT AS n_bytes,
-       md5(text) AS content_md5,
-       (('0x' || substr(md5(text), 1, 2))::INT + 1)::INT AS fake_width,
-       (('0x' || substr(md5(text), 3, 2))::INT + 1)::INT AS fake_height,
-       'image' AS modality
-FROM documents ORDER BY id
-""")
-def multimodal_meta(spark, sf):
-    """Binary-column metadata extraction through the Arrow-batched
-    mapInPandas stage (deterministic fake decode; real decoder is the
-    documented stub in ops/multimodal.py)."""
-    payload = attach_binary(load(spark, sf, "documents"), "text", "doc_id")
-    return decode_image_meta(payload).orderBy("id")
-
-
-# ------------------------------------------------------------------- png
-
-def _png_encode(px_rows, channels=1):
-    """Minimal PNG encoder for the synth corpora (8-bit, non-interlaced):
-    row r is filtered with type r % 5, so ONE image exercises all five
-    scanline filters (None/Sub/Up/Average/Paeth) and a correct decode
-    proves every unfilter path at once. ``px_rows`` is a list of rows,
-    each ``width * channels`` ints in 0..255."""
-    import struct
-    import zlib
-
-    h, stride = len(px_rows), len(px_rows[0])
-    w = stride // channels
-    color = {1: 0, 3: 2, 2: 4, 4: 6}[channels]
-    bpp = channels
-
-    def chunk(ctype, data):
-        return (struct.pack(">I", len(data)) + ctype + data
-                + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF))
-
-    raw = bytearray()
-    prev = [0] * stride
-    for r, row in enumerate(px_rows):
-        ft = r % 5
-        raw.append(ft)
-        for x, v in enumerate(row):
-            a = row[x - bpp] if x >= bpp else 0
-            up = prev[x]
-            c = prev[x - bpp] if x >= bpp else 0
-            if ft == 0:
-                pred = 0
-            elif ft == 1:
-                pred = a
-            elif ft == 2:
-                pred = up
-            elif ft == 3:
-                pred = (a + up) >> 1
-            else:
-                p = a + up - c
-                pa, pb, pc = abs(p - a), abs(p - up), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else (up if pb <= pc else c)
-            raw.append((v - pred) % 256)
-        prev = row
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, color, 0, 0, 0)
-    return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", zlib.compress(bytes(raw)))
-            + chunk(b"IEND", b""))
-
-
-@register("multimodal_png", """
-WITH ids AS (SELECT p_partkey AS id FROM part WHERE p_partkey % 23 = 1),
-s AS (
-  SELECT id,
-         list_sum(list_transform(range(64), i -> (id * 7 + i * 13) % 256)) AS ps
-  FROM ids
-)
-SELECT id, 'PNG' AS format, 8 AS width, 8 AS height, 1 AS channels,
-       round_even(ps / 64.0, 3) AS mean_luma
-FROM s ORDER BY id
-""")
-def multimodal_png(spark, sf):
-    """REAL PNG decoding through the Arrow stage: deterministic 8x8
-    grayscale PNGs are synthesized from part keys (pixel i of clip `id`
-    = (id*7 + i*13) % 256 — pure integer arithmetic; mean divides an
-    exact int sum by 64, so stats are bit-identical across engines),
-    DEFLATE-compressed with filter type r % 5 on row r (all five
-    scanline filters in every image), inflated + unfiltered by the
-    stdlib-zlib/numpy decoder in ops/multimodal._parse_png, and the
-    oracle checks format/dimensions/channels/mean luminance computed
-    from the same pixel formula. Closes the round-3 'codec boundary'
-    gap: PNG is DEFLATE + integer filters, not a lossy codec."""
-    from lamapi_spark.ops.multimodal import decode_image
-
-    ids = load(spark, sf, "part").filter(F.col("p_partkey") % 23 == 1).select(
-        F.col("p_partkey").alias("id"))
-
-    def synth(it):
-        import pandas as pd
-        for pdf in it:
-            payloads = []
-            for pid in pdf["id"]:
-                px = [(int(pid) * 7 + i * 13) % 256 for i in range(64)]
-                rows = [px[r * 8:(r + 1) * 8] for r in range(8)]
-                payloads.append(_png_encode(rows, channels=1))
-            yield pd.DataFrame({"id": pdf["id"], "payload": payloads,
-                                "modality": ["image"] * len(payloads)})
-
-    payload = ids.mapInPandas(
-        synth, schema="id bigint, payload binary, modality string")
-    return (decode_image(payload)
-            .select("id", "format", "width", "height", "channels", "mean_luma")
-            .orderBy("id"))
-
-
-# Near-dup PNG corpus: the same engine-portable 30/220 two-level pixel
-# pattern as the NetPBM image_neardup_pairs corpus (aHash bits are
-# exactly (pixel == 220) in both engines — the threshold never sits on a
-# pixel value), on an independent id slice, PNG-ENCODED with the r % 5
-# filter schedule. Equality against the brute-force oracle proves
-# inflate + all five unfilters + aHash + banding end to end.
-_PNG_PAIRS_SQL = """
-WITH imgs AS (
-  SELECT p_partkey AS id, p_partkey % 3 AS g, (p_partkey * 13) % 64 AS fp
-  FROM part WHERE p_partkey % 13 = 1
-), px AS (
-  SELECT id, list_transform(range(64), i ->
-    CASE WHEN i = fp
-         THEN (CASE WHEN ((g * 7 + i * 3) % 5) < 2 THEN 30 ELSE 220 END)
-         ELSE (CASE WHEN ((g * 7 + i * 3) % 5) < 2 THEN 220 ELSE 30 END) END) AS px
-  FROM imgs
-), bits AS (
-  SELECT id, list_transform(px, v -> v >= list_aggregate(px, 'avg')) AS bt
-  FROM px
-), ham AS (
-  SELECT x.id AS id_a, y.id AS id_b,
-         len(list_filter(range(1, 65), i -> x.bt[i] <> y.bt[i]))::INT AS hamming
-  FROM bits x JOIN bits y ON x.id < y.id
-)
-SELECT id_a, id_b, hamming FROM ham WHERE hamming <= 3 ORDER BY id_a, id_b
-"""
-
-
-@register("png_neardup_pairs", _PNG_PAIRS_SQL)
-def png_neardup_pairs_q(spark, sf):
-    """PNG near-dup END TO END: synthesize deterministic 8x8 grayscale
-    near-duplicate PNGs (filter type r % 5 per row), decode with the
-    REAL zlib/numpy PNG parser (Arrow mapInPandas), compute the 64-bit
-    perceptual aHash, and pair via the banded Hamming join — the PNG
-    twin of image_neardup_pairs, against the same brute-force oracle
-    shape."""
-    from lamapi_spark.ops.multimodal import decode_image, image_neardup_pairs
-
-    ids = load(spark, sf, "part").filter(F.col("p_partkey") % 13 == 1).select(
-        F.col("p_partkey").alias("id"))
-
-    def synth(it):
-        import pandas as pd
-        for pdf in it:
-            payloads = []
-            for pid in pdf["id"]:
-                pid = int(pid)
-                g, fp = pid % 3, (pid * 13) % 64
-                px = []
-                for i in range(64):
-                    base = 220 if ((g * 7 + i * 3) % 5) < 2 else 30
-                    px.append((250 - base) if i == fp else base)
-                rows = [px[r * 8:(r + 1) * 8] for r in range(8)]
-                payloads.append(_png_encode(rows, channels=1))
-            yield pd.DataFrame({"id": pdf["id"], "payload": payloads,
-                                "modality": ["image"] * len(payloads)})
-
-    payload = ids.mapInPandas(
-        synth, schema="id bigint, payload binary, modality string")
-    decoded = decode_image(payload)
-    return (
-        # max_bucket sized above any sf's group population, same
-        # reasoning as image_neardup_pairs
-        image_neardup_pairs(decoded, max_hamming=3, n_bands=4,
-                            max_bucket=1_000_000)
-        .withColumn("hamming", F.col("hamming").cast("int"))
-        .orderBy("id_a", "id_b")
-    )
-
-
-# Cross-clip video near-dup corpus: 8x8 Y4M clips, 4 frames each; frame
-# f of clip `id` carries the clip-group (id % 3) base pattern (220/30,
-# engine-portable aHash exactly as the image corpora) with ONE flipped
-# pixel at (id*13 + f*7) % 64. Sampled frames (every_n=2 -> f in {0,2})
-# of clips in the SAME group differ in <= 2 pixels — near-dup across
-# different videos — while cross-group frames differ in ~80% of
-# positions. Frame identity for pairing: fid = id*10 + frame_idx.
-_VIDEO_PAIRS_SQL = """
-WITH ids AS (SELECT p_partkey AS id FROM part WHERE p_partkey % 29 = 1),
-fr AS (SELECT id, unnest([0, 2]) AS f FROM ids),
-px AS (
-  SELECT id, f, list_transform(range(64), i ->
-    CASE WHEN i = (id * 13 + f * 7) % 64
-         THEN (CASE WHEN ((id % 3) * 7 + i * 3) % 5 < 2 THEN 30 ELSE 220 END)
-         ELSE (CASE WHEN ((id % 3) * 7 + i * 3) % 5 < 2 THEN 220 ELSE 30 END) END) AS px
-  FROM fr
-), bits AS (
-  SELECT id * 10 + f AS fid,
-         list_transform(px, v -> v >= list_aggregate(px, 'avg')) AS bt
-  FROM px
-), ham AS (
-  SELECT x.fid AS id_a, y.fid AS id_b,
-         len(list_filter(range(1, 65), i -> x.bt[i] <> y.bt[i]))::INT AS hamming
-  FROM bits x JOIN bits y ON x.fid < y.fid
-)
-SELECT id_a, id_b, hamming FROM ham WHERE hamming <= 3 ORDER BY id_a, id_b
-"""
-
-
-@register("video_neardup_pairs", _VIDEO_PAIRS_SQL)
-def video_neardup_pairs_q(spark, sf):
-    """Video near-dup ACROSS CLIPS, end to end: synthesize deterministic
-    Y4M clips whose sampled frames repeat a group pattern with one
-    flipped pixel per (clip, frame), decode + frame-sample with the REAL
-    numpy Y4M parser (every_n=2), and pair the sampled frames of ALL
-    clips through the shared banded Hamming join — the last hop of the
-    multimodal dataflow (decode_video's (id, ahash) rows feeding
-    image_neardup_pairs' machinery) under a brute-force oracle."""
-    from lamapi_spark.ops.dedup import hamming_pairs
-    from lamapi_spark.ops.multimodal import decode_video
-
-    ids = load(spark, sf, "part").filter(F.col("p_partkey") % 29 == 1).select(
-        F.col("p_partkey").alias("id"))
-
-    def synth(it):
-        import pandas as pd
-        for pdf in it:
-            payloads = []
-            for pid in pdf["id"]:
-                pid = int(pid)
-                g = pid % 3
-                frames = []
-                for f in range(4):
-                    fp = (pid * 13 + f * 7) % 64
-                    y = bytes(
-                        (250 - (220 if ((g * 7 + i * 3) % 5) < 2 else 30))
-                        if i == fp
-                        else (220 if ((g * 7 + i * 3) % 5) < 2 else 30)
-                        for i in range(64))
-                    frames.append(b"FRAME\n" + y + bytes([128]) * 32)
-                payloads.append(b"YUV4MPEG2 W8 H8 F25:1 Ip A1:1 C420jpeg\n"
-                                + b"".join(frames))
-            yield pd.DataFrame({"id": pdf["id"], "payload": payloads,
-                                "modality": ["video"] * len(payloads)})
-
-    payload = ids.mapInPandas(
-        synth, schema="id bigint, payload binary, modality string")
-    sig = (decode_video(payload, every_n=2)
-           .filter(F.col("ahash").isNotNull())
-           .select((F.col("id") * 10 + F.col("frame_idx")).alias("id"),
-                   F.col("ahash").alias("sim")))
-    return (
-        hamming_pairs(sig, bits=64, max_hamming=3, n_bands=4,
-                      max_bucket=1_000_000)
-        .withColumn("hamming", F.col("hamming").cast("int"))
-        .orderBy("id_a", "id_b")
-    )
-
-
 # ------------------------------------------------- embedding near-dup pairs
 
 # Corpus with PLANTED near-duplicates: every 5th vector gets a copy
@@ -1738,673 +1058,6 @@ def dedup_embed_cosine(spark, sf):
         embed_neardup_pairs(corpus, "vec_id", "embedding", threshold=0.98,
                             n_planes=_ANN_PLANES, n_tables=_ANN_TABLES,
                             dims=_ANN_DIMS)
-        .orderBy("id_a", "id_b")
-    )
-
-
-# ------------------------------------------------------------------ jpeg
-
-# JPEG corpus, engine-portable BY CONSTRUCTION: 16x16 grayscale baseline
-# JPEGs of four constant 8x8 blocks, block k of image `id` valued
-# (id*7 + k*53) % 256. The synthesizer plants QUANTIZED COEFFICIENTS
-# directly (DC = v - 128 under DC quant step 8, all AC zero), and the
-# IDCT of a DC-only block is constant — so the decoded pixels equal the
-# source values bit-exactly despite the full Huffman/zigzag/IDCT chain
-# running, and the mean divides an exact int sum by 256 (a power of
-# two). The oracle never runs the codec: stats come from the same
-# integer formula.
-_JPEG_SQL = """
-WITH ids AS (SELECT p_partkey AS id FROM part WHERE p_partkey % 31 = 1),
-s AS (
-  SELECT id,
-         list_sum(list_transform(range(4), k -> (id * 7 + k * 53) % 256)) AS bs
-  FROM ids
-)
-SELECT id, 'JPEG' AS format, 16 AS width, 16 AS height, 1 AS channels,
-       bs / 4.0 AS mean_luma
-FROM s ORDER BY id
-"""
-
-
-@register("multimodal_jpeg", _JPEG_SQL)
-def multimodal_jpeg(spark, sf):
-    """REAL baseline-JPEG decoding through the Arrow stage: deterministic
-    16x16 grayscale JPEGs (four constant 8x8 blocks per image) are
-    synthesized from part keys by planting quantized coefficients
-    (ops/jpeg.encode_jpeg — no FDCT), decoded by the stdlib+numpy
-    baseline decoder (canonical Huffman -> differential DC -> dezigzag
-    -> dequant -> IDCT) in ops/jpeg.parse_jpeg via decode_image's
-    parser chain, and the oracle checks format/dimensions/channels/mean
-    luminance from the same integer formula — non-circularly, since a
-    constant block under DC quant step 8 decodes bit-exactly. The AC
-    coefficient path, color (4:2:0/4:2:2/4:4:4 YCbCr), restart markers,
-    and 16-bit quant tables are pytest-covered against an independent
-    dense-IDCT implementation (tests/test_jpeg.py)."""
-    from lamapi_spark.ops.jpeg import constant_block, encode_jpeg
-    from lamapi_spark.ops.multimodal import decode_image
-
-    ids = load(spark, sf, "part").filter(F.col("p_partkey") % 31 == 1).select(
-        F.col("p_partkey").alias("id"))
-
-    def synth(it):
-        import pandas as pd
-        for pdf in it:
-            payloads = []
-            for pid in pdf["id"]:
-                blocks = [constant_block((int(pid) * 7 + k * 53) % 256)
-                          for k in range(4)]
-                payloads.append(encode_jpeg(16, 16, [blocks]))
-            yield pd.DataFrame({"id": pdf["id"], "payload": payloads,
-                                "modality": ["image"] * len(payloads)})
-
-    payload = ids.mapInPandas(
-        synth, schema="id bigint, payload binary, modality string")
-    return (decode_image(payload)
-            .select("id", "format", "width", "height", "channels", "mean_luma")
-            .orderBy("id"))
-
-
-# Near-dup JPEG corpus: 64x64 grayscale images of 64 constant 8x8
-# blocks — each aHash cell is EXACTLY one JPEG block, so the hash bits
-# are closed-form (block value >= mean of block values) in both engines,
-# with the same 30/220 group pattern + one flipped block as the PNG/
-# image corpora (block j of image `id`: group g = id % 3, flip at
-# (id*13) % 64). Every block rides the differential-DC Huffman chain
-# (diffs up to +/-190), so equality against the brute-force oracle
-# proves the entropy decoder across 64-block scans end to end.
-_JPEG_PAIRS_SQL = """
-WITH imgs AS (
-  SELECT p_partkey AS id, p_partkey % 3 AS g, (p_partkey * 13) % 64 AS fp
-  FROM part WHERE p_partkey % 17 = 1
-), px AS (
-  SELECT id, list_transform(range(64), j ->
-    CASE WHEN j = fp
-         THEN (CASE WHEN ((g * 7 + j * 3) % 5) < 2 THEN 30 ELSE 220 END)
-         ELSE (CASE WHEN ((g * 7 + j * 3) % 5) < 2 THEN 220 ELSE 30 END) END) AS px
-  FROM imgs
-), bits AS (
-  SELECT id, list_transform(px, v -> v >= list_aggregate(px, 'avg')) AS bt
-  FROM px
-), ham AS (
-  SELECT x.id AS id_a, y.id AS id_b,
-         len(list_filter(range(1, 65), i -> x.bt[i] <> y.bt[i]))::INT AS hamming
-  FROM bits x JOIN bits y ON x.id < y.id
-)
-SELECT id_a, id_b, hamming FROM ham WHERE hamming <= 3 ORDER BY id_a, id_b
-"""
-
-
-@register("jpeg_neardup_pairs", _JPEG_PAIRS_SQL)
-def jpeg_neardup_pairs_q(spark, sf):
-    """JPEG near-dup END TO END: synthesize deterministic 64x64
-    grayscale baseline JPEGs (64 constant blocks, planted coefficients),
-    decode with the REAL Huffman/IDCT decoder (Arrow mapInPandas),
-    compute the 64-bit perceptual aHash (one cell per JPEG block — the
-    hash is exact by construction), and pair via the banded Hamming
-    join — the JPEG twin of png_neardup_pairs, against the same
-    brute-force oracle shape."""
-    from lamapi_spark.ops.jpeg import constant_block, encode_jpeg
-    from lamapi_spark.ops.multimodal import decode_image, image_neardup_pairs
-
-    ids = load(spark, sf, "part").filter(F.col("p_partkey") % 17 == 1).select(
-        F.col("p_partkey").alias("id"))
-
-    def synth(it):
-        import pandas as pd
-        for pdf in it:
-            payloads = []
-            for pid in pdf["id"]:
-                pid = int(pid)
-                g, fp = pid % 3, (pid * 13) % 64
-                blocks = []
-                for j in range(64):
-                    base = 220 if ((g * 7 + j * 3) % 5) < 2 else 30
-                    blocks.append(constant_block(
-                        (250 - base) if j == fp else base))
-                payloads.append(encode_jpeg(64, 64, [blocks]))
-            yield pd.DataFrame({"id": pdf["id"], "payload": payloads,
-                                "modality": ["image"] * len(payloads)})
-
-    payload = ids.mapInPandas(
-        synth, schema="id bigint, payload binary, modality string")
-    decoded = decode_image(payload)
-    return (
-        # max_bucket sized above any sf's group population, same
-        # reasoning as image_neardup_pairs
-        image_neardup_pairs(decoded, max_hamming=3, n_bands=4,
-                            max_bucket=1_000_000)
-        .withColumn("hamming", F.col("hamming").cast("int"))
-        .orderBy("id_a", "id_b")
-    )
-
-
-@register("multimodal_jpeg_prog", """
-WITH ids AS (SELECT p_partkey AS id FROM part WHERE p_partkey % 31 = 1),
-s AS (
-  SELECT id,
-         list_sum(list_transform(range(4), k -> (id * 7 + k * 53) % 256)) AS bs
-  FROM ids
-)
-SELECT id, 'JPEG' AS format, 16 AS width, 16 AS height, 1 AS channels,
-       bs / 4.0 AS mean_luma
-FROM s ORDER BY id
-""")
-def multimodal_jpeg_prog(spark, sf):
-    """PROGRESSIVE (SOF2) JPEG decoding through the Arrow stage: the
-    same constant-block corpus as multimodal_jpeg, but encoded with the
-    four-stage progressive scan script (DC first/refine with successive
-    approximation, per-component AC first/refine with EOB runs —
-    ops/jpeg.encode_jpeg_progressive), so the driver gate covers the
-    Annex-G decode paths with the same non-circular closed-form oracle.
-    Identical stats to the baseline query by construction: both encode
-    the same coefficients."""
-    from lamapi_spark.ops.jpeg import constant_block, encode_jpeg_progressive
-    from lamapi_spark.ops.multimodal import decode_image
-
-    ids = load(spark, sf, "part").filter(F.col("p_partkey") % 31 == 1).select(
-        F.col("p_partkey").alias("id"))
-
-    def synth(it):
-        import pandas as pd
-        for pdf in it:
-            payloads = []
-            for pid in pdf["id"]:
-                blocks = [constant_block((int(pid) * 7 + k * 53) % 256)
-                          for k in range(4)]
-                payloads.append(encode_jpeg_progressive(16, 16, [blocks]))
-            yield pd.DataFrame({"id": pdf["id"], "payload": payloads,
-                                "modality": ["image"] * len(payloads)})
-
-    payload = ids.mapInPandas(
-        synth, schema="id bigint, payload binary, modality string")
-    return (decode_image(payload)
-            .select("id", "format", "width", "height", "channels", "mean_luma")
-            .orderBy("id"))
-
-
-# ----------------------------------------------------------- audio codecs
-
-# G.711 mu-law corpus: 128 companded bytes per clip, byte i of clip
-# `id` = (id*13 + i*29) % 256. The oracle implements the G.711
-# expansion INDEPENDENTLY in SQL integer arithmetic (complement, then
-# ((mant*8 + 132) << exp) - 132 with the sign bit negating), so the
-# vectorized numpy decoder is checked non-circularly over stats of the
-# full byte range.
-_ULAW_SQL = """
-WITH ids AS (SELECT p_partkey AS id FROM part WHERE p_partkey % 37 = 1),
-s AS (
-  SELECT id, list_transform(range(128), i ->
-    xor((id * 13 + i * 29) % 256, 255)) AS u
-  FROM ids
-), d AS (
-  SELECT id, list_transform(u, x ->
-    abs(((((x % 128) % 16) * 8 + 132) << (((x % 128) // 16) % 8)) - 132)) AS m
-  FROM s
-)
-SELECT id, 'WAV-ULAW' AS format, 1 AS channels, 8000 AS sample_rate,
-       128 AS n_samples, 128 / 8000.0 AS duration_s,
-       list_max(m)::INT AS peak_abs,
-       list_sum(m) / 128.0 AS mean_abs
-FROM d ORDER BY id
-"""
-
-
-@register("multimodal_ulaw", _ULAW_SQL)
-def multimodal_ulaw(spark, sf):
-    """G.711 mu-law audio decoding through the Arrow stage: companded
-    bytes are synthesized from part keys into RIFF/WAVE format-7 clips,
-    expanded by the vectorized numpy decoder (ops/multimodal.
-    _ulaw_expand), and the oracle re-derives the amplitude stats from
-    an independent SQL implementation of the same ITU-T G.711 formula
-    (abs() collapses the sign bit, so only magnitudes matter — exact
-    integer arithmetic end to end). A-law and the full 256-byte decode
-    tables are pytest-covered (tests/test_multimodal_decode.py)."""
-    import struct
-
-    from lamapi_spark.ops.multimodal import decode_audio
-
-    ids = load(spark, sf, "part").filter(F.col("p_partkey") % 37 == 1).select(
-        F.col("p_partkey").alias("id"))
-
-    def synth(it):
-        import pandas as pd
-        for pdf in it:
-            payloads = []
-            for pid in pdf["id"]:
-                data = bytes((int(pid) * 13 + i * 29) % 256 for i in range(128))
-                hdr = (b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
-                       + b"fmt " + struct.pack("<IHHIIHH", 16, 7, 1, 8000,
-                                               8000, 1, 8)
-                       + b"data" + struct.pack("<I", len(data)))
-                payloads.append(hdr + data)
-            yield pd.DataFrame({"id": pdf["id"], "payload": payloads,
-                                "modality": ["audio"] * len(payloads)})
-
-    payload = ids.mapInPandas(
-        synth, schema="id bigint, payload binary, modality string")
-    return decode_audio(payload).orderBy("id")
-
-
-# IMA ADPCM corpus, exact BY CONSTRUCTION: one mono block per clip,
-# predictor p0 = (id*7) % 2000 + 500, step index 0, 64 nibbles from
-# {0 -> +0, 1 -> +1, 9 -> -1} chosen by (id + j) % 3. All three nibbles
-# keep the step index clamped at 0 (index deltas are -1), so step stays
-# 7 and the decoded samples are p0 followed by p0 + prefix-sums of the
-# deltas — closed-form in SQL, never near the int16 clamp rails. The
-# general state machine (step walks, clamping, multi-block) is
-# pytest-covered.
-_ADPCM_SQL = """
-WITH ids AS (SELECT p_partkey AS id FROM part WHERE p_partkey % 41 = 1),
-d AS (
-  SELECT id, (id * 7) % 2000 + 500 AS p0,
-         list_transform(range(1, 65), j ->
-           CASE (id + j - 1) % 3 WHEN 0 THEN 0 WHEN 1 THEN 1 ELSE -1 END) AS dl
-  FROM ids
-), s AS (
-  SELECT id,
-         list_prepend(p0, list_transform(range(1, 65),
-                          j -> p0 + list_sum(dl[1:j]))) AS smp
-  FROM d
-), m AS (SELECT id, list_transform(smp, x -> abs(x)) AS a FROM s)
-SELECT id, 'WAV-ADPCM' AS format, 1 AS channels, 8000 AS sample_rate,
-       65 AS n_samples, 65 / 8000.0 AS duration_s,
-       list_max(a)::INT AS peak_abs,
-       list_sum(a) / 65.0 AS mean_abs
-FROM m ORDER BY id
-"""
-
-
-@register("multimodal_adpcm", _ADPCM_SQL)
-def multimodal_adpcm(spark, sf):
-    """IMA/DVI ADPCM decoding through the Arrow stage — a genuinely
-    COMPRESSED (4:1) audio codec decoded with no library, the audio
-    analogue of the JPEG move: one-block mono clips are synthesized
-    with nibbles restricted to {+0, +1, -1} at step index 0, so the
-    decoder's predictor walk is a closed-form prefix sum the DuckDB
-    oracle reproduces without running the state machine (non-circular).
-    Richer nibble sequences, step-table walks, clamping, and
-    multi-block streams are pytest-covered."""
-    import struct
-
-    from lamapi_spark.ops.multimodal import decode_audio
-
-    ids = load(spark, sf, "part").filter(F.col("p_partkey") % 41 == 1).select(
-        F.col("p_partkey").alias("id"))
-
-    def synth(it):
-        import pandas as pd
-        for pdf in it:
-            payloads = []
-            for pid in pdf["id"]:
-                pid = int(pid)
-                p0 = (pid * 7) % 2000 + 500
-                nibs = [(0, 1, 9)[(pid + j) % 3] for j in range(64)]
-                data = struct.pack("<hBB", p0, 0, 0) + bytes(
-                    nibs[2 * k] | (nibs[2 * k + 1] << 4) for k in range(32))
-                hdr = (b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
-                       + b"fmt " + struct.pack("<IHHIIHH", 16, 0x11, 1, 8000,
-                                               4000, 36, 4)
-                       + b"data" + struct.pack("<I", len(data)))
-                payloads.append(hdr + data)
-            yield pd.DataFrame({"id": pdf["id"], "payload": payloads,
-                                "modality": ["audio"] * len(payloads)})
-
-    payload = ids.mapInPandas(
-        synth, schema="id bigint, payload binary, modality string")
-    return decode_audio(payload).orderBy("id")
-
-
-def _png_encode_gray(img, depth=8, interlace=0):
-    """Grayscale PNG encoder for the synth corpora, generalizing
-    _png_encode: 8- or 16-bit samples (big-endian pairs), optional
-    Adam7 interlacing (each pass filtered independently), filter type
-    r % 5 on row r of every pass — one image exercises all five
-    unfilters in every pass."""
-    import struct
-    import zlib
-
-    H, W = len(img), len(img[0])
-    sb = depth // 8
-
-    def chunk(ctype, data):
-        return (struct.pack(">I", len(data)) + ctype + data
-                + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF))
-
-    def ser_row(rowvals):
-        return b"".join(struct.pack(">H", v) if depth == 16 else bytes([v])
-                        for v in rowvals)
-
-    passes = ([(0, 0, 1, 1)] if interlace == 0 else
-              [(0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-               (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2)])
-    raw = bytearray()
-    for (xs, ys, xst, yst) in passes:
-        sub = [row[xs::xst] for row in img[ys::yst]]
-        if not sub or not sub[0]:
-            continue
-        prev = bytes(len(sub[0]) * sb)
-        for ri, rowvals in enumerate(sub):
-            line = ser_row(rowvals)
-            ft = ri % 5
-            raw.append(ft)
-            for x in range(len(line)):
-                a = line[x - sb] if x >= sb else 0
-                up = prev[x]
-                c = prev[x - sb] if x >= sb else 0
-                if ft == 0:
-                    pred = 0
-                elif ft == 1:
-                    pred = a
-                elif ft == 2:
-                    pred = up
-                elif ft == 3:
-                    pred = (a + up) >> 1
-                else:
-                    p = a + up - c
-                    pa, pb, pc = abs(p - a), abs(p - up), abs(p - c)
-                    pred = a if (pa <= pb and pa <= pc) else (up if pb <= pc else c)
-                raw.append((line[x] - pred) % 256)
-            prev = line
-    ihdr = struct.pack(">IIBBBBB", W, H, depth, 0, 0, 0, interlace)
-    return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", zlib.compress(bytes(raw))) + chunk(b"IEND", b""))
-
-
-@register("multimodal_png_i16", """
-WITH ids AS (SELECT p_partkey AS id FROM part WHERE p_partkey % 43 = 1),
-s AS (
-  SELECT id,
-         list_sum(list_transform(range(64), i -> (id * 97 + i * 513) % 65536)) AS ps
-  FROM ids
-)
-SELECT id, 'PNG' AS format, 8 AS width, 8 AS height, 1 AS channels,
-       round_even(ps / 64.0, 3) AS mean_luma
-FROM s ORDER BY id
-""")
-def multimodal_png_i16(spark, sf):
-    """16-bit + Adam7-INTERLACED PNG decoding through the Arrow stage:
-    8x8 grayscale 16-bit images (pixel i of clip `id` = (id*97 +
-    i*513) % 65536 — native 0..65535 range kept end to end) are Adam7-
-    encoded with the r % 5 filter schedule inside every pass, decoded
-    by the extended zlib/numpy PNG parser (per-pass unfilter -> strided
-    scatter -> big-endian byte-pair combine), and the oracle checks the
-    stats from the same integer formula (sum / 64 is exact — a power
-    of two). Closes the last two PNG profile gaps behind the round-4
-    decoder."""
-    from lamapi_spark.ops.multimodal import decode_image
-
-    ids = load(spark, sf, "part").filter(F.col("p_partkey") % 43 == 1).select(
-        F.col("p_partkey").alias("id"))
-
-    def synth(it):
-        import pandas as pd
-        for pdf in it:
-            payloads = []
-            for pid in pdf["id"]:
-                img = [[(int(pid) * 97 + (r * 8 + c) * 513) % 65536
-                        for c in range(8)] for r in range(8)]
-                payloads.append(_png_encode_gray(img, depth=16, interlace=1))
-            yield pd.DataFrame({"id": pdf["id"], "payload": payloads,
-                                "modality": ["image"] * len(payloads)})
-
-    payload = ids.mapInPandas(
-        synth, schema="id bigint, payload binary, modality string")
-    return (decode_image(payload)
-            .select("id", "format", "width", "height", "channels", "mean_luma")
-            .orderBy("id"))
-
-
-# ------------------------------------------------------------------- gif
-
-def _gif_encode_gray(w, h, idxs, interlace=False):
-    """Minimal valid GIF89a for the synth corpora: 256-entry grayscale
-    identity palette (index v -> (v,v,v)), one image, LZW stream built
-    with the spec's simplest valid strategy — CLEAR before every
-    literal, so every code is 9 bits and the dictionary never grows.
-    Deliberately INDEPENDENT of any real LZW encoder: the decoder's
-    dictionary-growth path is exercised separately in pytest with a
-    greedy encoder."""
-    import struct
-
-    def pack_lsb(codes):
-        acc = nbits = 0
-        out = bytearray()
-        for c in codes:
-            acc |= c << nbits
-            nbits += 9
-            while nbits >= 8:
-                out.append(acc & 0xFF)
-                acc >>= 8
-                nbits -= 8
-        if nbits:
-            out.append(acc & 0xFF)
-        return bytes(out)
-
-    hdr = b"GIF89a" + struct.pack("<HHBBB", w, h, 0x80 | 7, 0, 0)
-    pal = bytes(v for i in range(256) for v in (i, i, i))
-    codes = []
-    for v in idxs:
-        codes += [256, v]
-    codes.append(257)
-    data = pack_lsb(codes)
-    sub = b"".join(bytes([min(255, len(data) - o)]) + data[o:o + 255]
-                   for o in range(0, len(data), 255)) + b"\x00"
-    desc = b"\x2C" + struct.pack("<HHHHB", 0, 0, w, h,
-                                 0x40 if interlace else 0)
-    return hdr + pal + desc + bytes([8]) + sub + b"\x3B"
-
-
-@register("multimodal_gif", """
-WITH ids AS (SELECT p_partkey AS id FROM part WHERE p_partkey % 47 = 1),
-s AS (
-  SELECT id,
-         list_sum(list_transform(range(64), i -> (id * 7 + i * 19) % 256)) AS ps
-  FROM ids
-)
-SELECT id, 'GIF' AS format, 8 AS width, 8 AS height, 3 AS channels,
-       round_even(ps / 64.0, 3) AS mean_luma
-FROM s ORDER BY id
-""")
-def multimodal_gif(spark, sf):
-    """REAL GIF decoding through the Arrow stage: deterministic 8x8
-    GIFs (grayscale identity palette, pixel i of clip `id` = (id*7 +
-    i*19) % 256) are synthesized with the spec's trivial
-    CLEAR-per-literal LZW stream, decoded by the direct LZW
-    implementation in ops/multimodal._parse_gif (variable-width
-    LSB-first codes, palette resolve), and the oracle checks the stats
-    from the same integer formula (identity palette -> R=G=B=index, so
-    BT.601 luma equals the index exactly and the mean divides an exact
-    int sum by 64). Dictionary growth, width bumps, interlacing, and
-    degrade paths are pytest-covered with a greedy LZW encoder."""
-    from lamapi_spark.ops.multimodal import decode_image
-
-    ids = load(spark, sf, "part").filter(F.col("p_partkey") % 47 == 1).select(
-        F.col("p_partkey").alias("id"))
-
-    def synth(it):
-        import pandas as pd
-        for pdf in it:
-            payloads = []
-            for pid in pdf["id"]:
-                idxs = [(int(pid) * 7 + i * 19) % 256 for i in range(64)]
-                payloads.append(_gif_encode_gray(8, 8, idxs))
-            yield pd.DataFrame({"id": pdf["id"], "payload": payloads,
-                                "modality": ["image"] * len(payloads)})
-
-    payload = ids.mapInPandas(
-        synth, schema="id bigint, payload binary, modality string")
-    return (decode_image(payload)
-            .select("id", "format", "width", "height", "channels", "mean_luma")
-            .orderBy("id"))
-
-
-# WebP corpus, engine-portable: 8x8 RGBA images with R=G=B drawn from
-# the two-level 30/220 pattern (one flipped pixel at (id*13) % 64), so
-# the aHash threshold sits strictly between the two luma levels in any
-# float rounding and bit i is exactly (pixel_i == 220) — the same
-# never-on-the-boundary trick as the PNG/video corpora, here packed to
-# the signed-64 hash Spark emits (HUGEINT fold + two's-complement
-# wrap). The encoder profile varies by id so one contract query
-# exercises literals, subtract-green, every-other predictor mode,
-# 1-bit palette packing, color cache + LZ77 (both distance shapes),
-# and the 2-group meta-prefix-code path. The oracle NEVER parses WebP
-# — it recomputes the bits from the same closed-form pixel formula,
-# and VP8L's losslessness is what makes that non-circular.
-_WEBP_SQL = """
-WITH ids AS (SELECT p_partkey AS id FROM part WHERE p_partkey % 31 = 1),
-px AS (
-  SELECT id, list_transform(range(64), i ->
-    CASE WHEN i = (id * 13) % 64
-         THEN (CASE WHEN ((id * 7 + i * 3) % 5) < 2 THEN 220 ELSE 30 END)
-         ELSE (CASE WHEN ((id * 7 + i * 3) % 5) < 2 THEN 30 ELSE 220 END)
-    END) AS px
-  FROM ids
-), ah AS (
-  SELECT id, list_sum(list_transform(range(64), i ->
-      (CASE WHEN px[i + 1] = 220 THEN 1 ELSE 0 END)::HUGEINT
-      * (1::HUGEINT << (63 - i)))) AS s
-  FROM px
-)
-SELECT id, 'WEBP' AS format, 8 AS width, 8 AS height, 4 AS channels,
-       (CASE WHEN s >= 9223372036854775808::HUGEINT
-             THEN s - 18446744073709551616::HUGEINT ELSE s END)::BIGINT
-       AS ahash
-FROM ah ORDER BY id
-"""
-
-
-def _webp_pixel_rows(pid: int):
-    px = []
-    for i in range(64):
-        base = 30 if ((pid * 7 + i * 3) % 5) < 2 else 220
-        px.append((250 - base) if i == (pid * 13) % 64 else base)
-    return px
-
-
-_WEBP_PROFILES = {
-    0: {},
-    1: {"sub_green": True},
-    2: {"transform_bits": 2},            # pred_mode filled per id
-    3: {"palette": True},                # two colors -> 1-bit packing
-    4: {"cache_bits": 4, "lz77": "both"},
-    5: {"meta_bits": 3, "sub_green": True},
-}
-
-
-@register("multimodal_webp", _WEBP_SQL)
-def multimodal_webp(spark, sf):
-    """REAL lossless-WebP decoding through the Arrow stage: images are
-    encoded executor-side by ops/webp.encode_webp (profile varies by
-    id: plain, subtract-green, per-tile predictor, palette, color
-    cache + LZ77, meta prefix codes), decoded by parse_webp inside
-    decode_image, and the oracle recomputes dimensions and the exact
-    64-bit aHash from the closed-form pixel formula."""
-    from lamapi_spark.ops.multimodal import decode_image
-
-    ids = load(spark, sf, "part").filter(F.col("p_partkey") % 31 == 1).select(
-        F.col("p_partkey").alias("id"))
-
-    def synth(it):
-        import numpy as np
-        import pandas as pd
-
-        from lamapi_spark.ops.webp import encode_webp
-
-        for pdf in it:
-            payloads = []
-            for pid in pdf["id"]:
-                pid = int(pid)
-                px = _webp_pixel_rows(pid)
-                arr = np.empty((8, 8, 4), dtype=np.uint8)
-                for i, v in enumerate(px):
-                    arr[i // 8, i % 8, :3] = v
-                arr[:, :, 3] = 255
-                kw = dict(_WEBP_PROFILES[pid % 6])
-                if pid % 6 == 2:
-                    kw["pred_mode"] = (pid // 6) % 14
-                payloads.append(encode_webp(arr, **kw))
-            yield pd.DataFrame({"id": pdf["id"], "payload": payloads,
-                                "modality": ["image"] * len(payloads)})
-
-    payload = ids.mapInPandas(
-        synth, schema="id bigint, payload binary, modality string")
-    return (decode_image(payload)
-            .select("id", "format", "width", "height", "channels", "ahash")
-            .orderBy("id"))
-
-
-# Near-dup WebP corpus: identical two-level group pattern as the
-# PNG/NetPBM pair corpora (id % 3 groups, one flipped pixel), on its
-# own id slice, WEBP-ENCODED with the per-id profile rotation.
-# Equality against the brute-force oracle proves prefix decode + all
-# transforms + aHash + banding end to end.
-_WEBP_PAIRS_SQL = """
-WITH imgs AS (
-  SELECT p_partkey AS id, p_partkey % 3 AS g, (p_partkey * 13) % 64 AS fp
-  FROM part WHERE p_partkey % 17 = 1
-), px AS (
-  SELECT id, list_transform(range(64), i ->
-    CASE WHEN i = fp
-         THEN (CASE WHEN ((g * 7 + i * 3) % 5) < 2 THEN 30 ELSE 220 END)
-         ELSE (CASE WHEN ((g * 7 + i * 3) % 5) < 2 THEN 220 ELSE 30 END) END) AS px
-  FROM imgs
-), bits AS (
-  SELECT id, list_transform(px, v -> v = 220) AS bt
-  FROM px
-), ham AS (
-  SELECT x.id AS id_a, y.id AS id_b,
-         len(list_filter(range(1, 65), i -> x.bt[i] <> y.bt[i]))::INT AS hamming
-  FROM bits x JOIN bits y ON x.id < y.id
-)
-SELECT id_a, id_b, hamming FROM ham WHERE hamming <= 3 ORDER BY id_a, id_b
-"""
-
-
-@register("webp_neardup_pairs", _WEBP_PAIRS_SQL)
-def webp_neardup_pairs_q(spark, sf):
-    """WebP near-dup END TO END: synthesize deterministic 8x8
-    near-duplicate lossless WebPs (profile rotation per id), decode
-    with parse_webp, and pair via the banded Hamming join — the WebP
-    twin of image_neardup_pairs/png_neardup_pairs, against the same
-    brute-force oracle shape."""
-    from lamapi_spark.ops.multimodal import decode_image, image_neardup_pairs
-
-    ids = load(spark, sf, "part").filter(F.col("p_partkey") % 17 == 1).select(
-        F.col("p_partkey").alias("id"))
-
-    def synth(it):
-        import numpy as np
-        import pandas as pd
-
-        from lamapi_spark.ops.webp import encode_webp
-
-        for pdf in it:
-            payloads = []
-            for pid in pdf["id"]:
-                pid = int(pid)
-                g, fp = pid % 3, (pid * 13) % 64
-                arr = np.empty((8, 8, 4), dtype=np.uint8)
-                for i in range(64):
-                    base = 220 if ((g * 7 + i * 3) % 5) < 2 else 30
-                    v = (250 - base) if i == fp else base
-                    arr[i // 8, i % 8, :3] = v
-                arr[:, :, 3] = 255
-                kw = dict(_WEBP_PROFILES[pid % 6])
-                if pid % 6 == 2:
-                    kw["pred_mode"] = (pid // 6) % 14
-                payloads.append(encode_webp(arr, **kw))
-            yield pd.DataFrame({"id": pdf["id"], "payload": payloads,
-                                "modality": ["image"] * len(payloads)})
-
-    payload = ids.mapInPandas(
-        synth, schema="id bigint, payload binary, modality string")
-    decoded = decode_image(payload)
-    return (
-        # max_bucket sized above any sf's group population, same
-        # reasoning as image_neardup_pairs
-        image_neardup_pairs(decoded, max_hamming=3, n_bands=4,
-                            max_bucket=1_000_000)
-        .withColumn("hamming", F.col("hamming").cast("int"))
         .orderBy("id_a", "id_b")
     )
 
@@ -2622,250 +1275,6 @@ def dedup_containment(spark, sf):
                           k_shingle=3, threshold=0.5, max_df=1_000_000)
         .orderBy("id_a", "id_b")
     )
-
-
-# ------------------------------------------------------------------ tiff
-
-def _packbits_encode(data: bytes) -> bytes:
-    """PackBits encoder for the TIFF synth corpus: runs >= 3 become
-    replicate records, everything else literal records."""
-    out = bytearray()
-    i = 0
-    while i < len(data):
-        run = 1
-        while (i + run < len(data) and data[i + run] == data[i]
-               and run < 128):
-            run += 1
-        if run >= 3:
-            out += bytes([257 - run, data[i]])
-            i += run
-        else:
-            j = i
-            lit = bytearray()
-            while j < len(data) and len(lit) < 128:
-                r = 1
-                while (j + r < len(data) and data[j + r] == data[j]
-                       and r < 3):
-                    r += 1
-                if r >= 3:
-                    break
-                lit += data[j:j + 1]
-                j += 1
-            out += bytes([len(lit) - 1]) + lit
-            i = j
-    return bytes(out)
-
-
-def _tiff_encode(px_rows, bo="<", photo=1, comp=1, rows_per_strip=3):
-    """Minimal baseline-TIFF encoder for the synth corpus: 8-bit
-    grayscale (photometric 0 stores inverted bytes) laid out in
-    ``rows_per_strip`` strips so multi-strip reassembly is exercised;
-    ``bo`` picks II/MM, ``comp`` 1 (none) or 32773 (PackBits)."""
-    import struct
-
-    h, w = len(px_rows), len(px_rows[0])
-    flat = bytes((255 - v if photo == 0 else v) & 0xFF
-                 for row in px_rows for v in row)
-    strips = []
-    for y0 in range(0, h, rows_per_strip):
-        s = flat[y0 * w:(y0 + rows_per_strip) * w]
-        strips.append(_packbits_encode(s) if comp == 32773 else s)
-    off = 8
-    strip_offs = []
-    for s in strips:
-        strip_offs.append(off)
-        off += len(s)
-    ifd_off = off
-    short = lambda v: struct.pack(bo + "H", v)
-    long_ = lambda v: struct.pack(bo + "I", v)
-    fields = [
-        (256, 3, 1, short(w)), (257, 3, 1, short(h)),
-        (258, 3, 1, short(8)), (259, 3, 1, short(comp)),
-        (262, 3, 1, short(photo)),
-        (273, 4, len(strips), b"".join(long_(o) for o in strip_offs)),
-        (277, 3, 1, short(1)), (278, 3, 1, short(rows_per_strip)),
-        (279, 4, len(strips), b"".join(long_(len(s)) for s in strips)),
-    ]
-    extra_base = ifd_off + 2 + 12 * len(fields) + 4
-    entries, extra = [], b""
-    for tag, typ, cnt, vb in fields:
-        if len(vb) <= 4:
-            entries.append(struct.pack(bo + "HHI", tag, typ, cnt)
-                           + vb.ljust(4, b"\0"))
-        else:
-            entries.append(struct.pack(bo + "HHI", tag, typ, cnt)
-                           + long_(extra_base + len(extra)))
-            extra += vb
-    ifd = (struct.pack(bo + "H", len(fields)) + b"".join(entries)
-           + long_(0))
-    hdr = (b"II" if bo == "<" else b"MM") + struct.pack(bo + "HI", 42,
-                                                        ifd_off)
-    return hdr + b"".join(strips) + ifd + extra
-
-
-@register("multimodal_tiff", """
-WITH ids AS (SELECT p_partkey AS id FROM part WHERE p_partkey % 29 = 2),
-s AS (
-  SELECT id,
-         list_sum(list_transform(range(64),
-                                 i -> (id * 7 + i * 13) % 256)) AS ps
-  FROM ids
-)
-SELECT id, 'TIFF' AS format, 8 AS width, 8 AS height, 1 AS channels,
-       round_even(ps / 64.0, 3) AS mean_luma
-FROM s ORDER BY id
-""")
-def multimodal_tiff(spark, sf):
-    """REAL baseline-TIFF decoding through the Arrow stage:
-    deterministic 8x8 grayscale TIFFs synthesized from part keys
-    (decoded luminance of pixel i = (id*7 + i*13) % 256 — mean is an
-    exact int sum / 64, bit-identical across engines), with id % 8
-    rotating through BOTH byte orders (II/MM), BOTH photometrics
-    (WhiteIsZero ids store inverted bytes the decoder must re-invert)
-    and BOTH compressions (none / PackBits), in 3-row strips so
-    multi-strip reassembly is load-bearing. The oracle checks
-    format/dims/channels/mean from the pixel formula; RGB and
-    corrupt-payload arms live in tests/test_round4e.py."""
-    from lamapi_spark.ops.multimodal import decode_image
-
-    ids = (load(spark, sf, "part").filter(F.col("p_partkey") % 29 == 2)
-           .select(F.col("p_partkey").alias("id")))
-
-    def synth(it):
-        import pandas as pd
-        for pdf in it:
-            payloads = []
-            for pid in pdf["id"]:
-                v = int(pid)
-                px = [(v * 7 + i * 13) % 256 for i in range(64)]
-                rows = [px[r * 8:(r + 1) * 8] for r in range(8)]
-                payloads.append(_tiff_encode(
-                    rows, bo="<" if v % 2 == 0 else ">",
-                    photo=(v >> 1) % 2,
-                    comp=1 if (v >> 2) % 2 == 0 else 32773))
-            yield pd.DataFrame({"id": pdf["id"], "payload": payloads,
-                                "modality": ["image"] * len(payloads)})
-
-    payload = ids.mapInPandas(
-        synth, schema="id bigint, payload binary, modality string")
-    return (decode_image(payload)
-            .select("id", "format", "width", "height", "channels",
-                    "mean_luma")
-            .orderBy("id"))
-
-
-# TIFF twin of the PNG near-dup corpus: identical engine-portable
-# 30/220 pixel pattern on an independent id slice, TIFF-ENCODED with
-# id-rotating byte order / photometric / compression so the pairing
-# proves strip reassembly + PackBits + WhiteIsZero inversion feed the
-# same aHash the other codecs produce.
-_TIFF_PAIRS_SQL = _PNG_PAIRS_SQL.replace("p_partkey % 13 = 1",
-                                         "p_partkey % 17 = 4")
-
-
-@register("tiff_neardup_pairs", _TIFF_PAIRS_SQL)
-def tiff_neardup_pairs_q(spark, sf):
-    """TIFF near-dup END TO END: the PNG corpus' two-level 30/220
-    pattern re-encoded as baseline TIFFs (id bits rotate II/MM,
-    BlackIsZero/WhiteIsZero, none/PackBits), decoded by the real
-    strip parser, aHashed, and paired via the banded Hamming join —
-    against the same brute-force oracle shape."""
-    from lamapi_spark.ops.multimodal import decode_image, image_neardup_pairs
-
-    ids = (load(spark, sf, "part").filter(F.col("p_partkey") % 17 == 4)
-           .select(F.col("p_partkey").alias("id")))
-
-    def synth(it):
-        import pandas as pd
-        for pdf in it:
-            payloads = []
-            for pid in pdf["id"]:
-                pid = int(pid)
-                g, fp = pid % 3, (pid * 13) % 64
-                px = []
-                for i in range(64):
-                    base = 220 if ((g * 7 + i * 3) % 5) < 2 else 30
-                    px.append((250 - base) if i == fp else base)
-                rows = [px[r * 8:(r + 1) * 8] for r in range(8)]
-                payloads.append(_tiff_encode(
-                    rows, bo="<" if pid % 2 == 0 else ">",
-                    photo=(pid >> 1) % 2,
-                    comp=1 if (pid >> 2) % 2 == 0 else 32773))
-            yield pd.DataFrame({"id": pdf["id"], "payload": payloads,
-                                "modality": ["image"] * len(payloads)})
-
-    payload = ids.mapInPandas(
-        synth, schema="id bigint, payload binary, modality string")
-    decoded = decode_image(payload)
-    return (
-        image_neardup_pairs(decoded, max_hamming=3, n_bands=4,
-                            max_bucket=1_000_000)
-        .withColumn("hamming", F.col("hamming").cast("int"))
-        .orderBy("id_a", "id_b")
-    )
-
-
-# ------------------------------------------------------------------ aiff
-
-@register("multimodal_aiff", """
-WITH ids AS (SELECT p_partkey AS id FROM part WHERE p_partkey % 37 = 3),
-s AS (
-  SELECT id,
-         list_transform(range(120),
-                        i -> abs((id * 11 + i * 29) % 4001 - 2000)) AS a
-  FROM ids
-)
-SELECT id, 'AIFF' AS format, 1 AS channels, 11025 AS sample_rate,
-       120 AS n_samples, 120 / 11025.0 AS duration_s,
-       list_max(a)::INT AS peak_abs,
-       list_sum(a) / 120.0 AS mean_abs
-FROM s ORDER BY id
-""")
-def multimodal_aiff(spark, sf):
-    """REAL AIFF decoding through the Arrow stage: deterministic
-    big-endian PCM16 clips synthesized from part keys at 11025 Hz —
-    the sample rate is round-tripped through a TRUE 80-bit IEEE
-    extended encode (16383+e exponent, explicit-integer-bit mantissa),
-    and the SSND offset field is nonzero so the decoder must honor
-    it. The oracle checks format/channels/rate/frames/duration plus
-    the integer-exact amplitude stats from the same sample formula."""
-    from lamapi_spark.ops.multimodal import decode_audio
-
-    ids = (load(spark, sf, "part").filter(F.col("p_partkey") % 37 == 3)
-           .select(F.col("p_partkey").alias("id")))
-
-    def synth(it):
-        import struct
-
-        import pandas as pd
-
-        def ext80(val):
-            e = val.bit_length() - 1
-            return struct.pack(">HQ", 16383 + e, val << (63 - e))
-
-        def chunk(cid, d):
-            return (cid + struct.pack(">I", len(d)) + d
-                    + (b"\x00" if len(d) & 1 else b""))
-
-        for pdf in it:
-            payloads = []
-            for pid in pdf["id"]:
-                samples = [((int(pid) * 11 + i * 29) % 4001) - 2000
-                           for i in range(120)]
-                pcm = b"".join(struct.pack(">h", s) for s in samples)
-                comm = struct.pack(">HIH", 1, 120, 16) + ext80(11025)
-                # nonzero SSND offset: 4 junk bytes the decoder skips
-                ssnd = struct.pack(">II", 4, 0) + b"\xde\xad\xbe\xef" + pcm
-                body = (b"AIFF" + chunk(b"COMM", comm)
-                        + chunk(b"SSND", ssnd))
-                payloads.append(b"FORM" + struct.pack(">I", len(body))
-                                + body)
-            yield pd.DataFrame({"id": pdf["id"], "payload": payloads,
-                                "modality": ["audio"] * len(payloads)})
-
-    payload = ids.mapInPandas(
-        synth, schema="id bigint, payload binary, modality string")
-    return decode_audio(payload).orderBy("id")
 
 
 # ----------------------------------------------------- hard negatives

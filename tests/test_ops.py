@@ -1,5 +1,5 @@
 """Training-data ops: dedup finds planted near-duplicates, ANN recall vs
-brute force, simhash Hamming locality, multimodal stub behavior."""
+brute force, simhash Hamming locality."""
 
 from __future__ import annotations
 
@@ -10,7 +10,6 @@ from lamapi_spark.ops.dedup import (
     exact_dedup, minhash_lsh_pairs, ngram_jaccard_pairs, simhash60,
     substring_dup_spans, substring_dup_stats,
 )
-from lamapi_spark.ops.multimodal import attach_binary, decode_image_meta, decode_image_real
 from lamapi_spark.ops.similarity import brute_force_topk, lsh_ann_topk
 from lamapi_spark.ops.textstats import lang_id
 
@@ -131,18 +130,6 @@ def test_lang_id_markers(spark):
     df = spark.createDataFrame(rows, "id int, text string")
     got = {r.id: r.lang for r in df.select("id", lang_id(F.col("text")).alias("lang")).collect()}
     assert got[1] == "en" and got[2] == "fr" and got[3] == "de" and got[4] == "und"
-
-
-def test_multimodal_stub_and_meta(spark, docs):
-    payload = attach_binary(docs, "text", "doc_id")
-    meta = decode_image_meta(payload).collect()
-    assert len(meta) == 6
-    by_id = {r.id: r for r in meta}
-    assert by_id[0].n_bytes == len(BASE.encode())
-    assert by_id[0].content_md5 == by_id[1].content_md5
-    assert 1 <= by_id[0].fake_width <= 256
-    with pytest.raises(NotImplementedError):
-        decode_image_real(payload)
 
 
 def test_embed_neardup_pairs_plants_and_precision(spark):

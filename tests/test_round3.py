@@ -1,6 +1,6 @@
 """Round-3 additions: index-artifact build-param persistence, the
-artifact-path mention join without driver round-trips, image near-dup
-pairing, and the streaming dedup twin."""
+artifact-path mention join without driver round-trips, and the
+streaming dedup twin."""
 
 from __future__ import annotations
 
@@ -160,51 +160,6 @@ def test_artifact_mention_path_no_forced_broadcast(spark, small_kg):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
-
-
-# ------------------------------------------------------------ audio decode
-
-
-def test_decode_audio_formats_and_degrade(spark):
-    """Real WAV parsing: 16-bit mono, 8-bit stereo (word-aligned odd
-    chunk), and the null-degrade contract for corrupt payloads."""
-    import struct
-
-    from lamapi_spark.ops.multimodal import decode_audio
-
-    def wav(channels, bits, rate, samples):
-        if bits == 16:
-            data = b"".join(struct.pack("<h", s) for s in samples)
-        else:
-            data = bytes(s + 128 for s in samples)
-        hdr = (b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
-               + b"fmt " + struct.pack(
-                   "<IHHIIHH", 16, 1, channels, rate,
-                   rate * channels * bits // 8, channels * bits // 8, bits)
-               + b"data" + struct.pack("<I", len(data)))
-        return hdr + data
-
-    mono16 = wav(1, 16, 8000, [0, 1000, -2000, 32767])
-    stereo8 = wav(2, 8, 44100, [10, -10, 20, -20, 30, -30])  # 3 frames
-    rows = spark.createDataFrame(
-        [(1, bytearray(mono16), "audio"),
-         (2, bytearray(stereo8), "audio"),
-         (3, bytearray(b"not audio at all"), "audio")],
-        "id bigint, payload binary, modality string")
-    out = {r.id: r for r in decode_audio(rows).collect()}
-
-    m = out[1]
-    assert (m.format, m.channels, m.sample_rate, m.n_samples) == ("WAV", 1, 8000, 4)
-    assert m.peak_abs == 32767
-    assert m.mean_abs == (0 + 1000 + 2000 + 32767) / 4
-    assert m.duration_s == 4 / 8000
-
-    s = out[2]
-    assert (s.format, s.channels, s.sample_rate, s.n_samples) == ("WAV", 2, 44100, 3)
-    assert s.peak_abs == 30
-
-    u = out[3]
-    assert u.format == "unknown" and u.channels is None and u.mean_abs is None
 
 
 def test_index_unpruned_meta_none_limit(spark, small_kg):

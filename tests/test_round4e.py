@@ -598,151 +598,6 @@ def test_dyads_fully_reciprocal(spark):
     assert (r.mutual, r.asym, r.reciprocity) == (1, 0, 1.0)
 
 
-# --------------------------------------------------------- TIFF decode
-
-def _tiff_rgb(px, bo="<", comp=1, rows_per_strip=2):
-    """RGB TIFF encoder twin for the unit tests (the contract synth
-    is gray-only; RGB exercises SamplesPerPixel=3)."""
-    import struct
-    h = len(px)
-    w = len(px[0])
-    flat = bytes(c for row in px for p in row for c in p)
-    from lamapi_spark.queries_ops import _packbits_encode
-    strips = []
-    for y0 in range(0, h, rows_per_strip):
-        s = flat[y0 * w * 3:(y0 + rows_per_strip) * w * 3]
-        strips.append(_packbits_encode(s) if comp == 32773 else s)
-    off = 8
-    strip_offs = []
-    for s in strips:
-        strip_offs.append(off)
-        off += len(s)
-    ifd_off = off
-    short = lambda v: struct.pack(bo + "H", v)
-    long_ = lambda v: struct.pack(bo + "I", v)
-    fields = [(256, 3, 1, short(w)), (257, 3, 1, short(h)),
-              (258, 3, 3, short(8) + short(8) + short(8)),
-              (259, 3, 1, short(comp)), (262, 3, 1, short(2)),
-              (273, 4, len(strips), b"".join(map(long_, strip_offs))),
-              (277, 3, 1, short(3)), (278, 3, 1, short(rows_per_strip)),
-              (279, 4, len(strips),
-               b"".join(long_(len(s)) for s in strips))]
-    extra_base = ifd_off + 2 + 12 * len(fields) + 4
-    entries, extra = [], b""
-    for tag, typ, cnt, vb in fields:
-        if len(vb) <= 4:
-            entries.append(struct.pack(bo + "HHI", tag, typ, cnt)
-                           + vb.ljust(4, b"\0"))
-        else:
-            entries.append(struct.pack(bo + "HHI", tag, typ, cnt)
-                           + long_(extra_base + len(extra)))
-            extra += vb
-    return ((b"II" if bo == "<" else b"MM")
-            + struct.pack(bo + "HI", 42, ifd_off)
-            + b"".join(strips)
-            + struct.pack(bo + "H", len(fields)) + b"".join(entries)
-            + long_(0) + extra)
-
-
-def test_tiff_rgb_roundtrip_via_spark(spark):
-    from lamapi_spark.ops.multimodal import decode_image
-    import numpy as np
-    rng = np.random.RandomState(11)
-    px = rng.randint(0, 256, size=(6, 4, 3))
-    rows = [[tuple(int(c) for c in px[y, x]) for x in range(4)]
-            for y in range(6)]
-    payloads = [(1, bytearray(_tiff_rgb(rows, bo=">", comp=32773)), "image"),
-                (2, bytearray(_tiff_rgb(rows, bo="<", comp=1)), "image")]
-    df = spark.createDataFrame(payloads, ["id", "payload", "modality"])
-    got = {r.id: r for r in decode_image(df).collect()}
-    gray = 0.299 * px[:, :, 0] + 0.587 * px[:, :, 1] + 0.114 * px[:, :, 2]
-    want = float(np.round(gray.mean(), 3))
-    for rid in (1, 2):
-        r = got[rid]
-        assert (r.format, r.width, r.height, r.channels) \
-            == ("TIFF", 4, 6, 3)
-        assert r.mean_luma == want
-
-
-def test_tiff_unsupported_degrades_to_unknown(spark):
-    from lamapi_spark.ops.multimodal import decode_image
-    # truncated payload (IFD chopped off) -> ValueError -> null-degrade
-    from lamapi_spark.queries_ops import _tiff_encode
-    trunc = _tiff_encode([[0] * 4] * 4)[:12]
-    df = spark.createDataFrame(
-        [(1, bytearray(trunc), "image")], ["id", "payload", "modality"])
-    r = decode_image(df).collect()[0]
-    assert r.format == "unknown" and r.ahash is None
-
-
-def test_tiff_packbits_decode_hand(spark):
-    from lamapi_spark.ops.multimodal import _packbits_decode
-    # literal(2): 0xA 0xB, replicate 4x 0xC, noop, literal(1): 0xD
-    enc = bytes([1, 0xA, 0xB, 0xFD, 0xC, 0x80, 0, 0xD])
-    assert _packbits_decode(enc) == bytes([0xA, 0xB, 0xC, 0xC, 0xC, 0xC,
-                                           0xD])
-
-
-# --------------------------------------------------------- AIFF decode
-
-def _aiff(samples, rate, ssize=16, ch=1):
-    import struct
-    import numpy as np
-
-    def ext80(val):
-        e = val.bit_length() - 1
-        return struct.pack(">HQ", 16383 + e, val << (63 - e))
-
-    def chunk(cid, d):
-        return cid + struct.pack(">I", len(d)) + d + (
-            b"\x00" if len(d) & 1 else b"")
-
-    arr = np.asarray(samples).reshape(-1, ch)
-    pcm = (arr.astype(">i2") if ssize == 16
-           else arr.astype(np.int8)).tobytes()
-    comm = struct.pack(">HIH", ch, arr.shape[0], ssize) + ext80(rate)
-    body = (b"AIFF" + chunk(b"COMM", comm)
-            + chunk(b"SSND", struct.pack(">II", 0, 0) + pcm))
-    return b"FORM" + struct.pack(">I", len(body)) + body
-
-
-def test_aiff_signed_8bit_vs_wav_unsigned(spark):
-    # THE cross-container trap: AIFF 8-bit is signed; the same byte
-    # 0x80 is -128 in AIFF but (128-128)=0 after WAV's unsigned bias.
-    from lamapi_spark.ops.multimodal import decode_audio
-    df = spark.createDataFrame(
-        [(1, bytearray(_aiff([-128, 127, 0, -1], 8000, ssize=8)),
-          "audio")],
-        ["id", "payload", "modality"])
-    r = decode_audio(df).collect()[0]
-    assert (r.format, r.channels, r.sample_rate, r.n_samples) \
-        == ("AIFF", 1, 8000, 4)
-    assert r.peak_abs == 128
-    assert r.mean_abs == (128 + 127 + 0 + 1) / 4
-
-
-def test_aiff_stereo_44100_extended_rate(spark):
-    from lamapi_spark.ops.multimodal import decode_audio
-    import numpy as np
-    rng = np.random.RandomState(9)
-    s = rng.randint(-30000, 30000, size=(50, 2))
-    df = spark.createDataFrame(
-        [(1, bytearray(_aiff(s, 44100, ch=2)), "audio")],
-        ["id", "payload", "modality"])
-    r = decode_audio(df).collect()[0]
-    assert (r.format, r.channels, r.sample_rate, r.n_samples) \
-        == ("AIFF", 2, 44100, 50)
-    assert r.peak_abs == int(np.abs(s).max())
-
-
-def test_aiff_truncated_degrades(spark):
-    from lamapi_spark.ops.multimodal import decode_audio
-    df = spark.createDataFrame(
-        [(1, bytearray(_aiff([1, 2, 3], 8000)[:20]), "audio")],
-        ["id", "payload", "modality"])
-    assert decode_audio(df).collect()[0].format == "unknown"
-
-
 # --------------------------------------------------------- hard negatives
 
 def test_hard_negatives_band_and_rank(spark):
