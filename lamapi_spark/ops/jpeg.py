@@ -19,24 +19,22 @@ bits), 8-bit samples, 1 component (grayscale) or 3 (YCbCr, any of
 4:4:4 / 4:2:2 / 4:2:0 — chroma upsampled by pixel replication),
 restart markers, 8- and 16-bit quantization tables. Arithmetic coding
 (SOF9+), hierarchical/lossless, 12-bit precision, and CMYK raise
-ValueError -> the null-degrade contract upstream
-(ops/multimodal.decode_image).
+ValueError; the decoder never returns a partial image.
 
 Encoders (``encode_jpeg``, ``encode_jpeg_progressive``) are the
 test-corpus synthesizers: they take PER-BLOCK quantized coefficients
-directly (no FDCT), so contract queries can plant coefficient patterns
+directly (no FDCT), so tests can plant coefficient patterns
 whose decoded pixels are known BY CONSTRUCTION — e.g. a constant 8x8
 block with DC quant step 8 decodes bit-exactly to its source value
 (DC = 8*(v-128), quantized losslessly by step 8, IDCT of a DC-only
-block is constant), making image stats closed-form reproducible in a
-DuckDB oracle with integer arithmetic, non-circularly (the oracle
-never runs this decoder). The two encoders also give the progressive
+block is constant), so expected pixels follow from integer arithmetic
+without running this decoder. The two encoders also give the progressive
 decoder a perfect equivalence oracle: both encode the SAME
 coefficients, so their decodes must be bit-identical
 (tests/test_jpeg.py).
 
-Reference analogue: none (unimib-datAI/lamAPI is text-only) — this is
-the training-data-pipeline multimodal surface from the builder's brief.
+Reference analogue: none (unimib-datAI/lamAPI is text-only). No lookup,
+KG or pipeline path imports this module; only its tests do.
 """
 
 from __future__ import annotations

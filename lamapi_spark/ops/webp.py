@@ -1,5 +1,5 @@
 """WebP lossless (VP8L) codec in pure stdlib + numpy — no image
-library, same mold as ops/jpeg.py and the FLAC codec in multimodal.py.
+library, same mold as ops/jpeg.py.
 
 Round 3 documented WebP behind the "codec library" boundary; VP8L is in
 fact the same kind of surface the repo already implements: an LSB-first
@@ -11,7 +11,7 @@ spatial transforms (14-mode per-tile prediction, cross-channel color
 transform, subtract-green, palette indexing with sub-byte packing).
 Everything is integer arithmetic — VP8L is LOSSLESS, so a decode of an
 encode must reproduce the input pixels bit-for-bit, which is the
-equivalence-oracle structure the JPEG/FLAC tests use and
+equivalence-oracle structure the JPEG tests use and
 tests/test_webp.py exploits (every transform, prediction mode, LZ77
 shape, and cache size round-trips). What remains behind the library
 boundary after this: lossy WebP (VP8 intra prediction + bool coder),
@@ -22,13 +22,13 @@ transforms (applied inverse in reverse read order), meta prefix codes
 (entropy image -> per-tile code groups), color cache, simple and
 code-length-coded prefix codes, LZ77 with direct and 2D distance
 codes. Raises ValueError on anything malformed or lossy ('VP8 '
-chunks) -> the null-degrade contract in ops/multimodal.decode_image.
+chunks); it never returns a partial image.
 
 Encoder (``encode_webp``): the test-corpus synthesizer. Profiles
-choose transforms/LZ77/cache explicitly so contract queries can plant
-images whose decoded stats are known by construction. Reference
-analogue: none (unimib-datAI/lamAPI is text-only) — builder's-brief
-multimodal surface.
+choose transforms/LZ77/cache explicitly so tests can plant images
+whose decoded pixels are known by construction. Reference analogue:
+none (unimib-datAI/lamAPI is text-only). No lookup, KG or pipeline
+path imports this module; only its tests do.
 """
 
 from __future__ import annotations

@@ -153,13 +153,6 @@ def test_rejects_non_baseline_and_corrupt():
         parse_jpeg(good[:i + 1] + b"\xc2" + good[i + 2:])
 
 
-def test_decode_image_parser_chain_picks_jpeg():
-    from lamapi_spark.ops.multimodal import _parse_jpeg
-
-    fmt, w, h, px = _parse_jpeg(encode_jpeg(8, 8, [[constant_block(33)]]))
-    assert fmt == "JPEG" and np.all(px == 33)
-
-
 # ------------------------------------------------------------ progressive
 
 def _assert_prog_equals_baseline(width, height, comp_blocks, sampling=None,

@@ -1,12 +1,13 @@
-"""Property-based (hypothesis) tests over the pure-Python codec cores.
+"""Property-based (hypothesis) tests over the pure-Python WebP and JPEG
+codec cores.
 
-The fixed-profile round-trip suites (tests/test_flac.py,
-tests/test_webp.py, tests/test_multimodal_decode.py) pin every decoder
-surface on hand-picked inputs; these sweep RANDOM inputs through random
-valid profile combinations so encoder/decoder disagreements hiding
-between the hand-picked points get found. All lossless codecs, so the
-property is always exact equality. No SparkSession — pure numpy, runs
-in milliseconds per example.
+The fixed-profile suites (tests/test_webp.py, tests/test_jpeg.py) pin
+every decoder surface on hand-picked inputs; these sweep RANDOM inputs
+through random valid profile combinations so encoder/decoder
+disagreements hiding between the hand-picked points get found. The
+property is always exact equality: WebP lossless round-trips, and JPEG
+baseline and progressive decode to the same pixels. No SparkSession —
+pure numpy, runs in milliseconds per example.
 """
 
 from __future__ import annotations
@@ -20,43 +21,6 @@ from hypothesis import strategies as st
 # committed default keeps CI fast; deep one-off fuzz runs set e.g.
 # HYP_EXAMPLES=1500 (how the WebP CTE packing bug was found)
 _N = int(os.environ.get("HYP_EXAMPLES", "30"))
-
-# ----------------------------------------------------------------- FLAC
-
-_SUBFRAMES = ["constant", "verbatim", "fixed0", "fixed1", "fixed2",
-              "fixed3", "fixed4", "lpc"]
-
-
-@settings(max_examples=_N, deadline=None)
-@given(
-    data=st.data(),
-    n=st.integers(min_value=1, max_value=700),
-    ch=st.integers(min_value=1, max_value=2),
-    block=st.sampled_from([64, 256]),
-    subframe=st.sampled_from(_SUBFRAMES),
-    porder=st.integers(min_value=0, max_value=2),
-)
-def test_flac_roundtrip_random(data, n, ch, block, subframe, porder):
-    from lamapi_spark.ops.multimodal import _parse_flac, encode_flac
-
-    if subframe == "constant":
-        v = data.draw(st.integers(min_value=-30000, max_value=30000))
-        arr = np.full((n, ch), v, dtype=np.int64)
-    else:
-        flat = data.draw(st.lists(
-            st.integers(min_value=-30000, max_value=30000),
-            min_size=n * ch, max_size=n * ch))
-        arr = np.array(flat, dtype=np.int64).reshape(n, ch)
-    mode = data.draw(st.sampled_from(
-        ["indep", "left-side", "right-side", "mid-side"])) if ch == 2 else "indep"
-    # porder partitions need block % 2**porder == 0 on full blocks; the
-    # encoder handles short tails itself, so any porder is valid here.
-    fmt, och, orate, out = _parse_flac(
-        encode_flac(arr, block=block, mode=mode, subframe=subframe,
-                    porder=porder))
-    assert (fmt, och, orate) == ("FLAC", ch, 8000)
-    assert out.shape == arr.shape and (out == arr).all()
-
 
 # ----------------------------------------------------------------- WebP
 
@@ -97,79 +61,6 @@ def test_webp_roundtrip_random(data, h, w, seed, profile, pred_mode):
     fmt, ow, oh, out = parse_webp(encode_webp(arr, **kw))
     assert (fmt, ow, oh) == ("WEBP", w, h)
     assert (out.astype(np.uint8) == arr).all()
-
-
-# -------------------------------------------------------------- GIF LZW
-
-
-def _lzw_encode(vals, mcs=8):
-    """Greedy spec LZW encoder (same as test_multimodal_decode's) —
-    kept independent of the decoder under test."""
-    clear, eoi = 1 << mcs, (1 << mcs) + 1
-    table = {bytes([i]): i for i in range(clear)}
-    next_code, width = eoi + 1, mcs + 1
-    codes = [(clear, width)]
-    cur = b""
-    for v in vals:
-        nxt = cur + bytes([v])
-        if nxt in table:
-            cur = nxt
-            continue
-        codes.append((table[cur], width))
-        table[nxt] = next_code
-        next_code += 1
-        if next_code == (1 << width) + 1 and width < 12:
-            width += 1
-        cur = bytes([v])
-    codes.append((table[cur], width))
-    codes.append((eoi, width))
-    acc = nbits = 0
-    out = bytearray()
-    for c, cw in codes:
-        acc |= c << nbits
-        nbits += cw
-        while nbits >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-    if nbits:
-        out.append(acc & 0xFF)
-    return bytes(out)
-
-
-@settings(max_examples=max(_N, 50), deadline=None)
-@given(vals=st.lists(st.integers(min_value=0, max_value=255),
-                     min_size=1, max_size=600))
-def test_gif_lzw_roundtrip_random(vals):
-    from lamapi_spark.ops.multimodal import _gif_lzw_decode
-
-    assert _gif_lzw_decode(_lzw_encode(vals), 8, len(vals)) == vals
-
-
-# ---------------------------------------------- PNG (gray, every filter)
-
-
-@settings(max_examples=_N, deadline=None)
-@given(
-    h=st.integers(min_value=1, max_value=12),
-    w=st.integers(min_value=1, max_value=12),
-    seed=st.integers(min_value=0, max_value=2**31 - 1),
-    depth=st.sampled_from([8, 16]),
-    interlace=st.booleans(),
-)
-def test_png_gray_roundtrip_random(h, w, seed, depth, interlace):
-    from lamapi_spark.ops.multimodal import _parse_png
-    from lamapi_spark.queries_ops import _png_encode_gray
-
-    rng = np.random.default_rng(seed)
-    img = rng.integers(0, 1 << depth, (h, w), dtype=np.uint16 if depth == 16
-                       else np.uint8)
-    fmt, ow, oh, px = _parse_png(
-        _png_encode_gray(img.tolist(), depth=depth,
-                         interlace=1 if interlace else 0))
-    assert (fmt, ow, oh) == ("PNG", w, h)
-    # the decoder emits native-depth samples (16-bit grays stay 16-bit)
-    assert np.array_equal(px[:, :, 0], img)
 
 
 # ------------------------------------- JPEG baseline == progressive

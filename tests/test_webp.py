@@ -3,7 +3,7 @@ predictor mode, LZ77 shape, cache size, palette packing width, and the
 meta-prefix-code path, plus corruption guards. The encoder
 (ops/webp.encode_webp) is the equivalence oracle: VP8L is lossless, so
 parse_webp must reproduce the encoder's input RGBA bit-for-bit — the
-same oracle structure as tests/test_jpeg.py and tests/test_flac.py."""
+same oracle structure as tests/test_jpeg.py."""
 
 from __future__ import annotations
 
@@ -101,19 +101,3 @@ def test_corruption_raises_valueerror():
     ]:
         with pytest.raises(ValueError):
             parse_webp(mutated)
-
-
-def test_decode_image_dispatches_webp(spark):
-    from lamapi_spark.ops.multimodal import decode_image
-
-    arr = img(13, h=8, w=8)
-    arr[:, :, 0] = arr[:, :, 1]
-    arr[:, :, 2] = arr[:, :, 1]  # gray: luma == channel value
-    good = encode_webp(arr, sub_green=True)
-    df = spark.createDataFrame(
-        [(1, bytearray(good), "image"), (2, bytearray(good[:16]), "image")],
-        "id long, payload binary, modality string")
-    rows = {r.id: r for r in decode_image(df).collect()}
-    assert rows[1].format == "WEBP"
-    assert (rows[1].width, rows[1].height, rows[1].channels) == (8, 8, 4)
-    assert rows[2].format == "unknown" and rows[2].ahash is None
