@@ -58,8 +58,7 @@ def _map_ner(c):
 
 
 def classify_columns(cells: DataFrame, label_dict: DataFrame,
-                     col_col: str = "col_name", val_col: str = "v",
-                     broadcast_dict: bool = True) -> DataFrame:
+                     col_col: str = "col_name", val_col: str = "v") -> DataFrame:
     """(col_name, v) cells -> one row per column:
     (col_name, tag, classification, datatype, probability, probabilities).
 
@@ -88,7 +87,7 @@ def classify_columns(cells: DataFrame, label_dict: DataFrame,
     # NE vote: distinct cell values probe the dictionary once, the best
     # NERtype per name is chosen deterministically, then occurrence
     # counts weight the vote back on the full cell table.
-    name_ner = (
+    name_ner = F.broadcast(
         label_dict.select("name_norm", "NERtype", "popularity")
         .filter(F.col("NERtype").isNotNull())
         .withColumn("_rn", F.row_number().over(
@@ -97,8 +96,6 @@ def classify_columns(cells: DataFrame, label_dict: DataFrame,
         .filter(F.col("_rn") == 1)
         .select("name_norm", "NERtype")
     )
-    if broadcast_dict:
-        name_ner = F.broadcast(name_ner)
     ne_counts = (
         cells.select("col_name", clean_str("v").alias("name_norm"))
         .join(name_ner, "name_norm")

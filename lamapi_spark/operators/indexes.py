@@ -19,7 +19,7 @@ so the lookup / mention-detection joins need NO dictionary-side shuffle
 and NO broadcast: the bucketed scan already satisfies the join's
 required hash distribution; only the (streaming) mention side shuffles,
 into exactly ``n_buckets`` partitions. Posting-list pruning
-(top-K-per-key by popularity, lookup._prune_index) is applied at BUILD
+(top-K-per-key by popularity, prune_index) is applied at BUILD
 time, so the per-query-batch window shuffle disappears too.
 
 Catalog note: bucketing metadata lives in the session catalog. The
@@ -30,12 +30,15 @@ Iceberg catalog (bucket transform) and become true cross-job artifacts.
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from lamapi_spark.operators.label_dict import fuzzy_token_index, token_inverted_index
+from lamapi_spark.operators.label_dict import (
+    fuzzy_name_index, fuzzy_token_index, token_inverted_index,
+)
 from lamapi_spark.operators.warehouse import clean_stale_location
 
 _KEY = ["entity", "name", "is_alias"]
@@ -43,6 +46,19 @@ _KEY = ["entity", "name", "is_alias"]
 # sentinel: limit_per_token=None is a meaningful value (unpruned), so
 # "not passed" needs its own marker
 _UNSET = object()
+
+# Broadcast a join-derived frame of a bucketed index only when the
+# dictionary's PERSISTED count (index meta, counted once at build)
+# bounds it safely: matched rows ~= names x (1 + fuzzy collisions),
+# ~100B serialized each, so 2M names keeps the worst-case broadcast in
+# the few-hundred-MB range — far under Spark's 8GiB hard cap, comparable
+# to the session's 256MB auto-broadcast policy. Above the cap the join
+# falls back to a shuffle with AQE skew splitting. Env-overridable
+# (LAMAPI_BROADCAST_NAME_CAP) so the huge-dictionary fallback arm can be
+# FORCED and benchmarked at sandbox dictionary sizes (set 0 to always
+# shuffle).
+_BROADCAST_NAME_CAP = int(os.environ.get("LAMAPI_BROADCAST_NAME_CAP",
+                                         2_000_000))
 
 
 def prune_index(idx: DataFrame, key_col: str, limit_per_token: int) -> DataFrame:
@@ -67,12 +83,6 @@ def prune_index(idx: DataFrame, key_col: str, limit_per_token: int) -> DataFrame
         F.col("name").asc(), F.col("is_alias").asc())
     return (idx.withColumn("_pk", F.row_number().over(w))
             .filter(F.col("_pk") <= limit_per_token).drop("_pk"))
-
-
-def _fuzzy_name_index(label_dict: DataFrame) -> DataFrame:
-    # local import: pipeline.mentions owns the deletion-1 helper
-    from lamapi_spark.pipeline.mentions import fuzzy_name_index
-    return fuzzy_name_index(label_dict)
 
 
 @dataclass
@@ -132,7 +142,7 @@ class LookupIndex:
                 "variant", "token", "popularity", *_KEY)
             if limit_per_token is not None:
                 fz = prune_index(fz, "variant", limit_per_token)
-            fn = _fuzzy_name_index(label_dict)
+            fn = fuzzy_name_index(label_dict)
         return LookupIndex(
             token=tok, fuzzy=fz,
             names=label_dict.select("name_norm", "popularity", *_KEY),
@@ -245,7 +255,7 @@ class LookupIndex:
         # the names-table cardinality is counted ONCE here (offline) and
         # persisted: it is the bound on every matched-span frame a
         # consumer might want to broadcast, and an actual count beats any
-        # runtime size estimate (see pipeline/mentions.py)
+        # runtime size estimate (see bounded_side)
         n_names = int(observations["n_names"].get["rows"])
         n_entities = (int(observations["n_entities"].get["rows"])
                       if have_payload else None)
@@ -368,13 +378,43 @@ class LookupIndex:
             needed += [f"{prefix}_fuzzy", f"{prefix}_fuzzy_names"]
         return all(spark.catalog.tableExists(t) for t in needed)
 
+    # ------------------------------------------------------ join policy
+    # Every dictionary-side join of the match path asks the index how to
+    # join; no consumer carries its own broadcast flag. An in-memory
+    # index is built per run from a dictionary that fits a broadcast, so
+    # all of its frames broadcast. A bucketed artifact stands for a
+    # dictionary that may not fit, so only frames bounded by a persisted
+    # count under _BROADCAST_NAME_CAP broadcast.
+
     def probe_side(self, df: DataFrame) -> DataFrame:
-        """How consumers should join an index frame: bucketed artifacts
-        get a SHUFFLE_HASH hint — the bucketed scan already satisfies
-        the join's hash distribution (no dict-side exchange, no sort),
-        and hinting defeats a pointless auto-broadcast of the index;
-        in-memory frames are left to the caller's broadcast policy."""
-        return df.hint("shuffle_hash") if self.bucketed else df
+        """How consumers join an index frame: bucketed artifacts get a
+        SHUFFLE_HASH hint — the bucketed scan already satisfies the
+        join's hash distribution (no dict-side exchange, no sort), and
+        hinting defeats a pointless auto-broadcast of the index;
+        in-memory frames broadcast."""
+        return df.hint("shuffle_hash") if self.bucketed else F.broadcast(df)
+
+    def bounded_side(self, df: DataFrame, n: int | None) -> DataFrame:
+        """How consumers join a JOIN-DERIVED frame whose row count is
+        bounded by the persisted count ``n`` (``n_names`` or
+        ``n_entities``). Catalyst's size estimate for such a frame is
+        garbage in both directions — measured: the static planner once
+        picked an 11.1GiB "broadcast" from a <256MB estimate, and an
+        unconditional shuffle_hash shuffles the big side by a skewed
+        key and scales negatively — so the decision uses the actual
+        count: broadcast when it is known and under the cap (or the
+        index is in-memory), else shuffle_hash."""
+        if not self.bucketed or (n is not None and n <= _BROADCAST_NAME_CAP):
+            return F.broadcast(df)
+        return df.hint("shuffle_hash")
+
+    def label_side(self, df: DataFrame) -> DataFrame:
+        """How consumers join a frame read from ``label_dict`` itself
+        (payload columns the index tables do not carry): broadcast for an
+        in-memory index; with a bucketed one the dictionary is presumed
+        too big to broadcast, so the join is left to the planner (it
+        shuffles on the join key, AQE picks the strategy)."""
+        return df if self.bucketed else F.broadcast(df)
 
     # ----------------------------------------------------------- delta
     # Incremental dictionary maintenance: the transcript side already

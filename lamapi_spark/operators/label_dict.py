@@ -210,3 +210,13 @@ def fuzzy_token_index(label_dict: DataFrame, max_edits: int = 2) -> DataFrame:
         ).alias("variant"),
         "*",
     ).drop("_band")
+
+
+def fuzzy_name_index(label_dict: DataFrame) -> DataFrame:
+    """(variant, name_norm) deletion-1 index over distinct dictionary
+    names — precomputable; at scale written bucketed by ``variant``."""
+    return (
+        label_dict.select("name_norm").distinct()
+        .select(F.explode(deletion_variants(F.col("name_norm"), 1)).alias("variant"),
+                "name_norm")
+    )

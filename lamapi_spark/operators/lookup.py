@@ -28,8 +28,10 @@ Scale (the round-2 architecture):
   (operators/indexes.py) the token/variant/name tables are bucketed +
   sorted + pruned saved tables that every join probes with no
   dictionary-side shuffle or broadcast — only the mention side shuffles,
-  into exactly n_buckets partitions. In-memory mode broadcasts when the
-  dictionary fits (<~256 MB), else shuffles with AQE skew splitting.
+  into exactly n_buckets partitions. An in-memory index (built per run
+  from ``label_dict``) broadcasts every dictionary-side frame; the
+  index decides each join (LookupIndex.probe_side / bounded_side /
+  label_side), so no function here takes a broadcast flag.
 - ranking + limit truncation run on the NARROW match (popularity rides
   the slim aggregate); the wide payload and precomputed token/3-gram
   similarity sets attach only to the <=limit survivors.
@@ -50,7 +52,7 @@ from pyspark.sql import functions as F
 from lamapi_spark.functions import (
     clean_str, ed_score, jaccard_arrays, jaccard_ngram_score, jaccard_score, ngram_set,
 )
-from lamapi_spark.operators.indexes import LookupIndex, prune_index
+from lamapi_spark.operators.indexes import LookupIndex
 from lamapi_spark.operators.label_dict import deletion_variants
 
 _DICT_COLS = [
@@ -81,13 +83,8 @@ def _prepare_mentions(mentions: DataFrame, mention_col: str = "mention") -> Data
     )
 
 
-# re-export: prune_index moved to operators/indexes.py so the offline
-# artifact writer can apply it at build time (same exactness argument)
-_prune_index = prune_index
-
-
 def token_match(mentions_prepared: DataFrame, label_dict: DataFrame,
-                broadcast_dict: bool = True, fuzzy: bool = False,
+                fuzzy: bool = False,
                 cache_narrow: bool = False,
                 limit_per_token: int | None = None,
                 fuzzy_edits: int = 2,
@@ -106,8 +103,8 @@ def token_match(mentions_prepared: DataFrame, label_dict: DataFrame,
     expansion, no pruning window, no shuffle and no broadcast — the
     bucketed scans already satisfy the joins' hash distribution, so only
     the mention side shuffles (into exactly n_buckets partitions).
-    Without one, the index frames are built in-line from ``label_dict``
-    and the ``broadcast_dict`` policy applies.
+    Without one, the in-memory index is built from ``label_dict``, and
+    every dictionary-side frame broadcasts.
     """
     if index is not None:
         if fuzzy and index.fuzzy is None:
@@ -135,8 +132,6 @@ def token_match(mentions_prepared: DataFrame, label_dict: DataFrame,
     # payload columns attach only to the <=limit survivors.
     _KEY = ["entity", "name", "is_alias"]
     dict_tok = index.probe_side(index.token)
-    if not index.bucketed and broadcast_dict:
-        dict_tok = F.broadcast(dict_tok)
 
     exact = m_tok.join(dict_tok, m_tok.m_token == dict_tok.token, "inner").select(
         "mention_norm", "m_ti", *_KEY, "popularity", F.lit(0).alias("edits"),
@@ -163,16 +158,13 @@ def token_match(mentions_prepared: DataFrame, label_dict: DataFrame,
                 .otherwise(deletion_variants(F.col("m_token"), 1))
             ).alias("variant"),
         )
+        # measured: broadcasting an in-memory (pruned) variant index
+        # beats a shuffle-hash join at sandbox scale even though the
+        # build is a serial constant (165s vs 201s total at 8x4
+        # executors on the 3M-turn workload). The bucketed-artifact
+        # path removes both the per-run build AND the broadcast — that
+        # is the cluster plan for dictionaries that cannot broadcast.
         f_idx = index.probe_side(index.fuzzy)
-        if not index.bucketed and broadcast_dict:
-            # measured: broadcasting an in-memory (pruned) variant index
-            # beats a shuffle-hash join at sandbox scale even though the
-            # build is a serial constant (165s vs 201s total at 8x4
-            # executors on the 3M-turn workload). The bucketed-artifact
-            # path removes both the per-run build AND the broadcast —
-            # that is the cluster plan for dictionaries that cannot
-            # broadcast at all.
-            f_idx = F.broadcast(f_idx)
         fuzzy_hits = (
             m_var.join(f_idx, "variant", "inner")
             .withColumn("edits", F.levenshtein("m_token", "token"))
@@ -190,8 +182,7 @@ def token_match(mentions_prepared: DataFrame, label_dict: DataFrame,
         # precisely the candidate the linker must not lose. Guarantee
         # inclusion via (a) full-string equality and (b) deletion-1
         # name-level match, both cheap equi-joins.
-        names_full = index.probe_side(index.names)
-        names_b = F.broadcast(names_full) if (broadcast_dict and not index.bucketed) else names_full
+        names_b = index.probe_side(index.names)
         m_norms = mentions_prepared.select("mention_norm")
         # mention_norm == name_norm here, so positions in the name's
         # distinct-token array ARE the mention's m_ti ordinals
@@ -205,18 +196,13 @@ def token_match(mentions_prepared: DataFrame, label_dict: DataFrame,
         )
         matched = matched.unionByName(exact_name)
         if fuzzy:
-            from lamapi_spark.pipeline.mentions import _del1
-            fn_idx = index.probe_side(index.fuzzy_names)
-            if broadcast_dict and not index.bucketed:
-                fn_idx = F.broadcast(fn_idx)
-            name_rows = names_b
             fuzzy_name = (
-                m_norms.select("mention_norm",
-                               F.explode(_del1(F.col("mention_norm"))).alias("variant"))
-                .join(fn_idx, "variant")
+                m_norms.select("mention_norm", F.explode(
+                    deletion_variants(F.col("mention_norm"), 1)).alias("variant"))
+                .join(index.probe_side(index.fuzzy_names), "variant")
                 .filter(F.levenshtein("mention_norm", "name_norm") == 1)
                 .select("mention_norm", "name_norm").distinct()
-                .join(name_rows, "name_norm")
+                .join(names_b, "name_norm")
                 # the 1-edit name guard pins its hit to the mention's
                 # FIRST token — ordinal 0 in the distinct-token array
                 # (array_distinct preserves first-occurrence order)
@@ -268,12 +254,8 @@ def token_match(mentions_prepared: DataFrame, label_dict: DataFrame,
         # clean_str(name), so the slim frame recomputes it per row
         # instead of joining for it)
         return agg
-    # payload re-attach: broadcast only under the in-memory policy — with
-    # a bucketed index the dictionary is presumed too big to broadcast,
-    # so this join shuffles on the candidate key (AQE picks the strategy)
-    payload = label_dict.select(*_DICT_COLS)
-    if broadcast_dict and not index.bucketed:
-        payload = F.broadcast(payload)
+    # payload re-attach from label_dict: see LookupIndex.label_side
+    payload = index.label_side(label_dict.select(*_DICT_COLS))
     return agg.drop("popularity", "name_norm").join(payload, _KEY, "inner")
 
 
@@ -444,7 +426,7 @@ def ids_backfill(
 
 
 def best_links(cand_slim: DataFrame, prepared: DataFrame,
-               label_dict: DataFrame, broadcast_dict: bool = True,
+               label_dict: DataFrame,
                index: LookupIndex | None = None,
                mentions_bounded: bool = True) -> DataFrame:
     """Per-mention argmax by the LINK score (ed + jaccard + jaccardNgram
@@ -464,6 +446,9 @@ def best_links(cand_slim: DataFrame, prepared: DataFrame,
     levenshtein. Score values are identical to the response fields by
     construction (same functions, same inputs).
 
+    ``index``: the index the match came from; without one the in-memory
+    index is built from ``label_dict``.
+
     ``mentions_bounded``: True (the pipeline path) asserts the mention
     batch derives from dictionary matching (detect_mentions), so the
     per-mention argmax frame ``mx`` is bounded by the same
@@ -475,37 +460,25 @@ def best_links(cand_slim: DataFrame, prepared: DataFrame,
     small the dictionary is.
 
     -> (mention_norm, id, link_score)."""
-    if index is not None and index.bucketed:
-        # bucketed names artifact: distinct on the bucket key is
-        # shuffle-free and the derived set columns are narrow
-        # projections. name_sets has AT MOST index.n_names rows —
-        # n_names counts the names TABLE rows (one per entity/name/
-        # is_alias; aliases and shared names inflate it), so the
-        # distinct-name_norm count is bounded above by it and the gate
-        # stays conservative. The broadcast decision is made from that
-        # persisted count, not an estimate: small dictionary ->
-        # broadcast (measured: the shuffle-pinned variant dropped the
-        # linked stage's core-scaling from 3.5x to 2.1x on 4x cores —
-        # shuffling the match by mention string is skew-bound); huge
-        # dictionary -> shuffle_hash keeps the artifact side
-        # exchange-free with no driver round-trip.
-        from lamapi_spark.pipeline.mentions import _BROADCAST_NAME_CAP
-        name_sets = index.names.select("name_norm").distinct().select(
-            "name_norm",
-            F.array_distinct(F.split("name_norm", " ")).alias("_n_tok_set"),
-            ngram_set("name_norm", 3).alias("_n_gram_set"))
-        gated = (index.n_names is not None
-                 and index.n_names <= _BROADCAST_NAME_CAP)
-        name_sets = (F.broadcast(name_sets) if gated
-                     else name_sets.hint("shuffle_hash"))
-        broadcast_dict = gated
-    else:
-        name_sets = label_dict.select("name_norm").distinct().select(
-            "name_norm",
-            F.array_distinct(F.split("name_norm", " ")).alias("_n_tok_set"),
-            ngram_set("name_norm", 3).alias("_n_gram_set"))
-        if broadcast_dict:
-            name_sets = F.broadcast(name_sets)
+    if index is None:
+        index = LookupIndex.build(label_dict, fuzzy=False)
+    # On a bucketed names artifact the distinct is on the bucket key, so
+    # shuffle-free, and the derived set columns are narrow projections.
+    # name_sets has AT MOST index.n_names rows — n_names counts the
+    # names TABLE rows (one per entity/name/is_alias; aliases and shared
+    # names inflate it), so the distinct-name_norm count is bounded
+    # above by it and the gate stays conservative. Small dictionary ->
+    # broadcast (measured: the shuffle-pinned variant dropped the linked
+    # stage's core-scaling from 3.5x to 2.1x on 4x cores — shuffling the
+    # match by mention string is skew-bound); huge dictionary ->
+    # shuffle_hash keeps the artifact side exchange-free with no driver
+    # round-trip.
+    name_sets = index.names.select("name_norm").distinct().select(
+        "name_norm",
+        F.array_distinct(F.split("name_norm", " ")).alias("_n_tok_set"),
+        ngram_set("name_norm", 3).alias("_n_gram_set"))
+    name_sets = index.bounded_side(name_sets, index.n_names)
+
     def score_col():
         return (ed_score("name_norm", "mention_norm")
                 + jaccard_arrays("_n_tok_set", "_m_tok_set")
@@ -531,14 +504,12 @@ def best_links(cand_slim: DataFrame, prepared: DataFrame,
     # mx is one row per distinct MATCHED mention. On the PIPELINE path
     # (mentions_bounded=True) that is bounded by the same O(names x
     # fuzzy collisions) band as detect_mentions' matched_strs, so it
-    # rides the same n_names gate (broadcast_dict was set from it above
-    # when an index is present). For arbitrary mention batches the bound
-    # does NOT hold — distinct matched mentions track the batch, not the
-    # dictionary — so mentions_bounded=False pins shuffle_hash even for
-    # a tiny dictionary. Never un-hinted: mx is join-derived, and static
-    # size estimates for such frames have picked 11GiB "broadcasts" from
-    # <256MB estimates (see pipeline/mentions.py).
-    mx_b = (F.broadcast(mx) if (broadcast_dict and mentions_bounded)
+    # rides the same n_names gate. For arbitrary mention batches the
+    # bound does NOT hold — distinct matched mentions track the batch,
+    # not the dictionary — so mentions_bounded=False pins shuffle_hash
+    # even for a tiny dictionary. Never un-hinted: mx is join-derived
+    # (see LookupIndex.bounded_side).
+    mx_b = (index.bounded_side(mx, index.n_names) if mentions_bounded
             else mx.hint("shuffle_hash"))
     survivors = (
         cand_slim.join(mx_b, "mention_norm")
@@ -562,7 +533,6 @@ def lookup(
     kind: str | None = None,
     ner_type: str | None = None,
     language: str | None = None,
-    broadcast_dict: bool = True,
     mention_col: str = "mention",
     limit_per_token: int | None = None,
     fuzzy_edits: int = 2,
@@ -582,9 +552,16 @@ def lookup(
 
     ``prepared``/``match``: precomputed _prepare_mentions / slim
     token_match frames — lets a pipeline share ONE (cached) match pass
-    between the response build and best_links linking."""
+    between the response build and best_links linking.
+
+    ``index``: the prebuilt :class:`LookupIndex` to probe; without one
+    the in-memory index is built from ``label_dict``."""
     if prepared is None:
         prepared = _prepare_mentions(mentions, mention_col)
+    if index is None:
+        index = LookupIndex.build(label_dict, fuzzy=fuzzy,
+                                  limit_per_token=limit_per_token,
+                                  fuzzy_edits=fuzzy_edits)
 
     # One token-match pass serves both consumers: the mention-level
     # feature pass (the reference's extra non-fuzzy ES round-trip at
@@ -592,9 +569,8 @@ def lookup(
     # fuzzy run never recomputes the exact arm. cache_narrow materializes
     # the slim match once for the three downstream references.
     if match is None:
-        match = token_match(prepared, label_dict, broadcast_dict, fuzzy=fuzzy,
-                            cache_narrow=True, limit_per_token=limit_per_token,
-                            fuzzy_edits=fuzzy_edits, index=index, slim=True)
+        match = token_match(prepared, label_dict, fuzzy=fuzzy,
+                            cache_narrow=True, index=index, slim=True)
     cand = match
     base_match = cand.filter(F.col("matched_tokens") > 0) if fuzzy else cand
     feats = mention_features(base_match, prepared)
@@ -612,14 +588,12 @@ def lookup(
         # filter path: the reference's ES query filters BEFORE ranking, and
         # a language filter needs the per-label-row language list — only
         # here does the full dictionary-row payload join the match early
-        payload = label_dict.select(
+        payload = index.label_side(label_dict.select(
             *_KEY, "description", "kind", "NERtype", "types", "length",
             "ntoken", "language",
             F.array_distinct(F.split("name_norm", " ")).alias("_n_tok_set"),
             ngram_set("name_norm", 3).alias("_n_gram_set"),
-        )
-        if broadcast_dict and (index is None or not index.bucketed):
-            payload = F.broadcast(payload)
+        ))
         cand = cand.join(payload, _KEY, "inner")
         if kind is not None:
             cand = cand.filter(F.col("kind") == kind)
@@ -712,49 +686,41 @@ def lookup(
     cand = cand.join(feats, "mention_norm", "left")
 
     if not payload_filtered:
-        if index is not None and index.payload is not None:
-            # broadcast decision from the PERSISTED entity count, never a
-            # Catalyst estimate (plan lesson: an estimate once picked an
-            # 11GiB "broadcast"): small dictionary -> broadcast keeps the
-            # plan exchange-free end-to-end; huge dictionary ->
+        if index.payload is not None:
+            # broadcast decision from the PERSISTED entity count (see
+            # LookupIndex.bounded_side): small dictionary -> broadcast
+            # keeps the plan exchange-free end-to-end; huge dictionary ->
             # shuffle_hash probes the bucketed payload artifact with no
             # dictionary-side exchange.
-            from lamapi_spark.pipeline.mentions import _BROADCAST_NAME_CAP
-            gated = (index.n_entities is not None
-                     and index.n_entities <= _BROADCAST_NAME_CAP)
+            #
             # coverage guard (round-6, advisory): the artifact payload
             # covers every candidate by construction ONLY when the match
             # came from the same artifact. A caller-supplied match= from
             # a different source (e.g. main+delta union against a
             # main-only payload) must fail LOUDLY, not lose rows — so
-            # the attach is a left join carrying a sentinel, asserted
-            # non-null after. Covered case: identical rows to the old
-            # inner join at one boolean column of extra cost.
-            ent_payload = index.payload.withColumn("_p_ok", F.lit(True))
-            ent_payload = (F.broadcast(ent_payload) if gated
-                           else index.probe_side(ent_payload))
-            cand = cand.join(ent_payload, "entity", "left").withColumn(
-                "_p_chk",
-                F.assert_true(
-                    F.col("_p_ok").isNotNull(),
-                    F.concat(F.lit("lookup(): candidate entity "),
-                             F.col("entity"),
-                             F.lit(" missing from the index payload "
-                                   "artifact — match frame not covered "
-                                   "by this artifact (stale or "
-                                   "mismatched index?)")))
-            ).drop("_p_ok", "_p_chk")
+            # the attach is a left join carrying a sentinel that a filter
+            # requires non-null. A filter, not an assert_true column: a
+            # check column that nothing reads is pruned by the optimizer
+            # and never runs. Covered case: identical rows to an inner
+            # join at one boolean column of extra cost.
+            ent_payload = index.bounded_side(
+                index.payload.withColumn("_p_ok", F.lit(True)), index.n_entities)
+            cand = cand.join(ent_payload, "entity", "left").filter(F.coalesce(
+                F.col("_p_ok"),
+                F.raise_error(F.concat(
+                    F.lit("lookup(): candidate entity "), F.col("entity"),
+                    F.lit(" missing from the index payload artifact — match "
+                          "frame not covered by this artifact (stale or "
+                          "mismatched index?)"))))).drop("_p_ok")
         else:
             # in-memory / pre-payload-artifact fallback: the payload
             # columns are constant across an entity's label rows, so
             # any-row-per-entity is exact (items is NOT used — callers
             # may pass a minimal items frame carrying only the
             # type-resolution columns)
-            ent_payload = label_dict.select(
+            ent_payload = index.label_side(label_dict.select(
                 "entity", "description", "kind", "NERtype", "types",
-            ).dropDuplicates(["entity"])
-            if broadcast_dict and (index is None or not index.bucketed):
-                ent_payload = F.broadcast(ent_payload)
+            ).dropDuplicates(["entity"]))
             cand = cand.join(ent_payload, "entity", "inner")
 
     cand = resolve_type_names(cand, items)
@@ -810,9 +776,8 @@ def token_match_with_delta(
     d_idx = LookupIndex.build(delta_dict, fuzzy=fuzzy,
                               limit_per_token=index.limit_per_token,
                               fuzzy_edits=index.fuzzy_edits)
-    m_main = token_match(mentions_prepared, None, broadcast_dict=False,
-                         fuzzy=fuzzy, index=index, slim=True,
-                         cache_narrow=cache_narrow)
-    m_delta = token_match(mentions_prepared, None, broadcast_dict=True,
-                          fuzzy=fuzzy, index=d_idx, slim=True)
+    m_main = token_match(mentions_prepared, None, fuzzy=fuzzy, index=index,
+                         slim=True, cache_narrow=cache_narrow)
+    m_delta = token_match(mentions_prepared, None, fuzzy=fuzzy, index=d_idx,
+                          slim=True)
     return m_main.unionByName(m_delta)

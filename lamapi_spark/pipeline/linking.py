@@ -31,7 +31,6 @@ def candidates_for_surfaces(
     items: DataFrame,
     fuzzy: bool = False,
     limit: int = 1000,
-    broadcast_dict: bool = True,
     limit_per_token: int | None = None,
     fuzzy_edits: int = 1,
     index=None,
@@ -50,7 +49,7 @@ def candidates_for_surfaces(
     return lookup(
         surfaces.select(F.col("surface").alias("mention")),
         label_dict, items,
-        limit=limit, fuzzy=fuzzy, broadcast_dict=broadcast_dict,
+        limit=limit, fuzzy=fuzzy,
         limit_per_token=limit_per_token, fuzzy_edits=fuzzy_edits,
         index=index, prepared=prepared, match=match,
     )

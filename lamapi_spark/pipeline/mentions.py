@@ -25,17 +25,17 @@ linking maps to deterministic NIL ids. This replaces the reference's
 model-based NER for unknown entities.
 
 Scale notes: transcripts are explicitly repartitioned by ``conv_id``
-before windowed work (north-rule requirement). The span->matched join's
-strategy is decided from the dictionary cardinality PERSISTED at index
-build (never a Catalyst estimate, never an unconditional hint — both
-measured pathological, see ``_BROADCAST_NAME_CAP``): small dictionary ->
-broadcast the matched-span list; huge dictionary -> shuffle on the span
-string with AQE skew handling.
+before windowed work (north-rule requirement). Every dictionary-side
+join asks the :class:`~lamapi_spark.operators.indexes.LookupIndex`: the
+span->matched join's strategy is decided from the dictionary cardinality
+PERSISTED at index build (never a Catalyst estimate, never an
+unconditional hint — both measured pathological, see
+``LookupIndex.bounded_side``): small dictionary -> broadcast the
+matched-span list; huge dictionary -> shuffle on the span string with
+AQE skew handling.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -43,18 +43,8 @@ from pyspark.sql import functions as F
 from lamapi_spark.functions import clean_str
 from lamapi_spark.functions.literals import classify_literal
 from lamapi_spark.functions.strings import STOPWORDS
-
-# Broadcast the matched-span list only when the dictionary's PERSISTED
-# name count (index meta, counted once at build) bounds it safely:
-# matched rows ~= names x (1 + fuzzy collisions), ~100B serialized each,
-# so 2M names keeps the worst-case broadcast in the few-hundred-MB range
-# — far under Spark's 8GiB hard cap, comparable to the session's 256MB
-# auto-broadcast policy. Above the cap the join falls back to a span
-# shuffle with AQE skew splitting. Env-overridable (LAMAPI_BROADCAST_
-# NAME_CAP) so the huge-dictionary fallback arm can be FORCED and
-# benchmarked at sandbox dictionary sizes (set 0 to always shuffle).
-_BROADCAST_NAME_CAP = int(os.environ.get("LAMAPI_BROADCAST_NAME_CAP",
-                                         2_000_000))
+from lamapi_spark.operators.indexes import LookupIndex
+from lamapi_spark.operators.label_dict import deletion_variants
 
 
 def _fan_out(df: DataFrame, *cols: str) -> DataFrame:
@@ -94,31 +84,12 @@ def _spans(transcripts: DataFrame, max_ntoken: int,
              "s.start", "s.ntoken_span", "s.span")
 
 
-def _del1(c):
-    """Deletion-1 neighborhood of a string (incl. itself)."""
-    one = F.transform(
-        F.sequence(F.lit(1), F.length(c)),
-        lambda i: F.concat(c.substr(F.lit(1), i - 1), c.substr(i + 1, F.length(c))),
-    )
-    return F.array_distinct(F.concat(F.array(c), one))
-
-
-def fuzzy_name_index(label_dict: DataFrame) -> DataFrame:
-    """(variant, name_norm) deletion-1 index over distinct dictionary
-    names — precomputable; at scale written bucketed by ``variant``."""
-    return (
-        label_dict.select("name_norm").distinct()
-        .select(F.explode(_del1(F.col("name_norm"))).alias("variant"), "name_norm")
-    )
-
-
 def detect_mentions(
     transcripts: DataFrame,
     label_dict: DataFrame,
     max_ntoken: int = 4,
     fuzzy: bool = True,
-    broadcast_dict: bool = True,
-    index=None,
+    index: LookupIndex | None = None,
 ) -> DataFrame:
     """-> (conv_id, turn_idx, start, ntoken_span, surface, name_norm,
     edits) — one row per detected span, max-matched (no span contained
@@ -128,7 +99,10 @@ def detect_mentions(
     ``index``: a prebuilt :class:`~lamapi_spark.operators.indexes.
     LookupIndex`. With a bucketed index the span->name joins probe the
     saved name / deletion-variant tables with no dictionary-side shuffle
-    or broadcast (distinct on the bucketed key is also shuffle-free)."""
+    or broadcast (distinct on the bucketed key is also shuffle-free).
+    Without one, the in-memory index is built from ``label_dict``."""
+    if index is None:
+        index = LookupIndex.build(label_dict, fuzzy=fuzzy)
     spans = _spans(
         _fan_out(transcripts, "conv_id"),
         max_ntoken,
@@ -142,33 +116,18 @@ def detect_mentions(
     # expensive-work principle as the lookup mention cache.
     span_strs = _fan_out(spans.select("span").distinct(), "span")
 
-    bucketed = index is not None and index.bucketed
-    if index is not None:
-        names = index.names.select("name_norm").distinct()
-    else:
-        names = label_dict.select("name_norm").distinct()
-    if bucketed:
-        names_b = names.hint("shuffle_hash")
-    elif broadcast_dict:
-        names_b = F.broadcast(names)
-    else:
-        names_b = names
-
+    names_b = index.probe_side(index.names.select("name_norm").distinct())
     exact_strs = span_strs.join(
         names_b, span_strs.span == names_b.name_norm, "inner"
     ).select("span", "name_norm", F.lit(0).alias("edits"))
 
     if fuzzy:
-        if index is not None and index.fuzzy_names is None:
+        if index.fuzzy_names is None:
             raise ValueError("fuzzy detection requires an index built with fuzzy=True")
-        f_idx = index.fuzzy_names if index is not None else fuzzy_name_index(label_dict)
-        if bucketed:
-            f_idx = f_idx.hint("shuffle_hash")
-        elif broadcast_dict:
-            f_idx = F.broadcast(f_idx)
         fuzzy_strs = (
-            span_strs.select("span", F.explode(_del1(F.col("span"))).alias("variant"))
-            .join(f_idx, "variant", "inner")
+            span_strs.select("span", F.explode(
+                deletion_variants(F.col("span"), 1)).alias("variant"))
+            .join(index.probe_side(index.fuzzy_names), "variant", "inner")
             .withColumn("edits", F.levenshtein("span", "name_norm"))
             .filter(F.col("edits") == 1)
             .select("span", "name_norm", "edits")
@@ -178,23 +137,14 @@ def detect_mentions(
     else:
         matched_strs = exact_strs
 
-    # matched_strs derives from a join, so its Catalyst size estimate is
-    # garbage in BOTH directions — measured: the static planner once
-    # picked an 11.1GiB "broadcast" of the spans side from a <256MB
-    # estimate (Spark's hard 8GiB cap), and pinning the join to
-    # shuffle_hash instead shuffles every span OCCURRENCE by its (very
-    # skewed, template-heavy) string and scales NEGATIVELY on more
-    # executors. So the strategy is decided from an ACTUAL cardinality,
-    # never an estimate: matched_strs is bounded by the dictionary's
-    # name count, which the bucketed artifact persisted at build time
-    # (index.n_names). Small dictionary -> broadcast the matched list
-    # (one bounded driver round-trip, no spans shuffle, no skew); huge
-    # dictionary -> shuffle on span and let AQE's skew-join split the
-    # hot strings. The in-memory path keeps the caller's broadcast
-    # policy (distinct matched spans << span occurrences).
-    force_broadcast = (broadcast_dict and not bucketed) or (
-        bucketed and index.n_names is not None
-        and index.n_names <= _BROADCAST_NAME_CAP)
+    # matched_strs derives from a join, so its strategy comes from the
+    # persisted name count that bounds it, never a Catalyst estimate
+    # (LookupIndex.bounded_side): small dictionary -> broadcast the
+    # matched list (one bounded driver round-trip, no spans shuffle, no
+    # skew); huge dictionary -> shuffle on span and let AQE's skew-join
+    # split the hot strings. Pinning shuffle_hash for every dictionary
+    # shuffles each span OCCURRENCE by its (very skewed, template-heavy)
+    # string and was measured to scale NEGATIVELY on more executors.
     # Shuffle-byte cut: the span OCCURRENCE frame (the big side) ships a
     # 96-bit composite hash of the span instead of the raw multi-word
     # string — the string rides only on the (bounded) matched side and
@@ -211,8 +161,7 @@ def detect_mentions(
     spans_h = _span_key(spans).drop("span")
     matched_keyed = _span_key(matched_strs)
     matched = spans_h.join(
-        F.broadcast(matched_keyed) if force_broadcast
-        else matched_keyed.hint("shuffle_hash"), ["_h1", "_h2"]
+        index.bounded_side(matched_keyed, index.n_names), ["_h1", "_h2"]
     ).select("conv_id", "turn_idx", "start", "ntoken_span",
              F.col("span").alias("surface"), "name_norm", "edits")
 
@@ -257,8 +206,7 @@ def detect_oov_mentions(
     label_dict: DataFrame,
     max_run: int = 4,
     min_run: int = 2,
-    broadcast_dict: bool = True,
-    index=None,
+    index: LookupIndex | None = None,
 ) -> DataFrame:
     """Candidate NIL mentions: maximal runs (min_run <= length <= max_run)
     of adjacent tokens that are out-of-vocabulary w.r.t. the dictionary
@@ -267,18 +215,12 @@ def detect_oov_mentions(
     ordinary verbs/nouns, not entity names.
 
     -> (conv_id, turn_idx, start, ntoken_span, surface)."""
-    if index is not None and index.bucketed:
-        # token vocabulary straight from the bucketed token index:
-        # distinct on the bucket key is shuffle-free
-        vocab = (index.token.select("token").distinct()
-                 .withColumn("_in_vocab", F.lit(True)).hint("shuffle_hash"))
-    else:
-        vocab = (
-            label_dict.select(F.explode(F.split("name_norm", " ")).alias("token"))
-            .distinct().withColumn("_in_vocab", F.lit(True))
-        )
-        if broadcast_dict:
-            vocab = F.broadcast(vocab)
+    if index is None:
+        index = LookupIndex.build(label_dict, fuzzy=False)
+    # token vocabulary straight from the token index: on a bucketed
+    # artifact the distinct on the bucket key is shuffle-free
+    vocab = index.probe_side(index.token.select("token").distinct()
+                             .withColumn("_in_vocab", F.lit(True)))
 
     toks = _fan_out(transcripts, "conv_id").select(
         "conv_id", "turn_idx",
@@ -295,13 +237,10 @@ def detect_oov_mentions(
         .filter(F.length("token") > 2)
         .select("token")
     )
-    # oov_tokens is join-derived (anti-join vs the vocabulary): forcing a
-    # broadcast is the same driver round-trip as above — only do it in
-    # the in-memory path, never with a bucketed (cluster-scale) index
-    force_broadcast = broadcast_dict and not (index is not None and index.bucketed)
-    oov = toks.join(
-        F.broadcast(oov_tokens) if force_broadcast
-        else oov_tokens.hint("shuffle_hash"), "token")
+    # oov_tokens is join-derived (anti-join vs the vocabulary) and no
+    # persisted count bounds it: it broadcasts in the in-memory path
+    # only, never with a bucketed (cluster-scale) index
+    oov = toks.join(index.probe_side(oov_tokens), "token")
     # Gaps-and-islands in ONE shuffle: collect each turn's OOV tokens
     # once, sort in-array by position (explicit determinism), then runs
     # are the distinct values of (pos - index) over the sorted array —

@@ -94,20 +94,20 @@ class Stage(NamedTuple):
     cache: bool = False       # several stages read the output
 
 
-def _stages(index: LookupIndex | None, broadcast_dict: bool,
-            broadcast_edges: bool, count_match: bool) -> dict[str, Stage]:
+def _stages(index: LookupIndex | None, broadcast_edges: bool,
+            count_match: bool) -> dict[str, Stage]:
     """The pipeline table, in dependency order; a build sees only its
     declared deps and params. label_dict is a dep only where it is read:
-    an index replaces it in mentions and the slim match, a bucketed one
-    in oov_mentions and linked, one with a payload table in candidates."""
-    ix = () if index is None else ("index",)
-    bucketed = index is not None and index.bucketed
-    ld = {True: ("label_dict",), False: ()}  # ld[the build reads label_dict]
+    without an index every match-path stage builds the in-memory one
+    from it, and candidates also read it for the payload when the index
+    has no payload table."""
+    src = ("label_dict",) if index is None else ("index",)
+    payload = ("label_dict",) if index is not None and index.payload is None else ()
 
     def slim(d, p):
         # ONE narrow match pass feeds the candidates and the linking
         match = lookup_ops.token_match(
-            d["prepared"], d.get("label_dict"), broadcast_dict, fuzzy=p["fuzzy"],
+            d["prepared"], d.get("label_dict"), fuzzy=p["fuzzy"],
             cache_narrow=True, limit_per_token=p["limit_per_token"],
             fuzzy_edits=1, index=d.get("index"), slim=True)
         if count_match:  # materialized once, not raced for by its two readers
@@ -119,15 +119,14 @@ def _stages(index: LookupIndex | None, broadcast_dict: bool,
         "label_dict": Stage(("kg_items",), (),
                             lambda d, p: build_label_dict(d["kg_items"]), cache=True),
         "mentions": Stage(
-            ("transcripts", *ix, *ld[index is None]), ("max_ntoken", "fuzzy"),
+            ("transcripts", *src), ("max_ntoken", "fuzzy"),
             lambda d, p: detect_mentions(
                 d["transcripts"], d.get("label_dict"), p["max_ntoken"],
-                p["fuzzy"], broadcast_dict, index=d.get("index"))),
+                p["fuzzy"], index=d.get("index"))),
         "oov_mentions": Stage(
-            ("transcripts", *ix, *ld[not bucketed]), (),
+            ("transcripts", *src), (),
             lambda d, p: detect_oov_mentions(
-                d["transcripts"], d.get("label_dict"),
-                broadcast_dict=broadcast_dict, index=d.get("index"))),
+                d["transcripts"], d.get("label_dict"), index=d.get("index"))),
         "all_spans": Stage(
             ("mentions", "oov_mentions"), (), checkpoint=False, build=lambda d, p:
             d["mentions"].select(*_SPAN).unionByName(d["oov_mentions"].select(*_SPAN))),
@@ -136,24 +135,22 @@ def _stages(index: LookupIndex | None, broadcast_dict: bool,
         "prepared": Stage(("surfaces",), (), checkpoint=False, build=lambda d, p:
                           lookup_ops._prepare_mentions(d["surfaces"].select(
                               F.col("surface").alias("mention")), "mention")),
-        "slim": Stage(("prepared", *ix, *ld[index is None]), ("fuzzy", "limit_per_token"),
+        "slim": Stage(("prepared", *src), ("fuzzy", "limit_per_token"),
                       slim, checkpoint=False),
         "candidates": Stage(
-            ("surfaces", "prepared", "slim", "kg_items", *ix,
-             *ld[index is None or index.payload is None]),
+            ("surfaces", "prepared", "slim", "kg_items", *src, *payload),
             ("fuzzy", "candidate_limit", "limit_per_token"),
             lambda d, p: candidates_for_surfaces(
                 d["surfaces"], d.get("label_dict"), d["kg_items"],
-                fuzzy=p["fuzzy"], broadcast_dict=broadcast_dict,
-                limit=p["candidate_limit"], limit_per_token=p["limit_per_token"],
-                index=d.get("index"), prepared=d["prepared"], match=d["slim"])),
+                fuzzy=p["fuzzy"], limit=p["candidate_limit"],
+                limit_per_token=p["limit_per_token"], index=d.get("index"), prepared=d["prepared"], match=d["slim"])),
         "linked": Stage(
-            ("all_spans", "prepared", "slim", *ix, *ld[not bucketed]),
+            ("all_spans", "prepared", "slim", *src),
             ("nil_threshold",),
             lambda d, p: link_mentions(
                 d["all_spans"], nil_threshold=p["nil_threshold"],
                 best=lookup_ops.best_links(d["slim"], d["prepared"], d.get("label_dict"),
-                                           broadcast_dict, index=d.get("index")))),
+                                           index=d.get("index")))),
         "triples_raw": Stage(("linked", "kg_edges"), (), lambda d, p: extract_triples(
             d["linked"], d["kg_edges"], broadcast_edges)),
         "triples": Stage(("triples_raw", "canonical_map"), (), lambda d, p:
@@ -207,7 +204,6 @@ def run_pipeline(
     fuzzy: bool = True,
     nil_threshold: float = 1.0,
     max_ntoken: int = 4,
-    broadcast_dict: bool = True,
     broadcast_edges: bool = True,
     limit_per_token: int | None = 100,
     index: LookupIndex | None = None,
@@ -223,8 +219,9 @@ def run_pipeline(
     BOTH the build parameters and a fingerprint of the kg_items snapshot
     against the ``_meta`` sidecar (build_index_artifacts), so a changed
     dictionary under the same prefix rebuilds instead of silently
-    linking against the stale index. The broadcast flags pick join
-    plans, not results, so no stage fingerprint includes them."""
+    linking against the stale index. ``broadcast_edges`` picks a join
+    plan, not results, so no stage fingerprint includes it; the
+    dictionary-side joins are decided by the index (LookupIndex)."""
     runner = StageRunner(spark, checkpoint_dir or "", enabled=checkpoint_dir is not None)
     known = {}  # source fingerprints known without a scan
     if index is None and use_index_artifacts:
@@ -237,7 +234,7 @@ def run_pipeline(
             "stage": "index_artifacts", "rows_out": None, "partitions": None,
             "duration_s": round(time.time() - t0, 3), "fingerprint": index.source_fp,
             "inputs": ["kg_items"], "resumed": index.reused})
-    stages = _stages(index, broadcast_dict, broadcast_edges, runner.enabled)
+    stages = _stages(index, broadcast_edges, runner.enabled)
     if kg_sameas is None:
         del stages["canonical_map"], stages["triples"]
     params = {"fuzzy": fuzzy, "nil_threshold": nil_threshold, "max_ntoken": max_ntoken,

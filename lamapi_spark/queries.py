@@ -831,8 +831,8 @@ def lookup_candidates_indexed(spark, sf):
     label_dict, index = _lci_index(spark, sf)
     mentions = load(spark, sf, "documents").select(F.col("text").alias("mention"))
     prepared = _prepare_mentions(mentions)
-    slim = token_match(prepared, label_dict, broadcast_dict=False,
-                       fuzzy=False, index=index, slim=True)
+    slim = token_match(prepared, label_dict, fuzzy=False, index=index,
+                       slim=True)
     w = Window.partitionBy("mention_norm").orderBy(
         F.desc("popularity"), "entity", "name")
     return (

@@ -68,11 +68,9 @@ def build_link_index(label_dict: DataFrame, index=None,
     )
     names = label_dict.select(F.col("name_norm").alias("mention")).distinct()
     prepared = _prepare_mentions(names, "mention")
-    slim = token_match(prepared, label_dict, broadcast_dict=True,
-                       fuzzy=False, limit_per_token=limit_per_token,
-                       index=index, slim=True)
-    best = best_links(slim, prepared, label_dict, broadcast_dict=True,
-                      index=index)
+    slim = token_match(prepared, label_dict, fuzzy=False,
+                       limit_per_token=limit_per_token, index=index, slim=True)
+    best = best_links(slim, prepared, label_dict, index=index)
     return best.select(
         F.col("mention_norm").alias("name_norm"),
         F.col("id").alias("entity"),

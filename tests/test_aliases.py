@@ -87,7 +87,7 @@ def test_mine_and_append_probe_visible(spark):
 
     mentions = spark.createDataFrame([("aple pie",)], ["mention"])
     prepared = _prepare_mentions(mentions)
-    before = token_match(prepared, None, broadcast_dict=False,
+    before = token_match(prepared, None,
                          fuzzy=False, index=idx, slim=True)
     # 'aple' is not a dictionary token -> only the shared 'pie' token
     # matches; the full name never becomes an exact match

@@ -268,10 +268,14 @@ def test_classify_columns_ne_vs_lit(spark):
 def test_bucketed_index_artifacts_parity(spark):
     """The bucketed-artifact path (no broadcast, no dict-side shuffle)
     must produce byte-identical lookup output to the in-memory broadcast
-    path, and the artifact scans must really be bucketed."""
+    path, and the artifact scans must really be bucketed. The payload
+    attach broadcasts only under a known n_entities, and fails loudly on
+    a match frame the artifact's payload does not cover."""
+    import dataclasses
+
     from lamapi_spark.operators.indexes import LookupIndex
     from lamapi_spark.operators.label_dict import build_label_dict
-    from lamapi_spark.operators.lookup import lookup
+    from lamapi_spark.operators.lookup import _prepare_mentions, lookup, token_match
     from lamapi_spark.pipeline.fixtures import build_kg, kg_dataframes
 
     kg = build_kg(seed=7, n_people=40, n_orgs=15, n_locs=8, n_films=25)
@@ -285,7 +289,7 @@ def test_bucketed_index_artifacts_parity(spark):
         [("the blue film",), ("jon smith",), ("acme",), ("warp nonsense",)],
         "mention string")
     base = lookup(mentions, ld, dfs["kg_items"], fuzzy=True,
-                  limit_per_token=50, fuzzy_edits=1, broadcast_dict=True)
+                  limit_per_token=50, fuzzy_edits=1)
     art = lookup(mentions, ld, dfs["kg_items"], fuzzy=True, index=idx)
     key = lambda r: (r["mention_norm"], r["id"], r["name"])
     a = sorted((tuple(r) for r in base.collect()), key=str)
@@ -294,6 +298,43 @@ def test_bucketed_index_artifacts_parity(spark):
 
     plan = art._jdf.queryExecution().executedPlan().toString()
     assert "Bucketed: true" in plan
+
+    def plan_of(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    saved = {k: spark.conf.get(k, None) for k in (
+        "spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold")}
+    try:
+        for k in saved:
+            spark.conf.set(k, "-1")
+        # persisted n_entities under the cap: the payload attach is the
+        # plan's one hash-join broadcast; unknown n_entities shuffles it
+        gated = lookup(mentions, ld, dfs["kg_items"], fuzzy=True, index=idx)
+        assert sorted((tuple(r) for r in gated.collect()), key=str) == a
+        assert "BroadcastHashJoin" in plan_of(gated)
+        ungated = lookup(mentions, ld, dfs["kg_items"], fuzzy=True,
+                         index=dataclasses.replace(idx, n_entities=None))
+        assert sorted((tuple(r) for r in ungated.collect()), key=str) == a
+        assert "BroadcastHashJoin" not in plan_of(ungated)
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+    # coverage guard: a match from the full in-memory dictionary probed
+    # against a smaller artifact's payload must raise, not drop rows
+    small = LookupIndex.write(ld.filter(F.col("entity") != a[0][1]),
+                              prefix="t_r2_idx_small", n_buckets=4, fuzzy=True,
+                              limit_per_token=50, fuzzy_edits=1)
+    prepared = _prepare_mentions(mentions)
+    match = token_match(prepared, ld, fuzzy=True, limit_per_token=50,
+                        fuzzy_edits=1, slim=True)
+    with pytest.raises(Exception, match="missing from the index payload"):
+        lookup(mentions, ld, dfs["kg_items"], fuzzy=True, index=small,
+               prepared=prepared, match=match).collect()
 
 
 def test_pipeline_with_index_artifacts_matches_default(spark, tmp_path):

@@ -103,7 +103,8 @@ def test_artifact_mention_path_no_forced_broadcast(spark, small_kg):
     - gated path (persisted n_names under cap): matched_strs IS
       broadcast (bounded driver round-trip, no spans shuffle/skew).
 
-    Both must equal the in-memory broadcast path's output."""
+    Both must equal the in-memory index's output, which broadcasts by
+    itself even with auto-broadcast disabled."""
     import dataclasses
 
     from lamapi_spark.pipeline.fixtures import (
@@ -122,9 +123,6 @@ def test_artifact_mention_path_no_forced_broadcast(spark, small_kg):
     # cardinality unknown/over the broadcast cap -> shuffle fallback
     idx_big = dataclasses.replace(idx, n_names=None)
 
-    base = detect_mentions(transcripts, ld, fuzzy=True, broadcast_dict=True)
-    base_rows = sorted(tuple(r) for r in base.collect())
-
     saved = {
         "spark.sql.autoBroadcastJoinThreshold":
             spark.conf.get("spark.sql.autoBroadcastJoinThreshold"),
@@ -134,8 +132,12 @@ def test_artifact_mention_path_no_forced_broadcast(spark, small_kg):
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        art = detect_mentions(transcripts, ld, fuzzy=True,
-                              broadcast_dict=True, index=idx_big)
+        base = detect_mentions(transcripts, ld, fuzzy=True)
+        base_rows = sorted(tuple(r) for r in base.collect())
+        assert "BroadcastHashJoin" in (
+            base._jdf.queryExecution().executedPlan().toString())
+
+        art = detect_mentions(transcripts, ld, fuzzy=True, index=idx_big)
         art_rows = sorted(tuple(r) for r in art.collect())
         plan = art._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastExchange" not in plan
@@ -145,8 +147,7 @@ def test_artifact_mention_path_no_forced_broadcast(spark, small_kg):
         assert "hashpartitioning(_h1" in plan, plan[:2000]
         assert art_rows == base_rows and len(art_rows) > 0
 
-        gated = detect_mentions(transcripts, ld, fuzzy=True,
-                                broadcast_dict=True, index=idx)
+        gated = detect_mentions(transcripts, ld, fuzzy=True, index=idx)
         gated_rows = sorted(tuple(r) for r in gated.collect())
         assert gated_rows == base_rows
 
@@ -181,7 +182,8 @@ def test_best_links_artifact_path_no_forced_broadcast(spark, small_kg):
     name-set and argmax joins must shuffle — no hash-join broadcast of
     any real relation in the executed plan with auto-broadcast disabled;
     with n_names under the cap the tiny frames ARE broadcast. Both
-    variants must equal the in-memory broadcast path's argmax."""
+    variants must equal the in-memory index's argmax, which broadcasts
+    by itself even with auto-broadcast disabled."""
     import dataclasses
 
     from pyspark.sql import functions as F
@@ -197,11 +199,6 @@ def test_best_links_artifact_path_no_forced_broadcast(spark, small_kg):
     surfaces = ld.select(F.col("name_norm").alias("mention")).distinct().limit(40)
     prepared = _prepare_mentions(surfaces, "mention")
 
-    base_slim = token_match(prepared, ld, True, fuzzy=True,
-                            limit_per_token=50, fuzzy_edits=1, slim=True)
-    base = sorted(tuple(r) for r in
-                  best_links(base_slim, prepared, ld, True).collect())
-
     saved = {
         "spark.sql.autoBroadcastJoinThreshold":
             spark.conf.get("spark.sql.autoBroadcastJoinThreshold"),
@@ -211,11 +208,17 @@ def test_best_links_artifact_path_no_forced_broadcast(spark, small_kg):
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        slim = token_match(prepared, ld, False, fuzzy=True,
+        base_slim = token_match(prepared, ld, fuzzy=True,
+                                limit_per_token=50, fuzzy_edits=1, slim=True)
+        base_links = best_links(base_slim, prepared, ld)
+        base = sorted(tuple(r) for r in base_links.collect())
+        assert "BroadcastHashJoin" in (
+            base_links._jdf.queryExecution().executedPlan().toString())
+
+        slim = token_match(prepared, ld, fuzzy=True,
                            limit_per_token=50, fuzzy_edits=1, index=idx_big,
                            slim=True)
-        art = best_links(slim, prepared, ld, broadcast_dict=False,
-                         index=idx_big)
+        art = best_links(slim, prepared, ld, index=idx_big)
         art_rows = sorted(tuple(r) for r in art.collect())
         plan = art._jdf.queryExecution().executedPlan().toString()
         # 1-row stat frames (IdentityBroadcastMode cross joins inside
@@ -225,11 +228,10 @@ def test_best_links_artifact_path_no_forced_broadcast(spark, small_kg):
         assert "HashedRelationBroadcastMode" not in plan
         assert art_rows == base and len(art_rows) > 0
 
-        gated_slim = token_match(prepared, ld, False, fuzzy=True,
+        gated_slim = token_match(prepared, ld, fuzzy=True,
                                  limit_per_token=50, fuzzy_edits=1,
                                  index=idx, slim=True)
-        gated = best_links(gated_slim, prepared, ld, broadcast_dict=False,
-                           index=idx)
+        gated = best_links(gated_slim, prepared, ld, index=idx)
         gated_rows = sorted(tuple(r) for r in gated.collect())
         assert gated_rows == base
     finally:

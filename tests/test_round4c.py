@@ -305,7 +305,7 @@ def test_delta_probe_equals_full_rebuild(spark):
                                  fuzzy=False, limit_per_token=3)
     want = sorted(
         (r.mention_norm, r.entity, r.matched_tokens, r.popularity)
-        for r in token_match(prepared, None, broadcast_dict=True,
+        for r in token_match(prepared, None,
                              fuzzy=False, index=full_idx,
                              slim=True).collect())
     assert got == want and len(got) > 0
@@ -345,7 +345,7 @@ def test_delta_probe_superset_under_hot_token_pruning(spark):
     full_idx = LookupIndex.build(main_d.unionByName(delta_d),
                                  fuzzy=False, limit_per_token=3)
     full = {r.entity for r in
-            token_match(prepared, None, broadcast_dict=True, fuzzy=False,
+            token_match(prepared, None, fuzzy=False,
                         index=full_idx, slim=True).collect()}
     assert full <= got
     assert got == {"m0", "m1", "m2", "d0", "d1"}   # per-part top-3 union

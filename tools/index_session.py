@@ -45,8 +45,8 @@ def _match(spark, label_dict, index):
     from lamapi_spark.operators.lookup import _prepare_mentions, token_match
     mentions = spark.createDataFrame([(m,) for m in MENTIONS], "mention string")
     prepared = _prepare_mentions(mentions)
-    return token_match(prepared, label_dict, broadcast_dict=label_dict is not None,
-                       fuzzy=True, index=index, slim=True).select(*OUT_COLS)
+    return token_match(prepared, label_dict, fuzzy=True, index=index,
+                       slim=True).select(*OUT_COLS)
 
 
 def main():

@@ -32,14 +32,12 @@ def main(argv=None) -> None:
     ap.add_argument("--master", default=None)
     ap.add_argument("--no-index-artifacts", action="store_true",
                     help="small-job opt-out: skip the bucketed offline "
-                         "LookupIndex tables and broadcast the in-memory "
-                         "dictionary instead (the artifact plan — probe "
-                         "tables built once per dictionary snapshot — is "
-                         "the DEFAULT, and the only plan a dictionary "
-                         "that cannot broadcast can run)")
-    ap.add_argument("--no-broadcast-dict", action="store_true",
-                    help="never broadcast dictionary-derived frames "
-                         "(cluster-scale dictionaries)")
+                         "LookupIndex tables and broadcast an in-memory "
+                         "index built from the dictionary instead (the "
+                         "artifact plan — probe tables built once per "
+                         "dictionary snapshot — is the DEFAULT, and the "
+                         "only plan a dictionary that cannot broadcast "
+                         "can run)")
     ap.add_argument("--candidate-limit", type=int, default=100)
     ap.add_argument("--incremental", action="store_true",
                     help="process only conversations not yet recorded in "
@@ -76,7 +74,6 @@ def main(argv=None) -> None:
 
     kw = dict(checkpoint_dir=args.checkpoint, fuzzy=args.fuzzy,
               use_index_artifacts=not args.no_index_artifacts,
-              broadcast_dict=not args.no_broadcast_dict,
               candidate_limit=args.candidate_limit)
     if args.incremental:
         from lamapi_spark.pipeline.incremental import run_pipeline_incremental
