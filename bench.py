@@ -132,6 +132,8 @@ def main():
     tr = build_transcripts(kg, seed=43, n_convs=800, turns_per_conv=(10, 20))
     dfs.update(transcript_dataframes(spark, *tr))
     tmp = tempfile.mkdtemp()
+    # a parquet round trip gives the transcripts real partitions, as a
+    # table-backed input has
     dfs["transcripts"].repartition(int(cpus)).write.parquet(tmp + "/transcripts")
     transcripts = spark.read.parquet(tmp + "/transcripts")
     n_turns = transcripts.count()

@@ -9,10 +9,13 @@ lineage (SURVEY §4 'custom work Catalyst will not do'). Canonical id =
 the minimum entity id in each component; NIL ids canonicalize to
 themselves (they are already deterministic hashes of the surface form).
 
-Scale: each iteration is one shuffle on the vertex id; iteration count
-is O(log(diameter)) for hash-min on undirected graphs when propagating
-through both edge directions. Alias graphs are near-degenerate (tiny
-components), so 5-10 iterations with early-exit suffice.
+Scale: each iteration is one shuffle on the vertex id. Hash-min moves
+a label one edge per round, so a component needs up to its diameter in
+rounds (the eccentricity of its minimum id), plus one that sees no
+change. Alias graphs are near-degenerate
+(tiny components), so a few rounds with early exit suffice; a graph that
+has not converged after ``max_iter`` rounds raises instead of returning
+partial components.
 """
 
 from __future__ import annotations
@@ -29,7 +32,9 @@ def connected_components(edges: DataFrame, max_iter: int = 15) -> DataFrame:
     self-join lineage) and checked for convergence — a limit(1) count on
     the changed set is one cheap job, and alias graphs converge in 1-2
     iterations (near-degenerate components), so eager checking beats
-    running blind extra rounds of shuffles.
+    running blind extra rounds of shuffles. Raises ValueError when the
+    labels still change in round ``max_iter`` (a component of diameter
+    ``max_iter`` or more).
     """
     # materialize the symmetric edge set ONCE: it feeds every iteration's
     # propagation join, and the upstream edge plan may be expensive (the
@@ -67,8 +72,9 @@ def connected_components(edges: DataFrame, max_iter: int = 15) -> DataFrame:
         )
         labels = new_labels
         if changed == 0:
-            break
-    return labels
+            return labels
+    raise ValueError(f"connected_components did not converge in max_iter={max_iter} "
+                     "rounds: a component's diameter is at least max_iter")
 
 
 def canonical_map(sameas: DataFrame) -> DataFrame:

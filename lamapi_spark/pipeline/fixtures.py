@@ -22,8 +22,10 @@ import datetime as _dt
 import random
 from dataclasses import dataclass, field
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 # ---------------------------------------------------------------- name pools
 _GIVEN = [
@@ -362,26 +364,38 @@ TRANSCRIPTS_SCHEMA = T.StructType([
 ])
 
 
+def _arrow_frame(spark: SparkSession, rows: list, schema: T.StructType | str) -> DataFrame:
+    """``rows`` as a DataFrame built from a typed pyarrow.Table: dict rows
+    are read by field name, tuple rows by position. Spark keeps the table
+    in the JVM as a LocalRelation, so no scan of the frame starts a
+    Python worker (a list of rows would be a parallelize of pickles)."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = [pa.array([r[f.name] if isinstance(r, dict) else r[i] for r in rows], type=t)
+            for i, (f, t) in enumerate(zip(schema.fields, arrow.types))]
+    return spark.createDataFrame(pa.Table.from_arrays(cols, schema=arrow), schema)
+
+
 def kg_dataframes(spark: SparkSession, kg: KGFixture) -> dict[str, DataFrame]:
     return {
-        "kg_items": spark.createDataFrame(kg.items, ITEMS_SCHEMA),
-        "kg_edges": spark.createDataFrame(kg.edges, "subj string, pred string, obj string"),
-        "kg_literals": spark.createDataFrame(
-            kg.literals, "entity string, datatype string, pred string, value string"),
-        "kg_types": spark.createDataFrame(kg.types, "entity string, type_id string"),
-        "kg_sameas": spark.createDataFrame(
-            kg.sameas or [("Q0", "Q0")], "a string, b string"
-        ).filter("a <> 'Q0'"),
+        "kg_items": _arrow_frame(spark, kg.items, ITEMS_SCHEMA),
+        "kg_edges": _arrow_frame(spark, kg.edges, "subj string, pred string, obj string"),
+        "kg_literals": _arrow_frame(
+            spark, kg.literals, "entity string, datatype string, pred string, value string"),
+        "kg_types": _arrow_frame(spark, kg.types, "entity string, type_id string"),
+        "kg_sameas": _arrow_frame(spark, kg.sameas, "a string, b string"),
     }
 
 
 def transcript_dataframes(spark: SparkSession, transcripts, mention_truth, triple_truth):
     return {
-        "transcripts": spark.createDataFrame(transcripts, TRANSCRIPTS_SCHEMA),
-        "mentions_truth": spark.createDataFrame(
-            mention_truth, "conv_id string, turn_idx int, surface string, entity string, variant string"),
-        "triples_truth": spark.createDataFrame(
-            triple_truth, "conv_id string, turn_idx int, subj string, pred string, obj string"),
+        "transcripts": _arrow_frame(spark, transcripts, TRANSCRIPTS_SCHEMA),
+        "mentions_truth": _arrow_frame(
+            spark, mention_truth,
+            "conv_id string, turn_idx int, surface string, entity string, variant string"),
+        "triples_truth": _arrow_frame(
+            spark, triple_truth, "conv_id string, turn_idx int, subj string, pred string, obj string"),
     }
 
 

@@ -100,7 +100,8 @@ def _stages(index: LookupIndex | None, broadcast_edges: bool,
     declared deps and params. label_dict is a dep only where it is read:
     without an index every match-path stage builds the in-memory one
     from it, and candidates also read it for the payload when the index
-    has no payload table."""
+    has no payload table. When no stage reads it, run_pipeline drops
+    the stage."""
     src = ("label_dict",) if index is None else ("index",)
     payload = ("label_dict",) if index is not None and index.payload is None else ()
 
@@ -237,6 +238,8 @@ def run_pipeline(
     stages = _stages(index, broadcast_edges, runner.enabled)
     if kg_sameas is None:
         del stages["canonical_map"], stages["triples"]
+    if not any("label_dict" in st.deps for st in stages.values()):
+        del stages["label_dict"]
     params = {"fuzzy": fuzzy, "nil_threshold": nil_threshold, "max_ntoken": max_ntoken,
               "limit_per_token": limit_per_token, "candidate_limit": candidate_limit}
     done = {"transcripts": transcripts, "kg_items": kg_items, "kg_edges": kg_edges,
@@ -253,6 +256,8 @@ def run_pipeline(
     if kg_sameas is None:
         done.update(triples=done["triples_raw"], canonical_map=spark.createDataFrame(
             [], "raw_entity string, canonical_entity string"))
+    if "label_dict" not in done:  # no stage read it: returned unbuilt
+        done["label_dict"] = build_label_dict(kg_items)
     return {**{k: done[k] for k in ("label_dict", "mentions", "oov_mentions",
                                     "candidates", "linked", "canonical_map")},
             "triples": done["triples"].select("subj", "pred", "obj", "conv_id", "turn_idx"),

@@ -497,6 +497,22 @@ def test_connected_components_randomized_vs_union_find(spark):
     assert got == want and len({v for v in want.values()}) > 5
 
 
+def test_connected_components_raises_when_not_converged(spark):
+    """Hash-min moves the minimum id one edge per round: a 12-edge path
+    converges within max_iter=15 rounds to one component, a 40-edge path
+    does not and raises instead of returning the unconverged labels."""
+    from lamapi_spark.pipeline.canonicalize import connected_components
+
+    def path(n_edges):
+        return spark.createDataFrame(
+            [(f"v{i:02d}", f"v{i + 1:02d}") for i in range(n_edges)], "a string, b string")
+
+    got = {r.entity: r.component for r in connected_components(path(12)).collect()}
+    assert got == {f"v{i:02d}": "v00" for i in range(13)}
+    with pytest.raises(ValueError, match="max_iter=15"):
+        connected_components(path(40))
+
+
 def test_bm25_randomized_differential(spark):
     """Seeded random corpus/queries vs an independent Python BM25 with
     the engine's exact parity discipline (per-term round-half-even at

@@ -40,6 +40,41 @@ def test_per_turn_text_equality(spark, fix):
     assert got == want
 
 
+def test_fixture_frames_are_jvm_resident(spark, fix):
+    """Every fixture frame is built from Arrow: no Python RDD in its
+    lineage, so no scan of it starts a Python worker. Schema and content
+    equal the row-path frame of the same rows (the reference)."""
+    import dataclasses
+
+    from lamapi_spark.pipeline.checkpoint import content_fingerprints
+    from lamapi_spark.pipeline.fixtures import ITEMS_SCHEMA, TRANSCRIPTS_SCHEMA
+
+    kg, dfs = fix
+    transcripts, mention_truth, triple_truth = build_transcripts(kg, seed=43, n_convs=8)
+    sources = {
+        "kg_items": (kg.items, ITEMS_SCHEMA),
+        "kg_edges": (kg.edges, "subj string, pred string, obj string"),
+        "kg_literals": (kg.literals, "entity string, datatype string, pred string, value string"),
+        "kg_types": (kg.types, "entity string, type_id string"),
+        "kg_sameas": (kg.sameas, "a string, b string"),
+        "transcripts": (transcripts, TRANSCRIPTS_SCHEMA),
+        "mentions_truth": (mention_truth, "conv_id string, turn_idx int, surface string, "
+                                          "entity string, variant string"),
+        "triples_truth": (triple_truth, "conv_id string, turn_idx int, subj string, "
+                                        "pred string, obj string"),
+    }
+    assert set(sources) == set(dfs)
+    ref = {k: spark.createDataFrame(rows, schema) for k, (rows, schema) in sources.items()}
+    for k, df in dfs.items():
+        assert df.schema == ref[k].schema, k
+        assert "PythonRDD" not in df._jdf.queryExecution().toRdd().toDebugString(), k
+    got = content_fingerprints(dfs)
+    assert got == content_fingerprints(ref)
+    assert all(not v.startswith("0:") for v in got.values()), got
+    empty = kg_dataframes(spark, dataclasses.replace(kg, sameas=[]))["kg_sameas"]
+    assert empty.schema == ref["kg_sameas"].schema and empty.count() == 0
+
+
 def test_triples_prf(spark, fix, tmp_path):
     kg, dfs = fix
     out = run_pipeline(
@@ -116,19 +151,25 @@ def _triples(out) -> list[tuple]:
     return sorted(tuple(r) for r in out["triples"].collect())
 
 
-@pytest.mark.parametrize("in_memory_index", [False, True])
-def test_resume_after_input_change(spark, fix, tmp_path, in_memory_index):
+@pytest.mark.parametrize("in_memory_index,use_index_artifacts",
+                         [(False, True), (True, True), (False, False)],
+                         ids=["False", "True", "no_index"])
+def test_resume_after_input_change(spark, fix, tmp_path, in_memory_index,
+                                   use_index_artifacts):
     """A rerun on half the transcripts into the same checkpoint dir
     returns the half's triples: every stage that reads transcripts
     recomputes, the dictionary-side stages resume. Covers the default
-    index artifacts and a caller's in-memory index (no _meta row)."""
+    index artifacts, a caller's in-memory index (no _meta row) and no
+    index. label_dict is a stage only where a stage reads it: without an
+    index, and for the in-memory index, which has no payload table."""
     from lamapi_spark.operators.indexes import LookupIndex
 
     kg, dfs = fix
     ckpt = str(tmp_path / "ckpt_half")
     kg_args = (dfs["kg_items"], dfs["kg_edges"], dfs["kg_sameas"])
-    kw = {"index": LookupIndex.build(build_label_dict(dfs["kg_items"]),
-                                     limit_per_token=100)} if in_memory_index else {}
+    kw = ({"index": LookupIndex.build(build_label_dict(dfs["kg_items"]),
+                                      limit_per_token=100)} if in_memory_index
+          else {"use_index_artifacts": use_index_artifacts})
     convs = sorted(r.conv_id for r in
                    dfs["transcripts"].select("conv_id").distinct().collect())
     half = dfs["transcripts"].filter(F.col("conv_id").isin(convs[:len(convs) // 2]))
@@ -138,7 +179,10 @@ def test_resume_after_input_change(spark, fix, tmp_path, in_memory_index):
     assert _triples(out) == _triples(fresh) and _triples(fresh)
     assert _recomputed(out) == {"mentions", "oov_mentions", "candidates",
                                 "linked", "triples_raw", "triples"}, out["metrics"]
-    assert {"label_dict", "canonical_map"} <= {m["stage"] for m in out["metrics"]}
+    stages = {m["stage"] for m in out["metrics"]}
+    assert "canonical_map" in stages
+    assert ("label_dict" in stages) == (in_memory_index or not use_index_artifacts)
+    assert out["label_dict"].count() == build_label_dict(dfs["kg_items"]).count()
 
 
 def test_truncated_sidecar_recomputes(spark, fix, tmp_path):

@@ -96,8 +96,8 @@ def worker(n_exec: int, cores: int, convs: int) -> None:
     dfs = kg_dataframes(spark, kg)
     tr = build_transcripts(kg, seed=43, n_convs=convs, turns_per_conv=(10, 20))
     dfs.update(transcript_dataframes(spark, *tr))
-    # materialize the driver-built input once so parallelize/Arrow costs
-    # stay out of the timed window, and the input has real partitions
+    # a parquet round trip gives the transcripts real partitions, as a
+    # table-backed input has
     tmp = tempfile.mkdtemp()
     dfs["transcripts"].repartition(cpus).write.parquet(tmp + "/transcripts")
     transcripts = spark.read.parquet(tmp + "/transcripts")

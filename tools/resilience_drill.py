@@ -191,7 +191,7 @@ def drill_driver(expect: tuple[int, int]) -> dict:
     res = json.loads(lines[-1])
     h = (res["n"], res["hash"])
     resumed = res["resumed_stages"]
-    ok = (h == expect and "label_dict" in resumed and "mentions" in resumed
+    ok = (h == expect and "canonical_map" in resumed and "mentions" in resumed
           and "candidates" in resumed)
     return {"drill": "driver_loss_resume", "killed_after": killed_at_stage,
             "resumed_stages": resumed, "hash": h, "expect": expect,
