@@ -42,10 +42,22 @@ from lamapi_spark.operators.label_dict import (
 from lamapi_spark.operators.warehouse import clean_stale_location
 
 _KEY = ["entity", "name", "is_alias"]
+# the response-build columns that depend on the entity alone
+_PAYLOAD_COLS = ["description", "kind", "NERtype", "types"]
 
 # sentinel: limit_per_token=None is a meaningful value (unpruned), so
 # "not passed" needs its own marker
 _UNSET = object()
+
+
+def _mismatches(meta: dict, fuzzy, limit_per_token, fuzzy_edits) -> dict:
+    """The requested build parameters (``_UNSET``: not requested) that
+    differ from the persisted ones, as name -> (requested, persisted)."""
+    asked = {"fuzzy": fuzzy, "limit_per_token": limit_per_token,
+             "fuzzy_edits": fuzzy_edits}
+    return {k: (v, meta[k]) for k, v in asked.items()
+            if v is not _UNSET and v != meta[k]}
+
 
 # Broadcast a join-derived frame of a bucketed index only when the
 # dictionary's PERSISTED count (index meta, counted once at build)
@@ -101,7 +113,7 @@ class LookupIndex:
                                      # counted once at build — lets consumers
                                      # size-gate broadcasts on an actual
                                      # cardinality instead of a Catalyst
-                                     # estimate (None = unknown/pre-meta)
+                                     # estimate (None = unknown, e.g. in-memory)
     n_entities: int | None = None    # REAL row count of the payload table
                                      # (distinct entities), counted once at
                                      # build — the broadcast gate for the
@@ -113,22 +125,23 @@ class LookupIndex:
                                      # fingerprint (None: in-memory index, or
                                      # built without source validation)
     payload: DataFrame | None = None  # (entity, description, kind, NERtype,
-                                      # types) — ONE row per entity, bucketed
-                                      # by entity: the response-build columns
-                                      # that depend on the entity alone (the
-                                      # ES _source analogue). lookup() joins
-                                      # it to the <=limit post-dedup
-                                      # survivors on the single entity key,
-                                      # so the full dictionary-row payload
-                                      # never shuffles. None on in-memory /
-                                      # pre-payload artifacts (the caller's
-                                      # items-based fallback applies).
+                                      # types) — ONE row per entity (bucketed
+                                      # by entity in an artifact): the
+                                      # response-build columns that depend on
+                                      # the entity alone (the ES _source
+                                      # analogue). lookup() joins it to the
+                                      # <=limit post-dedup survivors on the
+                                      # single entity key, so the full
+                                      # dictionary-row payload never
+                                      # shuffles. None only for a minimal
+                                      # (match-only) dictionary.
 
     @staticmethod
     def build(label_dict: DataFrame, fuzzy: bool = True,
               limit_per_token: int | None = None,
               fuzzy_edits: int = 1) -> "LookupIndex":
-        """In-memory (per-run) index frames — the non-artifact path."""
+        """In-memory (per-run) index frames — the non-artifact path. The
+        same frames an artifact holds, payload included."""
         # popularity stays IN the index rows: the consumer ranks/truncates
         # on the narrow match (popularity, entity, name, is_alias) and
         # attaches the wide payload only to the <=limit survivors
@@ -143,12 +156,20 @@ class LookupIndex:
             if limit_per_token is not None:
                 fz = prune_index(fz, "variant", limit_per_token)
             fn = fuzzy_name_index(label_dict)
+        # description/kind/NERtype/types are constant across an entity's
+        # label rows, so any row per entity is exact. A MINIMAL (match-
+        # only: entity/name/name_norm/popularity/is_alias, e.g. the
+        # lookup_candidates_indexed contract query) dictionary has none.
+        payload = None
+        if set(label_dict.columns) & set(_PAYLOAD_COLS):
+            payload = (label_dict.select("entity", *_PAYLOAD_COLS)
+                       .dropDuplicates(["entity"]))
         return LookupIndex(
             token=tok, fuzzy=fz,
             names=label_dict.select("name_norm", "popularity", *_KEY),
             fuzzy_names=fn,
             limit_per_token=limit_per_token, fuzzy_edits=fuzzy_edits,
-            bucketed=False)
+            bucketed=False, payload=payload)
 
     @staticmethod
     def write(label_dict: DataFrame, prefix: str = "lamapi_idx",
@@ -179,10 +200,9 @@ class LookupIndex:
           back-fills with the next write's tasks;
         - a MINIMAL (match-only) dictionary skips the payload table
           entirely instead of writing one row of typed NULLs per
-          entity: consumers see ``payload=None`` and use their
-          label_dict fallback — which also closes the advisory's
-          plausible-but-NULL payload hazard (a full response build can
-          no longer silently coalesce an all-NULL artifact payload)."""
+          entity: consumers see ``payload=None`` and lookup() refuses
+          the index — so a full response build can never silently
+          coalesce an all-NULL artifact payload."""
         spark = label_dict.sparkSession
         label_dict = label_dict.persist()
         mem = LookupIndex.build(label_dict, fuzzy=fuzzy,
@@ -212,23 +232,15 @@ class LookupIndex:
             finally:
                 spark.sparkContext.setJobDescription(None)
 
-        # entity-level payload (description/kind/NERtype/types are constant
-        # across an entity's label rows, so any-row-per-entity is exact);
-        # bucketed by the single entity key so the response build's payload
-        # attach probes it with no dictionary-side exchange. MINIMAL
-        # dictionaries (match-only callers: entity/name/name_norm/
-        # popularity/is_alias — e.g. the lookup_candidates_indexed
-        # contract query) carry no payload columns: no payload table is
-        # written (see docstring) and any stale one is dropped.
-        _payload_cols = ["description", "kind", "NERtype", "types"]
-        have_payload = bool(set(label_dict.columns) & set(_payload_cols))
-
+        # the entity-level payload is bucketed by the single entity key so
+        # the response build's payload attach probes it with no
+        # dictionary-side exchange. A minimal dictionary has none: no
+        # payload table is written and any stale one is dropped.
+        have_payload = mem.payload is not None
         jobs: list[tuple] = [(mem.token, "token", "token", None),
                              (mem.names, "names", "name_norm", "n_names")]
         if have_payload:
-            jobs.append((label_dict.select("entity", *_payload_cols)
-                         .dropDuplicates(["entity"]),
-                         "payload", "entity", "n_entities"))
+            jobs.append((mem.payload, "payload", "entity", "n_entities"))
         if fuzzy:
             jobs.append((mem.fuzzy, "fuzzy", "variant", None))
             jobs.append((mem.fuzzy_names, "fuzzy_names", "variant", None))
@@ -278,56 +290,35 @@ class LookupIndex:
 
     @staticmethod
     def read_meta(spark: SparkSession, prefix: str = "lamapi_idx") -> dict | None:
-        """The persisted build parameters, or None for a pre-meta artifact."""
+        """The persisted ``_meta`` row as a dict, or None when there is none."""
         if not spark.catalog.tableExists(f"{prefix}_meta"):
             return None
+        # a crash between the data saveAsTable and the meta write (or an
+        # interrupted overwrite) can leave an EMPTY meta table: treat it
+        # as meta-absent, so load() raises and exists() says rebuild
         r = spark.table(f"{prefix}_meta").head()
-        if r is None:
-            # a crash between the data saveAsTable and the meta write (or
-            # an interrupted overwrite) can leave an EMPTY meta table:
-            # treat it as meta-absent so load()/exists() fall back to the
-            # explicit-params / rebuild path instead of raising on None
-            return None
-        d = r.asDict()
-        return {"fuzzy": r.fuzzy, "limit_per_token": r.limit_per_token,
-                "fuzzy_edits": r.fuzzy_edits, "n_buckets": r.n_buckets,
-                # older sidecars lack these fields — degrade to None
-                "n_names": d.get("n_names"),
-                "n_entities": d.get("n_entities"),
-                "source_fp": d.get("source_fp")}
+        return None if r is None else r.asDict()
 
     @staticmethod
     def load(spark: SparkSession, prefix: str = "lamapi_idx",
-             fuzzy: bool | None = None, limit_per_token=_UNSET,
-             fuzzy_edits: int | None = None) -> "LookupIndex":
+             fuzzy=_UNSET, limit_per_token=_UNSET,
+             fuzzy_edits=_UNSET) -> "LookupIndex":
         """Load saved artifacts. Build parameters come from the persisted
         ``<prefix>_meta`` sidecar; explicitly passed values are VALIDATED
         against it (a silent mismatch would drop recall guards), raising
-        ValueError on conflict. For pre-meta artifacts (no sidecar) the
-        explicit values are required."""
+        ValueError on conflict. An artifact without a sidecar raises: its
+        build parameters are unknown, so it must be rebuilt."""
         meta = LookupIndex.read_meta(spark, prefix)
         if meta is None:
-            if fuzzy is None or limit_per_token is _UNSET or fuzzy_edits is None:
-                raise ValueError(
-                    f"index artifact '{prefix}' has no _meta sidecar; pass "
-                    "fuzzy/limit_per_token/fuzzy_edits explicitly or rebuild "
-                    "with LookupIndex.write")
-            meta = {"fuzzy": fuzzy, "limit_per_token": limit_per_token,
-                    "fuzzy_edits": fuzzy_edits, "n_buckets": None,
-                    "n_names": None}
-        else:
-            mismatches = {}
-            if fuzzy is not None and fuzzy != meta["fuzzy"]:
-                mismatches["fuzzy"] = (fuzzy, meta["fuzzy"])
-            if limit_per_token is not _UNSET and limit_per_token != meta["limit_per_token"]:
-                mismatches["limit_per_token"] = (limit_per_token, meta["limit_per_token"])
-            if fuzzy_edits is not None and fuzzy_edits != meta["fuzzy_edits"]:
-                mismatches["fuzzy_edits"] = (fuzzy_edits, meta["fuzzy_edits"])
-            if mismatches:
-                raise ValueError(
-                    f"index artifact '{prefix}' was built with different "
-                    f"parameters: requested vs persisted {mismatches}; "
-                    "rebuild with LookupIndex.write or drop the argument")
+            raise ValueError(
+                f"index artifact '{prefix}' has no _meta sidecar; rebuild it "
+                "with LookupIndex.write")
+        mismatches = _mismatches(meta, fuzzy, limit_per_token, fuzzy_edits)
+        if mismatches:
+            raise ValueError(
+                f"index artifact '{prefix}' was built with different "
+                f"parameters: requested vs persisted {mismatches}; "
+                "rebuild with LookupIndex.write or drop the argument")
         return LookupIndex(
             token=spark.table(f"{prefix}_token"),
             fuzzy=spark.table(f"{prefix}_fuzzy") if meta["fuzzy"] else None,
@@ -340,21 +331,20 @@ class LookupIndex:
             n_names=meta.get("n_names"),
             n_entities=meta.get("n_entities"),
             source_fp=meta.get("source_fp"),
-            # pre-round-5 artifacts lack the payload table — degrade to
-            # None (consumers fall back to an items-based payload join)
             payload=(spark.table(f"{prefix}_payload")
                      if spark.catalog.tableExists(f"{prefix}_payload")
                      else None))
 
     @staticmethod
     def exists(spark: SparkSession, prefix: str = "lamapi_idx",
-               fuzzy: bool | None = None, limit_per_token=_UNSET,
-               fuzzy_edits: int | None = None,
+               fuzzy=_UNSET, limit_per_token=_UNSET,
+               fuzzy_edits=_UNSET,
                source_fp: str | None = None) -> bool:
         """True when a loadable artifact with COMPATIBLE build parameters
         exists: tables present, meta sidecar present, and any explicitly
         passed parameter equal to the persisted one — so reuse logic
-        rebuilds instead of silently probing a mismatched artifact.
+        rebuilds instead of silently probing a mismatched artifact, or
+        one that lost the payload table lookup() needs.
 
         ``source_fp`` (when provided) must ALSO match the persisted
         dictionary-snapshot fingerprint; an artifact without one (built
@@ -363,19 +353,15 @@ class LookupIndex:
         conservative on purpose: silently reusing an unverifiable
         artifact is exactly the stale-dictionary footgun this guards."""
         meta = LookupIndex.read_meta(spark, prefix)
-        if meta is None:
-            return False
-        if fuzzy is not None and meta["fuzzy"] != fuzzy:
-            return False
-        if limit_per_token is not _UNSET and meta["limit_per_token"] != limit_per_token:
-            return False
-        if fuzzy_edits is not None and meta["fuzzy_edits"] != fuzzy_edits:
+        if meta is None or _mismatches(meta, fuzzy, limit_per_token, fuzzy_edits):
             return False
         if source_fp is not None and meta.get("source_fp") != source_fp:
             return False
         needed = [f"{prefix}_token", f"{prefix}_names"]
         if meta["fuzzy"]:
             needed += [f"{prefix}_fuzzy", f"{prefix}_fuzzy_names"]
+        if meta.get("n_entities") is not None:  # a payload table was written
+            needed.append(f"{prefix}_payload")
         return all(spark.catalog.tableExists(t) for t in needed)
 
     # ------------------------------------------------------ join policy
@@ -410,8 +396,8 @@ class LookupIndex:
 
     def label_side(self, df: DataFrame) -> DataFrame:
         """How consumers join a frame read from ``label_dict`` itself
-        (payload columns the index tables do not carry): broadcast for an
-        in-memory index; with a bucketed one the dictionary is presumed
+        (the per-label-row columns a request filter needs): broadcast for
+        an in-memory index; with a bucketed one the dictionary is presumed
         too big to broadcast, so the join is left to the planner (it
         shuffles on the join key, AQE picks the strategy)."""
         return df if self.bucketed else F.broadcast(df)

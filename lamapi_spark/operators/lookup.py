@@ -555,13 +555,18 @@ def lookup(
     between the response build and best_links linking.
 
     ``index``: the prebuilt :class:`LookupIndex` to probe; without one
-    the in-memory index is built from ``label_dict``."""
-    if prepared is None:
-        prepared = _prepare_mentions(mentions, mention_col)
+    the in-memory index is built from ``label_dict``. Either way it must
+    carry a payload table (a dictionary with the payload columns)."""
     if index is None:
         index = LookupIndex.build(label_dict, fuzzy=fuzzy,
                                   limit_per_token=limit_per_token,
                                   fuzzy_edits=fuzzy_edits)
+    if index.payload is None:
+        raise ValueError(
+            "lookup() needs an index with a payload table: build it from a "
+            "dictionary with description/kind/NERtype/types columns")
+    if prepared is None:
+        prepared = _prepare_mentions(mentions, mention_col)
 
     # One token-match pass serves both consumers: the mention-level
     # feature pass (the reference's extra non-fuzzy ES round-trip at
@@ -642,8 +647,8 @@ def lookup(
         # per-entity dedup, at the smallest point of the plan, on the
         # single entity key. A 10^8-entity dictionary therefore never
         # ships its wide rows (or precomputed n-gram arrays) through an
-        # exchange: the entity side is the bucketed payload artifact
-        # when the index carries one (no dictionary-side shuffle), and
+        # exchange: the entity side is the index's payload table (a
+        # bucketed artifact: no dictionary-side shuffle), and
         # the mention_norm partitioning of the match survives the
         # ranking window, the dedup window, and the feats join unbroken.
         cand = (
@@ -686,42 +691,30 @@ def lookup(
     cand = cand.join(feats, "mention_norm", "left")
 
     if not payload_filtered:
-        if index.payload is not None:
-            # broadcast decision from the PERSISTED entity count (see
-            # LookupIndex.bounded_side): small dictionary -> broadcast
-            # keeps the plan exchange-free end-to-end; huge dictionary ->
-            # shuffle_hash probes the bucketed payload artifact with no
-            # dictionary-side exchange.
-            #
-            # coverage guard (round-6, advisory): the artifact payload
-            # covers every candidate by construction ONLY when the match
-            # came from the same artifact. A caller-supplied match= from
-            # a different source (e.g. main+delta union against a
-            # main-only payload) must fail LOUDLY, not lose rows — so
-            # the attach is a left join carrying a sentinel that a filter
-            # requires non-null. A filter, not an assert_true column: a
-            # check column that nothing reads is pruned by the optimizer
-            # and never runs. Covered case: identical rows to an inner
-            # join at one boolean column of extra cost.
-            ent_payload = index.bounded_side(
-                index.payload.withColumn("_p_ok", F.lit(True)), index.n_entities)
-            cand = cand.join(ent_payload, "entity", "left").filter(F.coalesce(
-                F.col("_p_ok"),
-                F.raise_error(F.concat(
-                    F.lit("lookup(): candidate entity "), F.col("entity"),
-                    F.lit(" missing from the index payload artifact — match "
-                          "frame not covered by this artifact (stale or "
-                          "mismatched index?)"))))).drop("_p_ok")
-        else:
-            # in-memory / pre-payload-artifact fallback: the payload
-            # columns are constant across an entity's label rows, so
-            # any-row-per-entity is exact (items is NOT used — callers
-            # may pass a minimal items frame carrying only the
-            # type-resolution columns)
-            ent_payload = index.label_side(label_dict.select(
-                "entity", "description", "kind", "NERtype", "types",
-            ).dropDuplicates(["entity"]))
-            cand = cand.join(ent_payload, "entity", "inner")
+        # broadcast decision from the PERSISTED entity count (see
+        # LookupIndex.bounded_side): small dictionary -> broadcast keeps
+        # the plan exchange-free end-to-end; huge dictionary ->
+        # shuffle_hash probes the bucketed payload artifact with no
+        # dictionary-side exchange.
+        #
+        # coverage guard: the payload covers every candidate by
+        # construction ONLY when the match came from the same index. A
+        # caller-supplied match= from a different source (e.g. main+delta
+        # union against a main-only payload) must fail LOUDLY, not lose
+        # rows — so the attach is a left join carrying a sentinel that a
+        # filter requires non-null. A filter, not an assert_true column:
+        # a check column that nothing reads is pruned by the optimizer
+        # and never runs. Covered case: identical rows to an inner join
+        # at one boolean column of extra cost.
+        ent_payload = index.bounded_side(
+            index.payload.withColumn("_p_ok", F.lit(True)), index.n_entities)
+        cand = cand.join(ent_payload, "entity", "left").filter(F.coalesce(
+            F.col("_p_ok"),
+            F.raise_error(F.concat(
+                F.lit("lookup(): candidate entity "), F.col("entity"),
+                F.lit(" missing from the index payload — match frame not "
+                      "covered by this index (stale or mismatched "
+                      "index?)"))))).drop("_p_ok")
 
     cand = resolve_type_names(cand, items)
 

@@ -854,11 +854,17 @@ def strongly_connected_components(
        backward-reachability), hence scc = min member id is exact.
     3. Peel the reached set and repeat on the remainder.
 
-    Every propagation step is one shuffle on the vertex id; rounds are
-    O(log diameter) per fixed point for the min-propagation and
-    O(diameter) for the backward frontier. Peeled frames and the
-    iterated edge frame are localCheckpointed — the same lineage
-    discipline as pipeline/canonicalize.connected_components.
+    Every propagation step is one shuffle on the vertex id. Hash-min
+    moves a label one edge per round, so the forward fixed point needs
+    up to the remaining graph's diameter in rounds plus one that sees no
+    change, and the backward frontier up to the diameter; each outer
+    round peels at least one SCC (a directed path of n nodes peels one
+    node per round, so it needs n). A loop that is still changing when
+    it reaches ``max_inner`` (forward, backward) or ``max_outer`` (peel)
+    raises ValueError instead of returning an unconverged or partial
+    result. Peeled frames and the iterated edge frame are
+    localCheckpointed — the same lineage discipline as
+    pipeline/canonicalize.connected_components.
     """
     rem_edges = edges.select("src", "dst").distinct().localCheckpoint(eager=True)
     rem_nodes = (
@@ -867,9 +873,13 @@ def strongly_connected_components(
         .distinct().localCheckpoint(eager=True)
     )
     assigned: DataFrame | None = None
-    for _o in range(max_outer):
+    for _o in range(max_outer + 1):
         if rem_nodes.limit(1).count() == 0:
             break
+        if _o == max_outer:
+            raise ValueError(
+                f"strongly_connected_components: nodes remain after max_outer={max_outer} "
+                "peel rounds (each round peels at least one SCC)")
         # 1) color(v) = min id reaching v, hash-min fixed point
         color = rem_nodes.withColumn("color", F.col("node")).localCheckpoint(eager=True)
         for _i in range(max_inner):
@@ -890,6 +900,10 @@ def strongly_connected_components(
             color = new
             if changed == 0:
                 break
+        else:
+            raise ValueError(
+                f"strongly_connected_components: forward colouring did not converge in "
+                f"max_inner={max_inner} rounds (a path of max_inner or more edges)")
         # 2) backward frontier from roots within the color class
         csrc = color.select(F.col("node").alias("src"), F.col("color").alias("_cs"))
         cdst = color.select(F.col("node").alias("dst"), F.col("color").alias("_cd"))
@@ -912,6 +926,10 @@ def strongly_connected_components(
                 break
             reach = reach.unionByName(nxt).localCheckpoint(eager=True)
             frontier = nxt
+        else:
+            raise ValueError(
+                f"strongly_connected_components: backward frontier still growing after "
+                f"max_inner={max_inner} rounds")
         peeled = reach.join(color, "node").select(
             "node", F.col("color").alias("scc"))
         assigned = peeled if assigned is None else assigned.unionByName(peeled)

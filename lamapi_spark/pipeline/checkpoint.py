@@ -3,14 +3,15 @@ resume-from-failure.
 
 Each stage writes its output as parquet under ``<root>/<stage>/data``
 plus a ``metrics.json`` sidecar recording rows, partitions, duration,
-input lineage and the stage's fingerprint. On rerun, a stage whose data
-and sidecar exist is **read back instead of recomputed** when, and only
-when, the recorded fingerprint equals the caller's. Nothing else is
-compared, so the fingerprint must cover everything the stage's output
-depends on: pipeline/run.py chains it from the parameters each stage
-reads and the content fingerprints of its sources. The sidecar is
-removed before a stage's data is overwritten and replaced atomically
-after, so a crash leaves a stage that either matches or recomputes.
+input lineage (each dep's fingerprint), the stage's fingerprint and the
+reason it was computed. On rerun, a stage whose data and sidecar exist
+is **read back instead of recomputed** when, and only when, the
+recorded fingerprint equals the caller's. Nothing else is compared, so
+the fingerprint must cover everything the stage's output depends on:
+pipeline/run.py chains it from the parameters each stage reads and the
+content fingerprints of its sources. The sidecar is removed before a
+stage's data is overwritten and replaced atomically after, so a crash
+leaves a stage that either matches or recomputes.
 
 This is the batch analogue of the reference's Mongo result cache
 (lookup_retriever.py:78-102,184-211): keyed memoization of expensive
@@ -105,21 +106,33 @@ class StageRunner:
         stage: str,
         build: Callable[[], DataFrame],
         fingerprint: str = "",
-        inputs: tuple[str, ...] = (),
+        inputs: dict[str, str] | None = None,
     ) -> DataFrame:
+        """Resume ``stage`` when its recorded fingerprint equals
+        ``fingerprint``, else build and checkpoint it. ``inputs`` maps
+        each dep to its fingerprint; on a recompute the sidecar's
+        ``reason`` says why: ``no checkpoint``, ``unreadable sidecar``,
+        the deps whose fingerprint changed, or ``params`` when none did."""
         if not self.enabled:
             return build()
+        inputs = inputs or {}
         data_path, meta_path = self._paths(stage)
+        reason = "no checkpoint"
         if os.path.exists(meta_path) and os.path.exists(os.path.join(data_path, "_SUCCESS")):
             try:
                 with open(meta_path) as fh:
                     meta = json.load(fh)
             except ValueError:  # an unreadable sidecar commits nothing
-                meta = {}
+                meta, reason = {}, "unreadable sidecar"
             if meta.get("fingerprint") == fingerprint:
                 meta["resumed"] = True
+                meta.pop("reason", None)  # why it was computed, not this run
                 self.metrics.append(meta)
                 return self.spark.read.parquet(data_path)
+            if meta:
+                prev = meta.get("inputs")
+                prev = prev if isinstance(prev, dict) else {}
+                reason = [d for d, fp in inputs.items() if prev.get(d) != fp] or "params"
         if os.path.exists(meta_path):  # it must not certify the data replacing it
             os.remove(meta_path)
         t0 = time.time()
@@ -152,8 +165,9 @@ class StageRunner:
             "partition_lineage": _partition_lineage(data_path, parts),
             "duration_s": round(time.time() - t0, 3),
             "fingerprint": fingerprint,
-            "inputs": list(inputs),
+            "inputs": inputs,
             "resumed": False,
+            "reason": reason,
         }
         tmp = f"{meta_path}.tmp"
         with open(tmp, "w") as fh:

@@ -1,11 +1,12 @@
 """Entity-link scoring: detected mention spans -> (span, entity) links.
 
-Candidate generation + scoring reuses the flagship lookup dataflow
-(lamapi_spark/operators/lookup.py — the reference's entity-retrieval
-semantics), computed ONCE per distinct surface form (the batch analogue
-of the reference's result cache) and re-joined to spans.
+The link decision is lookup.best_links over the flagship lookup
+dataflow's match (lamapi_spark/operators/lookup.py — the reference's
+entity-retrieval semantics), computed ONCE per distinct surface form
+(the batch analogue of the reference's result cache) and re-joined to
+spans here.
 
-Link choice per span: argmax over candidates by
+Link choice per surface: argmax over candidates by
 (ed_score + jaccard_score + jaccardNgram_score) desc, then popularity
 desc, then id asc — similarity first, popularity as the ambiguity
 tiebreak. Surfaces whose best score falls below ``nil_threshold`` (and
@@ -15,44 +16,10 @@ OOV surfaces with no candidates at all) map to deterministic NIL ids:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from lamapi_spark.operators.lookup import lookup
 from lamapi_spark.pipeline.canonicalize import connected_components
-
-def link_score_col():
-    return F.col("ed_score") + F.col("jaccard_score") + F.col("jaccardNgram_score")
-
-
-def candidates_for_surfaces(
-    surfaces: DataFrame,
-    label_dict: DataFrame,
-    items: DataFrame,
-    fuzzy: bool = False,
-    limit: int = 1000,
-    limit_per_token: int | None = None,
-    fuzzy_edits: int = 1,
-    index=None,
-    prepared: DataFrame | None = None,
-    match: DataFrame | None = None,
-) -> DataFrame:
-    """Distinct surface forms -> full 19-field candidates table
-    (checkpointable stage; response-parity artifact). ``limit_per_token``
-    enables the pruned posting-list path for huge dictionaries (see
-    indexes.prune_index) — rank-lossless for the candidate list whenever
-    K >= limit (the pipeline passes K=100 with candidate_limit=100, so
-    the artifact is exact); the exact-name / 1-edit-name guards
-    additionally pin those matches into the match set. The LINK decision
-    does not depend on this frame at all — run_pipeline links from
-    lookup.best_links over the full un-truncated match."""
-    return lookup(
-        surfaces.select(F.col("surface").alias("mention")),
-        label_dict, items,
-        limit=limit, fuzzy=fuzzy,
-        limit_per_token=limit_per_token, fuzzy_edits=fuzzy_edits,
-        index=index, prepared=prepared, match=match,
-    )
 
 
 def nil_id(col):
@@ -61,37 +28,19 @@ def nil_id(col):
 
 def link_mentions(
     mentions: DataFrame,
-    candidates: DataFrame | None = None,
+    best: DataFrame,
     nil_threshold: float = 1.0,
-    best: DataFrame | None = None,
 ) -> DataFrame:
     """mentions: detect_mentions ∪ detect_oov_mentions output (OOV rows
-    may lack name_norm/edits). Provide EITHER ``candidates`` (the
-    19-field response frame — argmax computed here over whatever that
-    frame contains, including its limit truncation) OR ``best`` (a
-    precomputed (mention_norm, id, link_score) frame, e.g. from
-    lookup.best_links over the FULL un-truncated match — the exact
-    linking decision with no response build on the critical path).
+    may lack name_norm/edits). ``best``: the (mention_norm, id,
+    link_score) argmax frame of lookup.best_links over the FULL
+    un-truncated match — the exact linking decision with no response
+    build on the critical path.
 
     -> (conv_id, turn_idx, start, ntoken_span, surface, entity, link_score,
         nil) — every input span appears exactly once."""
-    if best is not None:
-        best = best.select(
-            "mention_norm", F.col("id").alias("_best_id"), "link_score")
-    else:
-        best = (
-            candidates
-            .withColumn("_score", link_score_col())
-            .withColumn("_rn", F.row_number().over(
-                Window.partitionBy("mention_norm").orderBy(
-                    F.col("_score").desc(), F.col("popularity").desc(), F.col("id").asc())))
-            .filter(F.col("_rn") == 1)
-            .select(
-                F.col("mention_norm"),
-                F.col("id").alias("_best_id"),
-                F.col("_score").alias("link_score"),
-            )
-        )
+    best = best.select(
+        "mention_norm", F.col("id").alias("_best_id"), "link_score")
     m = mentions.select(
         "conv_id", "turn_idx", "start", "ntoken_span", "surface",
     ).withColumn("mention_norm", F.col("surface"))

@@ -247,9 +247,10 @@ def detect_oov_mentions(
     # adjacent positions share the key — materialized with indexed
     # transform/filter lambdas (scalar comparisons only). This replaces
     # the round-4 F.aggregate fold, which rebuilt the runs array with
-    # concat(slice(...)) per element: measured (tools/ab_oov.py, 3.75M
-    # turns, 1x4 and 4x4 executors) the fold cost ~8-10% more wall than
-    # this formulation at both levels for identical output hashes. The
+    # concat(slice(...)) per element: measured (BENCH.md; the A/B script,
+    # tools/ab_oov.py, is in git history; 3.75M turns, 1x4 and 4x4
+    # executors) the fold cost ~8-10% more wall than this formulation
+    # at both levels for identical output hashes. The
     # pre-round-4 row_number-window + group-by is ~5% faster still on
     # this box but its collect_list surface order is ARRIVAL-dependent —
     # the A/B caught it emitting different hashes across identical runs

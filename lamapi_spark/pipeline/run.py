@@ -8,12 +8,15 @@ transcripts ──detect──> mention spans (exact + fuzzy + OOV)
 
 The pipeline is one table (``_stages``): stage -> (deps, the parameters
 it reads, build). One loop runs it, handing every stage whose deps are
-done to a small thread pool, so independent stages overlap. The table
-also keys the resume check: a stage's fingerprint hashes the params it
-reads and its deps' fingerprints, down to the sources (the content of
-the input frames, and the lookup index's ``_meta`` row). A stage
-resumes only when its recorded fingerprint equals the new one, so a
-changed input or parameter recomputes exactly the stages below it.
+done to a small thread pool, so independent stages overlap. Every
+match-path stage reads one lookup index: the caller's, the bucketed
+artifact, or, with neither, the in-memory one that the ``index`` stage
+builds once from label_dict. The table also keys the resume check: a
+stage's fingerprint hashes the params it reads and its deps'
+fingerprints, down to the sources (the content of the input frames,
+and the lookup index's ``_meta`` row). A stage resumes only when its
+recorded fingerprint equals the new one, so a changed input or
+parameter recomputes exactly the stages below it.
 """
 
 from __future__ import annotations
@@ -34,7 +37,7 @@ from lamapi_spark.operators.label_dict import build_label_dict
 from lamapi_spark.pipeline.cache_registry import in_caller_scopes, scoped_cache
 from lamapi_spark.pipeline.canonicalize import canonical_map, canonicalize_triples
 from lamapi_spark.pipeline.checkpoint import StageRunner, content_fingerprints
-from lamapi_spark.pipeline.linking import candidates_for_surfaces, link_mentions
+from lamapi_spark.pipeline.linking import link_mentions
 from lamapi_spark.pipeline.mentions import detect_mentions, detect_oov_mentions
 from lamapi_spark.pipeline.triples import extract_triples
 
@@ -94,23 +97,16 @@ class Stage(NamedTuple):
     cache: bool = False       # several stages read the output
 
 
-def _stages(index: LookupIndex | None, broadcast_edges: bool,
-            count_match: bool) -> dict[str, Stage]:
+def _stages(broadcast_edges: bool, count_match: bool) -> dict[str, Stage]:
     """The pipeline table, in dependency order; a build sees only its
-    declared deps and params. label_dict is a dep only where it is read:
-    without an index every match-path stage builds the in-memory one
-    from it, and candidates also read it for the payload when the index
-    has no payload table. When no stage reads it, run_pipeline drops
-    the stage."""
-    src = ("label_dict",) if index is None else ("index",)
-    payload = ("label_dict",) if index is not None and index.payload is None else ()
-
+    declared deps and params. Every match-path stage reads ``index``:
+    the caller's or the artifact's, or, when there is neither, the
+    in-memory one that the ``index`` stage builds once from label_dict
+    (run_pipeline drops both stages when an index is given)."""
     def slim(d, p):
         # ONE narrow match pass feeds the candidates and the linking
-        match = lookup_ops.token_match(
-            d["prepared"], d.get("label_dict"), fuzzy=p["fuzzy"],
-            cache_narrow=True, limit_per_token=p["limit_per_token"],
-            fuzzy_edits=1, index=d.get("index"), slim=True)
+        match = lookup_ops.token_match(d["prepared"], None, fuzzy=p["fuzzy"],
+                                       cache_narrow=True, index=d["index"], slim=True)
         if count_match:  # materialized once, not raced for by its two readers
             match.count()
         return match
@@ -119,15 +115,19 @@ def _stages(index: LookupIndex | None, broadcast_edges: bool,
         "canonical_map": Stage(("kg_sameas",), (), lambda d, p: canonical_map(d["kg_sameas"])),
         "label_dict": Stage(("kg_items",), (),
                             lambda d, p: build_label_dict(d["kg_items"]), cache=True),
+        # fuzzy_edits=1 as build_index_artifacts: 2-edit neighborhoods are
+        # ~4x the variant volume for a tail of 2-edit typos
+        "index": Stage(("label_dict",), ("fuzzy", "limit_per_token"), checkpoint=False,
+                       build=lambda d, p: LookupIndex.build(
+                           d["label_dict"], fuzzy=p["fuzzy"],
+                           limit_per_token=p["limit_per_token"], fuzzy_edits=1)),
         "mentions": Stage(
-            ("transcripts", *src), ("max_ntoken", "fuzzy"),
-            lambda d, p: detect_mentions(
-                d["transcripts"], d.get("label_dict"), p["max_ntoken"],
-                p["fuzzy"], index=d.get("index"))),
+            ("transcripts", "index"), ("max_ntoken", "fuzzy"),
+            lambda d, p: detect_mentions(d["transcripts"], None, p["max_ntoken"],
+                                         p["fuzzy"], index=d["index"])),
         "oov_mentions": Stage(
-            ("transcripts", *src), (),
-            lambda d, p: detect_oov_mentions(
-                d["transcripts"], d.get("label_dict"), index=d.get("index"))),
+            ("transcripts", "index"), (),
+            lambda d, p: detect_oov_mentions(d["transcripts"], None, index=d["index"])),
         "all_spans": Stage(
             ("mentions", "oov_mentions"), (), checkpoint=False, build=lambda d, p:
             d["mentions"].select(*_SPAN).unionByName(d["oov_mentions"].select(*_SPAN))),
@@ -136,22 +136,22 @@ def _stages(index: LookupIndex | None, broadcast_edges: bool,
         "prepared": Stage(("surfaces",), (), checkpoint=False, build=lambda d, p:
                           lookup_ops._prepare_mentions(d["surfaces"].select(
                               F.col("surface").alias("mention")), "mention")),
-        "slim": Stage(("prepared", *src), ("fuzzy", "limit_per_token"),
-                      slim, checkpoint=False),
+        "slim": Stage(("prepared", "index"), ("fuzzy",), slim, checkpoint=False),
+        # the 19-field response per distinct surface; the LINK decision
+        # does not read it (linked takes best_links over the full match)
         "candidates": Stage(
-            ("surfaces", "prepared", "slim", "kg_items", *src, *payload),
-            ("fuzzy", "candidate_limit", "limit_per_token"),
-            lambda d, p: candidates_for_surfaces(
-                d["surfaces"], d.get("label_dict"), d["kg_items"],
-                fuzzy=p["fuzzy"], limit=p["candidate_limit"],
-                limit_per_token=p["limit_per_token"], index=d.get("index"), prepared=d["prepared"], match=d["slim"])),
+            ("surfaces", "prepared", "slim", "kg_items", "index"),
+            ("fuzzy", "candidate_limit"),
+            lambda d, p: lookup_ops.lookup(
+                d["surfaces"].select(F.col("surface").alias("mention")), None,
+                d["kg_items"], limit=p["candidate_limit"], fuzzy=p["fuzzy"],
+                index=d["index"], prepared=d["prepared"], match=d["slim"])),
         "linked": Stage(
-            ("all_spans", "prepared", "slim", *src),
-            ("nil_threshold",),
+            ("all_spans", "prepared", "slim", "index"), ("nil_threshold",),
             lambda d, p: link_mentions(
-                d["all_spans"], nil_threshold=p["nil_threshold"],
-                best=lookup_ops.best_links(d["slim"], d["prepared"], d.get("label_dict"),
-                                           index=d.get("index")))),
+                d["all_spans"], lookup_ops.best_links(d["slim"], d["prepared"], None,
+                                                      index=d["index"]),
+                nil_threshold=p["nil_threshold"])),
         "triples_raw": Stage(("linked", "kg_edges"), (), lambda d, p: extract_triples(
             d["linked"], d["kg_edges"], broadcast_edges)),
         "triples": Stage(("triples_raw", "canonical_map"), (), lambda d, p:
@@ -168,12 +168,16 @@ def _fingerprints(stages: dict[str, Stage], params: dict, sources: dict,
     """The sources' fingerprints (``known`` ones are not scanned), then
     each stage's from the params it reads and its deps' fingerprints."""
     frames = {k: v for k, v in sources.items() if isinstance(v, DataFrame) and k not in known}
-    index = sources["index"]
+    index = sources.get("index")  # absent when the index is a stage
     if index is not None and index.source_fp is None:
-        frames["index"] = index.names  # an in-memory index: hash its rows
+        # an in-memory index: hash its rows, the payload candidates read included
+        frames["index"] = index.names
+        if index.payload is not None:
+            frames["index_payload"] = index.payload
     fps = {**content_fingerprints(frames), **known}
     if index is not None:  # as in its _meta row: the snapshot, then build parameters
-        fps["index"] = _digest(index.source_fp or fps["index"], index.fuzzy is not None,
+        snapshot = index.source_fp or [fps["index"], fps.get("index_payload")]
+        fps["index"] = _digest(snapshot, index.fuzzy is not None,
                                index.limit_per_token, index.fuzzy_edits)
     for name, st in stages.items():  # table order: deps come first
         fps[name] = _digest({k: params[k] for k in st.params},
@@ -234,21 +238,23 @@ def run_pipeline(
         runner.metrics.append({
             "stage": "index_artifacts", "rows_out": None, "partitions": None,
             "duration_s": round(time.time() - t0, 3), "fingerprint": index.source_fp,
-            "inputs": ["kg_items"], "resumed": index.reused})
-    stages = _stages(index, broadcast_edges, runner.enabled)
+            "inputs": {"kg_items": index.source_fp}, "resumed": index.reused})
+    stages = _stages(broadcast_edges, runner.enabled)
     if kg_sameas is None:
         del stages["canonical_map"], stages["triples"]
-    if not any("label_dict" in st.deps for st in stages.values()):
-        del stages["label_dict"]
+    done = {"transcripts": transcripts, "kg_items": kg_items, "kg_edges": kg_edges,
+            "kg_sameas": kg_sameas}
+    if index is not None:  # a source: no stage builds it or reads label_dict
+        del stages["index"], stages["label_dict"]
+        done["index"] = index
     params = {"fuzzy": fuzzy, "nil_threshold": nil_threshold, "max_ntoken": max_ntoken,
               "limit_per_token": limit_per_token, "candidate_limit": candidate_limit}
-    done = {"transcripts": transcripts, "kg_items": kg_items, "kg_edges": kg_edges,
-            "kg_sameas": kg_sameas, "index": index}
     fps = _fingerprints(stages, params, done, known) if runner.enabled else {}
 
     def run_stage(name: str, st: Stage, deps: dict):
         build = partial(st.build, deps, {k: params[k] for k in st.params})
-        out = runner.run(name, build, fps.get(name, ""), st.deps) if st.checkpoint else build()
+        inputs = {d: fps.get(d) for d in st.deps}
+        out = runner.run(name, build, fps.get(name, ""), inputs) if st.checkpoint else build()
         return scoped_cache(out) if st.cache else out
 
     with ThreadPoolExecutor(max_workers=4) as pool:

@@ -63,19 +63,31 @@ def build_link_index(label_dict: DataFrame, index=None,
     Fuzzy=False: the index keys exact surfaces; candidate SCORING inside
     best_links still ranks the full token-match candidate set.
     """
+    from lamapi_spark.operators.indexes import LookupIndex
     from lamapi_spark.operators.lookup import (
         _prepare_mentions, best_links, token_match,
     )
+    if index is None:
+        index = LookupIndex.build(label_dict, fuzzy=False,
+                                  limit_per_token=limit_per_token)
     names = label_dict.select(F.col("name_norm").alias("mention")).distinct()
     prepared = _prepare_mentions(names, "mention")
-    slim = token_match(prepared, label_dict, fuzzy=False,
-                       limit_per_token=limit_per_token, index=index, slim=True)
+    slim = token_match(prepared, label_dict, fuzzy=False, index=index, slim=True)
     best = best_links(slim, prepared, label_dict, index=index)
     return best.select(
         F.col("mention_norm").alias("name_norm"),
         F.col("id").alias("entity"),
         "link_score",
     )
+
+
+def _read_stream(spark: SparkSession, path: str, schema: str,
+                 max_files_per_trigger: int | None) -> DataFrame:
+    """A parquet file stream of ``schema`` under ``path``."""
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.parquet(path)
 
 
 def _resolved_turns(stream: DataFrame, link_index: DataFrame,
@@ -125,10 +137,7 @@ def stream_link_mentions(
     (conv_id, turn_idx, ts, start, ntoken_span, surface, entity,
     link_score, nil). Append-mode-safe: the only stateful operator is
     the watermarked per-turn aggregation."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(path)
+    stream = _read_stream(spark, path, schema, max_files_per_trigger)
     turns = _resolved_turns(stream, link_index, watermark, max_ntoken)
     return turns.select(
         "conv_id", "turn_idx", "ts", F.explode("_ms").alias("m"),
@@ -160,10 +169,7 @@ def stream_extract_triples(
     (subj, obj); at scale the static side is the flat edges table,
     AQE-skew-handled exactly as in batch.
     """
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(path)
+    stream = _read_stream(spark, path, schema, max_files_per_trigger)
     turns = _resolved_turns(stream, link_index, watermark, max_ntoken)
     linked = F.filter("_ms", lambda s: s["link_score"] >= F.lit(nil_threshold))
     pairs = F.array_distinct(F.flatten(F.transform(
@@ -340,10 +346,7 @@ def stream_coref_resolve(
     """
     from lamapi_spark.pipeline.coref import token_occurrences
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(path)
+    stream = _read_stream(spark, path, schema, max_files_per_trigger)
     occ = token_occurrences(stream.withWatermark("ts", watermark),
                             entity_pattern, carry=("ts",))
     per_conv = (
@@ -409,10 +412,7 @@ def stream_tool_edges(
     -> (conv_id, turn_idx, tool, entity) for every resolvable tool
     turn of every closed session.
     """
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(path)
+    stream = _read_stream(spark, path, schema, max_files_per_trigger)
     first_ent = F.get(F.filter(
         F.split(F.trim(F.col("text")), r"\s+"),
         lambda t: t.rlike(entity_pattern)), 0)

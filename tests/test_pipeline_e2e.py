@@ -118,6 +118,8 @@ def test_resume_from_checkpoint(spark, fix, tmp_path):
     args = (spark, dfs["transcripts"], dfs["kg_items"], dfs["kg_edges"],
             dfs["kg_sameas"])
     out1 = run_pipeline(*args, checkpoint_dir=ckpt)
+    assert {m.get("reason") for m in out1["metrics"]
+            if m["stage"] != "index_artifacts"} == {"no checkpoint"}, out1["metrics"]
     t1 = sorted(tuple(r) for r in out1["triples"].collect())
     out2 = run_pipeline(*args, checkpoint_dir=ckpt)
     t2 = sorted(tuple(r) for r in out2["triples"].collect())
@@ -139,12 +141,19 @@ def test_resume_from_checkpoint(spark, fix, tmp_path):
     # and their descendants; the rest resume
     out3 = run_pipeline(*args, checkpoint_dir=ckpt, nil_threshold=0.5)
     assert _recomputed(out3) == {"linked", "triples_raw", "triples"}, out3["metrics"]
+    # the recorded reason: linked's own param, then the dep that changed
+    assert _reasons(out3) == {"linked": "params", "triples_raw": ["linked"],
+                              "triples": ["triples_raw"]}, out3["metrics"]
     fresh = run_pipeline(*args, nil_threshold=0.5)
     assert _triples(out3) == _triples(fresh)
 
 
 def _recomputed(out) -> set[str]:
     return {m["stage"] for m in out["metrics"] if not m["resumed"]}
+
+
+def _reasons(out) -> dict:
+    return {m["stage"]: m["reason"] for m in out["metrics"] if not m["resumed"]}
 
 
 def _triples(out) -> list[tuple]:
@@ -160,8 +169,8 @@ def test_resume_after_input_change(spark, fix, tmp_path, in_memory_index,
     returns the half's triples: every stage that reads transcripts
     recomputes, the dictionary-side stages resume. Covers the default
     index artifacts, a caller's in-memory index (no _meta row) and no
-    index. label_dict is a stage only where a stage reads it: without an
-    index, and for the in-memory index, which has no payload table."""
+    index. label_dict is a stage only without an index: an index given
+    to the run, in-memory or an artifact, carries its payload table."""
     from lamapi_spark.operators.indexes import LookupIndex
 
     kg, dfs = fix
@@ -179,9 +188,10 @@ def test_resume_after_input_change(spark, fix, tmp_path, in_memory_index,
     assert _triples(out) == _triples(fresh) and _triples(fresh)
     assert _recomputed(out) == {"mentions", "oov_mentions", "candidates",
                                 "linked", "triples_raw", "triples"}, out["metrics"]
+    assert _reasons(out)["mentions"] == ["transcripts"], out["metrics"]
     stages = {m["stage"] for m in out["metrics"]}
     assert "canonical_map" in stages
-    assert ("label_dict" in stages) == (in_memory_index or not use_index_artifacts)
+    assert ("label_dict" in stages) == (not use_index_artifacts)
     assert out["label_dict"].count() == build_label_dict(dfs["kg_items"]).count()
 
 
@@ -197,8 +207,58 @@ def test_truncated_sidecar_recomputes(spark, fix, tmp_path):
     sidecar.write_text(sidecar.read_text()[:20])
     out = run_pipeline(*args, checkpoint_dir=str(ckpt))
     assert _recomputed(out) == {"linked"}, out["metrics"]
+    assert _reasons(out) == {"linked": "unreadable sidecar"}
     assert _triples(out) == want
     assert json.loads(sidecar.read_text())["stage"] == "linked"
+
+
+def test_no_index_run_builds_one_index(spark, fix, monkeypatch):
+    """Without an index, one in-memory LookupIndex serves every
+    match-path stage of a pipeline run, and build_link_index builds one
+    too: each calls LookupIndex.build exactly once."""
+    from lamapi_spark.operators.indexes import LookupIndex
+    from lamapi_spark.streaming.kg import build_link_index
+
+    kg, dfs = fix
+    calls = []
+    build = LookupIndex.build
+
+    def counted(*a, **kw):
+        calls.append(kw)
+        return build(*a, **kw)
+
+    monkeypatch.setattr(LookupIndex, "build", staticmethod(counted))
+    out = run_pipeline(spark, dfs["transcripts"], dfs["kg_items"], dfs["kg_edges"],
+                       dfs["kg_sameas"], use_index_artifacts=False)
+    assert calls == [{"fuzzy": True, "limit_per_token": 100, "fuzzy_edits": 1}]
+    assert out["triples"].count() > 0
+    calls.clear()
+    build_link_index(build_label_dict(dfs["kg_items"]))
+    assert len(calls) == 1
+
+
+def test_in_memory_index_fingerprint_covers_payload(spark, fix):
+    """A caller's in-memory index fingerprints its payload rows too: a
+    dictionary that differs only in one entity's description changes the
+    index fingerprint, so the candidates that carry it recompute."""
+    from lamapi_spark.operators.indexes import LookupIndex
+    from lamapi_spark.pipeline.run import _fingerprints, _stages
+
+    kg, dfs = fix
+    ld = build_label_dict(dfs["kg_items"])
+    first = ld.select("entity").orderBy("entity").head()[0]
+    edited = ld.withColumn("description", F.when(
+        F.col("entity") == first, F.lit("edited")).otherwise(F.col("description")))
+    stages = _stages(True, True)
+    del stages["index"], stages["label_dict"]
+    params = {"fuzzy": True, "nil_threshold": 1.0, "max_ntoken": 4,
+              "limit_per_token": 100, "candidate_limit": 100}
+    fps = [_fingerprints(stages, params, {"index": LookupIndex.build(d)},
+                         {k: "" for k in ("transcripts", "kg_items", "kg_edges",
+                                          "kg_sameas")})
+           for d in (ld, edited)]
+    assert fps[0]["index"] != fps[1]["index"]
+    assert fps[0]["candidates"] != fps[1]["candidates"]
 
 
 def test_filtered_read_changes_fingerprint(spark, fix, tmp_path):

@@ -337,6 +337,56 @@ def test_bucketed_index_artifacts_parity(spark):
                prepared=prepared, match=match).collect()
 
 
+@pytest.fixture(scope="module")
+def payload_kg(spark):
+    from lamapi_spark.operators.label_dict import build_label_dict
+    from lamapi_spark.pipeline.fixtures import build_kg, kg_dataframes
+
+    kg = build_kg(seed=7, n_people=40, n_orgs=15, n_locs=8, n_films=25)
+    dfs = kg_dataframes(spark, kg)
+    return build_label_dict(dfs["kg_items"]).cache(), dfs["kg_items"]
+
+
+def test_in_memory_index_carries_payload(spark, payload_kg):
+    """LookupIndex.build returns the frames an artifact holds, payload
+    included: the same payload rows as the written artifact, and None
+    for a match-only dictionary, which lookup() refuses at entry."""
+    from lamapi_spark.operators.indexes import LookupIndex
+    from lamapi_spark.operators.lookup import lookup
+
+    ld, items = payload_kg
+    mem = LookupIndex.build(ld, fuzzy=True, limit_per_token=50, fuzzy_edits=1)
+    art = LookupIndex.write(ld, prefix="t_r2_idx_payload", n_buckets=4, fuzzy=True,
+                            limit_per_token=50, fuzzy_edits=1)
+    rows = sorted((tuple(r) for r in mem.payload.collect()), key=str)
+    assert rows == sorted((tuple(r) for r in art.payload.collect()), key=str)
+    assert len(rows) == art.n_entities == ld.select("entity").distinct().count()
+
+    minimal = ld.select("entity", "name", "name_norm", "popularity", "is_alias")
+    assert LookupIndex.build(minimal, fuzzy=False).payload is None
+    mentions = spark.createDataFrame([("acme",)], "mention string")
+    with pytest.raises(ValueError, match="payload table"):
+        lookup(mentions, minimal, items)
+
+
+def test_in_memory_lookup_uncovered_match_raises(spark, payload_kg):
+    """A match= frame naming an entity that the in-memory index's
+    dictionary lacks raises, as with an artifact, instead of dropping
+    that entity's rows."""
+    from lamapi_spark.operators.lookup import _prepare_mentions, lookup, token_match
+
+    ld, items = payload_kg
+    mentions = spark.createDataFrame(
+        [("the blue film",), ("jon smith",), ("acme",)], "mention string")
+    prepared = _prepare_mentions(mentions)
+    match = token_match(prepared, ld, fuzzy=True, limit_per_token=50,
+                        fuzzy_edits=1, slim=True)
+    small = ld.filter(F.col("entity") != match.select("entity").head()[0])
+    with pytest.raises(Exception, match="missing from the index payload"):
+        lookup(mentions, small, items, fuzzy=True, limit_per_token=50,
+               fuzzy_edits=1, prepared=prepared, match=match).collect()
+
+
 def test_pipeline_with_index_artifacts_matches_default(spark, tmp_path):
     """run_pipeline with index artifacts (now the DEFAULT plan) must emit
     byte-identical triples to the broadcast opt-out path."""

@@ -56,6 +56,35 @@ def test_index_meta_roundtrip_and_validation(spark, small_kg):
     assert not LookupIndex.exists(spark, "t_r3_absent")
 
 
+def test_index_load_without_meta_raises(spark, small_kg):
+    """An artifact whose _meta sidecar is gone has unknown build
+    parameters: load() raises and asks for a rebuild, with or without
+    explicit parameters, and exists() reports no usable artifact."""
+    LookupIndex.write(small_kg["label_dict"], prefix="t_r3_nometa",
+                      n_buckets=2, fuzzy=False, limit_per_token=7)
+    spark.sql("DROP TABLE t_r3_nometa_meta")
+    with pytest.raises(ValueError, match="no _meta sidecar; rebuild"):
+        LookupIndex.load(spark, "t_r3_nometa")
+    with pytest.raises(ValueError, match="no _meta sidecar; rebuild"):
+        LookupIndex.load(spark, "t_r3_nometa", fuzzy=False, limit_per_token=7,
+                         fuzzy_edits=1)
+    assert not LookupIndex.exists(spark, "t_r3_nometa")
+
+
+def test_index_without_payload_table_is_rebuilt(spark, small_kg):
+    """An artifact that lost its payload table (lookup() refuses an index
+    without one) is not reusable: build_index_artifacts rebuilds it."""
+    from lamapi_spark.pipeline.run import build_index_artifacts
+
+    build_index_artifacts(spark, small_kg["kg_items"], prefix="t_r3_nopayload",
+                          n_buckets=2, reuse=False)
+    spark.sql("DROP TABLE t_r3_nopayload_payload")
+    assert not LookupIndex.exists(spark, "t_r3_nopayload")
+    idx = build_index_artifacts(spark, small_kg["kg_items"], prefix="t_r3_nopayload",
+                                n_buckets=2)
+    assert not idx.reused and idx.payload is not None
+
+
 # -------------------------------------- cross-session artifact persistence
 
 

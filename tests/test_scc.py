@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import random
 
+import pytest
+
 from lamapi_spark.ops.graph import strongly_connected_components
 
 
@@ -93,6 +95,25 @@ def test_self_loop_and_singleton(spark):
     edges = [("a", "a"), ("a", "b")]
     got = run_op(spark, edges)
     assert got == {"a": "a", "b": "b"}
+
+
+def test_round_caps_raise(spark):
+    """A loop still changing at its cap raises instead of returning a
+    partial or wrong answer. A 4-node path peels one node per outer
+    round and its forward colouring needs 4 rounds; one round on a
+    3-cycle leaves c coloured b, which would peel a alone."""
+    path = spark.createDataFrame([("a", "b"), ("b", "c"), ("c", "d")],
+                                 "src string, dst string")
+    with pytest.raises(ValueError, match="max_outer=3"):
+        strongly_connected_components(path, max_outer=3)
+    with pytest.raises(ValueError, match="max_inner=2"):
+        strongly_connected_components(path, max_inner=2)
+    cycle = spark.createDataFrame([("a", "b"), ("b", "c"), ("c", "a")],
+                                  "src string, dst string")
+    with pytest.raises(ValueError, match="max_inner=1"):
+        strongly_connected_components(cycle, max_inner=1)
+    got = strongly_connected_components(path, max_outer=4, max_inner=4).collect()
+    assert {r.node: r.scc for r in got} == {v: v for v in "abcd"}
 
 
 # ---------------------------------------------------- type inference
