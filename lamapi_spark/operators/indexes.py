@@ -219,6 +219,13 @@ class LookupIndex:
             # process, different metastore) makes saveAsTable fail with
             # LOCATION_ALREADY_EXISTS — drop the orphan first
             clean_stale_location(spark, f"{prefix}_{name}")
+            # the overwrite replaces the table's files, and saveAsTable
+            # refreshes only the catalog entry: a frame cached on the old
+            # files (scoped_cache with no scope active) would stand in for
+            # the same plan over the new table and read deleted files.
+            # uncacheTable cascades to every cached frame built on it.
+            if spark.catalog.tableExists(f"{prefix}_{name}"):
+                spark.catalog.uncacheTable(f"{prefix}_{name}")
             if count_key is not None:
                 obs = Observation(f"idx_write_{prefix}_{name}")
                 observations[count_key] = obs
@@ -395,11 +402,13 @@ class LookupIndex:
         return df.hint("shuffle_hash")
 
     def label_side(self, df: DataFrame) -> DataFrame:
-        """How consumers join a frame read from ``label_dict`` itself
-        (the per-label-row columns a request filter needs): broadcast for
-        an in-memory index; with a bucketed one the dictionary is presumed
-        too big to broadcast, so the join is left to the planner (it
-        shuffles on the join key, AQE picks the strategy)."""
+        """How consumers join a frame read from ``label_dict`` itself.
+        Its one caller is lookup()'s ``language`` filter, the only
+        per-label-row filter (the per-entity filters read ``payload``):
+        broadcast for an in-memory index; with a bucketed one the
+        dictionary is presumed too big to broadcast, so the join is left
+        to the planner (it shuffles on the join key, AQE picks the
+        strategy)."""
         return df if self.bucketed else F.broadcast(df)
 
     # ----------------------------------------------------------- delta

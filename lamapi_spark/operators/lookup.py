@@ -33,8 +33,10 @@ Scale (the round-2 architecture):
   index decides each join (LookupIndex.probe_side / bounded_side /
   label_side), so no function here takes a broadcast flag.
 - ranking + limit truncation run on the NARROW match (popularity rides
-  the slim aggregate); the wide payload and precomputed token/3-gram
-  similarity sets attach only to the <=limit survivors.
+  the slim aggregate); the entity payload comes from the index's payload
+  table only, through one guarded attach: after the per-entity dedup,
+  or, when a request filter needs it, before ranking (ES filters before
+  it ranks). Name similarity sets are in-row expressions.
 - linking does not consume the response at all: ``best_links`` takes
   the argmax over the FULL un-truncated match with a sort-free two-pass
   aggregation.
@@ -46,7 +48,9 @@ skew; posting lists are pruned top-K-per-token at artifact build
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from lamapi_spark.functions import (
@@ -89,10 +93,15 @@ def token_match(mentions_prepared: DataFrame, label_dict: DataFrame,
                 limit_per_token: int | None = None,
                 fuzzy_edits: int = 2,
                 index: LookupIndex | None = None,
-                slim: bool = False) -> DataFrame:
-    """OR-of-tokens match: one row per (mention, dictionary row) sharing
-    >=1 token, with ``matched_tokens`` (count of distinct mention tokens
-    found in the name) and ``fuzzy_matched`` counts.
+                slim: bool = True) -> DataFrame:
+    """OR-of-tokens match: the SLIM frame, one row per (mention,
+    dictionary row) sharing >=1 token — (mention_norm, entity, name,
+    is_alias, matched_tokens, matched_tokens_any, popularity, name_norm).
+    ``matched_tokens`` counts the distinct mention tokens found exactly
+    in the name, ``matched_tokens_any`` those found within the fuzzy
+    band. The payload is not attached here: lookup() attaches the index
+    payload to the ranked survivors. ``slim`` is kept for callers that
+    pass it; only True is accepted.
 
     This is J1 — the core join. Exact arm joins tokens directly; the
     fuzzy arm joins deletion-neighborhood variants then post-filters by
@@ -106,6 +115,9 @@ def token_match(mentions_prepared: DataFrame, label_dict: DataFrame,
     Without one, the in-memory index is built from ``label_dict``, and
     every dictionary-side frame broadcasts.
     """
+    if not slim:
+        raise ValueError("token_match() returns only the slim match; "
+                         "lookup() attaches the payload")
     if index is not None:
         if fuzzy and index.fuzzy is None:
             raise ValueError("fuzzy lookup requires an index built with fuzzy=True")
@@ -247,16 +259,11 @@ def token_match(mentions_prepared: DataFrame, label_dict: DataFrame,
         # while the payload re-attaches via a cheap broadcast join
         from lamapi_spark.pipeline.cache_registry import scoped_cache
         agg = scoped_cache(agg)
-    if slim:
-        # narrow candidate frame: ranking, truncation, and the mention-
-        # level features all run on this; the caller attaches payload to
-        # the survivors only (label_dict invariant: name_norm ==
-        # clean_str(name), so the slim frame recomputes it per row
-        # instead of joining for it)
-        return agg
-    # payload re-attach from label_dict: see LookupIndex.label_side
-    payload = index.label_side(label_dict.select(*_DICT_COLS))
-    return agg.drop("popularity", "name_norm").join(payload, _KEY, "inner")
+    # narrow candidate frame: ranking, truncation, and the mention-level
+    # features all run on this (label_dict invariant: name_norm ==
+    # clean_str(name), so the slim frame recomputes it per row instead
+    # of joining for it)
+    return agg
 
 
 def mention_features(candidates: DataFrame, mentions_prepared: DataFrame) -> DataFrame:
@@ -556,7 +563,16 @@ def lookup(
 
     ``index``: the prebuilt :class:`LookupIndex` to probe; without one
     the in-memory index is built from ``label_dict``. Either way it must
-    carry a payload table (a dictionary with the payload columns)."""
+    carry a payload table (a dictionary with the payload columns): every
+    candidate's description/kind/NERtype/types, and the ``kind`` /
+    ``ner_type`` / ``types`` filters, read it. ``label_dict`` itself is
+    read only to build an in-memory index, for the ``language`` filter
+    (the one per-label-row filter) and for ``requested_ids``; a call that
+    needs it without one raises a ValueError at entry."""
+    if label_dict is None and (index is None or language is not None
+                               or requested_ids is not None):
+        raise ValueError("lookup() reads label_dict to build an in-memory index, "
+                         "for the language filter and for requested_ids: pass it")
     if index is None:
         index = LookupIndex.build(label_dict, fuzzy=fuzzy,
                                   limit_per_token=limit_per_token,
@@ -580,35 +596,64 @@ def lookup(
     base_match = cand.filter(F.col("matched_tokens") > 0) if fuzzy else cand
     feats = mention_features(base_match, prepared)
 
-    # payload columns (description, kind, NERtype, types, length, ntoken,
-    # language + precomputed similarity sets). Attached EARLY only when a
-    # request filter needs a payload column (the reference's ES query
-    # filters before ranking); otherwise ranking + limit-truncation run
-    # on the narrow match and the payload joins only the survivors —
-    # at 10^5 surfaces x 10^2 candidates that is the difference between
-    # sorting 33M wide rows and 33M narrow ones.
+    def attach_payload(df: DataFrame, keep: Column = F.lit(True)) -> DataFrame:
+        # The entity payload (description/kind/NERtype/types) depends on
+        # the entity alone and comes from the index's payload table (a
+        # bucketed artifact: no dictionary-side shuffle), on the single
+        # entity key. Broadcast decision from the PERSISTED entity count
+        # (see LookupIndex.bounded_side): small dictionary -> broadcast;
+        # huge dictionary -> shuffle_hash probes the bucketed payload.
+        #
+        # coverage guard: the payload covers every candidate by
+        # construction ONLY when the match came from the same index. A
+        # caller-supplied match= from a different source (e.g. main+delta
+        # union against a main-only payload) must fail LOUDLY, not lose
+        # rows — so the attach is a left join carrying a sentinel that a
+        # filter requires non-null. A filter, not an assert_true column:
+        # a check column that nothing reads is pruned by the optimizer
+        # and never runs. Covered case: identical rows to an inner join
+        # at one boolean column of extra cost. ``keep`` (the request
+        # filters on payload columns) sits in the same CASE expression:
+        # as a separate filter it would reject NULL payload columns, and
+        # the optimizer would turn the left join into an inner one that
+        # drops uncovered rows before the guard sees them.
+        ent_payload = index.bounded_side(
+            index.payload.withColumn("_p_ok", F.lit(True)), index.n_entities)
+        return df.join(ent_payload, "entity", "left").filter(
+            F.when(F.col("_p_ok").isNull(), F.raise_error(F.concat(
+                F.lit("lookup(): candidate entity "), F.col("entity"),
+                F.lit(" missing from the index payload — match frame not "
+                      "covered by this index (stale or mismatched "
+                      "index?)")))).otherwise(keep)).drop("_p_ok")
+
+    # Request filters: the reference's ES query filters BEFORE ranking,
+    # so with a filter the payload attaches to the whole match here and
+    # the per-entity filters read its columns. Without one, ranking +
+    # limit-truncation run on the narrow match and the payload joins
+    # only the post-dedup survivors (below) — at 10^5 surfaces x 10^2
+    # candidates that is the difference between sorting 33M wide rows
+    # and 33M narrow ones.
     _KEY = ["entity", "name", "is_alias"]
-    payload_filtered = any(x is not None for x in (kind, ner_type, language, types))
-    if payload_filtered:
-        # filter path: the reference's ES query filters BEFORE ranking, and
-        # a language filter needs the per-label-row language list — only
-        # here does the full dictionary-row payload join the match early
-        payload = index.label_side(label_dict.select(
-            *_KEY, "description", "kind", "NERtype", "types", "length",
-            "ntoken", "language",
-            F.array_distinct(F.split("name_norm", " ")).alias("_n_tok_set"),
-            ngram_set("name_norm", 3).alias("_n_gram_set"),
-        ))
-        cand = cand.join(payload, _KEY, "inner")
-        if kind is not None:
-            cand = cand.filter(F.col("kind") == kind)
-        if ner_type is not None:
-            cand = cand.filter(F.col("NERtype") == ner_type)
-        if language is not None:
-            cand = cand.filter(F.array_contains("language", language))
-        if types is not None:
-            wanted = sorted(types.split(" "))
-            cand = cand.filter(F.arrays_overlap("types", F.array(*[F.lit(t) for t in wanted])))
+    keep = []
+    if kind is not None:
+        keep.append(F.col("kind") == kind)
+    if ner_type is not None:
+        keep.append(F.col("NERtype") == ner_type)
+    if types is not None:
+        wanted = sorted(types.split(" "))
+        keep.append(F.arrays_overlap("types", F.array(*[F.lit(t) for t in wanted])))
+    if language is not None:
+        # the one per-label-row filter: flag the match rows whose
+        # dictionary row lists the language; the guarded attach keeps
+        # them. A left join, like the attach: a semi-join would be
+        # pushed below the guard and drop uncovered rows unseen.
+        with_lang = (label_dict.filter(F.array_contains("language", language))
+                     .select(*_KEY, F.lit(True).alias("_lang")))
+        cand = cand.join(index.label_side(with_lang), _KEY, "left")
+        keep.append(F.col("_lang").isNotNull())
+    filtered = bool(keep)
+    if filtered:
+        cand = attach_payload(cand, reduce(Column.__and__, keep)).drop("_lang")
 
     # ES executes: sort popularity desc, truncate at `limit`, then
     # pos_score = rank/len and es_score = score/max_score over the
@@ -637,35 +682,23 @@ def lookup(
         .withColumn("pos_score", F.bround(F.col("_rank") / F.col("_n_hits"), 3))
         .withColumn("es_score", F.bround(F.col("_raw_score") / F.col("_max_score"), 3))
     )
-    if not payload_filtered:
-        # NARROW-LATE payload (round-5): length/ntoken and the name
-        # similarity sets are IN-ROW expressions over name/name_norm —
-        # the identical expressions the label_dict builder uses, so the
-        # values are bit-equal to the old payload join's columns — and
-        # the remaining payload (description/kind/NERtype/types) depends
-        # on the ENTITY alone, so it attaches after truncation AND the
-        # per-entity dedup, at the smallest point of the plan, on the
-        # single entity key. A 10^8-entity dictionary therefore never
-        # ships its wide rows (or precomputed n-gram arrays) through an
-        # exchange: the entity side is the index's payload table (a
-        # bucketed artifact: no dictionary-side shuffle), and
-        # the mention_norm partitioning of the match survives the
-        # ranking window, the dedup window, and the feats join unbroken.
-        cand = (
-            cand
-            .withColumn("length", F.length("name"))
-            .withColumn("ntoken", F.size(F.split("name", " ")))
-            .withColumn("_n_tok_set", F.array_distinct(F.split("name_norm", " ")))
-            .withColumn("_n_gram_set", ngram_set("name_norm", 3))
-        )
 
-    # String-similarity features on the cleaned label vs the mention.
-    # Token/3-gram sets come precomputed per distinct mention and (on
-    # the filter path) per dictionary row; per-row work is the
+    # length/ntoken and the name similarity sets are IN-ROW expressions
+    # over name/name_norm — the identical expressions the label_dict
+    # builder uses, so the values are bit-equal to its columns — so a
+    # 10^8-entity dictionary never ships its wide rows (or precomputed
+    # n-gram arrays) through an exchange, and the mention_norm
+    # partitioning of the match survives the ranking window, the dedup
+    # window, and the feats join unbroken. Token/3-gram sets come
+    # precomputed per distinct mention; per-row work is the
     # intersections only. Same values as jaccard_score /
     # jaccard_ngram_score by construction.
     cand = (
         cand
+        .withColumn("length", F.length("name"))
+        .withColumn("ntoken", F.size(F.split("name", " ")))
+        .withColumn("_n_tok_set", F.array_distinct(F.split("name_norm", " ")))
+        .withColumn("_n_gram_set", ngram_set("name_norm", 3))
         .withColumn("ed_score", ed_score("name_norm", "mention_norm"))
         .withColumn("jaccard_score", jaccard_arrays("_n_tok_set", "_m_tok_set"))
         .withColumn("jaccardNgram_score", jaccard_arrays("_n_gram_set", "_m_gram_set"))
@@ -689,32 +722,8 @@ def lookup(
     # the mention partitioning back (type resolution is a broadcast map,
     # the rest is projection).
     cand = cand.join(feats, "mention_norm", "left")
-
-    if not payload_filtered:
-        # broadcast decision from the PERSISTED entity count (see
-        # LookupIndex.bounded_side): small dictionary -> broadcast keeps
-        # the plan exchange-free end-to-end; huge dictionary ->
-        # shuffle_hash probes the bucketed payload artifact with no
-        # dictionary-side exchange.
-        #
-        # coverage guard: the payload covers every candidate by
-        # construction ONLY when the match came from the same index. A
-        # caller-supplied match= from a different source (e.g. main+delta
-        # union against a main-only payload) must fail LOUDLY, not lose
-        # rows — so the attach is a left join carrying a sentinel that a
-        # filter requires non-null. A filter, not an assert_true column:
-        # a check column that nothing reads is pruned by the optimizer
-        # and never runs. Covered case: identical rows to an inner join
-        # at one boolean column of extra cost.
-        ent_payload = index.bounded_side(
-            index.payload.withColumn("_p_ok", F.lit(True)), index.n_entities)
-        cand = cand.join(ent_payload, "entity", "left").filter(F.coalesce(
-            F.col("_p_ok"),
-            F.raise_error(F.concat(
-                F.lit("lookup(): candidate entity "), F.col("entity"),
-                F.lit(" missing from the index payload — match frame not "
-                      "covered by this index (stale or mismatched "
-                      "index?)"))))).drop("_p_ok")
+    if not filtered:
+        cand = attach_payload(cand)
 
     cand = resolve_type_names(cand, items)
 

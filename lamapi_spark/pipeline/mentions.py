@@ -37,7 +37,7 @@ AQE skew handling.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from lamapi_spark.functions import clean_str
@@ -82,6 +82,18 @@ def _spans(transcripts: DataFrame, max_ntoken: int,
         "conv_id", "turn_idx", *carry, F.explode(span_structs).alias("s")
     ).select("conv_id", "turn_idx", *carry,
              "s.start", "s.ntoken_span", "s.span")
+
+
+def _inside_longer_span(spans: str, s: Column) -> Column:
+    """The max-match predicate: True when span ``s`` lies strictly inside
+    a longer span of the array column ``spans`` (positions only: start,
+    ntoken_span)."""
+    return F.exists(
+        spans,
+        lambda o: (o["start"] <= s["start"])
+        & (o["start"] + o["ntoken_span"] >= s["start"] + s["ntoken_span"])
+        & (o["ntoken_span"] > s["ntoken_span"]),
+    )
 
 
 def detect_mentions(
@@ -189,12 +201,7 @@ def detect_mentions(
                 & ((o["edits"] < s["edits"])
                    | ((o["edits"] == s["edits"])
                       & (o["name_norm"] < s["name_norm"]))),
-            ) & ~F.exists(
-                "_ms",
-                lambda o: (o["start"] <= s["start"])
-                & (o["start"] + o["ntoken_span"] >= s["start"] + s["ntoken_span"])
-                & (o["ntoken_span"] > s["ntoken_span"]),
-            ),
+            ) & ~_inside_longer_span("_ms", s),
         )).alias("m"),
     ).select("conv_id", "turn_idx", "m.start", "m.ntoken_span",
              "m.surface", "m.name_norm", "m.edits")

@@ -14,7 +14,8 @@ artifact, or, with neither, the in-memory one that the ``index`` stage
 builds once from label_dict. The table also keys the resume check: a
 stage's fingerprint hashes the params it reads and its deps'
 fingerprints, down to the sources (the content of the input frames,
-and the lookup index's ``_meta`` row). A stage resumes only when its
+and the lookup index's ``_meta`` row, whose pruning parameters only the
+match-path stages after detection read). A stage resumes only when its
 recorded fingerprint equals the new one, so a changed input or
 parameter recomputes exactly the stages below it.
 """
@@ -25,6 +26,7 @@ import hashlib
 import json
 import time
 from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
+from contextlib import nullcontext
 from functools import partial
 from typing import Callable, NamedTuple
 
@@ -34,7 +36,7 @@ from pyspark.sql import functions as F
 import lamapi_spark.operators.lookup as lookup_ops
 from lamapi_spark.operators.indexes import LookupIndex
 from lamapi_spark.operators.label_dict import build_label_dict
-from lamapi_spark.pipeline.cache_registry import in_caller_scopes, scoped_cache
+from lamapi_spark.pipeline.cache_registry import CacheScope, in_caller_scopes, scoped_cache
 from lamapi_spark.pipeline.canonicalize import canonical_map, canonicalize_triples
 from lamapi_spark.pipeline.checkpoint import StageRunner, content_fingerprints
 from lamapi_spark.pipeline.linking import link_mentions
@@ -87,6 +89,9 @@ def build_index_artifacts(
 
 
 _SPAN = ("conv_id", "turn_idx", "start", "ntoken_span", "surface")
+# the in-memory index's fuzzy band, as build_index_artifacts builds it:
+# 2-edit neighborhoods are ~4x the variant volume for a tail of 2-edit typos
+_FUZZY_EDITS = 1
 
 
 class Stage(NamedTuple):
@@ -102,7 +107,8 @@ def _stages(broadcast_edges: bool, count_match: bool) -> dict[str, Stage]:
     declared deps and params. Every match-path stage reads ``index``:
     the caller's or the artifact's, or, when there is neither, the
     in-memory one that the ``index`` stage builds once from label_dict
-    (run_pipeline drops both stages when an index is given)."""
+    (run_pipeline drops label_dict, index and vocab when an index is
+    given); mention detection reads it as ``vocab``."""
     def slim(d, p):
         # ONE narrow match pass feeds the candidates and the linking
         match = lookup_ops.token_match(d["prepared"], None, fuzzy=p["fuzzy"],
@@ -115,19 +121,24 @@ def _stages(broadcast_edges: bool, count_match: bool) -> dict[str, Stage]:
         "canonical_map": Stage(("kg_sameas",), (), lambda d, p: canonical_map(d["kg_sameas"])),
         "label_dict": Stage(("kg_items",), (),
                             lambda d, p: build_label_dict(d["kg_items"]), cache=True),
-        # fuzzy_edits=1 as build_index_artifacts: 2-edit neighborhoods are
-        # ~4x the variant volume for a tail of 2-edit typos
         "index": Stage(("label_dict",), ("fuzzy", "limit_per_token"), checkpoint=False,
                        build=lambda d, p: LookupIndex.build(
                            d["label_dict"], fuzzy=p["fuzzy"],
-                           limit_per_token=p["limit_per_token"], fuzzy_edits=1)),
+                           limit_per_token=p["limit_per_token"],
+                           fuzzy_edits=_FUZZY_EDITS)),
+        # the same index, as mention detection reads it: the names, fuzzy
+        # names and token set, which pruning leaves unchanged (prune_index
+        # keeps >= 1 row per token). Its fingerprint omits limit_per_token
+        # and fuzzy_edits (_index_fps), so changing them resumes both
+        # detection stages.
+        "vocab": Stage(("index",), (), checkpoint=False, build=lambda d, p: d["index"]),
         "mentions": Stage(
-            ("transcripts", "index"), ("max_ntoken", "fuzzy"),
+            ("transcripts", "vocab"), ("max_ntoken", "fuzzy"),
             lambda d, p: detect_mentions(d["transcripts"], None, p["max_ntoken"],
-                                         p["fuzzy"], index=d["index"])),
+                                         p["fuzzy"], index=d["vocab"])),
         "oov_mentions": Stage(
-            ("transcripts", "index"), (),
-            lambda d, p: detect_oov_mentions(d["transcripts"], None, index=d["index"])),
+            ("transcripts", "vocab"), (),
+            lambda d, p: detect_oov_mentions(d["transcripts"], None, index=d["vocab"])),
         "all_spans": Stage(
             ("mentions", "oov_mentions"), (), checkpoint=False, build=lambda d, p:
             d["mentions"].select(*_SPAN).unionByName(d["oov_mentions"].select(*_SPAN))),
@@ -163,10 +174,21 @@ def _digest(*parts) -> str:
     return hashlib.sha256(json.dumps(parts, default=str).encode()).hexdigest()[:16]
 
 
+def _index_fps(snapshot, fuzzy: bool, limit_per_token, fuzzy_edits) -> dict[str, str]:
+    """A lookup index's two fingerprints, from what its _meta row
+    records: ``vocab`` covers the dictionary snapshot and ``fuzzy`` (the
+    names and tokens it knows), ``index`` also the pruning K and the
+    fuzzy band."""
+    vocab = _digest(snapshot, fuzzy)
+    return {"vocab": vocab, "index": _digest(vocab, limit_per_token, fuzzy_edits)}
+
+
 def _fingerprints(stages: dict[str, Stage], params: dict, sources: dict,
                   known: dict[str, str]) -> dict[str, str]:
     """The sources' fingerprints (``known`` ones are not scanned), then
-    each stage's from the params it reads and its deps' fingerprints."""
+    each stage's from the params it reads and its deps' fingerprints.
+    The index, a source or the in-memory stage, gets both of
+    :func:`_index_fps`' fingerprints from its build attributes."""
     frames = {k: v for k, v in sources.items() if isinstance(v, DataFrame) and k not in known}
     index = sources.get("index")  # absent when the index is a stage
     if index is not None and index.source_fp is None:
@@ -175,13 +197,17 @@ def _fingerprints(stages: dict[str, Stage], params: dict, sources: dict,
         if index.payload is not None:
             frames["index_payload"] = index.payload
     fps = {**content_fingerprints(frames), **known}
-    if index is not None:  # as in its _meta row: the snapshot, then build parameters
+    if index is not None:  # a caller's index: its own attributes, not the run's
         snapshot = index.source_fp or [fps["index"], fps.get("index_payload")]
-        fps["index"] = _digest(snapshot, index.fuzzy is not None,
-                               index.limit_per_token, index.fuzzy_edits)
+        fps.update(_index_fps(snapshot, index.fuzzy is not None,
+                              index.limit_per_token, index.fuzzy_edits))
     for name, st in stages.items():  # table order: deps come first
-        fps[name] = _digest({k: params[k] for k in st.params},
-                            [fps[d] for d in st.deps])
+        if name == "index":  # built here, from label_dict and the run's params
+            fps.update(_index_fps(fps["label_dict"], params["fuzzy"],
+                                  params["limit_per_token"], _FUZZY_EDITS))
+        elif name != "vocab":  # set with index
+            fps[name] = _digest({k: params[k] for k in st.params},
+                                [fps[d] for d in st.deps])
     return fps
 
 
@@ -245,8 +271,8 @@ def run_pipeline(
     done = {"transcripts": transcripts, "kg_items": kg_items, "kg_edges": kg_edges,
             "kg_sameas": kg_sameas}
     if index is not None:  # a source: no stage builds it or reads label_dict
-        del stages["index"], stages["label_dict"]
-        done["index"] = index
+        del stages["index"], stages["vocab"], stages["label_dict"]
+        done["index"] = done["vocab"] = index
     params = {"fuzzy": fuzzy, "nil_threshold": nil_threshold, "max_ntoken": max_ntoken,
               "limit_per_token": limit_per_token, "candidate_limit": candidate_limit}
     fps = _fingerprints(stages, params, done, known) if runner.enabled else {}
@@ -257,7 +283,13 @@ def run_pipeline(
         out = runner.run(name, build, fps.get(name, ""), inputs) if st.checkpoint else build()
         return scoped_cache(out) if st.cache else out
 
-    with ThreadPoolExecutor(max_workers=4) as pool:
+    # With checkpoints every frame returned reads its checkpoint, so the
+    # run's caches are released with it: left in the session, a cached
+    # frame whose plan reads a checkpoint dir would stand in for the same
+    # plan in a later run that rewrites that dir, and recompute from
+    # deleted files.
+    with CacheScope() if runner.enabled else nullcontext(), \
+            ThreadPoolExecutor(max_workers=4) as pool:
         _schedule(stages, done, in_caller_scopes(run_stage), pool)
     if kg_sameas is None:
         done.update(triples=done["triples_raw"], canonical_map=spark.createDataFrame(

@@ -44,7 +44,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lamapi_spark.pipeline.mentions import _spans
+from lamapi_spark.pipeline.mentions import _inside_longer_span, _spans
 
 TRANSCRIPT_SCHEMA = ("conv_id string, turn_idx int, role string, "
                      "text string, tool string, ts timestamp")
@@ -107,19 +107,10 @@ def _resolved_turns(stream: DataFrame, link_index: DataFrame,
             "start", "ntoken_span", F.col("span").alias("surface"),
             "entity", "link_score")).alias("_all"))
     # max-match: drop spans strictly contained in a longer matched span
-    # (same predicate as batch detect_mentions, positions only)
+    # (the batch detect_mentions predicate)
     return per_turn.select(
         "conv_id", "turn_idx", "ts",
-        F.filter(
-            "_all",
-            lambda s: ~F.exists(
-                "_all",
-                lambda o: (o["start"] <= s["start"])
-                & (o["start"] + o["ntoken_span"]
-                   >= s["start"] + s["ntoken_span"])
-                & (o["ntoken_span"] > s["ntoken_span"]),
-            ),
-        ).alias("_ms"),
+        F.filter("_all", lambda s: ~_inside_longer_span("_all", s)).alias("_ms"),
     )
 
 

@@ -95,8 +95,16 @@ def test_lookup_fuzzy_parity(spark, kg_ctx):
 
 
 def test_lookup_filters_parity(spark, kg_ctx):
+    """Each filter set through the in-memory index and through a written
+    artifact; the per-entity filters read the index payload, so they
+    also run without label_dict, which only the language filter needs."""
+    from lamapi_spark.operators.indexes import LookupIndex
+
     kg, dfs, label_dict, dict_rows, type_names = kg_ctx
     pers_label = next(kg.label_of[q] for q in kg.ner_of if kg.ner_of[q] == "PERS")
+    mem = LookupIndex.build(label_dict, fuzzy=False)
+    art = LookupIndex.write(label_dict, prefix="t_lookup_filters_idx", n_buckets=4,
+                            fuzzy=False)
     for kw in (
         {"ner_type": "PERS"},
         {"kind": "entity"},
@@ -104,9 +112,16 @@ def test_lookup_filters_parity(spark, kg_ctx):
         {"types": "Q5"},
         {"limit": 3},
     ):
-        spark_res = _spark_candidates(spark, dfs, label_dict, [pers_label], **kw)
         oracle_res = _oracle_candidates(dict_rows, type_names, [pers_label], **kw)
-        _compare(spark_res, oracle_res)
+        runs = [(label_dict, {}), (label_dict, {"index": art})]
+        if "language" not in kw and "limit" not in kw:
+            runs += [(None, {"index": mem}), (None, {"index": art})]
+        for ld, idx in runs:
+            spark_res = _spark_candidates(spark, dfs, ld, [pers_label], **kw, **idx)
+            _compare(spark_res, oracle_res)
+    mdf = spark.createDataFrame([(pers_label,)], ["mention"])
+    with pytest.raises(ValueError, match="label_dict"):
+        lookup(mdf, None, dfs["kg_items"], language="en", index=art)
 
 
 def test_lookup_randomized_mentions_parity(spark, kg_ctx):

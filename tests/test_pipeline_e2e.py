@@ -194,6 +194,23 @@ def test_resume_after_input_change(spark, fix, tmp_path, in_memory_index,
     assert ("label_dict" in stages) == (not use_index_artifacts)
     assert out["label_dict"].count() == build_label_dict(dfs["kg_items"]).count()
 
+    # a changed pruning K: mention detection reads the index's names and
+    # token set, which pruning leaves unchanged, so both detection stages
+    # resume and the match-path stages recompute for their index dep. A
+    # caller's index keeps its own K, so there every stage resumes.
+    out50 = run_pipeline(spark, half, *kg_args, checkpoint_dir=ckpt,
+                         limit_per_token=50, **kw)
+    fresh50 = run_pipeline(spark, half, *kg_args, limit_per_token=50, **kw)
+    assert _triples(out50) == _triples(fresh50) and _triples(fresh50)
+    if in_memory_index:
+        assert _recomputed(out50) == set(), out50["metrics"]
+    else:  # the artifact path rebuilds its artifact for the new K
+        rebuilt = {"index_artifacts"} if use_index_artifacts else set()
+        assert _recomputed(out50) == {"candidates", "linked", "triples_raw",
+                                      "triples"} | rebuilt, out50["metrics"]
+        reasons = {m["stage"]: m.get("reason") for m in out50["metrics"]}
+        assert all("index" in reasons[s] for s in ("candidates", "linked")), reasons
+
 
 def test_truncated_sidecar_recomputes(spark, fix, tmp_path):
     """A stage whose metrics.json is unreadable (a kill during the

@@ -382,9 +382,13 @@ def test_in_memory_lookup_uncovered_match_raises(spark, payload_kg):
     match = token_match(prepared, ld, fuzzy=True, limit_per_token=50,
                         fuzzy_edits=1, slim=True)
     small = ld.filter(F.col("entity") != match.select("entity").head()[0])
-    with pytest.raises(Exception, match="missing from the index payload"):
-        lookup(mentions, small, items, fuzzy=True, limit_per_token=50,
-               fuzzy_edits=1, prepared=prepared, match=match).collect()
+    # a request filter attaches the payload before ranking: the same
+    # guard raises there, whatever the filter keeps
+    for kw in ({}, {"kind": "entity"}, {"ner_type": "PERS"}, {"types": "Q5"},
+               {"language": "en"}):
+        with pytest.raises(Exception, match="missing from the index payload"):
+            lookup(mentions, small, items, fuzzy=True, limit_per_token=50,
+                   fuzzy_edits=1, prepared=prepared, match=match, **kw).collect()
 
 
 def test_pipeline_with_index_artifacts_matches_default(spark, tmp_path):
