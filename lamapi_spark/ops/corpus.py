@@ -917,60 +917,13 @@ def collocations_g2(docs: DataFrame, text_col: str = "text",
                        F.bround(g2, 6).alias("g2"))
 
 
-def tfidf_keywords(docs: DataFrame, id_col: str = "doc_id",
-                   text_col: str = "text", k: int = 5) -> DataFrame:
-    """Per-document top-k TF-IDF keywords — the classic unsupervised
-    keyword extractor beside the graph-based conv_textrank (TF-IDF
-    needs corpus-wide document frequencies, TextRank only the one
-    document; a labeling pipeline wants both). Reference analogue:
-    none; builder's-brief corpus surface.
-
-    Scoring: tf = in-document term count (whitespace tokens of the
-    trimmed lowercase text — the shared eval tokenization),
-    idf = ln((N+1)/(df+1)) + 1 (the smooth sklearn-style variant:
-    strictly positive, corpus-size aware, no divide-by-zero knob),
-    score = bround(tf * idf, 6) with idf itself NOT pre-rounded (one
-    fixed-order float expression both engines share). Ties rank
-    deterministically (score desc, token asc).
-
-    Scale shape: one (doc, token) count agg (map-side combine), the
-    df frame RE-AGGREGATED from it — (doc, token) rows are already
-    distinct, so df = count(*) per token, never a second text scan —
-    one broadcast N, one token-keyed join (vocabulary-bounded right
-    side), and the top-k window partitioned BY DOCUMENT (bounded by
-    the document's own vocabulary — never a global sort). -> one row
-    per kept keyword (doc_id, token, tf, df, score, rk).
-    """
-    t = F.trim(F.lower(F.col(text_col)))
-    toks = (F.when(F.length(t) > 0, F.split(t, r"\s+"))
-            .otherwise(F.array().cast("array<string>")))
-    tf = (docs.select(F.col(id_col).alias("doc_id"),
-                      F.explode(toks).alias("token"))
-          .groupBy("doc_id", "token").agg(F.count("*").alias("tf")))
-    df_ = tf.groupBy("token").agg(F.count("*").alias("df"))
-    n = docs.select(F.countDistinct(F.col(id_col)).alias("_n"))
-    idf = (F.log((F.col("_n") + 1).cast("double")
-                 / (F.col("df") + 1).cast("double")) + 1.0)
-    scored = (tf.join(df_, "token")
-              .join(F.broadcast(n))
-              .select("doc_id", "token", "tf", "df",
-                      F.bround(F.col("tf").cast("double") * idf, 6)
-                      .alias("score")))
-    w = Window.partitionBy("doc_id").orderBy(
-        F.col("score").desc(), F.col("token").asc())
-    return (scored.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= k))
-
-
 def rake_keywords(docs: DataFrame, id_col: str = "doc_id",
                   text_col: str = "text", k: int = 3) -> DataFrame:
-    """Per-document RAKE keyword phrases (Rose et al. 2010) — the
-    third member of the keyword family: TF-IDF needs corpus df,
-    TextRank a token graph; RAKE needs only the document's own
-    stopword structure, and it returns PHRASES (candidate = maximal
+    """Per-document RAKE keyword phrases (Rose et al. 2010). TextRank
+    needs a token graph; RAKE needs only the document's own stopword
+    structure, and it returns PHRASES (candidate = maximal
     stopword-free token run), which is what a KG-construction
-    pipeline wants as surface forms. Reference analogue: none;
-    builder's-brief corpus surface beside tfidf_keywords.
+    pipeline wants as surface forms. Reference analogue: none.
 
     Conventions pinned: the shared eval tokenization (whitespace
     tokens of the trimmed lowercase text); candidates are maximal
@@ -1026,61 +979,6 @@ def rake_keywords(docs: DataFrame, id_col: str = "doc_id",
         F.col("score").desc(), F.col("phrase").asc())
     return (scored.withColumn("rk", F.row_number().over(w))
             .filter(F.col("rk") <= k))
-
-
-def log_odds_words(docs_a: DataFrame, docs_b: DataFrame,
-                   text_col: str = "text", alpha0: float = 1000.0,
-                   min_count: int = 5) -> DataFrame:
-    """Weighted log-odds distinctive vocabulary (Monroe, Colaresi &
-    Quinn 2008, "Fightin' Words"): which tokens distinguish corpus
-    slice A from slice B, with an informative Dirichlet prior drawn
-    from the POOLED counts — the principled replacement for raw
-    log-ratio term comparison (raw ratios explode on rare words; the
-    prior shrinks them), and the slice-drift diagnostic beside
-    psi_drift/js_divergence that names the TOKENS driving a shift.
-    Reference analogue: none; builder's-brief corpus surface.
-
-        a_w   = alpha0 * (y1 + y2) / (n1 + n2)
-        delta = ln((y1+a_w)/(n1+a0' - y1 - a_w))
-              - ln((y2+a_w)/(n2+a0' - y2 - a_w)),  a0' = alpha0
-        z     = delta / sqrt(1/(y1+a_w) + 1/(y2+a_w))
-
-    Counts are exact integers; a_w, delta, z are each ONE fixed-order
-    float chain shared with the oracle, bround 6. Tokens with pooled
-    count < min_count are dropped (the prior's job is shrinkage, not
-    resurrecting hapaxes).
-
-    Scale shape: one tokenize+count agg per side (map-side combine,
-    vocabulary-bounded results), one full-outer join on the token,
-    one 1-row broadcast of the two totals — no global window, no
-    second scan. -> one row per kept token (token, y1, y2, delta, z).
-    """
-    def counts(d: DataFrame, out: str) -> DataFrame:
-        t = F.trim(F.lower(F.col(text_col)))
-        toks = (F.when(F.length(t) > 0, F.split(t, r"\s+"))
-                .otherwise(F.array().cast("array<string>")))
-        return (d.select(F.explode(toks).alias("token"))
-                .groupBy("token").agg(F.count("*").alias(out)))
-
-    ca = counts(docs_a, "y1")
-    cb = counts(docs_b, "y2")
-    j = (ca.join(cb, "token", "full_outer")
-         .select("token", F.coalesce("y1", F.lit(0)).alias("y1"),
-                 F.coalesce("y2", F.lit(0)).alias("y2")))
-    # corpus totals BEFORE the min_count cut — the prior and the
-    # denominators see the whole slice, only the OUTPUT is trimmed
-    tot = j.agg(F.sum("y1").alias("_n1"), F.sum("y2").alias("_n2"))
-    w = (j.filter(F.col("y1") + F.col("y2") >= min_count)
-         .join(F.broadcast(tot)))
-    y1, y2 = F.col("y1").cast("double"), F.col("y2").cast("double")
-    n1, n2 = F.col("_n1").cast("double"), F.col("_n2").cast("double")
-    aw = alpha0 * (y1 + y2) / (n1 + n2)
-    delta = (F.log((y1 + aw) / (n1 + alpha0 - y1 - aw))
-             - F.log((y2 + aw) / (n2 + alpha0 - y2 - aw)))
-    z = delta / F.sqrt(1.0 / (y1 + aw) + 1.0 / (y2 + aw))
-    return w.select("token", "y1", "y2",
-                    F.bround(delta, 6).alias("delta"),
-                    F.bround(z, 6).alias("z"))
 
 
 def ngram_novelty(gen: DataFrame, train: DataFrame,

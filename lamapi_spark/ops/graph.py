@@ -1948,221 +1948,3 @@ def dyad_census(edges: DataFrame, src: str = "src",
         asym.cast("long").alias("asym"),
         (pairs - dec(mutual) - dec(asym)).cast("long").alias("nulls"),
         F.bround(rec, 6).alias("reciprocity"))
-
-
-def bipartite_check(edges: DataFrame, max_depth: int = 16) -> DataFrame:
-    """Per-component bipartiteness audit over undirected edges(src,
-    dst) — the structural sanity check for two-mode graphs a KG
-    pipeline builds constantly (conv <-> entity occurrence, user <->
-    item, doc <-> shingle): an odd cycle in a supposedly two-mode
-    projection means an upstream join leaked same-side pairs.
-    Reference analogue: none; builder's-brief graph surface.
-
-    Method: exact 2-coloring by BFS parity. Connected components
-    (hash-min fixpoint, pipeline/canonicalize.py) pick one
-    deterministic representative per component (the min node id);
-    multi-source BFS from ALL representatives at once (components are
-    disjoint, so each node's distance is from its own rep) colors
-    every node dist % 2; an undirected edge whose endpoints share a
-    parity witnesses an odd closed walk => an odd cycle => not
-    bipartite (the classic iff). Self-loops are odd cycles of length
-    1 and count directly. Everything is a pure function of the edge
-    set — no randomness, no order dependence.
-
-    Horizon honesty: BFS is bounded at ``max_depth``; nodes beyond it
-    have UNKNOWN parity, are excluded from the edge census, and are
-    reported per component as n_unreached — is_bipartite is NULL
-    (unverified), not a guess, whenever n_unreached > 0. Pick
-    max_depth >= the component eccentricity bound you believe.
-
-    Scale shape: the components fixpoint and level-synchronous BFS
-    are the shared loop machinery (localCheckpoint lineage, early
-    exit); the parity audit is two joins of the canonical edge list
-    against the (node, parity) frame — co-partitioned on node ids,
-    hub-safe. -> one row per component (component, n_nodes, n_edges,
-    odd_edges, n_unreached, is_bipartite).
-    """
-    from lamapi_spark.pipeline.canonicalize import connected_components
-
-    comp = connected_components(
-        edges.select(F.col("src").alias("a"), F.col("dst").alias("b")))
-    sym = (edges.select("src", "dst")
-           .unionByName(edges.select(F.col("dst").alias("src"),
-                                     F.col("src").alias("dst")))
-           .filter(F.col("src") != F.col("dst")).distinct())
-    reps = comp.filter(F.col("entity") == F.col("component")) \
-               .select(F.col("entity").alias("seed"))
-    dist = bfs_distances(sym, reps, max_depth=max_depth)
-    parity = dist.select("node", (F.col("dist") % 2).alias("par"))
-    nodes = comp.select(F.col("entity").alias("node"), "component")
-    per_node = (nodes.join(parity, "node", "left")
-                .select("node", "component", "par"))
-    # canonical undirected edge census (self-loops kept, counted odd)
-    ce = (edges.select(F.least("src", "dst").alias("x"),
-                       F.greatest("src", "dst").alias("y"))
-          .distinct())
-    ex = (ce.join(per_node.select(F.col("node").alias("x"),
-                                  "component",
-                                  F.col("par").alias("_px")), "x")
-          .join(per_node.select(F.col("node").alias("y"),
-                                F.col("par").alias("_py")), "y"))
-    known = F.col("_px").isNotNull() & F.col("_py").isNotNull()
-    odd = (known & ((F.col("x") == F.col("y"))
-                    | (F.col("_px") == F.col("_py")))).cast("long")
-    e_per = (ex.groupBy("component")
-             .agg(F.sum(known.cast("long")).alias("n_edges"),
-                  F.sum(odd).alias("odd_edges")))
-    n_per = (per_node.groupBy("component")
-             .agg(F.count("*").alias("n_nodes"),
-                  F.sum(F.col("par").isNull().cast("long"))
-                  .alias("n_unreached")))
-    j = n_per.join(e_per, "component", "left").select(
-        "component", "n_nodes",
-        F.coalesce("n_edges", F.lit(0)).alias("n_edges"),
-        F.coalesce("odd_edges", F.lit(0)).alias("odd_edges"),
-        "n_unreached")
-    verdict = F.when(F.col("n_unreached") > 0,
-                     F.lit(None).cast("boolean")) \
-               .otherwise(F.col("odd_edges") == 0)
-    return j.withColumn("is_bipartite", verdict)
-
-
-def stress_centrality(edges: DataFrame, seeds: DataFrame,
-                      max_depth: int = 8) -> DataFrame:
-    """Stress centrality (Shimbel): for each node v, the NUMBER of
-    shortest s->t paths passing through v as an interior node, summed
-    over the given source set — the exact-integer member of the
-    betweenness family. Betweenness proper divides per-pair by
-    sigma_st, which would put a float ratio inside an order-sensitive
-    sum; stress keeps every quantity an exact path COUNT, so the
-    result is bit-identical at any parallelism — the discipline this
-    engine holds everywhere. Pass every node as a seed for the exact
-    classic statistic, or an md5-sampled subset (the ego_net_sample
-    convention) for the pivot-sampled estimate at scale. Reference
-    analogue: none; builder's-brief graph surface beside
-    pagerank/HITS/harmonic centrality.
-
-    Brandes-style two phases, ALL SEEDS AT ONCE (state keyed by
-    (seed, node) — one job total, not one per source):
-      forward:  level-synchronous BFS carrying sigma[s,v] = #shortest
-                s->v paths (sum over predecessor frontier rows — a
-                map-side-combinable integer agg on (seed, dst));
-      backward: continuation counts c[s,v] = sum over shortest-DAG
-                successors w of (c[s,w] + 1), walked depth by depth
-                from the horizon down (each level is one equi-join of
-                the settled frame against the next level's).
-    stress(v) = sum_s sigma[s,v] * c[s,v] over v != s, accumulated in
-    DECIMAL(38,0) — exact integers, order-independent.
-
-    Scale shape: every step is a (seed/node)-keyed equi-join +
-    integer agg (hot hubs are ordinary AQE skew); per-level frames
-    localCheckpoint (the bfs_distances loop discipline); cost is
-    O(depth) joins over O(|seeds| * |frontier edges|) rows, the
-    textbook pivot-sampling trade. Paths are exact for nodes within
-    ``max_depth`` of a seed; pairs beyond the horizon contribute
-    nothing (the bounded-BFS convention, documented not hidden).
-    -> (node, stress) for every node reached from a DIFFERENT seed
-    (the v != s filter also drops a seed no other seed can reach).
-    """
-    ed = edges.select("src", "dst").distinct().localCheckpoint(eager=True)
-    # forward: settled (seed, node, dist, sigma)
-    settled = (seeds.select(F.col("seed")).distinct()
-               .select("seed", F.col("seed").alias("node"),
-                       F.lit(0).alias("dist"),
-                       F.lit(1).cast("decimal(38,0)").alias("sigma"))
-               .localCheckpoint(eager=True))
-    frontier = settled
-    levels = [settled]
-    for d in range(1, max_depth + 1):
-        nxt = (frontier.join(ed, frontier.node == ed.src)
-               .groupBy("seed", F.col("dst").alias("node"))
-               .agg(F.sum("sigma").alias("sigma"))
-               .join(settled.select("seed", "node"),
-                     ["seed", "node"], "left_anti")
-               .withColumn("dist", F.lit(d))
-               .select("seed", "node", "dist", "sigma")
-               .localCheckpoint(eager=True))
-        if nxt.limit(1).count() == 0:
-            break
-        settled = settled.unionByName(nxt).localCheckpoint(eager=True)
-        levels.append(nxt)
-        frontier = nxt
-    # backward: continuation counts per level, horizon down
-    zero = F.lit(0).cast("decimal(38,0)")
-    c_next = (levels[-1].select("seed", "node")
-              .withColumn("c", zero).localCheckpoint(eager=True))
-    acc = levels[-1].select(
-        "seed", "node", (F.col("sigma") * zero).alias("contrib"))
-    for lvl in reversed(levels[:-1]):
-        succ = (lvl.alias("v")
-                .join(ed, F.col("v.node") == ed.src)
-                .join(c_next.alias("w"),
-                      (F.col("dst") == F.col("w.node"))
-                      & (F.col("v.seed") == F.col("w.seed")))
-                .groupBy(F.col("v.seed").alias("seed"),
-                         F.col("v.node").alias("node"))
-                .agg(F.sum(F.col("w.c") + 1).alias("c")))
-        cur = (lvl.join(succ, ["seed", "node"], "left")
-               .select("seed", "node", "sigma",
-                       F.coalesce("c", zero).alias("c"))
-               .localCheckpoint(eager=True))
-        acc = acc.unionByName(
-            cur.select("seed", "node",
-                       (F.col("sigma") * F.col("c")).alias("contrib")))
-        c_next = cur.select("seed", "node", "c")
-    return (acc.filter(F.col("seed") != F.col("node"))
-            .groupBy("node")
-            .agg(F.coalesce(F.sum("contrib"), zero).alias("stress")))
-
-
-def community_conductance(edges: DataFrame,
-                          communities: DataFrame) -> DataFrame:
-    """Per-community conductance phi(S) = cut(S) / min(vol(S),
-    vol(V)-vol(S)) — the standard partition-quality score BESIDE
-    modularity_terms (modularity rewards density above a null model;
-    conductance directly measures the boundary a community leaks
-    through, the number RAG-cluster and blocking-key audits want).
-    Reference analogue: none; builder's-brief graph surface.
-
-    Census conventions: edges symmetrize to a canonical undirected
-    set (self-loops dropped — they are neither cut nor boundary);
-    both endpoints must carry a community label (the inner join —
-    unlabeled fringes are the caller's modeling decision, not a
-    silent 0); vol(S) counts edge ENDPOINTS in S (= sum of degrees),
-    cut(S) counts edges with exactly one endpoint in S. All exact
-    BIGINTs; conductance is ONE division rounded half-even to 6 dp,
-    0.0 when the min-volume side is empty (single-community graph).
-
-    Scale shape: one canonical-edge distinct, two node-keyed label
-    joins (co-partitioned, hub skew is AQE's), one community-keyed
-    agg, one 1-row total broadcast. -> (community, n_nodes, vol, cut,
-    conductance).
-    """
-    ce = (edges.select(F.least("src", "dst").alias("x"),
-                       F.greatest("src", "dst").alias("y"))
-          .filter(F.col("x") != F.col("y")).distinct())
-    lab = communities.select(F.col("node"), F.col("community"))
-    ex = (ce.join(lab.select(F.col("node").alias("x"),
-                             F.col("community").alias("_cx")), "x")
-          .join(lab.select(F.col("node").alias("y"),
-                           F.col("community").alias("_cy")), "y"))
-    # endpoint census: each edge contributes one endpoint row per side
-    ends = (ex.select(F.col("_cx").alias("community"),
-                      (F.col("_cx") != F.col("_cy")).alias("_cut"))
-            .unionByName(
-                ex.select(F.col("_cy").alias("community"),
-                          (F.col("_cx") != F.col("_cy")).alias("_cut"))))
-    per = (ends.groupBy("community")
-           .agg(F.count("*").alias("vol"),
-                F.sum(F.col("_cut").cast("long")).alias("cut")))
-    nn = lab.groupBy("community").agg(F.count("*").alias("n_nodes"))
-    tot = per.agg(F.sum("vol").alias("_tv"))
-    j = nn.join(per, "community", "left").join(F.broadcast(tot)).select(
-        "community", "n_nodes",
-        F.coalesce("vol", F.lit(0)).alias("vol"),
-        F.coalesce("cut", F.lit(0)).alias("cut"), "_tv")
-    mn = F.least(F.col("vol"), F.col("_tv") - F.col("vol"))
-    phi = F.when(mn > 0, F.bround(F.col("cut") / mn, 6)) \
-           .otherwise(F.lit(0.0))
-    return j.select("community", "n_nodes", "vol", "cut",
-                    phi.alias("conductance"))

@@ -1914,446 +1914,3 @@ def bio_span_f1(pred: DataFrame, gold: DataFrame, keys: list[str],
                          6)).otherwise(F.lit(0.0))
     return out.select("pred_spans", "gold_spans", "tp",
                       p.alias("p"), r.alias("r"), f1.alias("f1"))
-
-
-def brier_decomposition(scored: DataFrame, score_col: str = "score",
-                        label_col: str = "label",
-                        n_bins: int = 10) -> DataFrame:
-    """Brier score with the Murphy decomposition — the forecast-quality
-    companion to :func:`calibration_bins`' ECE: ECE says HOW FAR the
-    reliability curve sits from the diagonal; the decomposition says
-    WHERE the squared error comes from (Murphy 1973):
-
-        brier ~= reliability - resolution + uncertainty
-
-    reliability = (1/N) sum_k n_k (pbar_k - ybar_k)^2  (miscalibration,
-    want 0), resolution = (1/N) sum_k n_k (ybar_k - ybar)^2 (how much
-    the bins separate outcomes, want large), uncertainty =
-    ybar (1 - ybar) (the outcome's own variance — the floor no
-    forecaster beats). The identity is exact only when forecasts are
-    constant within a bin; with real-valued forecasts binned to
-    ``n_bins`` it holds up to a within-bin variance term, reported
-    honestly as ``decomp_gap``. Reference analogue: none;
-    builder's-brief eval surface beside isotonic_calibration.
-
-    Float discipline: per-row brier terms bround((p-y)^2, 12) summed in
-    DECIMAL(38,12); per-bin means are single divisions over exact
-    counts and a DECIMAL(28,9) sum of bround(p, 9); per-bin rel/res
-    terms are ONE fixed-order float expression bround'ed to 9 dp and
-    summed in DECIMAL(28,9) — order-independent everywhere, so
-    partitioning cannot move any output digit. All outputs bround 6.
-
-    Scale shape: ONE pass builds the per-bin frame (n_bins cells with
-    map-side combine; the brier sum rides the same agg), then a 1-row
-    broadcast of the global mean joins back — no second scan, no
-    driver loop. -> ONE row (n, n_bins, brier, reliability,
-    resolution, uncertainty, decomp_gap).
-    """
-    p = F.col(score_col).cast("double")
-    y = F.col(label_col).cast("long")
-    b = F.least(F.floor(p * n_bins).cast("int"), F.lit(n_bins - 1))
-    per_bin = (scored.select(b.alias("bin"), p.alias("p"), y.alias("y"))
-               .groupBy("bin")
-               .agg(F.count("*").alias("n_k"),
-                    F.sum("y").alias("sum_y"),
-                    F.sum(F.bround(F.col("p"), 9).cast("decimal(28,9)"))
-                    .alias("sum_p"),
-                    F.sum(F.bround((F.col("p") - F.col("y"))
-                                   * (F.col("p") - F.col("y")), 12)
-                          .cast("decimal(38,12)")).alias("sum_sq")))
-    tot = per_bin.agg(F.sum("n_k").alias("_n"),
-                      F.sum("sum_y").alias("_sy"),
-                      F.sum("sum_sq").alias("_ssq"))
-    w = per_bin.join(F.broadcast(tot))
-    pbar = F.col("sum_p").cast("double") / F.col("n_k")
-    ybar_k = F.col("sum_y").cast("double") / F.col("n_k")
-    ybar = F.col("_sy").cast("double") / F.col("_n")
-    rel_t = F.bround(F.col("n_k") * (pbar - ybar_k) * (pbar - ybar_k), 9)
-    res_t = F.bround(F.col("n_k") * (ybar_k - ybar) * (ybar_k - ybar), 9)
-    agg = (w.groupBy("_n", "_sy", "_ssq")
-           .agg(F.sum(rel_t.cast("decimal(28,9)")).alias("_rel"),
-                F.sum(res_t.cast("decimal(28,9)")).alias("_res")))
-    n_d = F.col("_n").cast("double")
-    brier = F.bround(F.col("_ssq").cast("double") / n_d, 6)
-    rel = F.bround(F.col("_rel").cast("double") / n_d, 6)
-    res = F.bround(F.col("_res").cast("double") / n_d, 6)
-    yb = F.col("_sy").cast("double") / n_d
-    unc = F.bround(yb * (1 - yb), 6)
-    return agg.select(
-        F.col("_n").alias("n"), F.lit(n_bins).alias("n_bins"),
-        brier.alias("brier"), rel.alias("reliability"),
-        res.alias("resolution"), unc.alias("uncertainty"),
-        F.bround(brier - (rel - res + unc), 6).alias("decomp_gap"))
-
-
-def theil_sen_by(df: DataFrame, key_col: str, x_col: str, y_col: str,
-                 max_n: int = 512) -> DataFrame:
-    """Per-group Theil-Sen robust trend — slope = median of all
-    pairwise slopes, intercept = median residual — the trend estimate
-    that shrugs off outliers OLS chases (breakdown point ~29% vs 0%:
-    one corrupted metric reading moves a least-squares fit by an
-    unbounded amount, it moves a pairwise-slope median not at all).
-    The drift-rate audit beside cusum_changepoints / corpus_zipf_fit's
-    OLS. Reference analogue: none; builder's-brief eval surface.
-
-    Conventions pinned for engine parity: pairs are oriented by the
-    (x, y)-sorted order (so x_j >= x_i; equal-x pairs contribute no
-    slope), slope/residual arithmetic is raw IEEE double (one
-    subtraction-division shape both engines share bit-for-bit), and
-    the median of an even count is the LOWER middle (position
-    (m+1) div 2 of the ascending sort) — selecting a value that
-    exists, never averaging two floats. Keys with n < 2, n > max_n,
-    or zero defined slopes (all x equal) emit nothing — the
-    kendall_tau_by bounded-group contract (the in-row O(n^2) pair
-    fold is the documented wer_scores trade). Outputs bround 6.
-
-    Scale shape: one collect_list group-by (the only exchange); the
-    sort, the pair fold, and both median selections are in-row; groups
-    run embarrassingly parallel. -> one row per kept key
-    (key, n, n_slopes, slope, intercept).
-    """
-    base = df.select(F.col(key_col).alias("key"),
-                     F.col(x_col).cast("double").alias("x"),
-                     F.col(y_col).cast("double").alias("y"))
-    g = (base.groupBy("key")
-         .agg(F.sort_array(F.collect_list(F.struct("x", "y"))).alias("a"))
-         .filter((F.size("a") >= 2) & (F.size("a") <= max_n)))
-    n = F.size("a")
-    el = lambda i: F.element_at(F.col("a"), i)  # noqa: E731  (1-based)
-    slopes = F.filter(
-        F.flatten(F.transform(
-            F.sequence(F.lit(1), n - 1),
-            lambda i: F.transform(
-                F.sequence(i + 1, n),
-                lambda j: F.when(el(j).x != el(i).x,
-                                 (el(j).y - el(i).y)
-                                 / (el(j).x - el(i).x))))),
-        lambda s: s.isNotNull())
-    g = (g.select("key", "a", n.alias("n"),
-                  F.array_sort(slopes).alias("_s"))
-         .filter(F.size("_s") >= 1))
-    m = F.size("_s")
-    slope = F.element_at(F.col("_s"), ((m + 1) / 2).cast("int"))
-    g = g.select("key", "n", m.alias("n_slopes"), slope.alias("_b"), "a")
-    resid = F.array_sort(
-        F.transform(F.col("a"), lambda e: e.y - F.col("_b") * e.x))
-    icept = F.element_at(resid, ((F.col("n") + 1) / 2).cast("int"))
-    return g.select("key", "n", "n_slopes",
-                    F.bround(F.col("_b"), 6).alias("slope"),
-                    F.bround(icept, 6).alias("intercept"))
-
-
-def chrf_corpus(pairs: DataFrame, id_col: str = "pair_id",
-                cand_col: str = "cand", ref_col: str = "ref",
-                max_n: int = 6, beta: float = 2.0) -> DataFrame:
-    """Corpus chrF (Popović 2015) over (candidate, reference) pairs —
-    the CHARACTER-level MT/generation eval beside bleu_corpus and
-    rouge_n_scores: char n-grams forgive tokenization and morphology
-    differences word n-grams punish (inflection changes one char, not
-    the whole token), which is why chrF is the WMT default for
-    morphology-rich targets. Conventions pinned for parity: text is
-    lowercased and ALL whitespace removed (chrF ignores word
-    boundaries); n = 1..max_n; corpus-level counts (matches and gram
-    totals summed over pairs BEFORE the ratios — the bleu_corpus
-    convention); levels with no cand AND no ref grams are excluded
-    from the averages, a level with grams on one side only
-    contributes 0 to that side's mean; beta = 2 weights recall
-    double.
-
-        chrP = mean_n(match_n / ctotal_n), chrR = mean_n(m_n / rtotal_n)
-        chrF = (1 + b^2) P R / (b^2 P + R)    (0.0 when P + R = 0)
-
-    Float discipline: counts are exact integers; the level means and
-    the F expression are ONE fixed-association-order float chain,
-    bround 6.
-
-    Scale shape: identical to bleu_corpus — grams for all levels are
-    built in-row into one flattened "n|gram" array per side (one
-    normalize pass, no per-level rescan), one (pair, gram) count agg
-    per side, one join on (pair, gram) so hot grams stay inside their
-    pair, and a <= max_n-row rollup. -> ONE row (ctotal_1.., rtotal_1..,
-    match_1.., chrp, chrr, chrf).
-    """
-    if not 1 <= max_n <= 9:
-        # The per-level rollup recovers n from the single leading digit
-        # of the "n|gram" tag; a two-digit level would silently alias
-        # onto level 1, so fail loudly instead.
-        raise ValueError(f"chrf_corpus: max_n must be in 1..9, got {max_n}")
-
-    def norm(col: str):
-        return F.regexp_replace(F.lower(F.trim(F.col(col))), r"\s+", "")
-
-    base = pairs.select(F.col(id_col).alias("id"),
-                        norm(cand_col).alias("_cs"),
-                        norm(ref_col).alias("_rs"))
-
-    def grams(scol):
-        def mk(n):
-            return lambda i: F.concat(F.lit(f"{n}|"),
-                                      scol.substr(i, F.lit(n)))
-
-        parts = []
-        for n in range(1, max_n + 1):
-            k = F.length(scol) - (n - 1)
-            parts.append(F.when(k >= 1, F.transform(
-                F.sequence(F.lit(1), k), mk(n),
-            )).otherwise(F.array().cast("array<string>")))
-        return F.flatten(F.array(*parts))
-
-    g = base.select("id", grams(F.col("_cs")).alias("_cg"),
-                    grams(F.col("_rs")).alias("_rg"))
-
-    def counts(col: str, out: str):
-        return (g.select("id", F.explode(col).alias("g"))
-                .groupBy("id", "g").agg(F.count("*").alias(out)))
-
-    per_n = (counts("_cg", "_cc").join(counts("_rg", "_rc"), ["id", "g"])
-             .groupBy(F.substring("g", 1, 1).cast("int").alias("n"))
-             .agg(F.sum(F.least("_cc", "_rc")).alias("m")))
-    mw = per_n.agg(*[
-        F.coalesce(F.sum(F.when(F.col("n") == n, F.col("m"))),
-                   F.lit(0)).alias(f"match_{n}")
-        for n in range(1, max_n + 1)])
-
-    aggs = []
-    for n in range(1, max_n + 1):
-        aggs.append(F.coalesce(F.sum(F.greatest(
-            F.length("_cs") - (n - 1), F.lit(0))), F.lit(0))
-            .cast("long").alias(f"ctotal_{n}"))
-        aggs.append(F.coalesce(F.sum(F.greatest(
-            F.length("_rs") - (n - 1), F.lit(0))), F.lit(0))
-            .cast("long").alias(f"rtotal_{n}"))
-    row = base.agg(*aggs).join(F.broadcast(mw))
-
-    lvl = None
-    psum = None
-    rsum = None
-    for n in range(1, max_n + 1):
-        ct, rt, m = (F.col(f"ctotal_{n}"), F.col(f"rtotal_{n}"),
-                     F.col(f"match_{n}"))
-        inc = ((ct + rt) > 0).cast("int")
-        p = F.when(ct > 0, m / ct).otherwise(F.lit(0.0))
-        r = F.when(rt > 0, m / rt).otherwise(F.lit(0.0))
-        lvl = inc if lvl is None else lvl + inc
-        psum = p if psum is None else psum + p
-        rsum = r if rsum is None else rsum + r
-    chrp = F.when(lvl > 0, psum / lvl).otherwise(F.lit(0.0))
-    chrr = F.when(lvl > 0, rsum / lvl).otherwise(F.lit(0.0))
-    b2 = beta * beta
-    chrf = F.when(chrp + chrr > 0,
-                  (1 + b2) * chrp * chrr / (b2 * chrp + chrr)) \
-            .otherwise(F.lit(0.0))
-    cols = ([f"ctotal_{n}" for n in range(1, max_n + 1)]
-            + [f"rtotal_{n}" for n in range(1, max_n + 1)]
-            + [f"match_{n}" for n in range(1, max_n + 1)])
-    return row.select(*cols, F.bround(chrp, 6).alias("chrp"),
-                      F.bround(chrr, 6).alias("chrr"),
-                      F.bround(chrf, 6).alias("chrf"))
-
-
-def err_eval(ranked: DataFrame, query_col: str = "query_id",
-             rank_col: str = "rank", gain_col: str = "gain",
-             max_rank: int = 10, g_max: int = 3,
-             max_n: int = 1024) -> DataFrame:
-    """Expected Reciprocal Rank (Chapelle et al. 2009) per query —
-    the CASCADE-model ranking metric beside retrieval_eval's nDCG/MRR:
-    nDCG assumes the user inspects every position; ERR models a user
-    who STOPS at the first satisfying result, so a highly-relevant
-    document demotes everything below it (the diversity/abandonment
-    signal a RAG reranker cares about).
-
-        R_r = (2^g - 1) / 2^g_max          (graded satisfaction)
-        ERR = sum_r (1/r) R_r prod_{i<r} (1 - R_i)
-
-    Determinism: the fold walks ranks ASCENDING (rank <= max_rank
-    kept, the rank VALUE is the 1/r divisor); absent ranks are
-    identity steps (R = 0: term 0, stop-probability factor 1) so both
-    engines agree term-for-term; gains are small integers, making
-    every R an exact dyadic double. ERR bround 6. Queries with more
-    than ``max_n`` kept rows are excluded (bounded in-row fold, the
-    kendall_tau_by contract).
-
-    Scale shape: one filter + one collect_list group-by (the only
-    exchange); the cascade fold is in-row; queries run embarrassingly
-    parallel. -> one row per query (query_id, n_ranked, err).
-    """
-    denom = float(2 ** g_max)
-    base = (ranked.filter(F.col(rank_col) <= max_rank)
-            .select(F.col(query_col).alias("query_id"),
-                    F.struct(F.col(rank_col).cast("int").alias("r"),
-                             F.col(gain_col).cast("int").alias("g"))
-                    .alias("e")))
-    g = (base.groupBy("query_id")
-         .agg(F.sort_array(F.collect_list("e")).alias("a"))
-         .filter(F.size("a") <= max_n))
-    acc0 = F.struct(F.lit(0.0).alias("err"), F.lit(1.0).alias("p"))
-    fold = F.aggregate(
-        F.col("a"), acc0,
-        lambda acc, e: F.struct(
-            (acc.err + acc.p * ((F.pow(F.lit(2.0), e.g) - 1.0) / denom)
-             / e.r).alias("err"),
-            (acc.p * (1.0 - (F.pow(F.lit(2.0), e.g) - 1.0) / denom))
-            .alias("p")))
-    return g.select("query_id", F.size("a").alias("n_ranked"),
-                    F.bround(fold.err, 6).alias("err"))
-
-
-def regression_metrics(df: DataFrame, pred_col: str = "pred",
-                       truth_col: str = "truth") -> DataFrame:
-    """Regression / forecasting eval in one pass: MAE, RMSE, sMAPE,
-    R^2 — the continuous-target counterpart of classification_report
-    (a latency predictor, a quality-score regressor, a forecast
-    backtest all read off this one row). Reference analogue: none;
-    builder's-brief eval surface.
-
-    Float discipline: per-row terms (|e|, e^2, symmetric ratio) are
-    each ONE fixed-order float expression bround'ed to 12 dp and
-    summed in DECIMAL(38,12) — order-independent under any
-    partitioning; the y-moments for R^2 ride the same agg (bround 9
-    in DECIMAL(38,9)), so SST = n*syy - sy^2 needs no second scan and
-    no float mean. Final ratios are single fixed-order expressions,
-    bround 6. Conventions: sMAPE term is 2|p-y|/(|p|+|y|), 0.0 when
-    both are 0 (range [0, 2]); R^2 = 0.0 when SST <= 0 (constant
-    truth), may be negative for a worse-than-mean predictor —
-    reported, not clamped.
-
-    Scale shape: ONE aggregation over the scored frame (map-side
-    combine, 1-row result); nothing else. -> ONE row
-    (n, mae, rmse, smape, r2).
-    """
-    p = F.col(pred_col).cast("double")
-    y = F.col(truth_col).cast("double")
-    e = p - y
-    sm = F.when(F.abs(p) + F.abs(y) > 0,
-                2 * F.abs(e) / (F.abs(p) + F.abs(y))).otherwise(F.lit(0.0))
-    agg = df.agg(
-        F.count("*").alias("n"),
-        F.sum(F.bround(F.abs(e), 12).cast("decimal(38,12)")).alias("_sae"),
-        F.sum(F.bround(e * e, 12).cast("decimal(38,12)")).alias("_sse"),
-        F.sum(F.bround(sm, 12).cast("decimal(38,12)")).alias("_ssm"),
-        F.sum(F.bround(y, 9).cast("decimal(38,9)")).alias("_sy"),
-        F.sum(F.bround(y * y, 9).cast("decimal(38,9)")).alias("_syy"))
-    n = F.col("n").cast("double")
-    sst = (n * F.col("_syy").cast("double")
-           - F.col("_sy").cast("double") * F.col("_sy").cast("double"))
-    r2 = F.when(sst > 0,
-                1.0 - n * F.col("_sse").cast("double") / sst) \
-          .otherwise(F.lit(0.0))
-    return agg.select(
-        "n", F.bround(F.col("_sae").cast("double") / n, 6).alias("mae"),
-        F.bround(F.sqrt(F.col("_sse").cast("double") / n), 6).alias("rmse"),
-        F.bround(F.col("_ssm").cast("double") / n, 6).alias("smape"),
-        F.bround(r2, 6).alias("r2"))
-
-
-def perm_test_paired(df: DataFrame, id_col: str = "item_id",
-                     a_col: str = "score_a", b_col: str = "score_b",
-                     n_perm: int = 200) -> DataFrame:
-    """Paired sign-flip permutation test — the assumption-free
-    companion of mcnemar_test (which needs 0/1 outcomes) and
-    bootstrap_ci (which quantifies, not tests): is model A's summed
-    per-item advantage over model B larger than chance would produce
-    if each item's difference were sign-symmetric? Scores are
-    integral (the caller scales) so every statistic is an exact
-    integer. Reference analogue: none; builder's-brief eval surface.
-
-    The permutation draw is the bootstrap_ci rule: sign_{i,b} flips
-    on the parity of the first hex digit of md5(item|b) — a pure
-    function of (item, permutation), so any engine and any
-    partitioning reproduces the identical permutation set.
-
-        S_obs = sum_i d_i,  S_b = sum_i sign_{i,b} d_i
-        p = (1 + #{b : |S_b| >= |S_obs|}) / (n_perm + 1)
-
-    (the add-one convention: the identity permutation always counts,
-    so p is never 0 and the test is exact-level.) ONE float division,
-    bround 6.
-
-    Scale shape: one explode x B over the diff frame (compute, not
-    shuffle — the per-permutation group-by map-side-combines each
-    partition to <= B cells before the exchange), one B-group agg,
-    one 1-row broadcast of S_obs. -> ONE row
-    (n_items, n_perm, s_obs, n_ge, p_value).
-    """
-    base = df.select(F.col(id_col).cast("string").alias("i"),
-                     (F.col(a_col).cast("long")
-                      - F.col(b_col).cast("long")).alias("d"))
-    obs = base.agg(F.sum("d").alias("_s_obs"),
-                   F.count("*").alias("_n"))
-    b = F.explode(F.sequence(F.lit(1), F.lit(int(n_perm)))).alias("b")
-    rep = base.select("i", "d", b)
-    parity = (F.conv(F.substring(F.md5(F.concat_ws("|", "i", "b")), 1, 1),
-                     16, 10).cast("long") % 2)
-    signed = F.when(parity == 0, F.col("d")).otherwise(-F.col("d"))
-    perms = (rep.select("b", signed.alias("sd"))
-             .groupBy("b").agg(F.sum("sd").alias("s_b")))
-    cnt = (perms.join(F.broadcast(obs))
-           .agg(F.first("_n").alias("n_items"),
-                F.first("_s_obs").alias("s_obs"),
-                F.sum((F.abs(F.col("s_b")) >= F.abs(F.col("_s_obs")))
-                      .cast("long")).alias("n_ge")))
-    return cnt.select(
-        "n_items", F.lit(int(n_perm)).alias("n_perm"), "s_obs", "n_ge",
-        F.bround((1 + F.col("n_ge")).cast("double") / (n_perm + 1), 6)
-        .alias("p_value"))
-
-
-def weighted_kappa(a: DataFrame, b: DataFrame, keys: list[str],
-                   label_col: str = "label",
-                   weights: str = "quadratic") -> DataFrame:
-    """Weighted Cohen's kappa for ORDINAL labels (quality grades 0-4,
-    Likert ratings): disagreeing by one grade is not disagreeing by
-    four, which plain cohen_kappa cannot express (its 0/1 agreement
-    treats 'adjacent' and 'opposite' alike). Labels must be integral
-    ordinals; weights w_ij = (i-j)^2 ('quadratic', the convention that
-    makes kappa_w an ICC analogue) or |i-j| ('linear').
-
-    EXACT INTEGERS end to end, the fleiss_kappa identity discipline:
-    with observed cell counts O_ij, marginals r_i / c_j and n items,
-
-        kappa_w = 1 - n * sum_ij(w_ij O_ij) / sum_ij(w_ij r_i c_j)
-
-    — the expected-weight denominator cross-multiplied by n so no
-    float appears before the ONE final division (bround 6). Degenerate
-    denominator (all mass on one label pair for both raters) pins 1.0
-    when the observed weight is also 0, else 0.0. Items rated by only
-    one rater drop via the inner join (the cohen_kappa rule).
-
-    Scale shape: one inner join on the item keys, ONE count agg over
-    the bounded label-pair cross, marginals re-aggregated from the
-    cell frame — never a second scan. -> ONE row
-    (n, ow, ew_num, kappa_w).
-    """
-    la = a.select(*keys, F.col(label_col).cast("long").alias("_la"))
-    lb = b.select(*keys, F.col(label_col).cast("long").alias("_lb"))
-    obs = (la.join(lb, keys)
-           .groupBy("_la", "_lb").agg(F.count("*").alias("o")))
-    if weights == "quadratic":
-        def w(i, j):
-            return (i - j) * (i - j)
-    elif weights == "linear":
-        def w(i, j):
-            return F.abs(i - j)
-    else:
-        raise ValueError(f"unknown weights: {weights}")
-    ra = obs.groupBy("_la").agg(F.sum("o").alias("r"))
-    cb = obs.groupBy("_lb").agg(F.sum("o").alias("c"))
-    tot = obs.agg(
-        F.sum("o").alias("_n"),
-        F.sum((w(F.col("_la"), F.col("_lb")) * F.col("o"))
-              .cast("decimal(38,0)")).alias("_ow"))
-    ew = (ra.crossJoin(cb)
-          .agg(F.sum((w(F.col("_la"), F.col("_lb"))
-                      * F.col("r") * F.col("c")).cast("decimal(38,0)"))
-               .alias("_ew")))
-    row = tot.join(F.broadcast(ew))
-    num = F.col("_n").cast("decimal(38,0)") * F.col("_ow")
-    kappa = (F.when(F.col("_ew") > 0,
-                    F.bround(1.0 - num.cast("double")
-                             / F.col("_ew").cast("double"), 6))
-             .when(F.col("_ow") == 0, F.lit(1.0))
-             .otherwise(F.lit(0.0)))
-    return row.select(
-        F.col("_n").alias("n"), F.col("_ow").cast("long").alias("ow"),
-        F.col("_ew").cast("long").alias("ew_num"),
-        kappa.alias("kappa_w"))

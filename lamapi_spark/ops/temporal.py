@@ -517,344 +517,3 @@ def turn_latency_stats(transcripts: DataFrame, conv_col: str = "conv_id",
     return agg.select(
         "role", "n", "sum_us",
         F.expr("sum_us DIV n").alias("mean_us"), "min_us", "max_us")
-
-
-def allen_relations(intervals: DataFrame, key_col: str = "key",
-                    id_col: str = "id", lo_col: str = "lo_us",
-                    hi_col: str = "hi_us",
-                    max_per_key: int = 10_000) -> DataFrame:
-    """Allen's interval algebra over key-sharing interval pairs — the
-    full 13-relation classification (before/meets/overlaps/starts/
-    during/finishes, their inverses, equals) of every pair of fact
-    validity intervals on the same key: the temporal-KG consistency
-    primitive ("two term-of-office facts for one subject: disjoint,
-    touching, or conflicting?") that a bare overlap join
-    (interval_overlap_join) collapses to one bit. Reference analogue:
-    none; builder's-brief temporal surface beside fact_intervals.
-
-    Relations are named for the SMALLER-id member A against B, so
-    each unordered pair emits exactly one row and the relation is a
-    pure function of the interval set (string-ordered ids, integer
-    micros bounds). The classifier is an ordered, mutually-exclusive
-    decision cascade on exact integer comparisons — equality cases
-    (equals/meets/starts/finishes and inverses) are checked BEFORE
-    the strict-order residue, so degenerate (point) intervals
-    classify deterministically too.
-
-    Scale shape: the Allen census is inherently all-pairs per key, so
-    keys are bounded — max_per_key drops over-cap keys entirely (the
-    kendall_tau_by contract: the caller picks a keying with bounded
-    cardinality; an overlap-restricted workload should use
-    interval_overlap_join's banding instead). The pair join is a
-    key-co-partitioned self-equi-join; no window, no driver loop.
-    -> (key, id_a, id_b, relation).
-    """
-    base = intervals.select(F.col(key_col).alias("key"),
-                            F.col(id_col).alias("id"),
-                            F.col(lo_col).cast("long").alias("lo"),
-                            F.col(hi_col).cast("long").alias("hi"))
-    ok = (base.groupBy("key").agg(F.count("*").alias("_n"))
-          .filter(F.col("_n") <= max_per_key).select("key"))
-    base = base.join(ok, "key")
-    a = base.select("key", F.col("id").alias("id_a"),
-                    F.col("lo").alias("_al"), F.col("hi").alias("_ah"))
-    b = base.select("key", F.col("id").alias("id_b"),
-                    F.col("lo").alias("_bl"), F.col("hi").alias("_bh"))
-    p = a.join(b, "key").filter(F.col("id_a") < F.col("id_b"))
-    al, ah, bl, bh = (F.col("_al"), F.col("_ah"),
-                      F.col("_bl"), F.col("_bh"))
-    rel = (F.when((al == bl) & (ah == bh), "equals")
-           .when(ah < bl, "before")
-           .when(bh < al, "after")
-           .when(ah == bl, "meets")
-           .when(bh == al, "met_by")
-           .when((al == bl) & (ah < bh), "starts")
-           .when((al == bl) & (ah > bh), "started_by")
-           .when((ah == bh) & (al > bl), "finishes")
-           .when((ah == bh) & (al < bl), "finished_by")
-           .when((al > bl) & (ah < bh), "during")
-           .when((al < bl) & (ah > bh), "contains")
-           .when((al < bl) & (ah < bh), "overlaps")
-           .otherwise("overlapped_by"))
-    return p.select("key", "id_a", "id_b", rel.alias("relation"))
-
-
-def acf_by(df: DataFrame, key_col: str, order_cols: list[str],
-           val_col: str, max_lag: int = 5,
-           max_n: int = 32768) -> DataFrame:
-    """Per-key sequence autocorrelation r_1..r_max_lag — the
-    periodicity/trend probe a monitoring pipeline runs beside
-    burst_detection and cusum_changepoints (an hourly-seasonal metric
-    shows r_24 spikes; a trending one shows slow lag-1 decay). Sequence
-    ACF over the per-key (order_cols)-ordered series — timestamps
-    order the series, they don't weight it.
-
-        r_l = sum_t (x_t - xbar)(x_{t+l} - xbar) / sum_t (x_t - xbar)^2
-
-    Exact integers end to end (``val_col`` must be integral — the
-    caller scales): the mean is never materialized as a float; each
-    centered value is scaled by n (c_t = n*x_t - S, an exact long),
-    products accumulate in DECIMAL(38,0) — the n^2 scale factor
-    cancels in the ratio, the ONE float division at the end, bround 6.
-    Denominator 0 (constant series) reads r_l = 0.0, lags >= n emit
-    nothing.
-
-    The in-row O(n * max_lag) fold is the documented wer_scores trade
-    (interpreted expression cells, no UDF, no shuffle); keys with
-    n > max_n or n < 2 are EXCLUDED and the caller picks a grouping /
-    thinning with bounded per-key cardinality — the kendall_tau_by
-    contract.
-
-    Scale shape: one collect_list group-by (the only exchange); sort,
-    centering, and all lag folds are in-row; keys run embarrassingly
-    parallel. -> one row per (key, lag): (key, n, lag, r).
-    """
-    base = df.select(
-        F.col(key_col).alias("key"),
-        F.struct(*[F.col(c).alias(f"_o{i}")
-                   for i, c in enumerate(order_cols)],
-                 F.col(val_col).cast("long").alias("x")).alias("e"))
-    g = (base.groupBy("key")
-         .agg(F.sort_array(F.collect_list("e")).alias("_a"))
-         .filter((F.size("_a") >= 2) & (F.size("_a") <= max_n)))
-    n = F.size("_a")
-    xs = F.transform(F.col("_a"), lambda e: e.x)
-    s = F.aggregate(xs, F.lit(0).cast("long"), lambda a, x: a + x)
-    g = g.select("key", n.alias("n"),
-                 F.transform(xs, lambda x: n * x - s).alias("_c"))
-    dec0 = F.lit(0).cast("decimal(38,0)")
-
-    def csum(pairs):
-        # pairs: (t) -> product term as decimal; t is 1-based
-        return F.aggregate(pairs, dec0, lambda a, p: a + p)
-
-    den = csum(F.transform(
-        F.col("_c"), lambda c: (c.cast("decimal(19,0)")
-                                * c.cast("decimal(19,0)"))
-        .cast("decimal(38,0)")))
-    lag = F.col("_l")
-    num = F.aggregate(
-        F.sequence(F.lit(1), F.col("n") - lag), dec0,
-        lambda a, t: a + (F.element_at(F.col("_c"), t).cast("decimal(19,0)")
-                          * F.element_at(F.col("_c"), t + lag)
-                          .cast("decimal(19,0)")).cast("decimal(38,0)"))
-    out = (g.select("key", "n", den.alias("_den"),
-                    F.explode(F.sequence(
-                        F.lit(1), F.least(F.lit(max_lag), F.col("n") - 1)))
-                    .alias("_l"), "_c")
-           .select("key", "n", lag.alias("lag"),
-                   F.when(F.col("_den") > 0,
-                          F.bround(num.cast("double")
-                                   / F.col("_den").cast("double"), 6))
-                   .otherwise(F.lit(0.0)).alias("r")))
-    return out
-
-
-def markov_stationary(df: DataFrame, key_col: str, order_col: str,
-                      state_col: str, rounds: int = 20,
-                      max_states: int = 64) -> DataFrame:
-    """Markov-chain view of per-key state sequences (dialogue roles,
-    event types): consecutive-pair transition counts, row-normalized
-    probabilities, and the stationary distribution by ``rounds``
-    fixed power-iteration steps from uniform — "what fraction of
-    turns does the conversation process spend in each role at
-    equilibrium", the structural summary beside conv_role_audit's
-    per-conversation QC. Reference analogue: none; builder's-brief
-    sequence-analytics surface.
-
-    Determinism: transition p = bround(count/row_total, 12) (one
-    division); each power-iteration term bround(pi_i * p_ij, 12) sums
-    in DECIMAL(38,12) (order-independent; the 12-dp scale keeps the
-    decimal->double cast exact), so every round's vector is
-    bit-reproducible under any partitioning. The chain is used AS
-    OBSERVED: states with no outgoing transitions (a state that only
-    ever ends sequences) make it sub-stochastic and the vector's sum
-    decays — reported honestly rather than patched with an implicit
-    self-loop.
-
-    Scale shape: one per-key collect_list (the only data-sized
-    shuffle) feeds an in-row consecutive pairing; the pair agg is
-    vocabulary-bounded (<= max_states^2 cells, map-side combine); the
-    power iteration folds IN-ROW over a 1-row broadcast-sized matrix
-    — no driver loop, no per-round job. -> one row per state
-    (state, n_out, pi).
-
-    ``max_states`` contract (EMIT-NOTHING, like the kendall_tau_by /
-    acf_by n-cap exclusions): when the observed state vocabulary
-    exceeds ``max_states`` the single matrix row is filtered and the
-    result is EMPTY — the in-row O(rounds * S^2) fold is never run
-    unbounded. A caller that needs to distinguish "no transitions"
-    from "vocabulary over cap" should count distinct states first;
-    the cap is a plan-shape guard, not a truncation (truncating to
-    the top-S states would change every probability).
-    """
-    pairs = (df.groupBy(F.col(key_col).alias("k"))
-             .agg(F.transform(
-                 F.array_sort(F.collect_list(
-                     F.struct(F.col(order_col).alias("o"),
-                              F.col(state_col).alias("s")))),
-                 lambda e: e.s).alias("_s")))
-    n = F.size("_s")
-    cons = F.when(n >= 2, F.transform(
-        F.sequence(F.lit(1), n - 1),
-        lambda i: F.struct(
-            F.element_at(F.col("_s"), i).alias("s_from"),
-            F.element_at(F.col("_s"), i + 1).alias("s_to")))
-    ).otherwise(F.array().cast(
-        "array<struct<s_from:string,s_to:string>>"))
-    trans = (pairs.select(F.explode(cons).alias("e"))
-             .select("e.s_from", "e.s_to")
-             .groupBy("s_from", "s_to").agg(F.count("*").alias("c")))
-    tot = trans.groupBy("s_from").agg(F.sum("c").alias("_tot"))
-    trans = (trans.join(F.broadcast(tot), "s_from")
-             .select("s_from", "s_to", "c",
-                     F.bround(F.col("c").cast("double") / F.col("_tot"),
-                              12).alias("p")))
-    # one-row matrix + sorted state vocabulary (bounded)
-    sts = (trans.select(F.col("s_from").alias("s"))
-           .unionByName(trans.select(F.col("s_to").alias("s")))
-           .distinct())
-    mat = trans.agg(
-        F.map_from_entries(F.collect_list(F.struct(
-            F.concat_ws("|", "s_from", "s_to"), "p"))).alias("_m"))
-    vocab = sts.agg(F.array_sort(F.collect_list("s")).alias("_v"))
-    one = vocab.join(F.broadcast(mat))
-    s_count = F.size("_v")
-    # guard the in-row O(rounds * S^2) fold with the documented bound
-    one = one.filter(s_count <= max_states)
-    pi0 = F.transform(F.col("_v"),
-                      lambda _: F.bround(F.lit(1.0) / s_count, 12))
-    # accumulate at DECIMAL(28,12) and cast back each step — Spark's
-    # decimal-add widening would otherwise silently drop the 12th digit
-    dec0 = F.lit(0).cast("decimal(28,12)")
-    pin = F.aggregate(
-        F.sequence(F.lit(1), F.lit(rounds)), pi0,
-        lambda pi, _r: F.transform(
-            F.col("_v"),
-            lambda sj: F.aggregate(
-                F.sequence(F.lit(1), s_count), dec0,
-                lambda a, i: (a + F.bround(
-                    F.element_at(pi, i)
-                    * F.coalesce(
-                        F.element_at(F.col("_m"), F.concat_ws(
-                            "|", F.element_at(F.col("_v"), i), sj)),
-                        F.lit(0.0)), 12).cast("decimal(28,12)"))
-                .cast("decimal(28,12)"))
-            .cast("double")))
-    out = (one.select(F.explode(F.arrays_zip(F.col("_v").alias("state"),
-                                             pin.alias("pi"))).alias("z"))
-           .select(F.col("z.state").alias("state"),
-                   F.col("z.pi").alias("pi")))
-    n_out = tot.select(F.col("s_from").alias("state"),
-                       F.col("_tot").alias("n_out"))
-    return (out.join(F.broadcast(n_out), "state", "left")
-            .select("state", F.coalesce("n_out", F.lit(0)).alias("n_out"),
-                    "pi"))
-
-
-def mad_anomalies(df: DataFrame, key_col: str, order_col: str,
-                  val_col: str, thresh: int = 5,
-                  max_n: int = 32768) -> DataFrame:
-    """Per-key robust anomaly flags by median absolute deviation —
-    the spike detector whose baseline the spikes themselves cannot
-    move (mean/stddev gates let one 1e6 outlier widen the band until
-    nothing else flags; median/MAD have breakdown point 1/2). The
-    point-anomaly companion to cusum_changepoints (level shifts) and
-    burst_detection (rate spikes). Reference analogue: none;
-    builder's-brief monitoring surface.
-
-    EXACT INTEGERS end to end (``val_col`` integral, caller scales):
-    med = lower median of the key's values, mad = lower median of
-    |x - med| (both value selections — never float averages, the
-    theil_sen_by convention), and the flag is the integer comparison
-
-        |x - med| > thresh * greatest(mad, 1)
-
-    (the greatest(mad, 1) floor keeps a constant-but-one series from
-    flagging every off-median point; thresh ~ 5 corresponds to the
-    classic 3.5-sigma MAD gate with margin). No floats anywhere.
-
-    Keys with n < 3 or n > max_n are excluded (bounded in-row sort,
-    the kendall_tau_by contract). Scale shape: one collect_list
-    group-by (the only exchange); both medians and the flag scan are
-    in-row; emits ONLY the anomalies. -> one row per flagged point
-    (key, o, x, med, mad, dev).
-    """
-    base = df.select(
-        F.col(key_col).alias("key"),
-        F.struct(F.col(order_col).alias("o"),
-                 F.col(val_col).cast("long").alias("x")).alias("e"))
-    g = (base.groupBy("key")
-         .agg(F.sort_array(F.collect_list("e")).alias("_a"))
-         .filter((F.size("_a") >= 3) & (F.size("_a") <= max_n)))
-    n = F.size("_a")
-    xs = F.array_sort(F.transform(F.col("_a"), lambda e: e.x))
-    med = F.element_at(xs, ((n + 1) / 2).cast("int"))
-    g = g.select("key", "_a", med.alias("med"))
-    devs = F.array_sort(F.transform(
-        F.col("_a"), lambda e: F.abs(e.x - F.col("med"))))
-    mad = F.element_at(devs, ((F.size("_a") + 1) / 2).cast("int"))
-    g = g.select("key", "_a", "med", mad.alias("mad"))
-    lim = F.lit(thresh) * F.greatest(F.col("mad"), F.lit(1))
-    flagged = F.filter(F.col("_a"),
-                       lambda e: F.abs(e.x - F.col("med")) > lim)
-    return (g.select("key", "med", "mad", F.explode(flagged).alias("e"))
-            .select("key", F.col("e.o").alias("o"),
-                    F.col("e.x").alias("x"), "med", "mad",
-                    F.abs(F.col("e.x") - F.col("med")).alias("dev")))
-
-
-def holt_forecast(df: DataFrame, key_col: str, order_cols: list[str],
-                  val_col: str, alpha: float = 0.5, beta: float = 0.25,
-                  max_n: int = 32768) -> DataFrame:
-    """Per-key Holt linear exponential smoothing — the
-    level-plus-trend forecaster a metrics pipeline runs beside the
-    diagnostic family (acf_by says IF there is structure,
-    cusum/burst/mad say WHEN it broke; Holt says WHERE the series is
-    heading). One in-row fold per key over the time-ordered values:
-
-        l_t = alpha x_t + (1-alpha)(l_{t-1} + b_{t-1})
-        b_t = beta (l_t - l_{t-1}) + (1-beta) b_{t-1}
-
-    seeded l_1 = x_1, b_1 = 0; forecast_h = l_n + h b_n (h = 1 here).
-
-    Engine parity for a float RECURRENCE (the cusum rule): alpha and
-    beta default to DYADIC rationals (0.5, 0.25 — exact doubles, so
-    each step is a fixed IEEE chain), every l_t / b_t is bround'ed
-    half-even to 9 dp before the next step, and b_t recomputes l_t's
-    expression inline rather than referencing a local — the exact
-    shape a DuckDB list_reduce replays fold-for-fold. Outputs bround
-    6. Keys with n > max_n are excluded (bounded in-row fold, the
-    kendall_tau_by contract); n = 1 emits (x_1, 0, x_1).
-
-    Scale shape: one collect_list group-by (the only exchange); the
-    recurrence is in-row; keys run embarrassingly parallel. -> one
-    row per key (key, n, level, trend, forecast).
-    """
-    a, b = float(alpha), float(beta)
-    base = df.select(
-        F.col(key_col).alias("key"),
-        F.struct(*[F.col(c).alias(f"_o{i}")
-                   for i, c in enumerate(order_cols)],
-                 F.col(val_col).cast("double").alias("x")).alias("e"))
-    g = (base.groupBy("key")
-         .agg(F.transform(F.sort_array(F.collect_list("e")),
-                          lambda e: e.x).alias("_x"))
-         .filter(F.size("_x") <= max_n))
-    n = F.size("_x")
-    x1 = F.element_at(F.col("_x"), 1)
-    init = F.struct(x1.alias("l"), F.lit(0.0).alias("b"))
-
-    def lnew(acc, v):
-        return F.bround(a * v + (1 - a) * (acc.l + acc.b), 9)
-
-    fold = F.aggregate(
-        F.slice(F.col("_x"), 2, F.greatest(n - 1, F.lit(0))), init,
-        lambda acc, v: F.struct(
-            lnew(acc, v).alias("l"),
-            F.bround(b * (lnew(acc, v) - acc.l) + (1 - b) * acc.b, 9)
-            .alias("b")))
-    return g.select(
-        "key", n.alias("n"), F.bround(fold.l, 6).alias("level"),
-        F.bround(fold.b, 6).alias("trend"),
-        F.bround(fold.l + fold.b, 6).alias("forecast"))

@@ -274,122 +274,3 @@ def vocab_richness(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return agg.select("n_tokens", "distinct_tokens", "f1", "f2",
                       F.bround(chao1, 6).alias("chao1"),
                       F.bround(cov, 6).alias("coverage"))
-
-
-def vocab_growth(docs: DataFrame, id_col: str = "doc_id",
-                 text_col: str = "text") -> DataFrame:
-    """Heaps-law vocabulary growth curve: cumulative distinct types
-    vs cumulative tokens at GEOMETRIC document checkpoints (1, 2, 4,
-    ... docs in id order) — the curve that says whether vocabulary is
-    still growing (keep crawling / grow the tokenizer) or has bent
-    over (the corpus saturated its domain); the trajectory twin of
-    vocab_richness's single-point Chao1 estimate. Reference analogue:
-    none; builder's-brief corpus surface.
-
-    Determinism: "document order" is the ascending ``id_col`` order —
-    a pure function of the corpus. A token's arrival position is the
-    MIN doc rank containing it; both cumulative counts are exact
-    integers.
-
-    Scale shape — no per-checkpoint rescans and no non-equi join:
-    doc ranks come from the two-level scan (no global window); each
-    token's first-arrival rank and each doc's token count bucket by
-    floor(log2(rank)), so BOTH curves collapse to <= 64-row
-    frequency frames whose running sums (the only serial step) are
-    driver-trivial windows. Checkpoint k therefore reports the state
-    after the first min(2^(k+1)-1 ... ) — precisely: after all docs
-    with rank < 2^(k+1), i.e. the canonical power-of-two prefix.
-    -> one row per non-empty bucket (checkpoint_docs, cum_docs,
-    cum_tokens, cum_types), ascending; the last row is the whole
-    corpus.
-    """
-    from lamapi_spark.ops.metrics import _global_ranks
-
-    base = docs.select(F.col(id_col).alias("k"),
-                       _tokens(F.col(text_col)).alias("_toks"))
-    ranks = _global_ranks(docs.select(F.col(id_col).alias("k"),
-                                      F.col(id_col).alias("v")),
-                          1024, "rank")
-    wd = base.join(ranks, "k")
-    bucket = F.floor(F.log2("rank")).cast("long")
-    # per-doc token counts -> per-bucket token sums
-    toks_b = (wd.select(bucket.alias("_g"),
-                        F.size("_toks").alias("_nt"))
-              .groupBy("_g").agg(F.sum("_nt").alias("_tok"),
-                                 F.count("*").alias("_docs")))
-    # per-token first-arrival rank -> per-bucket new-type counts
-    types_b = (wd.select("rank", F.explode("_toks").alias("t"))
-               .groupBy("t").agg(F.min("rank").alias("_fr"))
-               .select(F.floor(F.log2("_fr")).cast("long").alias("_g"))
-               .groupBy("_g").agg(F.count("*").alias("_new")))
-    j = (toks_b.join(types_b, "_g", "left")
-         .select("_g", "_tok", "_docs",
-                 F.coalesce("_new", F.lit(0)).alias("_new")))
-    w = Window.orderBy("_g").rowsBetween(Window.unboundedPreceding, 0)
-    return j.select(
-        F.pow(F.lit(2.0), F.col("_g") + 1).cast("long")
-        .alias("checkpoint_docs"),
-        F.sum("_docs").over(w).alias("cum_docs"),
-        F.sum("_tok").over(w).alias("cum_tokens"),
-        F.sum("_new").over(w).alias("cum_types"))
-
-
-def zipf_fit(docs: DataFrame, text_col: str = "text",
-             max_rank: int = 1000) -> DataFrame:
-    """Zipf rank-frequency fit: OLS slope of ln(freq) on ln(rank)
-    over the top ``max_rank`` token ranks — natural text sits near
-    slope -1; template/boilerplate-heavy or synthetic corpora bend
-    visibly away, so the exponent is a one-number corpus-authenticity
-    check beside vocab_richness (coverage) and vocab_growth
-    (trajectory). Reference analogue: none; builder's-brief corpus
-    surface.
-
-    Determinism: ranks come from the two-level scan ordered by
-    (-freq, token) — frequency ties break by token, reproducible
-    always. Float discipline: x = ln(rank), y = ln(freq) are exact
-    per-row doubles; each OLS moment term (x, y, xy, x^2, y^2) is
-    rounded half-even to 12 dp and summed in DECIMAL(38,12), so the
-    moments — and therefore slope/intercept/r2 (fixed-order closed
-    forms, 6 dp) — are order-independent. Degenerate fits (n < 2 or
-    zero x-variance, e.g. a one-token vocabulary) read 0.0.
-
-    Scale shape: one token-count agg, one two-level-scan rank pass
-    over the vocabulary (bounded by distinct tokens, not corpus
-    rows), a rank <= max_rank filter, one 1-row moment fold. -> ONE
-    row (n_ranks, slope, intercept, r2).
-    """
-    from lamapi_spark.ops.metrics import _global_ranks
-
-    tf = (docs.select(F.explode(_tokens(F.col(text_col))).alias("t"))
-          .groupBy("t").agg(F.count("*").alias("c")))
-    ranked = (_global_ranks(
-        tf.select(F.col("t").alias("k"),
-                  (-F.col("c")).cast("double").alias("v")), 1024, "rank")
-        .join(tf.withColumnRenamed("t", "k"), "k")
-        .filter(F.col("rank") <= max_rank))
-    x = F.log(F.col("rank").cast("double"))
-    y = F.log(F.col("c").cast("double"))
-
-    def mom(e):
-        return F.sum(F.bround(e, 12).cast("decimal(38,12)"))
-
-    m = ranked.agg(F.count("*").alias("n"), mom(x).alias("_sx"),
-                   mom(y).alias("_sy"), mom(x * y).alias("_sxy"),
-                   mom(x * x).alias("_sxx"), mom(y * y).alias("_syy"))
-    n = F.col("n").cast("double")
-    sx, sy = F.col("_sx").cast("double"), F.col("_sy").cast("double")
-    sxy = F.col("_sxy").cast("double")
-    sxx, syy = F.col("_sxx").cast("double"), F.col("_syy").cast("double")
-    dx = n * sxx - sx * sx
-    dy = n * syy - sy * sy
-    cov = n * sxy - sx * sy
-    slope = F.when((F.col("n") >= 2) & (dx > 0), cov / dx) \
-             .otherwise(F.lit(0.0))
-    intercept = F.when((F.col("n") >= 2) & (dx > 0),
-                       (sy - (cov / dx) * sx) / n).otherwise(F.lit(0.0))
-    r2 = F.when((F.col("n") >= 2) & (dx > 0) & (dy > 0),
-                (cov * cov) / (dx * dy)).otherwise(F.lit(0.0))
-    return m.select(F.col("n").alias("n_ranks"),
-                    F.bround(slope, 6).alias("slope"),
-                    F.bround(intercept, 6).alias("intercept"),
-                    F.bround(r2, 6).alias("r2"))

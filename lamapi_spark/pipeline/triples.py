@@ -23,8 +23,24 @@ hot subjects).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def ordered_pairs(spans: Column) -> Column:
+    """In-row ordered pairing over one turn's array of (start, entity)
+    structs: the earlier-start span is the subject, subj != obj, pairs
+    distinct. -> array<struct<subj, obj>>. Shared by the batch
+    :func:`mention_pairs` and the streaming twin
+    (streaming/kg.stream_extract_triples), so the two cannot diverge."""
+    return F.array_distinct(F.flatten(F.transform(
+        spans, lambda a: F.filter(
+            F.transform(
+                spans, lambda b: F.when(
+                    (a["start"] < b["start"]) & (a["entity"] != b["entity"]),
+                    F.struct(a["entity"].alias("subj"),
+                             b["entity"].alias("obj")))),
+            lambda p: p.isNotNull()))))
 
 
 def mention_pairs(linked: DataFrame) -> DataFrame:
@@ -47,15 +63,7 @@ def mention_pairs(linked: DataFrame) -> DataFrame:
         .agg(F.array_sort(F.collect_list(
             F.struct("start", "entity"))).alias("_ms"))
     )
-    ms = F.col("_ms")
-    pairs = F.array_distinct(F.flatten(F.transform(
-        ms, lambda a: F.filter(
-            F.transform(
-                ms, lambda b: F.when(
-                    (a["start"] < b["start"]) & (a["entity"] != b["entity"]),
-                    F.struct(a["entity"].alias("subj"),
-                             b["entity"].alias("obj")))),
-            lambda p: p.isNotNull()))))
+    pairs = ordered_pairs(F.col("_ms"))
     return (
         per_turn.select("conv_id", "turn_idx", F.explode(pairs).alias("_p"))
         .select("conv_id", "turn_idx", "_p.subj", "_p.obj")
@@ -322,61 +330,3 @@ def fact_support(triples: DataFrame) -> DataFrame:
                 F.col("_l.c").alias("last_conv"),
                 F.col("_l.t").alias("last_turn"))
     )
-
-
-def tool_sequence_patterns(transcripts: DataFrame,
-                           max_seq: int = 32) -> DataFrame:
-    """GAPPED sequential patterns over per-conversation tool calls —
-    the PrefixSpan-style companion to :func:`tool_sequence_ngrams`:
-    a pattern a ~> b (~> c) is supported by every index tuple
-    i < j (< k) in the conversation's ordered tool sequence, other
-    calls may intervene. This answers the workflow question contiguous
-    k-grams miss ("agents that search EVENTUALLY fetch, whatever runs
-    in between"); lengths 2 and 3 are mined in one pass.
-
-    Same zero-shuffle shape as the contiguous miner: the ordered tool
-    array is an arrival-order-independent per-conversation fold, the
-    index-tuple enumeration is an in-row nested transform — O(n^2) +
-    O(n^3) expression cells per conversation, the documented
-    wer_scores trade — so conversations with more than ``max_seq``
-    tool calls are EXCLUDED (emitting nothing) and the bound is the
-    caller's contract. The final agg is map-side combinable over at
-    most |tools|^3 distinct patterns.
-
-    -> (pattern, k, n_convs, n_occ): distinct conversations containing
-    the gapped pattern and total embeddings (index tuples, overlaps
-    counted) — pattern as 'a~>b' / 'a~>b~>c'.
-    """
-    seq = (
-        transcripts.filter(F.col("role") == "tool")
-        .filter(F.col("tool").isNotNull())
-        .groupBy("conv_id")
-        .agg(F.transform(
-            F.array_sort(F.collect_list(F.struct("turn_idx", "tool"))),
-            lambda s: s["tool"]).alias("_tools"))
-        .filter(F.size("_tools") <= max_seq)
-    )
-    n = F.size("_tools")
-    t = lambda i: F.element_at(F.col("_tools"), i)  # noqa: E731
-    empty = F.array().cast("array<string>")
-    pairs = F.when(n >= 2, F.flatten(F.transform(
-        F.sequence(F.lit(1), n - 1),
-        lambda i: F.transform(
-            F.sequence(i + 1, n),
-            lambda j: F.concat_ws("~>", t(i), t(j)))))).otherwise(empty)
-    trips = F.when(n >= 3, F.flatten(F.flatten(F.transform(
-        F.sequence(F.lit(1), n - 2),
-        lambda i: F.transform(
-            F.sequence(i + 1, n - 1),
-            lambda j: F.transform(
-                F.sequence(j + 1, n),
-                lambda k: F.concat_ws("~>", t(i), t(j), t(k))))))
-        )).otherwise(empty)
-    ex = (seq.select("conv_id",
-                     F.explode(F.concat(pairs, trips)).alias("pattern")))
-    return (ex.groupBy("pattern")
-            .agg(F.countDistinct("conv_id").alias("n_convs"),
-                 F.count("*").alias("n_occ"))
-            .select("pattern",
-                    F.size(F.split("pattern", "~>")).cast("int").alias("k"),
-                    "n_convs", "n_occ"))

@@ -1114,7 +1114,6 @@ def _load_extra_registrations() -> None:
     import lamapi_spark.queries_kg2  # noqa: F401
     import lamapi_spark.queries_ops  # noqa: F401
     import lamapi_spark.queries_stats  # noqa: F401
-    import lamapi_spark.queries_stats2  # noqa: F401
     import lamapi_spark.queries_temporal  # noqa: F401
 
 

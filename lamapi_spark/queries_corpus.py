@@ -1,8 +1,8 @@
 """Round-4 corpus-preparation contract queries: Unicode normalization,
 benchmark contamination, deterministic mixture sampling, unigram-LM
-scoring, and IVF ANN — each paired with a DuckDB oracle that rebuilds
-the full dataflow independently (registered into the queries.py
-registry like queries_ops)."""
+scoring, IVF ANN, RAKE keywords and n-gram novelty — each paired with a
+DuckDB oracle that rebuilds the full dataflow independently (registered
+into the queries.py registry like queries_ops)."""
 
 from __future__ import annotations
 
@@ -1392,3 +1392,108 @@ def kn_lm_q(spark, sf):
     from lamapi_spark.ops.corpus import kn_lm_score
 
     return kn_lm_score(load(spark, sf, "documents")).orderBy("doc_id")
+
+
+# ------------------------------------------------- RAKE keywords
+
+
+def _stoplist_sql() -> str:
+    from lamapi_spark.functions.strings import STOPWORDS
+    return ", ".join(f"'{s}'" for s in sorted(STOPWORDS))
+
+
+@register("corpus_rake", f"""
+WITH d AS (
+  SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS toks
+  FROM documents),
+m AS (SELECT doc_id,
+             list_transform(toks, w -> CASE WHEN w IN ({_stoplist_sql()})
+                                       THEN chr(1) ELSE w END) AS mk
+      FROM d),
+occ AS (
+  SELECT doc_id, p AS phrase FROM (
+    SELECT doc_id,
+           unnest(list_filter(
+             string_split_regex(array_to_string(mk, ' '),
+                                '\\s*' || chr(1) || '\\s*'),
+             p -> len(p) > 0)) AS p
+    FROM m)),
+ow AS (SELECT doc_id, len(string_split(phrase, ' '))::BIGINT AS plen,
+              unnest(string_split(phrase, ' ')) AS w
+       FROM occ),
+ws AS (SELECT doc_id, w,
+              round_even(CAST(sum(plen) AS DOUBLE) / count(*), 9)
+                AS wscore
+       FROM ow GROUP BY doc_id, w),
+cand AS (SELECT DISTINCT doc_id, phrase FROM occ),
+cw AS (SELECT doc_id, phrase, unnest(string_split(phrase, ' ')) AS w
+       FROM cand),
+sc AS (SELECT cw.doc_id, cw.phrase, count(*)::BIGINT AS n_words,
+              CAST(sum(ws.wscore::DECIMAL(28,9)) AS DOUBLE) AS score
+       FROM cw JOIN ws ON cw.doc_id = ws.doc_id AND cw.w = ws.w
+       GROUP BY cw.doc_id, cw.phrase),
+rk AS (SELECT *, row_number() OVER (PARTITION BY doc_id
+                                    ORDER BY score DESC, phrase ASC)
+                   ::BIGINT AS rk
+       FROM sc)
+SELECT doc_id, phrase, n_words, score, rk
+FROM rk WHERE rk <= 3 ORDER BY doc_id, rk
+""")
+def corpus_rake(spark, sf):
+    """Per-document RAKE keyword phrases (ops/corpus.rake_keywords,
+    k=3) over the documents corpus — candidates are maximal
+    stopword-free token runs ('the'/'a' in the template vocabulary
+    make the split real), word score deg/freq over candidate
+    occurrences, phrase score a DECIMAL sum of 9-dp word scores. The
+    oracle replays the mark-rejoin-split run extraction, both aggs,
+    the join, and the tie-broken per-document window."""
+    from lamapi_spark.ops.corpus import rake_keywords
+
+    docs = load(spark, sf, "documents")
+    return (rake_keywords(docs, "doc_id", "text", k=3)
+            .orderBy("doc_id", "rk"))
+
+
+# ------------------------------------------------- n-gram novelty
+
+
+@register("corpus_ngram_novelty", """
+WITH tr AS (SELECT text FROM documents WHERE doc_id % 2 = 0),
+ge AS (SELECT doc_id, text FROM documents WHERE doc_id % 2 = 1),
+tg AS (SELECT DISTINCT g AS gram FROM (
+  SELECT unnest(CASE WHEN len(t) >= 3 THEN
+           list_transform(range(1, len(t) - 1),
+             i -> t[i] || ' ' || t[i + 1] || ' ' || t[i + 2])
+         ELSE [] END) AS g
+  FROM (SELECT string_split_regex(trim(lower(text)), '\\s+') AS t
+        FROM tr))),
+gg AS (SELECT doc_id, g AS gram, count(*)::BIGINT AS cnt FROM (
+  SELECT doc_id, unnest(CASE WHEN len(t) >= 3 THEN
+           list_transform(range(1, len(t) - 1),
+             i -> t[i] || ' ' || t[i + 1] || ' ' || t[i + 2])
+         ELSE [] END) AS g
+  FROM (SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS t
+        FROM ge)) GROUP BY doc_id, g)
+SELECT gg.doc_id AS doc_id, sum(cnt)::BIGINT AS n_grams,
+       sum(CASE WHEN tg.gram IS NULL THEN cnt ELSE 0 END)::BIGINT
+         AS n_novel,
+       round_even(sum(CASE WHEN tg.gram IS NULL THEN cnt ELSE 0 END)
+                  / CAST(sum(cnt) AS DOUBLE), 6) AS novelty
+FROM gg LEFT JOIN tg ON gg.gram = tg.gram
+GROUP BY gg.doc_id ORDER BY doc_id
+""")
+def corpus_ngram_novelty(spark, sf):
+    """Token-3-gram novelty (ops/corpus.ngram_novelty) of the
+    odd-doc_id half of documents against the even half as training —
+    the template generator repeats grams across docs, so novelty sits
+    strictly between 0 and 1 and every branch (seen, novel, repeated
+    novel) is exercised. The oracle replays tokenization, the in-row
+    gram slice, the distinct training set, and the occurrence-weighted
+    left join."""
+    from lamapi_spark.ops.corpus import ngram_novelty
+
+    docs = load(spark, sf, "documents")
+    train = docs.filter(F.col("doc_id") % 2 == 0)
+    gen = docs.filter(F.col("doc_id") % 2 == 1)
+    return (ngram_novelty(gen, train, "doc_id", "text", n=3)
+            .orderBy("doc_id"))

@@ -451,331 +451,6 @@ def eval_rouge_l_vec(spark, sf):
             .orderBy("id"))
 
 
-# ------------------------------------------------- TF-IDF keywords
-
-
-@register("corpus_tfidf_keywords", r"""
-WITH tf AS (
-  SELECT doc_id, unnest(CASE WHEN length(trim(lower(text))) > 0
-           THEN string_split_regex(trim(lower(text)), '\s+')
-           ELSE [] END) AS token
-  FROM documents),
-tfc AS (SELECT doc_id, token, count(*)::BIGINT AS tf
-        FROM tf GROUP BY doc_id, token),
-dfc AS (SELECT token, count(*)::BIGINT AS df FROM tfc GROUP BY token),
-n AS (SELECT count(DISTINCT doc_id)::BIGINT AS n FROM documents),
-scored AS (
-  SELECT tfc.doc_id, tfc.token, tfc.tf, dfc.df,
-         round_even(CAST(tfc.tf AS DOUBLE)
-                    * (ln(CAST(n.n + 1 AS DOUBLE)
-                          / CAST(dfc.df + 1 AS DOUBLE)) + 1.0), 6)
-           AS score
-  FROM tfc JOIN dfc USING (token) CROSS JOIN n),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY doc_id
-                               ORDER BY score DESC, token ASC) AS rk
-  FROM scored)
-SELECT doc_id, token, tf, df, score, rk::INT AS rk
-FROM ranked WHERE rk <= 5 ORDER BY doc_id, rk
-""")
-def corpus_tfidf_keywords(spark, sf):
-    """Per-document top-5 TF-IDF keywords (ops/corpus.tfidf_keywords)
-    over the documents table — the synthetic corpus's template
-    vocabulary makes df near-N for filler words and small for the
-    rarer terms, so idf genuinely reorders raw term counts. The
-    oracle replays tokenization, both count aggs, the smooth-idf
-    expression in the same float order, and the (score desc, token
-    asc) tie-broken window."""
-    from lamapi_spark.ops.corpus import tfidf_keywords
-
-    d = load(spark, sf, "documents")
-    return (tfidf_keywords(d, "doc_id", "text", k=5)
-            .orderBy("doc_id", "rk"))
-
-
-# ------------------------------------------------- bipartiteness audit
-
-
-@register("graph_bipartite", """
-WITH RECURSIVE e0 AS (
-  SELECT DISTINCT 'n' || k AS a,
-         'n' || ((k // 24) * 24 + ((k % 24 + 1) % 24)) AS b
-  FROM (SELECT (o_orderkey % 240)::BIGINT AS k FROM orders)
-  UNION SELECT 'n0', 'n2'),
-sym AS (SELECT a AS src, b AS dst FROM e0
-        UNION SELECT b, a FROM e0),
-nodes AS (SELECT DISTINCT src AS node FROM sym),
-reach(start, node, d) AS (
-  SELECT node, node, 0 FROM nodes
-  UNION
-  SELECT reach.start, sym.dst, reach.d + 1
-  FROM reach JOIN sym ON reach.node = sym.src WHERE reach.d < 24),
-comp AS (SELECT start AS node, min(node) AS component
-         FROM reach GROUP BY start),
-reps AS (SELECT node AS seed FROM comp WHERE node = component),
-walk(node, d) AS (
-  SELECT seed, 0 FROM reps
-  UNION
-  SELECT sym.dst, walk.d + 1
-  FROM walk JOIN sym ON walk.node = sym.src WHERE walk.d < 16),
-dist AS (SELECT node, min(d) AS dist FROM walk GROUP BY node),
-par AS (SELECT comp.node, comp.component, dist.dist % 2 AS par
-        FROM comp LEFT JOIN dist ON comp.node = dist.node),
-ce AS (SELECT DISTINCT least(a, b) AS x, greatest(a, b) AS y FROM e0),
-ex AS (SELECT px.component,
-              (px.par IS NOT NULL AND py.par IS NOT NULL) AS known,
-              (px.par IS NOT NULL AND py.par IS NOT NULL
-               AND (ce.x = ce.y OR px.par = py.par)) AS odd
-       FROM ce JOIN par px ON ce.x = px.node
-               JOIN par py ON ce.y = py.node),
-e_per AS (SELECT component, sum(known::INT)::BIGINT AS n_edges,
-                 sum(odd::INT)::BIGINT AS odd_edges
-          FROM ex GROUP BY component),
-n_per AS (SELECT component, count(*)::BIGINT AS n_nodes,
-                 sum((par IS NULL)::INT)::BIGINT AS n_unreached
-          FROM par GROUP BY component)
-SELECT n_per.component, n_nodes,
-       coalesce(n_edges, 0) AS n_edges,
-       coalesce(odd_edges, 0) AS odd_edges, n_unreached,
-       CASE WHEN n_unreached > 0 THEN NULL
-            ELSE coalesce(odd_edges, 0) = 0 END AS is_bipartite
-FROM n_per LEFT JOIN e_per ON n_per.component = e_per.component
-ORDER BY n_per.component
-""")
-def graph_bipartite(spark, sf):
-    """Bipartiteness audit (ops/graph.bipartite_check) over ten
-    planted 24-cycles (even cycles — bipartite) with ONE chord in
-    block 0 (n0-n2 closes a triangle, so exactly that component reads
-    is_bipartite = false with one odd edge... the odd-edge COUNT is
-    parity-witness edges, oracle-replayed, not hand-assumed). The
-    oracle recomputes components (bounded recursive reachability +
-    min-label), BFS parities from the same min-node representatives,
-    and the canonical edge census — fully independent of the Spark
-    fixpoint loops."""
-    from lamapi_spark.ops.graph import bipartite_check
-
-    o = load(spark, sf, "orders")
-    k = (F.col("o_orderkey") % 240).cast("long")
-    ring = o.select(
-        F.concat(F.lit("n"), k).alias("src"),
-        F.concat(F.lit("n"), (k - k % 24)
-                 + ((k % 24 + 1) % 24)).alias("dst")).distinct()
-    chord = spark.createDataFrame([("n0", "n2")], "src string, dst string")
-    edges = ring.unionByName(chord).distinct()
-    return bipartite_check(edges).orderBy("component")
-
-
-# ------------------------------------------------- Allen interval algebra
-
-
-_ALLEN_SYNTH = """
-iv AS (
-  SELECT 'k' || (i // 12) AS key, 'i' || i AS id, p,
-         CASE p
-           WHEN 6 THEN (0 * 31) % 50
-           WHEN 7 THEN ((1 * 31) % 50) + 10 + 1 * 7
-           WHEN 8 THEN (2 * 31) % 50
-           WHEN 9 THEN ((3 * 31) % 50) + 10 + 3 * 7 - 3
-           WHEN 10 THEN ((4 * 31) % 50) + 1
-           WHEN 11 THEN ((5 * 31) % 50) - 1
-           ELSE (p * 31) % 50 END::BIGINT AS lo_us,
-         CASE p
-           WHEN 6 THEN ((0 * 31) % 50) + 10 + 0 * 7
-           WHEN 7 THEN ((1 * 31) % 50) + 10 + 1 * 7 + 9
-           WHEN 8 THEN ((2 * 31) % 50) + 5
-           WHEN 9 THEN ((3 * 31) % 50) + 10 + 3 * 7
-           WHEN 10 THEN ((4 * 31) % 50) + 10 + 4 * 7 - 1
-           WHEN 11 THEN ((5 * 31) % 50) + 10 + 5 * 7 + 1
-           ELSE ((p * 31) % 50) + 10 + p * 7 END::BIGINT AS hi_us
-  FROM (SELECT DISTINCT (o_orderkey % 600)::BIGINT AS i,
-               (o_orderkey % 12)::BIGINT AS p FROM orders))
-"""
-
-
-@register("events_allen_relations", f"""
-WITH {_ALLEN_SYNTH},
-p AS (
-  SELECT a.key, a.id AS id_a, b.id AS id_b,
-         a.lo_us AS al, a.hi_us AS ah, b.lo_us AS bl, b.hi_us AS bh
-  FROM iv a JOIN iv b ON a.key = b.key AND a.id < b.id)
-SELECT key, id_a, id_b,
-       CASE WHEN al = bl AND ah = bh THEN 'equals'
-            WHEN ah < bl THEN 'before'
-            WHEN bh < al THEN 'after'
-            WHEN ah = bl THEN 'meets'
-            WHEN bh = al THEN 'met_by'
-            WHEN al = bl AND ah < bh THEN 'starts'
-            WHEN al = bl AND ah > bh THEN 'started_by'
-            WHEN ah = bh AND al > bl THEN 'finishes'
-            WHEN ah = bh AND al < bl THEN 'finished_by'
-            WHEN al > bl AND ah < bh THEN 'during'
-            WHEN al < bl AND ah > bh THEN 'contains'
-            WHEN al < bl AND ah < bh THEN 'overlaps'
-            ELSE 'overlapped_by' END AS relation
-FROM p ORDER BY key, id_a, id_b
-""")
-def events_allen_relations(spark, sf):
-    """Allen interval-algebra census (ops/temporal.allen_relations)
-    over 50 keys x 12 planted validity intervals: positions 0-5 are
-    pseudo-random spans, and positions 6-11 are constructed AGAINST
-    them — a copy of p0 (equals), a span starting at p1's end
-    (meets), a shared-start prefix of p2 (starts), a shared-end
-    suffix of p3 (finishes), a strict interior of p4 (during), and a
-    strict cover of p5 (contains) — so the measure-zero equality
-    relations all occur by construction, not luck. The oracle
-    replays the synth and the ordered decision cascade over its own
-    pair join."""
-    from lamapi_spark.ops.temporal import allen_relations
-
-    o = load(spark, sf, "orders")
-    d = o.select((F.col("o_orderkey") % 600).alias("i"),
-                 (F.col("o_orderkey") % 12).alias("p")).distinct()
-    base = F.col("p") * 31 % 50
-    blen = base + 10 + F.col("p") * 7
-    lo = (F.when(F.col("p") == 6, F.lit(0))
-          .when(F.col("p") == 7, F.lit((1 * 31) % 50 + 10 + 1 * 7))
-          .when(F.col("p") == 8, F.lit((2 * 31) % 50))
-          .when(F.col("p") == 9, F.lit((3 * 31) % 50 + 10 + 3 * 7 - 3))
-          .when(F.col("p") == 10, F.lit((4 * 31) % 50 + 1))
-          .when(F.col("p") == 11, F.lit((5 * 31) % 50 - 1))
-          .otherwise(base)).cast("long")
-    hi = (F.when(F.col("p") == 6, F.lit((0 * 31) % 50 + 10))
-          .when(F.col("p") == 7, F.lit((1 * 31) % 50 + 10 + 1 * 7 + 9))
-          .when(F.col("p") == 8, F.lit((2 * 31) % 50 + 5))
-          .when(F.col("p") == 9, F.lit((3 * 31) % 50 + 10 + 3 * 7))
-          .when(F.col("p") == 10, F.lit((4 * 31) % 50 + 10 + 4 * 7 - 1))
-          .when(F.col("p") == 11, F.lit((5 * 31) % 50 + 10 + 5 * 7 + 1))
-          .otherwise(blen)).cast("long")
-    iv = d.select(
-        F.concat(F.lit("k"), (F.col("i") / 12).cast("long")).alias("key"),
-        F.concat(F.lit("i"), F.col("i")).alias("id"),
-        lo.alias("lo_us"), hi.alias("hi_us"))
-    return (allen_relations(iv).orderBy("key", "id_a", "id_b"))
-
-
-# ------------------------------------------------- stress centrality
-
-
-@register("graph_stress_centrality", """
-WITH RECURSIVE ids AS (
-  SELECT DISTINCT (o_orderkey % 16)::BIGINT AS i FROM orders),
-e0 AS (
-  SELECT 'g' || i AS src, 'g' || (i + 1) AS dst FROM ids WHERE i % 8 < 7
-  UNION SELECT 'g' || i, 'g' || (i + 8) FROM ids WHERE i < 8),
-sym AS (SELECT src, dst FROM e0 UNION SELECT dst, src FROM e0),
-walks(s, node, d, path) AS (
-  SELECT src, src, 0, [src] FROM (SELECT DISTINCT src FROM sym)
-  UNION ALL
-  SELECT w.s, sym.dst, w.d + 1, list_append(w.path, sym.dst)
-  FROM walks w JOIN sym ON w.node = sym.src
-  WHERE w.d < 9 AND NOT list_contains(w.path, sym.dst)),
-sp AS (SELECT s, node AS t, min(d) AS dmin FROM walks GROUP BY s, node),
-short AS (
-  SELECT w.s, w.node AS t, w.path
-  FROM walks w JOIN sp ON w.s = sp.s AND w.node = sp.t AND w.d = sp.dmin
-  WHERE w.s <> w.node),
-interior AS (
-  SELECT s, t, unnest(list_slice(path, 2, len(path) - 1)) AS v
-  FROM short)
-SELECT v AS node, count(*)::DECIMAL(38,0) AS stress
-FROM interior GROUP BY v ORDER BY node
-""")
-def graph_stress_centrality(spark, sf):
-    """Exact stress centrality (ops/graph.stress_centrality, every
-    node a seed) on a 2x8 grid graph — the grid's parallel rows give
-    every inner pair MULTIPLE shortest paths (up to binomial
-    multiplicity), so the sigma-weighted continuation products are
-    load-bearing, not all 1s as on a tree. The oracle is maximally
-    independent: it ENUMERATES all simple walks up to the diameter
-    with a recursive CTE, keeps exactly the shortest per (s, t), and
-    counts interior-node occurrences — no BFS layers, no sigma, no
-    backward recurrence — so green proves the Brandes two-phase
-    against a from-first-principles path census."""
-    from lamapi_spark.ops.graph import stress_centrality
-
-    o = load(spark, sf, "orders")
-    ids = o.select((F.col("o_orderkey") % 16).alias("i")).distinct()
-    right = (ids.filter(F.col("i") % 8 < 7)
-             .select(F.concat(F.lit("g"), F.col("i")).alias("src"),
-                     F.concat(F.lit("g"), F.col("i") + 1).alias("dst")))
-    down = (ids.filter(F.col("i") < 8)
-            .select(F.concat(F.lit("g"), F.col("i")).alias("src"),
-                    F.concat(F.lit("g"), F.col("i") + 8).alias("dst")))
-    e0 = right.unionByName(down).distinct()
-    sym = (e0.unionByName(e0.select(F.col("dst").alias("src"),
-                                    F.col("src").alias("dst")))
-           .distinct())
-    seeds = sym.select(F.col("src").alias("seed")).distinct()
-    return (stress_centrality(sym, seeds, max_depth=9)
-            .filter(F.col("stress") > 0).orderBy("node"))
-
-
-# ------------------------------------------------- community conductance
-
-
-@register("graph_conductance", """
-WITH ids AS (SELECT DISTINCT (o_orderkey % 240)::BIGINT AS k FROM orders),
-ring AS (
-  SELECT 'n' || k AS src,
-         'n' || ((k // 24) * 24 + ((k % 24 + 1) % 24)) AS dst
-  FROM ids),
-cross_e AS (
-  SELECT 'n' || (b * 24) AS src, 'n' || (((b + 1) % 10) * 24) AS dst
-  FROM (SELECT DISTINCT (k // 24)::BIGINT AS b FROM ids)),
-e0 AS (SELECT src, dst FROM ring UNION SELECT src, dst FROM cross_e),
-ce AS (SELECT DISTINCT least(src, dst) AS x, greatest(src, dst) AS y
-       FROM e0 WHERE src <> dst),
-lab AS (SELECT 'n' || k AS node, 'b' || (k // 24) AS community FROM ids),
-ex AS (SELECT lx.community AS cx, ly.community AS cy
-       FROM ce JOIN lab lx ON ce.x = lx.node
-               JOIN lab ly ON ce.y = ly.node),
-ends AS (SELECT cx AS community, (cx <> cy) AS cut FROM ex
-         UNION ALL SELECT cy, (cx <> cy) FROM ex),
-per AS (SELECT community, count(*)::BIGINT AS vol,
-               sum(cut::INT)::BIGINT AS cut
-        FROM ends GROUP BY community),
-nn AS (SELECT community, count(*)::BIGINT AS n_nodes
-       FROM lab GROUP BY community),
-tot AS (SELECT sum(vol)::BIGINT AS tv FROM per)
-SELECT nn.community, n_nodes, coalesce(vol, 0) AS vol,
-       coalesce(cut, 0) AS cut,
-       CASE WHEN least(coalesce(vol, 0), tv - coalesce(vol, 0)) > 0
-            THEN round_even(coalesce(cut, 0)
-                 / CAST(least(coalesce(vol, 0), tv - coalesce(vol, 0))
-                        AS DOUBLE), 6)
-            ELSE 0.0 END AS conductance
-FROM nn LEFT JOIN per ON nn.community = per.community
-CROSS JOIN tot ORDER BY nn.community
-""")
-def graph_conductance(spark, sf):
-    """Community conductance (ops/graph.community_conductance) over
-    ten 24-cycles joined into a ring of blocks by one cross edge per
-    adjacent block pair — each community has vol 50 (48 internal
-    endpoints + 2 boundary) and cut 2, so phi = 2/50 uniformly, and
-    the min(vol, total-vol) side is load-bearing (450 vs 50). The
-    oracle replays the canonical edge census, both endpoint
-    projections, and every guarded ratio."""
-    from lamapi_spark.ops.graph import community_conductance
-
-    o = load(spark, sf, "orders")
-    k = (F.col("o_orderkey") % 240).cast("long")
-    ids = o.select(k.alias("k")).distinct()
-    ring = ids.select(
-        F.concat(F.lit("n"), F.col("k")).alias("src"),
-        F.concat(F.lit("n"), (F.col("k") - F.col("k") % 24)
-                 + ((F.col("k") % 24 + 1) % 24)).alias("dst"))
-    blocks = ids.select((F.col("k") / 24).cast("long").alias("b")).distinct()
-    cross = blocks.select(
-        F.concat(F.lit("n"), F.col("b") * 24).alias("src"),
-        F.concat(F.lit("n"), ((F.col("b") + 1) % 10) * 24).alias("dst"))
-    edges = ring.unionByName(cross).distinct()
-    lab = ids.select(
-        F.concat(F.lit("n"), F.col("k")).alias("node"),
-        F.concat(F.lit("b"), (F.col("k") / 24).cast("long"))
-        .alias("community"))
-    return community_conductance(edges, lab).orderBy("community")
-
-
 # ------------------------------------------------- multiclass MCC
 
 
@@ -881,46 +556,6 @@ def eval_wasserstein(spark, sf):
     return wasserstein_1d(a, b)
 
 
-# ------------------------------------------------- Heaps-law growth
-
-
-@register("corpus_vocab_growth", r"""
-WITH ranks AS (
-  SELECT doc_id, text,
-         row_number() OVER (ORDER BY doc_id)::BIGINT AS rank
-  FROM documents),
-toks_b AS (
-  SELECT floor(log2(rank))::BIGINT AS g,
-         sum(len(string_split_regex(lower(text), '\s+')))::BIGINT AS tok,
-         count(*)::BIGINT AS docs
-  FROM ranks GROUP BY 1),
-types_b AS (
-  SELECT floor(log2(fr))::BIGINT AS g, count(*)::BIGINT AS new FROM (
-    SELECT t, min(rank) AS fr FROM (
-      SELECT rank, unnest(string_split_regex(lower(text), '\s+')) AS t
-      FROM ranks) GROUP BY t)
-  GROUP BY 1)
-SELECT CAST(pow(2.0, toks_b.g + 1) AS BIGINT) AS checkpoint_docs,
-       sum(docs) OVER w AS cum_docs,
-       sum(tok) OVER w AS cum_tokens,
-       sum(coalesce(new, 0)) OVER w AS cum_types
-FROM toks_b LEFT JOIN types_b ON toks_b.g = types_b.g
-WINDOW w AS (ORDER BY toks_b.g ROWS UNBOUNDED PRECEDING)
-ORDER BY checkpoint_docs
-""")
-def corpus_vocab_growth(spark, sf):
-    """Heaps-law vocabulary growth (ops/textstats.vocab_growth) over
-    the documents corpus in doc_id order — the template vocabulary
-    saturates early, so cum_types visibly bends while cum_tokens
-    stays linear (the curve shape is itself the check). The oracle
-    replays ranks with a plain global row_number, the log2 bucketing
-    of both arrival frames, and the running sums."""
-    from lamapi_spark.ops.textstats import vocab_growth
-
-    return (vocab_growth(load(spark, sf, "documents"))
-            .orderBy("checkpoint_docs"))
-
-
 # ------------------------------------------------- BIO span F1
 
 
@@ -1022,75 +657,3 @@ def eval_bio_span_f1(spark, sf):
     pred = d.select(seq.alias("seq"), pos.alias("pos"),
                     pred_tag.alias("tag"))
     return bio_span_f1(pred, gold, ["seq"])
-
-
-# ------------------------------------------------- Zipf fit
-
-
-@register("corpus_zipf_fit", r"""
-WITH tf AS (
-  SELECT t, count(*)::BIGINT AS c FROM (
-    SELECT unnest(string_split_regex(lower(text), '\s+')) AS t
-    FROM documents) GROUP BY t),
-ranked AS (
-  SELECT c, row_number() OVER (ORDER BY c DESC, t ASC)::BIGINT AS rank
-  FROM tf QUALIFY rank <= 1000),
-m AS (
-  SELECT count(*)::BIGINT AS n,
-         sum(round_even(ln(CAST(rank AS DOUBLE)), 12)
-             ::DECIMAL(38,12)) AS sx,
-         sum(round_even(ln(CAST(c AS DOUBLE)), 12)
-             ::DECIMAL(38,12)) AS sy,
-         sum(round_even(ln(CAST(rank AS DOUBLE))
-                        * ln(CAST(c AS DOUBLE)), 12)
-             ::DECIMAL(38,12)) AS sxy,
-         sum(round_even(ln(CAST(rank AS DOUBLE))
-                        * ln(CAST(rank AS DOUBLE)), 12)
-             ::DECIMAL(38,12)) AS sxx,
-         sum(round_even(ln(CAST(c AS DOUBLE))
-                        * ln(CAST(c AS DOUBLE)), 12)
-             ::DECIMAL(38,12)) AS syy
-  FROM ranked)
-SELECT n AS n_ranks,
-       round_even(CASE WHEN n >= 2 AND (n * CAST(sxx AS DOUBLE)
-                  - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) > 0
-         THEN (n * CAST(sxy AS DOUBLE)
-               - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-              / (n * CAST(sxx AS DOUBLE)
-                 - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-         ELSE 0.0 END, 6) AS slope,
-       round_even(CASE WHEN n >= 2 AND (n * CAST(sxx AS DOUBLE)
-                  - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) > 0
-         THEN (CAST(sy AS DOUBLE) - ((n * CAST(sxy AS DOUBLE)
-               - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-              / (n * CAST(sxx AS DOUBLE)
-                 - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)))
-              * CAST(sx AS DOUBLE)) / n
-         ELSE 0.0 END, 6) AS intercept,
-       round_even(CASE WHEN n >= 2 AND (n * CAST(sxx AS DOUBLE)
-                  - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) > 0
-                  AND (n * CAST(syy AS DOUBLE)
-                       - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)) > 0
-         THEN ((n * CAST(sxy AS DOUBLE)
-                - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-               * (n * CAST(sxy AS DOUBLE)
-                  - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)))
-              / ((n * CAST(sxx AS DOUBLE)
-                  - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-                 * (n * CAST(syy AS DOUBLE)
-                    - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))
-         ELSE 0.0 END, 6) AS r2
-FROM m
-""")
-def corpus_zipf_fit(spark, sf):
-    """Zipf rank-frequency OLS (ops/textstats.zipf_fit) over the
-    documents corpus's top-1000 token ranks — the synthetic template
-    vocabulary is nearly uniform, so the fitted exponent sits far
-    from natural text's -1 (the diagnosis the operator exists to
-    make). The oracle replays ranks with a global window (frequency
-    desc, token asc — the Spark side uses the two-level scan on
-    (-freq, token)), the 12-dp DECIMAL moment sums, and every closed
-    form."""
-    from lamapi_spark.ops.textstats import zipf_fit
-
-    return zipf_fit(load(spark, sf, "documents"))

@@ -174,57 +174,3 @@ def stream_refusal_gate(
         .alias("refusal_rate"),
         (F.col("n_refusals") == 0).alias("keep"),
     )
-
-
-def stream_role_transitions(
-    spark: SparkSession,
-    path: str,
-    gap: str = "2 hours",
-    watermark: str = "4 hours",
-    schema: str = TRANSCRIPT_SCHEMA,
-) -> DataFrame:
-    """Streaming twin of ops/temporal.markov_stationary's transition
-    CENSUS stage: per closed conversation session, the consecutive-
-    turn role pairs with their in-conversation counts — the live feed
-    a structure monitor aggregates into the transition matrix (the
-    stationary solve itself is the batch job's step; the census is
-    the data-sized part). Same session-window carry shape as the
-    other transcript twins; the consecutive pairing and the per-pair
-    occurrence count both run IN-ARRAY over the session's sorted
-    turns (O(k^2) distinct-pair recount, k = one conversation's
-    turns, bounded by construction). A conversation quiet longer than
-    ``gap`` splits — pairs never straddle sessions, the twins'
-    documented staleness bound.
-
-    -> (conv_id, s_from, s_to, n) per closed session.
-    """
-    stream = spark.readStream.schema(schema).parquet(path)
-    turns = stream.withWatermark("ts", watermark).select(
-        "conv_id", "turn_idx", "role", "ts")
-    per_conv = (
-        turns.groupBy(F.session_window("ts", gap).alias("_w"),
-                      F.col("conv_id"))
-        .agg(F.transform(
-            F.array_sort(F.collect_list(F.struct(
-                F.col("turn_idx").alias("t"),
-                F.col("role").alias("r")))),
-            lambda e: e["r"]).alias("_s")))
-    n = F.size("_s")
-    pairs = F.when(n >= 2, F.transform(
-        F.sequence(F.lit(1), n - 1),
-        lambda i: F.struct(
-            F.element_at(F.col("_s"), i).alias("s_from"),
-            F.element_at(F.col("_s"), i + 1).alias("s_to")))
-    ).otherwise(F.array().cast(
-        "array<struct<s_from:string,s_to:string>>"))
-    counted = F.transform(
-        F.array_distinct(pairs),
-        lambda p: F.struct(
-            p.s_from.alias("s_from"), p.s_to.alias("s_to"),
-            F.size(F.filter(pairs, lambda q: (q.s_from == p.s_from)
-                            & (q.s_to == p.s_to))).cast("long")
-            .alias("n")))
-    return (per_conv.select("conv_id", F.explode(counted).alias("e"))
-            .select("conv_id", F.col("e.s_from").alias("s_from"),
-                    F.col("e.s_to").alias("s_to"),
-                    F.col("e.n").alias("n")))

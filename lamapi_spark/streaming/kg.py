@@ -41,10 +41,11 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lamapi_spark.pipeline.mentions import _inside_longer_span, _spans
+from lamapi_spark.pipeline.triples import ordered_pairs
 
 TRANSCRIPT_SCHEMA = ("conv_id string, turn_idx int, role string, "
                      "text string, tool string, ts timestamp")
@@ -152,29 +153,18 @@ def stream_extract_triples(
 ) -> DataFrame:
     """Streaming triples: (subj, pred, obj, conv_id, turn_idx, ts).
 
-    Pair generation is TURN-LOCAL (pipeline/triples.py mention_pairs:
-    earlier-offset non-NIL mention is subject, distinct per turn), so it
-    folds into the SAME aggregation pass that resolves max-match —
-    array-level pair building instead of a self-join, no second stateful
-    operator. The edge probe is a stream-static equi-join on
-    (subj, obj); at scale the static side is the flat edges table,
-    AQE-skew-handled exactly as in batch.
+    Pair generation is TURN-LOCAL (pipeline/triples.ordered_pairs, the
+    batch mention_pairs expression: earlier-offset non-NIL mention is
+    subject, distinct per turn), so it folds into the SAME aggregation
+    pass that resolves max-match — array-level pair building instead of
+    a self-join, no second stateful operator. The edge probe is a
+    stream-static equi-join on (subj, obj); at scale the static side is
+    the flat edges table, AQE-skew-handled exactly as in batch.
     """
     stream = _read_stream(spark, path, schema, max_files_per_trigger)
     turns = _resolved_turns(stream, link_index, watermark, max_ntoken)
     linked = F.filter("_ms", lambda s: s["link_score"] >= F.lit(nil_threshold))
-    pairs = F.array_distinct(F.flatten(F.transform(
-        linked,
-        lambda a: F.transform(
-            F.filter(
-                linked,
-                lambda b: (a["start"] < b["start"])
-                & (a["entity"] != b["entity"]),
-            ),
-            lambda b: F.struct(a["entity"].alias("subj"),
-                               b["entity"].alias("obj")),
-        ),
-    )))
+    pairs = ordered_pairs(linked)
     pair_rows = turns.select(
         "conv_id", "turn_idx", "ts", F.explode(pairs).alias("p"),
     ).select("conv_id", "turn_idx", "ts", "p.subj", "p.obj")
@@ -291,6 +281,20 @@ def stream_type_violations(
                     "bad_subj", "bad_obj"))
 
 
+def _with_prior_entity(*fields: str) -> Column:
+    """Indexed in-array antecedent scan over a session's sorted
+    ``_occ`` array: element i keeps ``fields`` and gains ``a``, the max
+    ordered row strictly before it whose ``e`` is not NULL — the sorted
+    prefix maximum, i.e. the batch window's IGNORE-NULLS running last
+    (array_max of an empty filter result is NULL -> unresolved, the
+    batch null-degrade)."""
+    occ = F.col("_occ")
+    return F.transform(occ, lambda x, i: F.struct(
+        *[x[f].alias(f) for f in fields],
+        F.array_max(F.filter(
+            occ, lambda y, j: (j < i) & y["e"].isNotNull())).alias("a")))
+
+
 def stream_coref_resolve(
     spark: SparkSession,
     path: str,
@@ -347,21 +351,8 @@ def stream_coref_resolve(
             F.col("entity").alias("e"), F.col("pronoun").alias("pr"),
         ))).alias("_occ"))
     )
-    # indexed in-array scan: for element i, the antecedent is the max
-    # (t, p)-ordered entity row strictly before it (array_max of an
-    # empty filter result is NULL -> unresolved, the batch null-degrade)
-    resolved = F.transform(
-        F.col("_occ"),
-        lambda x, i: F.struct(
-            x["t"].alias("t"), x["p"].alias("p"), x["pr"].alias("pr"),
-            F.array_max(F.filter(
-                F.col("_occ"),
-                lambda y, j: (j < i) & y["e"].isNotNull(),
-            )).alias("a"),
-        ),
-    )
     rows = per_conv.select(
-        "conv_id", F.explode(resolved).alias("r"),
+        "conv_id", F.explode(_with_prior_entity("t", "p", "pr")).alias("r"),
     ).filter(F.col("r.pr").isNotNull())
     ok = (F.col("r.a").isNotNull()
           & (F.col("r.t") - F.col("r.a.t") <= F.lit(max_turns)))
@@ -418,18 +409,9 @@ def stream_tool_edges(
             F.col("role").alias("role"), F.col("tool").alias("tool"),
         ))).alias("_occ"))
     )
-    resolved = F.transform(
-        F.col("_occ"),
-        lambda x, i: F.struct(
-            x["t"].alias("t"), x["role"].alias("role"),
-            x["tool"].alias("tool"),
-            F.array_max(F.filter(
-                F.col("_occ"),
-                lambda y, j: (j < i) & y["e"].isNotNull(),
-            )).alias("a"),
-        ),
-    )
-    rows = per_conv.select("conv_id", F.explode(resolved).alias("r"))
+    rows = per_conv.select(
+        "conv_id",
+        F.explode(_with_prior_entity("t", "role", "tool")).alias("r"))
     return (
         rows.filter((F.col("r.role") == "tool")
                     & F.col("r.a").isNotNull()

@@ -75,14 +75,24 @@ def test_fixture_frames_are_jvm_resident(spark, fix):
     assert empty.schema == ref["kg_sameas"].schema and empty.count() == 0
 
 
-def test_triples_prf(spark, fix, tmp_path):
+def test_triples_prf(spark, fix, tmp_path, monkeypatch):
+    """Also runs the large-dictionary join path: with the broadcast cap
+    at 0, every count-bounded join on the bucketed index takes its
+    shuffle_hash arm, and the triples must not change."""
+    from lamapi_spark.operators import indexes
+
     kg, dfs = fix
-    out = run_pipeline(
-        spark, dfs["transcripts"], dfs["kg_items"], dfs["kg_edges"],
-        dfs["kg_sameas"], checkpoint_dir=str(tmp_path / "ckpt"))
+    args = (spark, dfs["transcripts"], dfs["kg_items"], dfs["kg_edges"],
+            dfs["kg_sameas"])
+    out = run_pipeline(*args, checkpoint_dir=str(tmp_path / "ckpt"))
     prf = triple_prf(out["triples"], dfs["triples_truth"])
     assert prf["precision"] >= 0.95, prf
     assert prf["recall"] >= 0.95, prf
+    triples = sorted(tuple(r) for r in out["triples"].collect())
+
+    monkeypatch.setattr(indexes, "_BROADCAST_NAME_CAP", 0)
+    no_cap = run_pipeline(*args, checkpoint_dir=str(tmp_path / "ckpt_cap0"))
+    assert sorted(tuple(r) for r in no_cap["triples"].collect()) == triples
 
 
 def test_nil_mentions_get_nil_ids(spark, fix, tmp_path):

@@ -7,8 +7,6 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import functions as F
-
 from lamapi_spark.ops.metrics import (
     bh_fdr, chi2_independence, js_divergence, ks_two_sample,
 )
@@ -339,286 +337,6 @@ def test_rouge_l_truncation_cap(spark):
     assert r.cand_n == 4 and r.ref_n == 4 and r.lcs == 4 and r.f1 == 1.0
 
 
-# ------------------------------------------------- TF-IDF keywords
-
-
-def test_tfidf_idf_reorders_counts(spark):
-    from lamapi_spark.ops.corpus import tfidf_keywords
-    import math
-    docs = spark.createDataFrame([
-        (1, "common common common rare"),
-        (2, "common other"),
-        (3, "common more")], "doc_id long, text string")
-    out = [r for r in tfidf_keywords(docs, k=2).collect() if r.doc_id == 1]
-    # doc 1: tf(common)=3 df=3 idf=ln(4/4)+1=1 -> 3.0
-    #        tf(rare)=1 df=1 idf=ln(4/2)+1 -> 1.693..: common still wins
-    assert out[0].token == "common" and out[0].score == 3.0
-    assert out[1].token == "rare"
-    assert out[1].score == round(math.log(4 / 2) + 1, 6)
-
-
-def test_tfidf_tie_breaks_by_token(spark):
-    from lamapi_spark.ops.corpus import tfidf_keywords
-    docs = spark.createDataFrame([(1, "zz aa"), (2, "aa zz")],
-                                 "doc_id long, text string")
-    out = sorted(tfidf_keywords(docs, k=2).collect(),
-                 key=lambda r: (r.doc_id, r.rk))
-    # equal tf and df -> equal score -> token asc wins rank 1
-    assert out[0].token == "aa" and out[0].rk == 1
-    assert out[2].token == "aa" and out[2].rk == 1
-
-
-def test_tfidf_k_truncates(spark):
-    from lamapi_spark.ops.corpus import tfidf_keywords
-    docs = spark.createDataFrame([(1, "a b c d e f g h")],
-                                 "doc_id long, text string")
-    assert tfidf_keywords(docs, k=3).count() == 3
-
-
-# ------------------------------------------------- bipartiteness audit
-
-
-def _edges(spark, pairs):
-    return spark.createDataFrame(pairs, "src string, dst string")
-
-
-def test_bipartite_even_vs_odd_cycle(spark):
-    from lamapi_spark.ops.graph import bipartite_check
-    ev = [("a", "b"), ("b", "c"), ("c", "d"), ("d", "a")]
-    od = [("x", "y"), ("y", "z"), ("z", "x")]
-    out = {r.component: r for r in
-           bipartite_check(_edges(spark, ev + od)).collect()}
-    assert out["a"].is_bipartite is True and out["a"].odd_edges == 0
-    assert out["x"].is_bipartite is False and out["x"].odd_edges >= 1
-    assert out["a"].n_nodes == 4 and out["x"].n_edges == 3
-
-
-def test_bipartite_self_loop_is_odd(spark):
-    from lamapi_spark.ops.graph import bipartite_check
-    r = bipartite_check(_edges(spark, [("a", "a"), ("a", "b")])).head()
-    assert r.is_bipartite is False and r.odd_edges == 1
-
-
-def test_bipartite_star_is_bipartite(spark):
-    from lamapi_spark.ops.graph import bipartite_check
-    r = bipartite_check(_edges(spark, [("hub", f"s{i}")
-                                       for i in range(5)])).head()
-    assert r.is_bipartite is True and r.n_nodes == 6 and r.n_edges == 5
-
-
-def test_bipartite_horizon_reads_null(spark):
-    from lamapi_spark.ops.graph import bipartite_check
-    path = [(f"p{i}", f"p{i+1}") for i in range(6)]
-    r = bipartite_check(_edges(spark, path), max_depth=2).head()
-    assert r.n_unreached > 0 and r.is_bipartite is None
-
-
-def test_bipartite_direction_irrelevant(spark):
-    from lamapi_spark.ops.graph import bipartite_check
-    # same triangle, mixed orientations + a duplicate reversed edge
-    r = bipartite_check(_edges(spark, [
-        ("x", "y"), ("z", "y"), ("z", "x"), ("x", "z")])).head()
-    assert r.is_bipartite is False and r.n_edges == 3
-
-
-# ------------------------------------------------- Allen interval algebra
-
-
-def _iv(spark, rows):
-    return spark.createDataFrame(
-        rows, "key string, id string, lo_us long, hi_us long")
-
-
-def test_allen_all_thirteen_relations(spark):
-    from lamapi_spark.ops.temporal import allen_relations
-    # B is always ("b", 10, 20); A varies. id "a..." < "b" so A is
-    # the named side.
-    cases = {
-        "before": (0, 5), "meets": (0, 10), "overlaps": (5, 15),
-        "finished_by": (5, 20), "contains": (5, 25), "starts": (10, 15),
-        "equals": (10, 20), "started_by": (10, 25), "during": (12, 18),
-        "finishes": (15, 20), "overlapped_by": (15, 25),
-        "met_by": (20, 30), "after": (25, 30),
-    }
-    rows = []
-    for i, (rel, (lo, hi)) in enumerate(sorted(cases.items())):
-        rows += [(f"k{i}", f"a_{rel}", lo, hi), (f"k{i}", "b", 10, 20)]
-    out = {r.id_a.removeprefix("a_"): r.relation
-           for r in allen_relations(_iv(spark, rows)).collect()}
-    assert out == {rel: rel for rel in cases}
-
-
-def test_allen_point_intervals_deterministic(spark):
-    from lamapi_spark.ops.temporal import allen_relations
-    # two identical points -> equals; a point at the other's start
-    # hits the cascade's `meets` arm BEFORE `starts` (a_hi == b_lo) —
-    # the documented degenerate-interval convention, oracle-replayed
-    out = {(r.id_a, r.id_b): r.relation for r in allen_relations(_iv(
-        spark, [("k", "a", 5, 5), ("k", "b", 5, 5),
-                ("k", "c", 5, 9)])).collect()}
-    assert out[("a", "b")] == "equals"
-    assert out[("a", "c")] == "meets"
-
-
-def test_allen_max_per_key_drops(spark):
-    from lamapi_spark.ops.temporal import allen_relations
-    rows = [("big", f"i{i}", i, i + 2) for i in range(5)] \
-        + [("ok", "x", 0, 1), ("ok", "y", 5, 6)]
-    out = allen_relations(_iv(spark, rows), max_per_key=4).collect()
-    assert {r.key for r in out} == {"ok"}
-    assert out[0].relation == "before"
-
-
-# ------------------------------------------------- stress centrality
-
-
-def _sym_edges(spark, pairs):
-    return spark.createDataFrame(
-        pairs + [(b, a) for a, b in pairs], "src string, dst string")
-
-
-def _seeds(spark, names):
-    return spark.createDataFrame([(n,) for n in names], "seed string")
-
-
-def test_stress_path_graph(spark):
-    from lamapi_spark.ops.graph import stress_centrality
-    # a-b-c-d path: stress(b) = pairs {a,c},{a,d},{c,a},{d,a} = 4
-    e = _sym_edges(spark, [("a", "b"), ("b", "c"), ("c", "d")])
-    out = {r.node: int(r.stress) for r in
-           stress_centrality(e, _seeds(spark, "abcd")).collect()}
-    assert out == {"a": 0, "b": 4, "c": 4, "d": 0}
-
-
-def test_stress_diamond_multiplicity(spark):
-    from lamapi_spark.ops.graph import stress_centrality
-    # a-b-d, a-c-d: two shortest a<->d routes; b and c each carry 2
-    e = _sym_edges(spark, [("a", "b"), ("a", "c"), ("b", "d"),
-                           ("c", "d")])
-    out = {r.node: int(r.stress) for r in
-           stress_centrality(e, _seeds(spark, "abcd")).collect()}
-    assert out == {"a": 2, "b": 2, "c": 2, "d": 2}
-
-
-def test_stress_star_hub(spark):
-    from lamapi_spark.ops.graph import stress_centrality
-    # hub h with 4 spokes: every spoke pair routes through h: 4*3 = 12
-    e = _sym_edges(spark, [("h", f"s{i}") for i in range(4)])
-    out = {r.node: int(r.stress) for r in
-           stress_centrality(e, _seeds(spark,
-                                       ["h"] + [f"s{i}" for i in
-                                                range(4)])).collect()}
-    assert out["h"] == 12
-    assert all(out[f"s{i}"] == 0 for i in range(4))
-
-
-def test_stress_sampled_sources_subset(spark):
-    from lamapi_spark.ops.graph import stress_centrality
-    # only seed 'a' on the path a-b-c: forward-only pairs counted;
-    # 'a' itself is absent (nodes emit only when reached from a
-    # DIFFERENT seed — the v != s filter)
-    e = _sym_edges(spark, [("a", "b"), ("b", "c")])
-    out = {r.node: int(r.stress) for r in
-           stress_centrality(e, _seeds(spark, "a")).collect()}
-    assert out == {"b": 1, "c": 0}
-
-
-def test_stress_horizon_bounds(spark):
-    from lamapi_spark.ops.graph import stress_centrality
-    # depth-1 horizon on the path: no interior pairs resolvable
-    e = _sym_edges(spark, [("a", "b"), ("b", "c")])
-    out = {r.node: int(r.stress) for r in
-           stress_centrality(e, _seeds(spark, "abc"),
-                             max_depth=1).collect()}
-    assert all(v == 0 for v in out.values())
-
-
-def test_stress_python_differential(spark):
-    import random
-    from collections import defaultdict, deque
-    from lamapi_spark.ops.graph import stress_centrality
-
-    random.seed(5)
-    nodes = [f"n{i}" for i in range(12)]
-    pairs = sorted({tuple(sorted(random.sample(nodes, 2)))
-                    for _ in range(18)})
-    adj = defaultdict(list)
-    for a, b in pairs:
-        adj[a].append(b)
-        adj[b].append(a)
-
-    stress = defaultdict(int)
-    present = sorted({x for p in pairs for x in p})
-    for s in present:
-        dist, sigma, order = {s: 0}, {s: 1}, [s]
-        q = deque([s])
-        while q:
-            v = q.popleft()
-            for w in adj[v]:
-                if w not in dist:
-                    dist[w] = dist[v] + 1
-                    sigma[w] = 0
-                    q.append(w)
-                    order.append(w)
-                if dist[w] == dist[v] + 1:
-                    sigma[w] += sigma[v]
-        c = {v: 0 for v in dist}
-        for v in reversed(order):
-            for w in adj[v]:
-                if dist.get(w) == dist[v] + 1:
-                    c[v] += c[w] + 1
-        for v in dist:
-            if v != s:
-                stress[v] += sigma[v] * c[v]
-
-    out = {r.node: int(r.stress) for r in
-           stress_centrality(_sym_edges(spark, pairs),
-                             _seeds(spark, present),
-                             max_depth=12).collect()}
-    assert out == {v: stress[v] for v in present}
-
-
-# ------------------------------------------------- community conductance
-
-
-def test_conductance_hand_case(spark):
-    from lamapi_spark.ops.graph import community_conductance
-    # two triangles joined by one edge: each community vol=7, cut=1
-    e = _sym_edges(spark, [("a1", "a2"), ("a2", "a3"), ("a3", "a1"),
-                           ("b1", "b2"), ("b2", "b3"), ("b3", "b1"),
-                           ("a1", "b1")])
-    lab = spark.createDataFrame(
-        [(f"{s}{i}", s) for s in "ab" for i in (1, 2, 3)],
-        "node string, community string")
-    out = {r.community: r for r in
-           community_conductance(e, lab).collect()}
-    assert out["a"].vol == 7 and out["a"].cut == 1
-    assert out["a"].conductance == round(1 / 7, 6)
-    assert out["b"].n_nodes == 3
-
-
-def test_conductance_single_community_degenerate(spark):
-    from lamapi_spark.ops.graph import community_conductance
-    e = _sym_edges(spark, [("x", "y")])
-    lab = spark.createDataFrame([("x", "c"), ("y", "c")],
-                                "node string, community string")
-    r = community_conductance(e, lab).head()
-    # min(vol, total - vol) = 0 -> pinned 0.0
-    assert r.cut == 0 and r.conductance == 0.0
-
-
-def test_conductance_drops_self_loops_and_unlabeled(spark):
-    from lamapi_spark.ops.graph import community_conductance
-    e = _sym_edges(spark, [("x", "x"), ("x", "y"), ("y", "z")])
-    lab = spark.createDataFrame([("x", "c1"), ("y", "c2")],
-                                "node string, community string")
-    out = {r.community: r for r in
-           community_conductance(e, lab).collect()}
-    # self-loop gone; y-z edge gone (z unlabeled): one cut edge left
-    assert out["c1"].vol == 1 and out["c1"].cut == 1
-    assert out["c1"].conductance == 1.0
-
-
 # ------------------------------------------------- multiclass MCC
 
 
@@ -710,37 +428,6 @@ def test_wasserstein_bucket_boundary_stitch(spark):
     assert r2.w1 == 50.0
 
 
-# ------------------------------------------------- Heaps-law growth
-
-
-def test_vocab_growth_hand_corpus(spark):
-    from lamapi_spark.ops.textstats import vocab_growth
-    docs = spark.createDataFrame([
-        (1, "a b"),          # rank 1, bucket 0: 2 new types
-        (2, "a c"),          # rank 2, bucket 1: 1 new type
-        (3, "c d e"),        # rank 3, bucket 1: 2 new types
-        (4, "a"),            # rank 4, bucket 2: 0 new
-        (5, "f"),            # rank 5, bucket 2: 1 new
-    ], "doc_id long, text string")
-    out = {r.checkpoint_docs: r for r in vocab_growth(docs).collect()}
-    assert out[2].cum_docs == 1 and out[2].cum_tokens == 2 \
-        and out[2].cum_types == 2
-    assert out[4].cum_docs == 3 and out[4].cum_tokens == 7 \
-        and out[4].cum_types == 5
-    assert out[8].cum_docs == 5 and out[8].cum_tokens == 9 \
-        and out[8].cum_types == 6
-
-
-def test_vocab_growth_monotone_and_total(spark):
-    from lamapi_spark.ops.textstats import vocab_growth
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    rows = vocab_growth(docs).orderBy("checkpoint_docs").collect()
-    types = [r.cum_types for r in rows]
-    assert types == sorted(types)
-    # final row covers the whole corpus
-    assert rows[-1].cum_docs == docs.count()
-
-
 # ------------------------------------------------- BIO span F1
 
 
@@ -791,43 +478,3 @@ def test_bio_span_f1_all_o_degenerate(spark):
     g = _bio(spark, [("s", 1, "O"), ("s", 2, "O")])
     r = bio_span_f1(g, g, ["seq"]).head()
     assert r.pred_spans == 0 and r.f1 == 0.0
-
-
-# ------------------------------------------------- Zipf fit
-
-
-def test_zipf_exact_power_law(spark):
-    from lamapi_spark.ops.textstats import zipf_fit
-    # frequencies 16,8,4,2,1 over ranks 1..5 is an exact log-log line
-    # with slope -log(2)/... no: f = 16 * r^(-s) only if ranks are
-    # powers; instead plant f_r = 2^(5-r): ln f = (5-r) ln2 vs ln r —
-    # NOT linear in ln r. Use f_r = C / r (slope exactly -1):
-    # f = 60/r for r=1..5 -> 60,30,20,15,12
-    docs = spark.createDataFrame(
-        [(" ".join([f"t{r}"] * (60 // r)),) for r in range(1, 6)],
-        "text string")
-    r = zipf_fit(docs, max_rank=10).head()
-    assert r.n_ranks == 5
-    assert abs(r.slope - (-1.0)) < 1e-6 and r.r2 > 0.999999
-
-
-def test_zipf_uniform_is_flat(spark):
-    from lamapi_spark.ops.textstats import zipf_fit
-    docs = spark.createDataFrame([("a b c d e f",)], "text string")
-    r = zipf_fit(docs).head()
-    # all frequencies equal -> dy = 0 -> slope 0, r2 pinned 0
-    assert r.slope == 0.0 and r.r2 == 0.0
-
-
-def test_zipf_degenerate_single_token(spark):
-    from lamapi_spark.ops.textstats import zipf_fit
-    docs = spark.createDataFrame([("only only only",)], "text string")
-    r = zipf_fit(docs).head()
-    assert r.n_ranks == 1 and r.slope == 0.0
-
-
-def test_zipf_max_rank_truncates(spark):
-    from lamapi_spark.ops.textstats import zipf_fit
-    docs = spark.createDataFrame(
-        [(" ".join(f"w{i}" for i in range(50)),)], "text string")
-    assert zipf_fit(docs, max_rank=20).head().n_ranks == 20
